@@ -415,10 +415,17 @@ def test_jaccard_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
 
 
 def test_cosine_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
-    """Same guarantee for the sparse-cosine candidate index (VERDICT round 2:
-    the uncapped fixed-dim join was the last quadratic-in-N plan)."""
+    """Same guarantee for the sparse-cosine candidates (VERDICT round 2:
+    the uncapped fixed-dim join was the last quadratic-in-N plan): a heavy
+    identical group pairs up completely, and the prefix-filtering generator
+    matches the DuckDB oracle's capped+rescue generator exactly on this
+    corpus and on the real tiny corpus, at both operating thresholds."""
+    import os
+
+    import duckdb
+
     n_dup = _heavy_dup_corpus(spark, tmp_path)
-    pairs = sim.doc_cosine_neardup(spark, str(tmp_path), 0.99, max_dim_df=10)
+    pairs = sim.doc_cosine_neardup(spark, str(tmp_path), 0.99)
     rows = pairs.collect()
     got = {(r.doc_a, r.doc_b) for r in rows}
     dup_pairs = {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)}
@@ -426,23 +433,21 @@ def test_cosine_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
     # exact rescore: identical docs must score exactly 1.0
     assert all(r.cosine == 1.0 for r in rows if (r.doc_a, r.doc_b) in dup_pairs)
 
-
-def test_cosine_prefix_generator_equals_capped(spark, tmp_path):
-    """Round 7: the prefix-filtering candidate generator (default
-    cosine_pairs) must produce exactly the round-6 capped+rescue output on
-    a heavy-duplicate corpus plus the real tiny corpus, across thresholds.
-    (Prefix filtering is provably complete for cos >= t; the capped path is
-    the previously-pinned semantics.)"""
-    _heavy_dup_corpus(spark, tmp_path)
     for src in (str(tmp_path), SF_TINY):
-        docs = spark.read.parquet(f"{src}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        for t in (0.99, 0.9):
-            new = sim.cosine_pairs(docs, t)
-            old = sim.cosine_pairs_capped(docs, t)
-            assert new.exceptAll(old).count() == 0, (src, t)
-            assert old.exceptAll(new).count() == 0, (src, t)
+        path = f"{src}/documents.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+            for t in (0.99, 0.9):
+                assert_frames_equal(
+                    sim.doc_cosine_neardup(spark, src, t),
+                    con.sql(sim.oracle_cosine_neardup(t)),
+                    float_cols=("cosine",),
+                )
+        finally:
+            con.close()
 
 
 def test_jaccard_floor_pairs_near_identical_heavy_group(spark, tmp_path):
@@ -576,13 +581,15 @@ def test_jaccard_minhash_rescue_pairs_divergent_floor_picks(spark, tmp_path):
 
 
 def test_cosine_minhash_rescue_pairs_divergent_floor_picks(spark, tmp_path):
-    """Same rescue for the sparse-cosine candidate index (feeds
-    doc_cosine_neardup, doc_neardup_components and report_buckets_fuzzy)."""
+    """Same corpus for the sparse-cosine pairs (feed doc_cosine_neardup,
+    doc_neardup_components and report_buckets_fuzzy): the prefix-filtering
+    generator finds the cross-variant pairs, and equals the DuckDB oracle,
+    whose capped index (cap 10 here) needs the minhash rescue for them."""
     import duckdb
 
     a_ids, b_ids = _two_variant_heavy_corpus(spark, tmp_path)
     sf = str(tmp_path)
-    pairs = sim.doc_cosine_neardup(spark, sf, 0.9, max_dim_df=10)
+    pairs = sim.doc_cosine_neardup(spark, sf, 0.9)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     # cross-variant pairs must be present (cosine ~0.95 >= 0.9)
     cross = {(a, b) for a in a_ids for b in b_ids}

@@ -498,3 +498,62 @@ def test_resume_refuses_config_drift(spark):
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_driver_writes_are_crash_safe(spark, tmp_path, monkeypatch):
+    """A crash inside a driver-side parquet write (simulated: the writer
+    leaves a truncated file behind, then raises) must leave the previous
+    table unchanged and readable, with no partial file visible to readers —
+    for the overwritten result tables (top_issues / report_summary) and
+    the appended bookkeeping (_lineage / _metrics). The next successful
+    overwrite sweeps the stray."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from timberline_spark import pipeline as P
+
+    out = str(tmp_path)
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("n", T.LongType())]
+    )
+    lineage_row = ("r1", P.STAGE_CLASSIFIED, "2024-01-01", 1, 0.0, "committed")
+    P._write_small_table(out, "top_issues", schema, [{"k": "a", "n": 1}])
+    P._append(spark, out, "_lineage", [lineage_row], P.LINEAGE_SCHEMA)
+
+    def visible(table):
+        # what Spark's and pyarrow's directory readers list
+        return sorted(
+            f for f in os.listdir(f"{out}/{table}") if not f.startswith((".", "_"))
+        )
+
+    def rows(table):
+        spark_rows = sorted(
+            (r.asDict() for r in spark.read.parquet(f"{out}/{table}").collect()),
+            key=repr,
+        )
+        assert spark_rows == sorted(pq.read_table(f"{out}/{table}").to_pylist(), key=repr)
+        return spark_rows
+
+    before = {t: (visible(t), rows(t)) for t in ("top_issues", "_lineage")}
+
+    def crash(table, where, **kwargs):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1\x15\x00")  # truncated parquet
+        raise OSError("simulated crash mid-write")
+
+    monkeypatch.setattr(pq, "write_table", crash)
+    with pytest.raises(OSError):
+        P._write_small_table(out, "top_issues", schema, [{"k": "b", "n": 2}])
+    with pytest.raises(OSError):
+        P._append(spark, out, "_lineage", [lineage_row], P.LINEAGE_SCHEMA)
+    monkeypatch.undo()
+
+    for t, (files, data) in before.items():
+        assert visible(t) == files, t
+        assert rows(t) == data, t
+
+    P._write_small_table(out, "top_issues", schema, [{"k": "b", "n": 2}])
+    assert os.listdir(f"{out}/top_issues") == [P.SMALL_TABLE_FILE]
+    assert rows("top_issues") == [{"k": "b", "n": 2}]

@@ -49,22 +49,12 @@ def test_sink_filters_push_to_parquet_scan(spark, stage_table):
     assert "Exchange" not in plan
 
 
-def test_enrichment_joins_are_broadcast(spark):
-    """The dynamic-dictionary path (impl='broadcast') must broadcast all
-    three dict joins — never shuffle the fact side."""
-    df = enrich_turns(
-        spark, parse_turns(load_transcripts(spark, SF_TINY)), impl="broadcast"
-    )
-    plan = _plan(df, "simple")
-    assert plan.count("BroadcastHashJoin") == 3
-    assert "SortMergeJoin" not in plan
-
-
 def test_enrichment_default_is_join_free(spark):
-    """The default literal-map enrichment is a pure projection: no joins,
-    no exchanges of any kind — the dictionaries ride inside the row
-    expression (optimization round 7; output equality vs the broadcast
-    path is pinned in test_route.py)."""
+    """The literal-map enrichment is a pure projection: no joins, no
+    exchanges of any kind — the dictionaries ride inside the row
+    expression (optimization round 7; its output is checked against the
+    DuckDB dictionary joins by the enrich_dims, level_info_default,
+    route_* and kept_rows oracle cases)."""
     df = enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
     plan = _plan(df, "simple")
     assert "Join" not in plan
@@ -87,21 +77,41 @@ def test_dedup_aggregates_map_side(spark, stage_table):
     assert "Window" not in plan
 
 
+def _filter_conditions(plan) -> list[str]:
+    """Condition strings of every Filter node in a JVM logical plan."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().toString())
+        children = node.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return out
+
+
 def test_parse_plan_has_single_from_json(spark):
     """The JSON parse must run ONCE per row: the parsed struct is a shared
     non-cheap alias (`_j`), which CollapseProject keeps un-inlined. Round 2
     shipped 25 JsonToStructs copies in this plan (one per extracted field) —
-    a measured 2x parse-stage cost at sf0.1."""
+    a measured 2x parse-stage cost at sf0.1.
+
+    The enrich fence (enrich._fence) keeps every filter on a classify-
+    derived flag ABOVE the parse projection. Without it the optimizer
+    pushes the filter below and inlines the whole parse tree into the
+    predicate (kept_rows: 1.15 s -> 28 s at sf0.1); so no Filter condition
+    may contain from_json. A Spark upgrade that constant-folds the fence's
+    1-element shuffle fails here instead of silently slowing down."""
     from timberline_spark import queries as Q
 
-    # route_errors regression (round 4): InferFiltersFromConstraints turned
-    # the enrichment join's level filter into an isnotnull(level_raw)
-    # pre-join filter carrying 12 inlined from_json copies (measured 2.2x
-    # query cost); the rule is excluded in session.py
-    for name in ("parse", "kept_rows", "route_errors", "route_tool_calls"):
+    for name in ("parse", "kept_rows", "route_errors", "route_tool_calls",
+                 "route_anomalies"):
         df = Q.PIPELINE_QUERIES[name](spark, SF_TINY)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        optimized = df._jdf.queryExecution().optimizedPlan()
+        plan = optimized.toString()
         assert plan.count("from_json") == 1, (name, plan.count("from_json"))
+        inlined = [c for c in _filter_conditions(optimized) if "from_json" in c]
+        assert not inlined, (name, inlined[0][:300])
 
 
 def test_cosine_pairs_candidate_join_is_equi(spark):

@@ -25,26 +25,6 @@ def _classified(spark):
     )
 
 
-def test_enrich_map_equals_broadcast(spark):
-    """The default literal-map enrichment must be row-identical (values,
-    schema, order-insensitive) to the broadcast-join reference path, with
-    and without the INFO-default mode."""
-    parsed = parse_turns(load_transcripts(spark, SF))
-    for info_mode in (False, True):
-        m = enrich_turns(spark, parsed, unknown_level_to_info=info_mode)
-        b = enrich_turns(
-            spark, parsed, unknown_level_to_info=info_mode, impl="broadcast"
-        )
-        assert m.columns == b.columns
-        assert [f.dataType for f in m.schema.fields] == [
-            f.dataType for f in b.schema.fields
-        ]
-        cols = [c for c in m.columns if c != "labels"]  # maps aren't comparable
-        cols += [F.to_json(F.col("labels")).alias("labels_json")]
-        assert m.select(*cols).exceptAll(b.select(*cols)).count() == 0
-        assert b.select(*cols).exceptAll(m.select(*cols)).count() == 0
-
-
 def test_sampling_is_pure_function_of_keys(spark):
     rows = (
         _classified(spark)

@@ -388,8 +388,8 @@ def report_buckets_fuzzy(
 
     Scale shape: the similarity graph is built over DISTINCT fingerprints
     (the cluster count, orders of magnitude below the row count), with the
-    same df-capped candidate generation as doc_cosine_neardup — never
-    all-pairs. The resulting (fingerprint -> component) map is tiny and
+    same prefix-filtered candidate generation as doc_cosine_neardup
+    (:func:`extras.similarity.cosine_pairs`) — never all-pairs. The resulting (fingerprint -> component) map is tiny and
     broadcast back onto the deduped frame; the bucket aggregation is then
     ONE hash-agg shuffle keyed by component, same as the exact path.
 

@@ -27,8 +27,6 @@ computes bit-identical values.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 # -- deterministic "now" (reference snapshot date, UTC) ----------------------
 REF_NOW_MS = 1_767_916_800_000  # 2026-01-09T00:00:00Z
 # the reference's lower bound is now - 10*365 DAYS (log.go:54), not a
@@ -146,24 +144,6 @@ def level_defaults(level: str) -> dict:
         "is_error": level in ("ERROR", "CRITICAL"),
         "is_warning": level == "WARNING",
     }
-
-
-def severity_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        severity_dict_rows(),
-        "level_raw string, level string, severity string, severity_score int,"
-        " is_error boolean, is_warning boolean",
-    )
-
-
-def tool_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_DICT, "tool string, tool_category string, is_sensitive boolean"
-    )
-
-
-def role_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DICT, "role string, role_class string")
 
 
 # ---- SQL VALUES literals for the DuckDB oracle ------------------------------

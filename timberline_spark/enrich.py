@@ -5,19 +5,13 @@ Spark-first replacement for the reference's dictionary-shaped computations
 mapping, ``analysis/engine.py:110-111`` error/warning classes, plus the
 target table's ``tool``/``role`` dimensions).
 
-Two implementations with identical output (pinned by tests/test_route.py):
-
-- ``impl="map"`` (default): the dictionaries are compile-time constants, so
-  each enrichment is a literal ``map<key, struct<attrs>>`` lookup fused into
-  the scan-side projection — zero joins, zero broadcast exchanges, zero
-  driver->executor dictionary shipping, at any scale (optimization guide
-  §3.1: the cheapest join strategy is not joining). ``try_element_at``
-  returns NULL for unknown/null keys, exactly like the left joins it
-  replaces.
-- ``impl="broadcast"``: the original three explicit ``F.broadcast`` equi-
-  joins — the shape a DYNAMIC dictionary table (one loaded from storage
-  rather than compiled in) would use; kept as the reference implementation
-  and exercised by the plan test.
+The dictionaries are compile-time constants, so each enrichment is a
+literal ``map<key, struct<attrs>>`` lookup fused into the scan-side
+projection — zero joins, zero broadcast exchanges, zero driver->executor
+dictionary shipping, at any scale (optimization guide §3.1: the cheapest
+join strategy is not joining). ``try_element_at`` returns NULL for
+unknown/null keys, exactly like a left join against the dictionary table
+(the DuckDB oracle in :mod:`timberline_spark.sqlgen` is that join).
 """
 
 from __future__ import annotations
@@ -36,7 +30,7 @@ def _fence(c: Column) -> Column:
     non-deterministic, so PushDownPredicates will not rewrite filters
     through the projection that contains it.
 
-    Why this matters: the broadcast joins this module's map path replaced
+    Why this matters: the broadcast joins the literal-map lookups replaced
     were, incidentally, optimizer barriers. Without a barrier, a filter on
     any classify-derived flag (``kept``, ``is_valid``, ``level`` ...) is
     pushed below the enrich/parse projections with every referenced alias
@@ -100,7 +94,6 @@ def enrich_turns(
     spark: SparkSession,
     df: DataFrame,
     unknown_level_to_info: bool = False,
-    impl: str = "map",
 ) -> DataFrame:
     """Attach the three dictionaries onto a parsed transcripts frame.
 
@@ -114,40 +107,25 @@ def enrich_turns(
     an unknown_level anomaly. The default keeps the stricter divergence
     (documented in dicts.py) so per-sink counts surface bad levels.
     """
-    if impl == "map":
-        out = (
-            df.select(
-                "*",
-                _fence(
-                    F.try_element_at(_severity_map(), F.col("level_raw"))
-                ).alias("_sev"),
-                _fence(F.try_element_at(_tool_map(), F.col("tool"))).alias("_tool"),
-                _fence(F.try_element_at(_role_map(), F.col("role"))).alias("_role"),
-            )
-            .withColumn("level", F.col("_sev.level"))
-            .withColumn("severity", F.col("_sev.severity"))
-            .withColumn("severity_score", F.col("_sev.severity_score"))
-            .withColumn("is_error", F.col("_sev.is_error"))
-            .withColumn("is_warning", F.col("_sev.is_warning"))
-            .withColumn("tool_category", F.col("_tool.tool_category"))
-            .withColumn("is_sensitive", F.col("_tool.is_sensitive"))
-            .withColumn("role_class", F.col("_role.role_class"))
-            .drop("_sev", "_tool", "_role")
+    out = (
+        df.select(
+            "*",
+            _fence(
+                F.try_element_at(_severity_map(), F.col("level_raw"))
+            ).alias("_sev"),
+            _fence(F.try_element_at(_tool_map(), F.col("tool"))).alias("_tool"),
+            _fence(F.try_element_at(_role_map(), F.col("role"))).alias("_role"),
         )
-    elif impl == "broadcast":
-        sev = dicts.severity_df(spark)
-        tool = dicts.tool_df(spark).withColumnsRenamed({"tool": "tool_key"})
-        role = dicts.role_df(spark).withColumnsRenamed({"role": "role_key"})
-        out = (
-            df.join(F.broadcast(sev), df["level_raw"] == sev["level_raw"], "left")
-            .drop(sev["level_raw"])
-            .join(F.broadcast(tool), df["tool"] == tool["tool_key"], "left")
-            .drop("tool_key")
-            .join(F.broadcast(role), df["role"] == role["role_key"], "left")
-            .drop("role_key")
-        )
-    else:
-        raise ValueError(f"unknown enrich impl: {impl!r}")
+        .withColumn("level", F.col("_sev.level"))
+        .withColumn("severity", F.col("_sev.severity"))
+        .withColumn("severity_score", F.col("_sev.severity_score"))
+        .withColumn("is_error", F.col("_sev.is_error"))
+        .withColumn("is_warning", F.col("_sev.is_warning"))
+        .withColumn("tool_category", F.col("_tool.tool_category"))
+        .withColumn("is_sensitive", F.col("_tool.is_sensitive"))
+        .withColumn("role_class", F.col("_role.role_class"))
+        .drop("_sev", "_tool", "_role")
+    )
     if unknown_level_to_info:
         info = dicts.level_defaults("INFO")
         # snapshot the predicate BEFORE overwriting `level` — withColumn is

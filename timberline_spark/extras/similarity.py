@@ -718,20 +718,21 @@ embed_texts = F.pandas_udf(_embed_batch, returnType=T.ArrayType(T.FloatType()))
 
 
 DOC_COSINE_DIM = 1024  # hashed token dimensions for the sparse cosine join
-# dims hotter than this are dropped from CANDIDATE GENERATION only; each doc
-# keeps its RARE_DIMS_PER_DOC least-frequent shared (df>=2) dims
-# unconditionally (extras.dedup.capped_index). The floor GUARANTEES pairing
-# for byte-identical docs in heavy groups; near-identical docs whose floor
-# picks diverge are covered by the minhash-any-band rescue
-# (extras.dedup.rescue_doc_ids + minhash_any_pairs, round 5).
+# Candidate-index cap of the DuckDB oracle mirror (sql_cosine_pairs_ctes):
+# dims hotter than MAX_COSINE_DIM_DF are dropped from the oracle's candidate
+# join, each doc keeps its RARE_DIMS_PER_DOC least-frequent shared (df>=2)
+# dims, and a minhash-any-band rescue pairs near-identical all-hot docs
+# (extras.dedup.sql_capped_index / sql_rescue_doc_ids). The Spark side,
+# cosine_pairs, uses uncapped prefix filtering; the two agree on every
+# oracle-checked corpus (tests/test_extras.py).
 MAX_COSINE_DIM_DF = 100
 RARE_DIMS_PER_DOC = 2
 
 
 def _cosine_weights(docs: DataFrame) -> DataFrame:
     """L2-normalized sparse weight table (doc_id, dim, w) over
-    DOC_COSINE_DIM hashed token dimensions — the shared front half of both
-    cosine candidate generators. Checkpointed: it is referenced several
+    DOC_COSINE_DIM hashed token dimensions — the front half of
+    :func:`cosine_pairs`. Checkpointed: it is referenced several
     times downstream (candidate index, prefix selection, both rescore
     sides), and Spark does not share common subplans, so each reference
     would re-run the whole tokenize+hash+aggregate chain. Tiny relative to
@@ -763,11 +764,7 @@ def _cosine_weights(docs: DataFrame) -> DataFrame:
 _PREFIX_MARGIN = 1e-3
 
 
-def cosine_pairs(
-    docs: DataFrame,
-    threshold: float,
-    max_dim_df: int = MAX_COSINE_DIM_DF,
-) -> DataFrame:
+def cosine_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """Sparse token-cosine near-dup pairs over ANY (doc_id, text) frame —
     (doc_a, doc_b, cosine), doc_a < doc_b. doc_id may be any orderable type
     (long doc ids, fingerprint strings, ...).
@@ -797,10 +794,7 @@ def cosine_pairs(
     The cosine itself is then computed EXACTLY over the full weight vectors
     of each surviving pair (one map lookup join per side, no re-explosion),
     so candidate generation affects neither scores nor — being provably
-    complete — recall. max_dim_df is retained for API compatibility; the
-    prefix generator needs no df cap. The round-6 capped+rescue generator
-    is kept as :func:`cosine_pairs_capped` (same output, pinned by
-    tests/test_extras.py) for A/B measurement.
+    complete — recall.
     """
     from pyspark.sql import Window
 
@@ -858,68 +852,13 @@ def _cosine_rescore(cand: DataFrame, w: DataFrame, threshold: float) -> DataFram
     )
 
 
-def cosine_pairs_capped(
-    docs: DataFrame,
-    threshold: float,
-    max_dim_df: int = MAX_COSINE_DIM_DF,
-) -> DataFrame:
-    """Round-6 candidate generator, kept for A/B measurement and as the
-    parity pin for :func:`cosine_pairs`: DF-CAPPED dimension equi-join
-    (dims in more than max_dim_df docs excluded, each doc keeps its
-    RARE_DIMS_PER_DOC least-frequent shared dims) plus the any-of-16
-    minhash-band rescue for all-hot docs; exact rescore after. Recall is
-    best-effort for near-identical docs in heavy groups (capped_index
-    docstring has the exact contract) where the prefix generator is
-    provably complete."""
-    from .dedup import capped_index, minhash_any_pairs, rescue_doc_ids
-
-    w = _cosine_weights(docs)
-    idx = capped_index(w.select("doc_id", "dim"), "dim", max_dim_df, RARE_DIMS_PER_DOC)
-    a, b = idx.alias("a"), idx.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.dim") == F.col("b.dim"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # checkpointed: minhash_any_pairs self-joins the per-permutation minhash
-    # frame, which would otherwise re-run the rescue-gate aggregation twice
-    hot_sets = reliable_checkpoint(
-        w.join(
-            rescue_doc_ids(
-                w.select("doc_id", "dim"), "dim", max_dim_df, RARE_DIMS_PER_DOC
-            ),
-            "doc_id",
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_list("dim").alias("hs"))
-    )
-    cand = cand.unionByName(minhash_any_pairs(hot_sets)).distinct()
-    return _cosine_rescore(cand, w, threshold)
-
-
 def doc_cosine_neardup(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.95,
-    max_dim_df: int = MAX_COSINE_DIM_DF,
+    spark: SparkSession, sf_dir: str, threshold: float = 0.95
 ) -> DataFrame:
     """Embedding-cosine near-dup over the documents table (reference
     milvus.go:354-409 batch equivalence) — see :func:`cosine_pairs`."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    return cosine_pairs(docs, threshold, max_dim_df)
-
-
-# Truncate lineage EVERY round: the pointer-jump step self-joins the label
-# frame, so the logical plan doubles per round — caching keeps the DATA hot
-# but Catalyst still re-analyzes the full tree each round, which measured as
-# exponential per-round planning time (4.9s -> 11.4s -> 27.2s on a 54-node
-# graph at sf0.01). An eager localCheckpoint costs ~0.2s and keeps every
-# round O(1) plan size.
-CC_CHECKPOINT_EVERY = 1
+    return cosine_pairs(docs, threshold)
 
 
 def reliable_checkpoint(frame: DataFrame) -> DataFrame:
@@ -954,7 +893,7 @@ def connected_components(
     second equi-join on the label table itself). The shortcut step halves
     the remaining propagation distance each round, so even a pathological
     chain converges in O(log diameter) rounds, not O(diameter). Every
-    CC_CHECKPOINT_EVERY rounds the label frame is checkpointed
+    round the label frame is checkpointed
     (:func:`reliable_checkpoint`: durable when a checkpoint dir is set,
     localCheckpoint in local mode) so the plan depth stays bounded
     regardless of round count. Convergence is detected EXACTLY: one
@@ -1022,11 +961,13 @@ def connected_components(
         new_labels = prop.join(jump, prop["component"] == jump["c_id"]).select(
             "doc_id", F.col("c_comp").alias("component"), "prev"
         )
-        if (i + 1) % CC_CHECKPOINT_EVERY == 0:
-            # truncate lineage: without this, round k carries a 2k-join plan
-            new_labels = reliable_checkpoint(new_labels)
-        else:
-            new_labels = new_labels.persist()
+        # truncate lineage EVERY round: the pointer-jump step self-joins
+        # the label frame, so the logical plan doubles per round — caching
+        # keeps the DATA hot but Catalyst still re-analyzes the full tree
+        # each round (measured: 4.9s -> 11.4s -> 27.2s per-round planning
+        # on a 54-node graph at sf0.01). An eager checkpoint costs ~0.2s
+        # and keeps every round O(1) plan size.
+        new_labels = reliable_checkpoint(new_labels)
         prop.unpersist()
         # exact convergence (ADVICE round 4 — replaces a probabilistic
         # checksum pair): zero changed labels = fixpoint (min-label is

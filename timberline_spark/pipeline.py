@@ -17,7 +17,10 @@ report) as a resumable batch DAG over date partitions:
 
 Dynamic partition overwrite makes every write idempotent: re-processing a
 partition replaces it byte-identically (all transforms are deterministic),
-so a crash between "write" and "lineage append" is safe.
+so a crash between "write" and "lineage append" is safe. The driver-written
+tables (``_lineage``, ``_metrics``, ``top_issues``, ``report_summary``) are
+published by atomic rename, so a crash mid-write never leaves a truncated
+or missing table behind.
 
 Scale notes (the 100 TB story):
 
@@ -160,6 +163,25 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
 _PA_TYPES = {"string": "string", "bigint": "int64", "double": "float64"}
 
 
+def _publish_parquet(t, table_dir: str, name: str) -> None:
+    """Write pyarrow table ``t`` as ``table_dir/name`` crash-safely.
+
+    The bytes go to a dot-prefixed temp file first — Spark's and pyarrow's
+    directory readers skip hidden files — and one ``os.replace`` then
+    publishes the finished file. A crash mid-write (process killed, disk
+    full) therefore leaves at most a hidden stray, never a truncated
+    visible part that would break the next read of the table."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(table_dir, exist_ok=True)
+    tmp = os.path.join(table_dir, f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(t, tmp)
+    os.replace(tmp, os.path.join(table_dir, name))
+
+
 def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
     """Append tiny bookkeeping rows as ONE driver-written parquet file.
 
@@ -170,11 +192,9 @@ def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
     cluster involvement; Spark reads the directory identically."""
     if not rows:
         return
-    import os
     import uuid
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     fields = []
     for part in schema.split(","):
@@ -184,8 +204,10 @@ def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
     t = pa.table(
         {name: pa.array(list(col), type=typ) for (name, typ), col in zip(fields, cols)}
     )
-    os.makedirs(f"{out_dir}/{table}", exist_ok=True)
-    pq.write_table(t, f"{out_dir}/{table}/part-{uuid.uuid4().hex}.parquet")
+    _publish_parquet(t, f"{out_dir}/{table}", f"part-{uuid.uuid4().hex}.parquet")
+
+
+SMALL_TABLE_FILE = "part-00000.parquet"
 
 
 def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
@@ -195,12 +217,16 @@ def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
     Spark schema so an empty result still writes a typed, readable table.
     Types outside the primitive map (timestamp/array/decimal/...) fall back
     to pyarrow's type inference over the collected values instead of
-    crashing the run on a KeyError."""
-    import shutil as _sh
-    import uuid
+    crashing the run on a KeyError.
+
+    The table is always the single file SMALL_TABLE_FILE, so the overwrite
+    is one atomic rename over the previous version (see _publish_parquet):
+    a reader, or a crash, sees the old table or the new one, never a
+    missing or half-written one. Anything else in the directory (strays of
+    an interrupted write) is swept after the rename."""
+    import os
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     type_map = {
         "long": pa.int64(),
@@ -229,11 +255,11 @@ def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
             for name, typ in fields
         }
     )
-    import os
-
-    _sh.rmtree(f"{out_dir}/{table}", ignore_errors=True)
-    os.makedirs(f"{out_dir}/{table}", exist_ok=True)
-    pq.write_table(t, f"{out_dir}/{table}/part-{uuid.uuid4().hex}.parquet")
+    table_dir = f"{out_dir}/{table}"
+    _publish_parquet(t, table_dir, SMALL_TABLE_FILE)
+    for name in os.listdir(table_dir):
+        if name != SMALL_TABLE_FILE:
+            os.remove(os.path.join(table_dir, name))
 
 
 def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
@@ -245,9 +271,7 @@ def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
     new partitions would silently disagree (e.g. half the sink rows
     redacted). The first invocation pins its config as a tiny driver-side
     JSON; any later invocation with the same (out_dir, run_id) must
-    match or it fails loudly naming the drifted flags. parse_impl is
-    deliberately NOT pinned: native and pandas parse are oracle-verified
-    identical (tests/test_oracle_parity.py pandas-vs-native).
+    match or it fails loudly naming the drifted flags.
     """
     import os
 
@@ -277,7 +301,6 @@ def run_pipeline(
     sf_dir: str,
     out_dir: str,
     run_id: str,
-    parse_impl: str = "native",
     replicate: int = 1,
     max_partitions: int | None = None,
     input_table: str | None = None,
@@ -351,7 +374,7 @@ def run_pipeline(
     # which is what scopes stage 2+3 to THIS run's dates — another run's
     # dates stay in the shared tables but out of this run's aggregation.
     classified = route.classify_turns(
-        enrich_turns(spark, parse_turns(tr, impl=parse_impl))
+        enrich_turns(spark, parse_turns(tr))
     ).select(*stage_cols)
     if redact:
         from .redact import redact_text
@@ -794,7 +817,6 @@ def main(argv=None):
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--parse-impl", default="native", choices=["native", "pandas"])
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--max-partitions", type=int, default=None)
     ap.add_argument("--cores", type=int, default=None)
@@ -829,7 +851,6 @@ def main(argv=None):
         args.sf_dir,
         args.out,
         args.run_id,
-        parse_impl=args.parse_impl,
         replicate=args.replicate,
         max_partitions=args.max_partitions,
         input_table=args.input_table,

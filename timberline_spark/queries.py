@@ -20,9 +20,9 @@ from .parse import parse_turns
 from .transcripts import load_transcripts
 
 
-def _classified(spark: SparkSession, sf_dir: str, impl: str = "native") -> DataFrame:
+def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = load_transcripts(spark, sf_dir)
-    return route.classify_turns(enrich_turns(spark, parse_turns(tr, impl=impl)))
+    return route.classify_turns(enrich_turns(spark, parse_turns(tr)))
 
 
 def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,29 +51,6 @@ def q_parse_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _classified(spark, sf_dir)
-    return df.groupBy(
-        F.coalesce(F.col("anomaly_reason"), F.lit("valid")).alias("reason")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_enrich_severity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = enrich_turns(spark, parse_turns(load_transcripts(spark, sf_dir)))
-    return (
-        df.filter(F.col("level").isNotNull())
-        .groupBy("level", "severity", "severity_score", "is_error", "is_warning")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_enrich_tool_role(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = enrich_turns(spark, parse_turns(load_transcripts(spark, sf_dir)))
-    return df.groupBy("tool_category", "is_sensitive", "role_class").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
 def q_route_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return route.errors_sink(_classified(spark, sf_dir))
 
@@ -84,15 +61,6 @@ def q_route_tool_calls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_route_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return route.anomalies_sink(_classified(spark, sf_dir))
-
-
-def q_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _classified(spark, sf_dir)
-    return (
-        df.filter(F.col("is_valid"))
-        .groupBy("keep_level", "keep_sampled")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def q_kept_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,39 +322,6 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.score_clusters(agg.report_buckets(d))
 
 
-def q_recent_reports(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
-    """L2: ORDER BY generated_at DESC LIMIT n over the reports table
-    (analysis_results_store.py:192-194); the cluster's last_ts_ms plays
-    generated_at in the batch analog."""
-    return (
-        _scored(spark, sf_dir)
-        .orderBy(F.col("last_ts_ms").desc(), "fingerprint")
-        .limit(n)
-        .select("fingerprint", "cluster_severity", "cluster_score", "last_ts_ms")
-    )
-
-
-def q_top20_clusters(spark: SparkSession, sf_dir: str, n: int = 20) -> DataFrame:
-    """W4: clusters[:20] cap for the LLM prompt / API response
-    (llm/client.py:316, api/routes/analyses.py:65)."""
-    return (
-        _scored(spark, sf_dir)
-        .orderBy(
-            F.col("cluster_score").desc(),
-            F.col("total_log_count").desc(),
-            F.col("fingerprint"),
-        )
-        .limit(n)
-        .select(
-            "fingerprint",
-            "cluster_severity",
-            "cluster_score",
-            "total_log_count",
-            "error_count",
-        )
-    )
-
-
 def q_flexible_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5/P6: the flexible-timestamp parse applied to the plain-grammar ts
     strings plus numeric epoch strings derived from the row ts."""
@@ -555,9 +490,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The driver caps its per-round oracle check at 50 registered queries (r5
 # sampled exactly the first 50 of 56); near-duplicate diagnostics are folded
 # into composed queries so EVERY distinct operator keeps a driver-checked
-# row (VERDICT r5 next-round #1). Each branch below is the unchanged
-# standalone query (still exported above for library use) tagged with a
-# discriminator column; the oracle is the same UNION ALL in sqlgen.
+# row (VERDICT r5 next-round #1). Each branch below is one former
+# standalone query tagged with a discriminator column; the oracle is the
+# same UNION ALL in sqlgen.
 
 
 def q_route_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,7 +527,7 @@ def q_route_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_enrich_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """severity (P8) + tool/role (J3) broadcast-dict enrichments, folded."""
+    """severity (P8) + tool/role (J3) dictionary enrichments, folded."""
     df = enrich_turns(spark, parse_turns(load_transcripts(spark, sf_dir)))
     score_t = df.schema["severity_score"].dataType
     sev = (
@@ -674,7 +609,8 @@ def q_report_api(
 # len(PIPELINE_QUERIES) + len(EXTRA_QUERIES) <= 50 — fold near-duplicate
 # diagnostics (q_route_stats / q_enrich_dims / q_report_api, emb_knn_ann /
 # emb_cluster / multimodal / doc_text_stats) rather than dropping coverage.
-# The standalone functions remain exported for library use and repo tests.
+# The pipeline-side folds are the only Spark implementations of their
+# branches; the extras folds wrap standalone library operators.
 PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "transcripts": q_transcripts,
     "parse": q_parse,

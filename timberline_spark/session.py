@@ -67,20 +67,6 @@ def get_spark(
         # driver threads; FAIR scheduling lets small jobs fill idle slots
         # instead of queueing behind a wide stage's stragglers
         .config("spark.scheduler.mode", "FAIR")
-        # InferFiltersFromConstraints turns the enrichment join's null-
-        # rejecting filters into isnotnull(<join key>) filters pushed below
-        # the join — but this pipeline's join keys are EXPENSIVE DERIVED
-        # expressions (level_raw = regex/JSON parse of raw text), and the
-        # inferred filter inlines the whole expression tree into a per-row
-        # pre-join Filter that codegen cannot dedupe against the projection
-        # (measured: route_errors 5.2s -> 2.4s at sf0.1, optimized plan 12
-        # from_json copies -> 1, 298 KB -> 12 KB). The rule's upside
-        # (pre-dropping null keys before a join) is nil here: the dict
-        # joins are broadcast and the fact side carries no null storm.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints",
-        )
     )
     if master.startswith("local-cluster["):
         n_workers, exec_cores, mem_mb = (
