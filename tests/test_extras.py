@@ -328,6 +328,36 @@ def test_knn_lsh_recall_vs_brute(spark):
     assert recall >= 0.25, recall
 
 
+def test_lsh_bucket_bits_match_python_fold(spark):
+    """The LSH sign bits themselves, not just the top-k they feed: a bucket
+    flipped next to zero need not change any top-k row, so the oracle
+    comparison alone can miss it. Every (vector, table) bucket must equal a
+    pure-Python replay of the same ordered fold (float(x) * plane[i], summed
+    from 0.0, bit = sum >= 0), and the one-call hyperplane literal must
+    collect back bit-identical to the Python planes."""
+    import numpy as np
+
+    planes = sim._hyperplanes()
+    emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
+    expect = set()
+    for r in emb.collect():
+        bits = ""
+        for plane in planes:
+            acc = 0.0
+            for x, y in zip(r.embedding, plane):
+                acc += float(x) * y
+            bits += "1" if acc >= 0 else "0"
+        for t in range(sim.LSH_TABLES):
+            b = sim.BITS_PER_TABLE
+            expect.add((r.vec_id, t, bits[t * b : (t + 1) * b]))
+    got = [tuple(r) for r in sim._lsh_buckets(emb).collect()]
+    assert len(got) == len(expect) == emb.count() * sim.LSH_TABLES
+    assert set(got) == expect
+
+    lit = spark.range(1).select(sim._lit_doubles(planes).alias("m")).first().m
+    assert np.array(lit).tobytes() == np.array(planes).tobytes()
+
+
 def test_centroid_rep_matches_numpy(spark):
     """A7 representative-by-centroid vs a direct numpy computation."""
     import numpy as np

@@ -6,8 +6,10 @@ broadcast join into a shuffle or block filter pushdown.
 
 from __future__ import annotations
 
+import re
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,17 +79,22 @@ def test_dedup_aggregates_map_side(spark, stage_table):
     assert "Window" not in plan
 
 
-def _filter_conditions(plan) -> list[str]:
-    """Condition strings of every Filter node in a JVM logical plan."""
+def _nodes(plan, name: str) -> list:
+    """Every node called `name` in a JVM logical plan."""
     out, stack = [], [plan]
     while stack:
         node = stack.pop()
-        if node.nodeName() == "Filter":
-            out.append(node.condition().toString())
+        if node.nodeName() == name:
+            out.append(node)
         children = node.children().iterator()
         while children.hasNext():
             stack.append(children.next())
     return out
+
+
+def _filter_conditions(plan) -> list[str]:
+    """Condition strings of every Filter node in a JVM logical plan."""
+    return [node.condition().toString() for node in _nodes(plan, "Filter")]
 
 
 def test_parse_plan_has_single_from_json(spark):
@@ -141,3 +148,42 @@ def test_classify_is_single_stage_no_shuffle(spark, stage_table):
     for line in plan.splitlines():
         if "Exchange" in line:
             assert "Broadcast" in line, line
+
+
+def test_knn_lsh_bits_once_and_literal_folded(spark):
+    """emb_knn_lsh computes its hyperplane sign bits ONCE per row from one
+    folded matrix literal. The optimized plan holds exactly 3 zip_with
+    nodes: the bit projection on each side of the bucket join plus the
+    cosine rescore (an unrolled per-plane build had 81: 40 planes x 2 join
+    sides + 1). Each table explode must sit ABOVE its bit projection: bits
+    re-derived per table (in the generator or after it) re-run every dot
+    product LSH_TABLES times per row. A Spark upgrade that stops
+    constant-folding the JSON matrix literal leaves a from_json behind."""
+    from timberline_spark.extras.similarity import emb_knn_lsh
+
+    plan = emb_knn_lsh(spark, SF_TINY)._jdf.queryExecution().optimizedPlan()
+    text = plan.toString()
+    assert text.count("zip_with(") == 3, text.count("zip_with(")
+    assert text.count("from_json") == 0
+    generates = _nodes(plan, "Generate")
+    assert len(generates) == 2, len(generates)
+    for g in generates:
+        assert "zip_with(" not in g.generator().toString()
+        assert g.child().toString().count("zip_with(") == 1
+
+
+def test_no_per_element_literal_arrays():
+    """Literal arrays are built with one JVM call (similarity._lit_doubles),
+    never one F.lit py4j round trip per element: 2,560 of them cost ~1.7 s
+    of plan building per emb_knn_lsh call. The plan test above cannot see
+    this regression, because a CreateArray of literals folds to the same
+    Literal, so scan the source instead."""
+    pattern = re.compile(r"F\.array\(\s*\*\s*[\[(]\s*F\.lit\(")
+    root = Path(__file__).resolve().parent.parent / "timberline_spark"
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, hits

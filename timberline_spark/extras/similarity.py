@@ -9,10 +9,16 @@ The reference's ANN path (HNSW cosine top-100 per insert,
 - ``emb_knn_lsh``: random-hyperplane LSH buckets (deterministic arithmetic
   hyperplanes, no rand()) -> candidate join -> exact rescore. The scale
   path: bucket join instead of all-pairs.
+- ``emb_knn_ivf``: deterministic k-means cells -> probe the nearest cells
+  -> exact rescore.
 - ``embed_texts``: deterministic hash-projection text -> vector surrogate for
   the reference's embedding service
   (``log-ingestor/internal/embedding/service.go:72-159``) — a vectorized
   pandas UDF (Arrow batches), no external service.
+
+Constant matrices (hyperplanes, centroids, seeds) enter the plan through
+:func:`_lit_doubles`, one JVM call each; building them with one ``F.lit``
+per number costs a py4j round trip per number.
 
 Scores are computed in double and rounded to 4 decimals before ranking so
 Spark and DuckDB rank identically; ties break on vec_id.
@@ -20,6 +26,7 @@ Spark and DuckDB rank identically; ties break on vec_id.
 
 from __future__ import annotations
 
+import json
 import math
 import zlib
 
@@ -114,38 +121,68 @@ def _hyperplanes(dim: int = EMBED_DIM, n_planes: int = N_PLANES) -> list[list[fl
     return planes
 
 
-def _plane_bits(emb_col):
-    planes = _hyperplanes()
-    bits = []
-    for row in planes:
-        lit_plane = F.array(*[F.lit(v) for v in row])
-        dot = F.aggregate(
-            F.zip_with(emb_col, lit_plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return bits
+def _lit_doubles(values: list[list[float]]) -> Column:
+    """A literal ``array<array<double>>`` built with ONE JVM call: the matrix
+    travels as a JSON string and Catalyst constant-folds the ``from_json``,
+    so the optimized plan holds a plain literal. ``json.dumps`` writes each
+    float's shortest round-trip repr, so the parsed doubles are bit-identical
+    to ``values``. One ``F.lit`` per element costs a py4j round trip each
+    (2,560 for the hyperplanes: ~1.7 s of plan building per call)."""
+    return F.from_json(
+        F.lit(json.dumps(values)), "array<array<double>>", {"mode": "FAILFAST"}
+    )
 
 
-def _table_buckets(emb_col):
-    """Array of (table, bucket) structs — banded multi-table LSH. A pair is
-    a candidate if ANY table's bucket matches, which trades one shuffle per
-    table for recall (the standard hyperplane-LSH banding)."""
-    bits = _plane_bits(emb_col)
-    entries = []
-    for t in range(LSH_TABLES):
-        chunk = bits[t * BITS_PER_TABLE : (t + 1) * BITS_PER_TABLE]
-        entries.append(
-            F.struct(F.lit(t).alias("tbl"), F.concat(*chunk).alias("bucket"))
+def _lsh_buckets(emb: DataFrame) -> DataFrame:
+    """(vec_id int64, tbl int32, bucket string): one row per vector and
+    table — banded hyperplane LSH over the :func:`_hyperplanes`.
+
+    The N_PLANES sign bits are computed ONCE per row, in their own
+    projection, as one ``transform`` over a single hyperplane-matrix
+    literal. Each dot product is the ordered left fold
+    ``acc + cast(x AS double) * y`` from 0.0 that :func:`oracle_knn_lsh`
+    mirrors, so the bits match DuckDB exactly. The LSH_TABLES buckets are
+    then exploded as BITS_PER_TABLE-character substrings of that bit
+    string. Deriving a bucket from the bit EXPRESSION instead of the
+    projected column (inside a per-table lambda, or after the explode)
+    re-runs every dot product once per table."""
+    bits = F.transform(
+        _lit_doubles(_hyperplanes()),
+        lambda p: F.when(
+            F.aggregate(
+                F.zip_with(F.col("embedding"), p, lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            >= 0,
+            F.lit("1"),
+        ).otherwise(F.lit("0")),
+    )
+    return (
+        emb.select("vec_id", F.concat_ws("", bits).alias("bits"))
+        .select(
+            "vec_id",
+            "bits",
+            F.explode(F.sequence(F.lit(0), F.lit(LSH_TABLES - 1))).alias("tbl"),
         )
-    return F.array(*entries)
+        .select(
+            "vec_id",
+            "tbl",
+            F.col("bits")
+            .substr(F.col("tbl") * BITS_PER_TABLE + 1, F.lit(BITS_PER_TABLE))
+            .alias("bucket"),
+        )
+    )
 
 
 def emb_knn_lsh(
     spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
     """LSH-bucketed ANN: hyperplane sign bucket equi-join, exact rescore.
+
+    Buckets come from :func:`_lsh_buckets`. A pair is a candidate if ANY
+    table's bucket matches, which trades one shuffle per table for recall
+    (the standard hyperplane-LSH banding).
 
     At corpus scale the bucket join shuffles only (vec_id, bucket) pairs —
     never the embedding vectors: candidate ids are deduplicated on
@@ -155,9 +192,7 @@ def emb_knn_lsh(
     measures it against the brute-force baseline.
     """
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    buckets = emb.select(
-        "vec_id", F.explode(_table_buckets(F.col("embedding"))).alias("tb")
-    ).select("vec_id", "tb.tbl", "tb.bucket")
+    buckets = _lsh_buckets(emb)
     q_buckets = buckets.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("tbl").alias("q_tbl"),
@@ -316,14 +351,16 @@ KMEANS_ITERS = 3
 IVF_NPROBE = 2
 
 
-def _l2_sq_to_lit(emb_col, centroid: list[float]) -> Column:
-    """Rounded squared L2 distance to a literal centroid — an ordered left
-    fold, mirrored exactly by the DuckDB list_reduce in the oracle."""
-    c = F.array(*[F.lit(float(v)) for v in centroid])
+def _l2_sq_to_lit(emb_col, centroid: Column) -> Column:
+    """Rounded squared L2 distance to a literal centroid (one row of a
+    :func:`_lit_doubles` matrix) — an ordered left fold, mirrored exactly by
+    the DuckDB list_reduce in the oracle."""
     return F.round(
         F.aggregate(
             F.zip_with(
-                emb_col, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+                emb_col,
+                centroid,
+                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
             ),
             F.lit(0.0),
             lambda acc, x: acc + x,
@@ -334,11 +371,11 @@ def _l2_sq_to_lit(emb_col, centroid: list[float]) -> Column:
 
 def _nearest_cells(emb_col, centroids: list[list[float]], n: int) -> Column:
     """Array of the n nearest centroid indices (ties -> lower index)."""
-    entries = [
-        F.struct(_l2_sq_to_lit(emb_col, c).alias("d"), F.lit(j).alias("j"))
-        for j, c in enumerate(centroids)
-    ]
-    ordered = F.slice(F.array_sort(F.array(*entries)), 1, n)
+    entries = F.transform(
+        _lit_doubles(centroids),
+        lambda c, j: F.struct(_l2_sq_to_lit(emb_col, c).alias("d"), j.alias("j")),
+    )
+    ordered = F.slice(F.array_sort(entries), 1, n)
     return F.transform(ordered, lambda s: s["j"])
 
 
@@ -359,8 +396,11 @@ def _maxmin_seeds(emb: DataFrame, rounded: Column, k: int) -> list[list[float]]:
             return []
         seeds = [list(first[0].c)]
         while len(seeds) < k:
-            dists = [_l2_sq_to_lit(F.col("c"), s) for s in seeds]
-            min_d = dists[0] if len(dists) == 1 else F.least(*dists)
+            min_d = F.array_min(
+                F.transform(
+                    _lit_doubles(seeds), lambda s: _l2_sq_to_lit(F.col("c"), s)
+                )
+            )
             nxt = (
                 pts.select("vec_id", "c", min_d.alias("d"))
                 .orderBy(F.desc("d"), F.asc("vec_id"))
