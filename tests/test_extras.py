@@ -422,26 +422,37 @@ def _heavy_dup_corpus(spark, tmp_path, n_dup=150, n_uniq=20):
     return n_dup
 
 
+def _assert_jaccard_oracle_parity(spark, src, threshold, cap):
+    """doc_jaccard_pairs equals the DuckDB oracle, whose candidate generator
+    is the df-capped index (cap ``cap``), its rare-K floor and the
+    minhash-any-band rescue; returns the Spark pair set."""
+    import duckdb
+
+    pairs = dd.doc_jaccard_pairs(spark, src, threshold)
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{src}/documents.parquet/*.parquet'"
+        )
+        assert_frames_equal(
+            pairs,
+            con.sql(dd.oracle_jaccard_pairs(threshold, max_shingle_df=cap)),
+            float_cols=("jaccard",),
+        )
+    finally:
+        con.close()
+    return {(r.doc_a, r.doc_b) for r in pairs.collect()}
+
+
 def test_jaccard_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
     """ADVICE round 2: a pure df cap drops ALL candidates for groups larger
-    than the cap (every shared shingle is hot). The rare-K floor must keep
-    every identical pair discoverable."""
+    than the cap (every shared shingle is hot). Every identical pair must be
+    found, and the prefix-filtered generator must equal the oracle's
+    capped generator (cap 10, so the rare-K floor carries the group)."""
     n_dup = _heavy_dup_corpus(spark, tmp_path)
-    pairs = dd.doc_jaccard_pairs(spark, str(tmp_path), 0.8, max_shingle_df=10)
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    got = _assert_jaccard_oracle_parity(spark, str(tmp_path), 0.8, 10)
     dup_pairs = {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)}
     assert dup_pairs <= got
-    # and the index stays bounded: hot-shingle rows are capped at
-    # RARE_SHINGLES_PER_DOC per document, not one row per (doc, hot shingle)
-    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    exploded = docs.select(
-        "doc_id", F.explode(dd._shingles(F.col("text"))).alias("shingle")
-    )
-    idx = dd.capped_index(exploded, "shingle", 10, dd.RARE_SHINGLES_PER_DOC)
-    per_dup_doc = (
-        idx.filter(F.col("doc_id") < n_dup).groupBy("doc_id").count().collect()
-    )
-    assert all(r["count"] == dd.RARE_SHINGLES_PER_DOC for r in per_dup_doc)
 
 
 def test_cosine_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
@@ -483,9 +494,9 @@ def test_cosine_df_cap_keeps_heavy_dup_groups(spark, tmp_path):
 def test_jaccard_floor_pairs_near_identical_heavy_group(spark, tmp_path):
     """ADVICE round 3: the old floor ranked df=1 shingles first, so a
     NEAR-identical doc in a heavy group kept its unique-edit shingles
-    (unpairable) instead of shared ones. With df=1 excluded from the floor,
-    every doc keeps the same least-frequent SHARED shingles and the whole
-    near-identical group pairs up even when every shared shingle is hot."""
+    (unpairable) instead of shared ones. The whole near-identical group must
+    pair up even when every shared shingle is hot, and the oracle's capped
+    generator (cap 10, floor skipping df=1) must agree pair for pair."""
     shared = " ".join(f"word{i:02d}" for i in range(30))
     n_dup = 120
     rows = [(i, f"{shared} uniqedit{i}") for i in range(n_dup)]
@@ -493,36 +504,9 @@ def test_jaccard_floor_pairs_near_identical_heavy_group(spark, tmp_path):
               f" foo{i} bar{i} baz{i}") for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     df.coalesce(2).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    pairs = dd.doc_jaccard_pairs(spark, str(tmp_path), 0.8, max_shingle_df=10)
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    got = _assert_jaccard_oracle_parity(spark, str(tmp_path), 0.8, 10)
     dup_pairs = {(a, b) for a in range(n_dup) for b in range(a + 1, n_dup)}
     assert dup_pairs <= got
-    # the floor spent its slots on shared (df>=2) shingles, not the df=1
-    # unique-edit shingles
-    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    exploded = docs.select(
-        "doc_id", F.explode(dd._shingles(F.col("text"))).alias("shingle")
-    )
-    idx = dd.capped_index(exploded, "shingle", 10, dd.RARE_SHINGLES_PER_DOC)
-    # every heavy doc keeps exactly RARE_SHINGLES_PER_DOC HOT (shared,
-    # df > cap) shingles via the floor — and they are the SAME two shingles
-    # for every doc, which is what makes the group pair. (df=1 unique-edit
-    # shingles are still present via the df<=cap branch; they never join.)
-    dfreq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    hot_kept = (
-        idx.filter(F.col("doc_id") < n_dup)
-        .join(dfreq, "shingle")
-        .filter(F.col("df") > 10)
-    )
-    per_doc = hot_kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sort_array(F.collect_list("shingle")).alias("shs"),
-    )
-    rows = per_doc.collect()
-    assert len(rows) == n_dup
-    assert all(r.n == dd.RARE_SHINGLES_PER_DOC for r in rows)
-    assert len({tuple(r.shs) for r in rows}) == 1
-    assert not any("uniqedit" in s for s in rows[0].shs)
 
 
 def _two_variant_heavy_corpus(spark, tmp_path, n_per=60, shared_tokens=60):
@@ -549,65 +533,102 @@ def _two_variant_heavy_corpus(spark, tmp_path, n_per=60, shared_tokens=60):
 
 def test_jaccard_minhash_rescue_pairs_divergent_floor_picks(spark, tmp_path):
     """VERDICT round 4 demand #3: when every shared shingle is hot AND the
-    two docs' rare-K floor picks don't intersect, the df-capped index finds
-    nothing — the minhash-any-band rescue must find ALL cross-variant pairs
-    anyway (and the DuckDB oracle must agree bit-for-bit)."""
+    two docs' rare-K floor picks don't intersect, a df-capped index finds
+    nothing. The operator must find ALL cross-variant pairs anyway, and the
+    DuckDB oracle, whose capped index needs its minhash rescue for them,
+    must agree bit-for-bit."""
     import duckdb
 
     a_ids, b_ids = _two_variant_heavy_corpus(spark, tmp_path)
     sf = str(tmp_path)
     cap = 10
 
-    # 1. prove the fixture bites: the capped index ALONE yields no
-    #    cross-variant candidates (disjoint floor picks, all shared hot)
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    exploded = docs.select(
-        "doc_id", F.explode(dd._shingles(F.col("text"))).alias("shingle")
+    # 1. prove the fixture bites the oracle's generator: its capped index
+    #    ALONE yields no cross-variant candidates (disjoint floor picks, all
+    #    shared shingles hot), and every doc of the group takes the rescue
+    e = (
+        spark.read.parquet(f"{sf}/documents.parquet")
+        .select("doc_id", F.explode(dd._shingles(F.col("text"))).alias("shingle"))
+        .toPandas()
     )
-    idx = dd.capped_index(exploded, "shingle", cap, dd.RARE_SHINGLES_PER_DOC)
-    i1, i2 = idx.alias("a"), idx.alias("b")
-    cross_from_index = (
-        i1.join(
-            i2,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(F.col("a.doc_id").isin(a_ids) & F.col("b.doc_id").isin(b_ids))
-        .count()
-    )
+    capped = dd.sql_capped_index("e", "shingle", cap, dd.RARE_SHINGLES_PER_DOC)
+    con = duckdb.connect()
+    try:
+        con.register("e", e)
+        cross_from_index = con.sql(
+            f"""WITH {capped}
+SELECT COUNT(*) FROM capped a JOIN capped b
+  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+WHERE a.doc_id IN ({", ".join(map(str, a_ids))})
+  AND b.doc_id IN ({", ".join(map(str, b_ids))})"""
+        ).fetchone()[0]
+        hot = {
+            r[0]
+            for r in con.sql(
+                f"WITH {capped}, hot AS ("
+                f"{dd.sql_rescue_doc_ids(cap, dd.RARE_SHINGLES_PER_DOC)})"
+                " SELECT doc_id FROM hot"
+            ).fetchall()
+        }
+    finally:
+        con.close()
     assert cross_from_index == 0
-
-    # 2. every doc of the group is rescue-eligible
-    hot = {
-        r.doc_id
-        for r in dd.rescue_doc_ids(
-            exploded, "shingle", cap, dd.RARE_SHINGLES_PER_DOC
-        ).collect()
-    }
     assert set(a_ids) | set(b_ids) <= hot
 
-    # 3. the full operator finds ALL pairs — within and across variants
-    pairs = dd.doc_jaccard_pairs(spark, sf, 0.8, max_shingle_df=cap)
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    # 2. the operator finds ALL pairs — within and across variants — and
+    #    equals the capped+rescue oracle
+    got = _assert_jaccard_oracle_parity(spark, sf, 0.8, cap)
     all_ids = sorted(a_ids + b_ids)
     want = {
         (a, b) for i, a in enumerate(all_ids) for b in all_ids[i + 1:]
     }
     assert want <= got
 
-    # 4. DuckDB oracle parity on the same fixture
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
-        )
-        assert_frames_equal(
-            pairs,
-            con.sql(dd.oracle_jaccard_pairs(0.8, max_shingle_df=cap)),
-            float_cols=("jaccard",),
-        )
-    finally:
-        con.close()
+
+def _brute_jaccard_pairs(spark, src, thresholds):
+    """{threshold: pair set} by all-pairs Jaccard in plain Python over
+    dd._shingles, rounded as the Spark verify rounds (HALF_UP, 4 places)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = {
+        r.doc_id: set(r.sh)
+        for r in spark.read.parquet(f"{src}/documents.parquet")
+        .select("doc_id", dd._shingles(F.col("text")).alias("sh"))
+        .collect()
+        if r.sh
+    }
+    ids = sorted(sets)
+    scores = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            n = len(sets[a] & sets[b])
+            if n:
+                j = n / float(len(sets[a]) + len(sets[b]) - n)
+                scores[(a, b)] = Decimal(repr(j)).quantize(
+                    Decimal("0.0001"), ROUND_HALF_UP
+                )
+    return {
+        t: {p for p, j in scores.items() if j >= Decimal(repr(t))}
+        for t in thresholds
+    }
+
+
+def test_jaccard_prefix_matches_brute_force(spark, tmp_path):
+    """Completeness without the capped oracle: the prefix-filtered
+    generator returns exactly the all-pairs brute-force pair set, on the
+    real tiny corpus and on the two-variant heavy group, at low and high
+    thresholds."""
+    _two_variant_heavy_corpus(spark, tmp_path)
+    thresholds = (0.2, 0.5, 0.8, 0.9)
+    for src in (SF_TINY, str(tmp_path)):
+        want = _brute_jaccard_pairs(spark, src, thresholds)
+        for t in thresholds:
+            got = {
+                (r.doc_a, r.doc_b)
+                for r in dd.doc_jaccard_pairs(spark, src, t).collect()
+            }
+            assert got == want[t], (src, t, len(got), len(want[t]))
+        assert want[0.9]  # the corpus has near-dups at every threshold
 
 
 def test_cosine_minhash_rescue_pairs_divergent_floor_picks(spark, tmp_path):

@@ -136,6 +136,25 @@ def test_cosine_pairs_candidate_join_is_equi(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_jaccard_pairs_is_one_prefix_join(spark):
+    """doc_jaccard_pairs finds candidates with ONE prefix self-join: no
+    Union (the old minhash rescue was unioned onto a df-capped index), no
+    posexplode (its minhash permutations), and exactly 5 joins — shingle df
+    onto each side of the prefix self-join, the self-join itself, and the
+    two verify lookups (the capped generator planned 10). The self-join
+    stays an equi-join on shingle, never a cartesian product."""
+    from timberline_spark.extras.dedup import doc_jaccard_pairs
+
+    df = doc_jaccard_pairs(spark, SF_TINY, 0.2)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert not _nodes(optimized, "Union")
+    assert "posexplode" not in optimized.toString()
+    assert len(_nodes(optimized, "Join")) == 5
+    physical = _plan(df, "simple")
+    assert "CartesianProduct" not in physical
+    assert "BroadcastNestedLoopJoin" not in physical
+
+
 def test_classify_is_single_stage_no_shuffle(spark, stage_table):
     """parse+enrich+validate+route is map-only over the input scan: the
     whole per-row path is one stage (broadcasts aside)."""

@@ -6,9 +6,9 @@ needs (the reference's online cosine-0.95 dedup —
 streaming ancestor of these batch operators):
 
 - exact dedup: normalized-text hash groupBy (J2 batch semantics)
-- n-gram Jaccard: token-shingle inverted index (document-frequency capped so
-  hot stop-phrase shingles can't explode the candidate space) -> candidate
-  pairs -> exact-Jaccard verify
+- n-gram Jaccard: prefix-filtered token-shingle index (each doc indexes
+  only its rarest shingles, enough that no qualifying pair is missed) ->
+  candidate pairs -> exact-Jaccard verify
 - MinHash + LSH: hashed shingles -> K minhashes -> B bands -> bucket join ->
   candidate pairs -> exact-Jaccard verify
 - SimHash: 32-bit sign-aggregated token hashes
@@ -33,25 +33,17 @@ LSH_BANDS = 4  # 4 bands x 4 rows
 MINHASH_P = 1_073_741_789  # prime < 2^30: shingle hash (<2^30) * coeff stays < 2^63
 COEFF_MOD = 1_073_741_789
 JACCARD_THRESHOLD = 0.8
-# shingles present in more documents than this are dropped from CANDIDATE
-# GENERATION only (the exact-Jaccard verify still uses the full sets): one
-# stop-phrase shingle shared by 1M docs would otherwise create ~10^12 pairs
+# Candidate-index cap and rare-K floor of the DuckDB oracle mirror
+# (oracle_jaccard_pairs); the Spark side, doc_jaccard_pairs, is
+# prefix-filtered and needs neither.
 MAX_SHINGLE_DF = 100
-# ...but each document ALWAYS keeps its K least-frequent SHARED (df >= 2)
-# shingles in the index regardless of df: in a heavy near-duplicate group
-# (> MAX_SHINGLE_DF near-identical docs) EVERY shared shingle exceeds the
-# cap, and a pure df cap would generate zero candidates for exactly the
-# case dedup targets. df=1 shingles are skipped by the floor — they join
-# only with themselves and can never produce a pair, and for NEAR-identical
-# docs they are precisely the unique-edit shingles that would otherwise
-# crowd out the shared ones. Byte-IDENTICAL docs rank their shingles
-# identically (order by df, shingle) and always pair via the floor.
-# NEAR-identical docs in heavy groups need not share floor picks — they are
-# covered by the minhash-any-band rescue instead (rescue_doc_ids +
-# minhash_any_pairs, round 5): docs whose surviving index is fragile get
-# candidates from 16 single-row minhash bands, P(miss) = (1-J)^16 ~ 0.
-# tests/test_extras.py pins both the floor guarantee and the rescue.
 RARE_SHINGLES_PER_DOC = 2
+# Safety margin subtracted from the threshold when sizing prefixes (here and
+# in similarity.cosine_pairs): the verify keeps round(score, 4) >= t, i.e.
+# true score >= t - 0.00005, and the float prefix arithmetic carries ~1e-15
+# noise; 1e-3 covers both with orders of magnitude to spare at negligible
+# extra prefix mass.
+_PREFIX_MARGIN = 1e-3
 
 
 # deterministic per-permutation coefficients (Knuth-style multiplicative
@@ -155,21 +147,24 @@ def _verify_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame
 
 
 def doc_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = JACCARD_THRESHOLD,
-    max_shingle_df: int = MAX_SHINGLE_DF,
+    spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Near-dup pairs by exact token-shingle Jaccard.
 
-    Scale path: candidate generation is an inverted-index self-join on
-    shingle (shuffle on shingle key, combinable counts) — never an all-pairs
-    cross join — with a document-frequency cap that drops hot shingles from
-    the index (a shingle in >max_shingle_df docs contributes O(df^2)
-    candidates while signaling near-nothing about similarity). The Jaccard
-    itself is computed exactly over the FULL shingle sets of each surviving
-    candidate pair.
+    Candidate generation is PREFIX FILTERING (Bayardo/Ma/Srikant, "Scaling
+    Up All Pairs Similarity Search", WWW'07): order shingles globally by
+    (document frequency, shingle), rarest first, and index only each doc's
+    first n - ceil(t*n) + 1 shingles. J(a, b) >= t forces
+    |a & b| >= ceil(t * max(n_a, n_b)), so two qualifying docs MUST share a
+    prefix shingle — the prefix self-join is an equi-join on shingle that
+    provably misses no pair (sized with threshold - _PREFIX_MARGIN to also
+    cover the verify's 4-decimal rounding). Hot stop-phrase shingles sort
+    last, so at the 0.8-0.9 operating thresholds a prefix is the doc's few
+    rarest shingles. The Jaccard itself is computed exactly over the FULL
+    shingle sets of each candidate.
     """
+    from pyspark.sql import Window
+
     docs = (
         spread_for_compute(
             spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -178,11 +173,19 @@ def doc_jaccard_pairs(
         .withColumn("n_sh", F.size("sh"))
         .filter(F.col("n_sh") > 0)
     )
-    exploded = docs.select("doc_id", F.explode("sh").alias("shingle"))
-    capped = capped_index(
-        exploded, "shingle", max_shingle_df, RARE_SHINGLES_PER_DOC
+    exploded = docs.select("doc_id", "n_sh", F.explode("sh").alias("shingle"))
+    dfreq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    t_eff = max(threshold - _PREFIX_MARGIN, 0.0)
+    prefix = (
+        exploded.join(dfreq, "shingle")
+        .withColumn(
+            "rk",
+            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "shingle")),
+        )
+        .filter(F.col("rk") <= F.col("n_sh") - F.ceil(F.col("n_sh") * t_eff) + 1)
+        .select("doc_id", "shingle")
     )
-    a, b = capped.alias("a"), capped.alias("b")
+    a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
         a.join(
             b,
@@ -192,113 +195,13 @@ def doc_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # Heavy-group recall rescue: docs whose every shared shingle is hot get
-    # a second candidate source — any-of-16 single-row minhash bands over
-    # their char-hashed shingle sets (guaranteed-in-practice recall for
-    # near-identical docs; exact verify below restores precision).
-    hot_sets = docs.join(
-        rescue_doc_ids(
-            exploded, "shingle", max_shingle_df, RARE_SHINGLES_PER_DOC
-        ),
-        "doc_id",
-    ).select("doc_id", F.transform("sh", xh.char_hash).alias("hs"))
-    cand = cand.unionByName(minhash_any_pairs(hot_sets)).distinct()
     return _verify_pairs(cand, docs, threshold)
 
 
-def capped_index(
-    exploded: DataFrame, key: str, max_df: int, rare_k: int
-) -> DataFrame:
-    """Df-capped inverted index for candidate generation with a recall
-    floor: keep (doc_id, key) rows whose key's document frequency is
-    <= max_df, PLUS each doc's rare_k least-frequent SHARED (df >= 2) keys
-    unconditionally (rank window partitions on high-cardinality doc_id —
-    parallel at any scale). Candidate volume stays bounded by
-    sum(min(df, ~rare-group size)^2) instead of sum(df^2).
-
-    Recall floor contract (precisely): df=1 keys are skipped by the floor —
-    they cannot produce a pair. Byte-identical docs share ALL keys and rank
-    them identically, so they keep the same rare_k keys and are GUARANTEED
-    to pair even when every key is hot. Near-identical docs in heavy groups
-    usually pair (their shared-key df ranking is mostly aligned) but are
-    not guaranteed to — their K rarest shared keys can differ."""
-    from pyspark.sql import Window
-
-    dfreq = exploded.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
-    # df=1 last in the ranking: the floor spends its slots on keys that can
-    # actually join (df >= 2), not on a near-duplicate's unique-edit keys
-    w = Window.partitionBy("doc_id").orderBy((F.col("df") == 1), "df", key)
-    return (
-        exploded.join(dfreq, key)
-        .withColumn("rk", F.row_number().over(w))
-        .filter((F.col("df") <= max_df) | (F.col("rk") <= rare_k))
-        .select("doc_id", key)
-    )
-
-
-def rescue_doc_ids(
-    exploded: DataFrame, key: str, max_df: int, rare_k: int
-) -> DataFrame:
-    """doc_ids the df-capped index under-serves: at least one shared
-    (df >= 2) key is hot (df > max_df) AND at most ``rare_k`` shared keys
-    survive the cap (df in [2, max_df]).
-
-    A heavy near-identical group loses essentially all joinable keys to the
-    df cap; what remains is the rare-K floor, whose picks two near-identical
-    (non-byte-identical) docs need not share, plus at most a stray
-    incidental low-df key (e.g. a hash collision in a fixed dim space) that
-    joins almost nothing. Requiring "every shared key hot" would wrongly
-    exclude docs with such a stray key — the gate is "fragile surviving
-    index", not "empty surviving index". df=1 keys are ignored throughout:
-    they cannot produce a pair, and a near-identical doc in a heavy group
-    always carries a few unique-edit keys.
-    """
-    dfreq = exploded.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
-    return (
-        exploded.join(dfreq, key)
-        .filter(F.col("df") >= 2)
-        .groupBy("doc_id")
-        .agg(
-            F.max("df").alias("max_df"),
-            F.sum(
-                F.when(F.col("df") <= max_df, 1).otherwise(0)
-            ).alias("n_surviving"),
-        )
-        .filter((F.col("max_df") > max_df) & (F.col("n_surviving") <= rare_k))
-        .select("doc_id")
-    )
-
-
-def minhash_any_pairs(hot_sets: DataFrame) -> DataFrame:
-    """Rescue candidate pairs for all-hot docs: two docs are candidates if
-    they share ANY of MINHASH_PERMS min-hashes (single-row bands).
-
-    ``hot_sets(doc_id, hs: array<long>)`` is the hashed key set per all-hot
-    doc. Single-row bands maximize recall: P(miss) = (1 - J)^PERMS, i.e.
-    ~6e-12 at Jaccard 0.8 — near-identical docs are found with certainty in
-    practice (and the subsequent exact verify restores precision). The join
-    is an equi-join on (permutation, min-hash); within a heavy duplicate
-    group every member shares the same min under every permutation, so the
-    bucket IS the group and candidate volume ~= true-pair volume (the pairs
-    listing of a duplicate group is inherently quadratic in group size).
-    """
-    mh = hot_sets.select(
-        "doc_id",
-        F.posexplode(_minhash_col(F.col("hs"))).alias("perm", "mh"),
-    )
-    a, b = mh.alias("a"), mh.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.perm") == F.col("b.perm"))
-            & (F.col("a.mh") == F.col("b.mh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
+# The DuckDB oracles' candidate generator (oracle_jaccard_pairs and
+# similarity.sql_cosine_pairs_ctes): df-capped index + minhash-any-band
+# rescue. The Spark operators find the same pairs by prefix filtering; the
+# Spark functions the docstrings below name no longer exist.
 def sql_rescue_doc_ids(max_df: int, rare_k: int) -> str:
     """DuckDB mirror of rescue_doc_ids as a CTE body; requires the
     ``ranked(doc_id, <key>, df, rk)`` CTE from :func:`sql_capped_index` to

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _PREFIX_MARGIN
+
 EMBED_DIM = 64
 LSH_TABLES = 8  # banded hyperplane LSH: union of candidates across tables
 BITS_PER_TABLE = 5
@@ -795,13 +797,6 @@ def _cosine_weights(docs: DataFrame) -> DataFrame:
             "doc_id", "dim", (F.col("cnt") / F.col("nrm")).alias("w")
         )
     )
-
-
-# Safety margin subtracted from the threshold when sizing prefixes: the
-# rescore keeps round(cos, 4) >= t, i.e. true cosine >= t - 0.00005, and the
-# float cumulative sums carry ~1e-15 noise; 1e-3 covers both with three
-# orders of magnitude to spare at negligible extra prefix mass.
-_PREFIX_MARGIN = 1e-3
 
 
 def cosine_pairs(docs: DataFrame, threshold: float) -> DataFrame:
