@@ -21,11 +21,18 @@ def outdirs():
     shutil.rmtree(b, ignore_errors=True)
 
 
-def test_resume_produces_identical_sinks(spark, outdirs):
+@pytest.fixture(scope="module")
+def full_run(spark, outdirs):
+    """One uninterrupted run into the first out dir; tests reading that dir
+    take this fixture so they never depend on test order."""
+    return run_pipeline(spark, SF_TINY, outdirs[0], run_id="r1")
+
+
+def test_resume_produces_identical_sinks(spark, outdirs, full_run):
     full_dir, resume_dir = outdirs
 
     # one-shot run
-    res_full = run_pipeline(spark, SF_TINY, full_dir, run_id="r1")
+    res_full = full_run
     assert res_full.partitions_processed  # did work
     assert not res_full.partitions_skipped
 
@@ -48,7 +55,7 @@ def test_resume_produces_identical_sinks(spark, outdirs):
     assert not res_c.partitions_processed
 
 
-def test_lineage_and_metrics_written(spark, outdirs):
+def test_lineage_and_metrics_written(spark, outdirs, full_run):
     full_dir, _ = outdirs
     lineage = spark.read.parquet(f"{full_dir}/_lineage")
     assert lineage.filter(
@@ -62,9 +69,36 @@ def test_lineage_and_metrics_written(spark, outdirs):
         F.sum("invalid")
     ).collect()[0][0]
     assert bad > 0
+    # the stage rows add up: the write's wall time is recorded once (not
+    # repeated on every date), and each date's valid + invalid rows are
+    # its input rows
+    stage_rows = metrics.filter(F.col("stage") == "stage_classified").collect()
+    timed = [r for r in stage_rows if r.elapsed_sec is not None]
+    assert [r.partition for r in timed] == ["*"]
+    assert sum(r.elapsed_sec for r in timed) <= full_run.elapsed_sec
+    dated = [r for r in stage_rows if r.partition != "*"]
+    assert sorted(r.partition for r in dated) == full_run.partitions_processed
+    assert all(r.rows_out + r.invalid == r.rows_in for r in dated)
+    assert any(r.rows_out < r.rows_in for r in dated)
 
 
-def test_sink_counts_match_flags(spark, outdirs):
+def test_date_partitioned_tables_one_file_per_date(spark, tmp_path):
+    """Files are sized by bytes, not by a row-count salt: at this scale
+    every date of the stage table and of each sink is exactly one file.
+    (Three replicas: enough rows that a per-date salt would show, as the
+    former floor of 4 stage files per date did from here up.)"""
+    import os
+
+    run_pipeline(spark, SF_TINY, str(tmp_path), run_id="layout", replicate=3)
+    for table in ("stage_classified", "sink_errors", "sink_tool_calls", "sink_anomalies"):
+        dates = [d for d in os.listdir(tmp_path / table) if d.startswith("p_date=")]
+        assert dates, table
+        for d in dates:
+            files = [f for f in os.listdir(tmp_path / table / d) if f.endswith(".parquet")]
+            assert len(files) == 1, (table, d, files)
+
+
+def test_sink_counts_match_flags(spark, outdirs, full_run):
     full_dir, _ = outdirs
     stage = spark.read.parquet(f"{full_dir}/stage_classified")
     n_err = spark.read.parquet(f"{full_dir}/sink_errors").count()
@@ -262,7 +296,7 @@ def test_dedup_hash_key_false_pipeline_runs(spark, monkeypatch):
         shutil.rmtree(b, ignore_errors=True)
 
 
-def test_collision_metric_written(spark, outdirs):
+def test_collision_metric_written(spark, outdirs, full_run):
     full_dir, _ = outdirs
     metrics = spark.read.parquet(f"{full_dir}/_metrics")
     for stage in ("dedup_hash_collisions", "dedup_rollup_hash_collisions"):
@@ -317,40 +351,6 @@ def test_fuzzy_buckets_flag_merges_in_analysis_results(spark):
         shutil.rmtree(in_dir, ignore_errors=True)
         shutil.rmtree(out_f, ignore_errors=True)
         shutil.rmtree(out_x, ignore_errors=True)
-
-
-def test_files_per_date_scales_with_input():
-    from timberline_spark.pipeline import files_for
-
-    assert files_for(100_000, 30) == 4          # sf0.1: floor
-    assert files_for(32_000_000, 30) == 5       # 320x: above the floor
-    assert files_for(3_200_000_000, 30) == 427  # 32000x: scans stay parallel
-    assert files_for(10**12, 30) == 512         # capped
-    assert files_for(0, 0) == 4
-
-
-def test_derive_files_handles_partitioned_input(spark):
-    """A Hive-partitioned input table (p_date=... subdirs, no top-level
-    parquet) must be sized from its real footer stats, not silently fall to
-    the MIN_FILES_PER_DATE floor."""
-    from timberline_spark.pipeline import MIN_FILES_PER_DATE, _derive_files_per_date
-    from timberline_spark.transcripts import load_transcripts
-
-    base = tempfile.mkdtemp(prefix="tl_part_")
-    try:
-        tr = load_transcripts(spark, SF_TINY).withColumn(
-            "p_date", F.date_format("ts", "yyyy-MM-dd")
-        )
-        tr.write.partitionBy("p_date").parquet(f"{base}/in_part")
-        flat = _derive_files_per_date(spark, SF_TINY, None, replicate=1)
-        part = _derive_files_per_date(spark, "", f"{base}/in_part", replicate=1)
-        # same data either way -> same sizing; tiny input sits at the floor,
-        # so also check the footer path actually saw rows (big replicate)
-        assert part == flat == MIN_FILES_PER_DATE
-        big = _derive_files_per_date(spark, SF_TINY, None, replicate=50_000)
-        assert big > MIN_FILES_PER_DATE
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_iceberg_surface(spark):

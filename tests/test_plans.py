@@ -155,6 +155,35 @@ def test_jaccard_pairs_is_one_prefix_join(spark):
     assert "BroadcastNestedLoopJoin" not in physical
 
 
+def test_stage_write_rebalances_by_date(spark, tmp_path, monkeypatch):
+    """run_pipeline's stage-table write leaves file sizing to AQE: its plan
+    holds one RebalancePartitions on p_date and no row-count salt (pmod)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from timberline_spark import pipeline
+
+    class _Captured(Exception):
+        pass
+
+    written = []
+
+    def capture(self, path, *args, **kwargs):
+        written.append((path, self._df))
+        raise _Captured
+
+    # the stage table is the run's first parquet write; stop the run there
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    with pytest.raises(_Captured):
+        pipeline.run_pipeline(spark, SF_TINY, str(tmp_path), run_id="plan")
+    [(path, df)] = written
+    assert path.endswith(pipeline.STAGE_CLASSIFIED)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    rebalances = _nodes(optimized, "RebalancePartitions")
+    assert len(rebalances) == 1
+    assert "p_date" in rebalances[0].partitionExpressions().toString()
+    assert "pmod" not in optimized.toString()
+
+
 def test_classify_is_single_stage_no_shuffle(spark, stage_table):
     """parse+enrich+validate+route is map-only over the input scan: the
     whole per-row path is one stage (broadcasts aside)."""

@@ -131,8 +131,7 @@ def parse_turns(df: DataFrame, impl: str = "native") -> DataFrame:
     Adds: grammar, level_raw, service, message, text_ts_ms (epoch millis
     parsed out of the text, null when the grammar carries no timestamp),
     labels (open map<string,string> metadata after the 3-path fallback),
-    conv_key (numeric conversation key used by the deterministic sampler
-    and the stage-table salt).
+    conv_key (numeric conversation key used by the deterministic sampler).
 
     conv_key is the cross-engine polynomial hash of the conv_id STRING
     (extras/xhash.py char_hash) — never null for any id format. The input

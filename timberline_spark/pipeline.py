@@ -13,7 +13,8 @@ report) as a resumable batch DAG over date partitions:
   per-partition granularity);
 - a ``_metrics`` table records rows_in/rows_out/invalid per stage per
   partition (the reference's Prometheus counters,
-  ``log-ingestor/internal/handlers/stream.go:108-158``).
+  ``log-ingestor/internal/handlers/stream.go:108-158``); a stage's wall
+  time is recorded once, in its partition ``*`` row.
 
 Dynamic partition overwrite makes every write idempotent: re-processing a
 partition replaces it byte-identically (all transforms are deterministic),
@@ -31,10 +32,12 @@ Scale notes (the 100 TB story):
   analysis window (engine.py:84-86).
 - Hot conversations skew the dedup/cluster groupBys; those group on
   message-derived keys (dedup_key / fingerprint), which are naturally
-  high-cardinality, and AQE skew handling is enabled in session.py. The
-  classified stage table is written with hash distribution on
-  (conv_id, turn_idx) salted into ``spark.sql.shuffle.partitions`` files per
-  date partition, so downstream scans parallelize regardless of conv skew.
+  high-cardinality, and AQE skew handling is enabled in session.py.
+- The stage table and the sinks are sized by bytes, not row counts
+  (``_write_by_date``): an AQE rebalance on the date gives one file per
+  small date and ~64 MB files (``advisoryPartitionSizeInBytes``) for a
+  large one, so downstream scans of a big date stay parallel while a small
+  run does not pay a commit for near-empty files.
 """
 
 from __future__ import annotations
@@ -81,75 +84,17 @@ def _p_date(col):
     return F.date_format(F.to_timestamp(F.col(col) / 1000.0), "yyyy-MM-dd")
 
 
-TARGET_ROWS_PER_FILE = 250_000  # ~60-120 MB of classified parquet per file
-MIN_FILES_PER_DATE = 4
-MAX_FILES_PER_DATE = 512
-
-
-def files_for(n_rows: int, n_days: int, floor: int = MIN_FILES_PER_DATE) -> int:
-    """Salted files per date partition, sized to the data: enough files
-    that downstream scans of one date keep cluster-wide parallelism (a
-    hardcoded 4 capped any date at 4 tasks — wrong at 320x the rows), with
-    a floor so tiny runs still spread across executors and a cap so the
-    file count cannot explode (dates x files). Terminal sink outputs pass
-    floor=1: they feed external readers, not this pipeline's scans, so a
-    small date needs no parallelism padding (round 7: the padding tripled
-    the sinks' file count and dynamic-overwrite commit time at sf0.1)."""
-    per_day = n_rows / max(1, n_days)
-    return max(floor, min(MAX_FILES_PER_DATE, -(-int(per_day) // TARGET_ROWS_PER_FILE)))
-
-
-def _derive_files_per_date(
-    spark: SparkSession, sf_dir: str, input_table: str | None, replicate: int
-) -> int:
-    """Row count + date span for file sizing. Read from parquet FOOTERS on
-    the driver (no Spark job — this is metadata a real deployment gets from
-    Iceberg partition stats for free); falls back to a narrow ts-column
-    aggregate if the footers lack ts statistics."""
-    src = input_table or f"{sf_dir}/events.parquet"
-    try:
-        import os
-
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(src):
-            files = [src]
-        else:  # walk recursively: Hive-partitioned (p_date=...) and nested
-            # layouts must contribute their files, not silently yield [] and
-            # under-parallelize via the MIN_FILES_PER_DATE fallback
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, names in os.walk(src)
-                for f in names
-                if f.endswith(".parquet")
-            ]
-        if not files:
-            raise ValueError(f"no parquet files under {src}")
-        n = 0
-        lo = hi = None
-        for path in files:
-            md = pq.ParquetFile(path).metadata
-            n += md.num_rows
-            ts_idx = md.schema.names.index("ts")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ts_idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("no ts stats")
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        if n == 0 or lo is None:
-            return MIN_FILES_PER_DATE
-    except Exception:
-        r = spark.read.parquet(src).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-        ).collect()[0]
-        n, lo, hi = r["n"], r["lo"], r["hi"]
-        if n == 0 or lo is None:
-            return MIN_FILES_PER_DATE
-    n_days = (hi - lo).days + 1
-    return files_for(n * (1 if input_table else max(1, replicate)), n_days)
+def _write_by_date(df: DataFrame, path: str) -> None:
+    """Overwrite the ``p_date`` partitions of ``df`` at ``path``, with files
+    sized by bytes, not by row counts. The AQE rebalance hint routes each
+    date to one write task, so a small date is one file. A date larger than
+    ``advisoryPartitionSizeInBytes`` (64 MB, session.py) is split into
+    files of about that size. Without the shuffle, every scan task would
+    write a sliver file into every date it touches (tasks x dates files),
+    and every created file costs the commit."""
+    df.hint("rebalance", "p_date").write.mode("overwrite").partitionBy(
+        "p_date"
+    ).parquet(path)
 
 
 def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -417,106 +362,98 @@ def run_pipeline(
         )
         pre_todo = [p for p in all_parts if p not in done][:max_partitions]
 
-    metrics_rows = []
-    t_stage = time.time()
+    t_write = time.time()
     batch = classified
     if pre_todo is not None:
         batch = batch.filter(F.col("p_date").isin(pre_todo))
     elif done:
         batch = batch.filter(~F.col("p_date").isin(sorted(done)))
-    # salted files per date partition: enough parallelism for downstream
-    # scans even when one conversation dominates a date, sized to the input
-    # (floor 4, cap 512) so the layout survives a 320x scale-up
-    files_per_date = _derive_files_per_date(spark, sf_dir, input_table, replicate)
-    wrote = pre_todo is None or bool(pre_todo)
-    if wrote:
-        (
-            batch.repartition(
-                F.col("p_date"), F.pmod(F.col("conv_key"), F.lit(files_per_date))
+    if pre_todo is None or pre_todo:
+        _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
+    stage_write_s = time.time() - t_write
+
+    def _commit_stage():
+        # per-partition counts AND the per-sink totals from the written table
+        # in ONE columnar pass (p_date, is_valid, level, tool only); the sink
+        # totals are summed client-side from the per-date rows (dates are
+        # few). Nothing in stage 2+3 needs these counts, so this job runs on
+        # the stage-2 pool beside the sinks instead of ahead of them; the
+        # lineage append still follows the stage write, as resume requires.
+        per_part_rows = (
+            spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}")
+            # this run's scope only: todo/counts must not absorb dates another
+            # run_id owns (run_id is constant per file -> row-group pruning)
+            .filter(F.col("run_id") == run_id)
+            .select(
+                F.col("p_date").cast("string").alias("p_date"),
+                "is_valid",
+                "level",
+                "tool",
             )
-            .write.mode("overwrite")
-            .partitionBy("p_date")
-            .parquet(f"{out_dir}/{STAGE_CLASSIFIED}")
+            .groupBy("p_date")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)), F.lit(0)
+                ).alias("bad"),
+                F.coalesce(
+                    F.sum(
+                        F.when(
+                            F.col("is_valid")
+                            & F.col("level").isin("ERROR", "CRITICAL"),
+                            1,
+                        ).otherwise(0)
+                    ),
+                    F.lit(0),
+                ).alias("n_err"),
+                F.coalesce(
+                    F.sum(
+                        F.when(
+                            F.col("is_valid") & (F.col("tool") != ""), 1
+                        ).otherwise(0)
+                    ),
+                    F.lit(0),
+                ).alias("n_tool"),
+            )
+            .collect()
         )
-    # per-partition counts AND the per-sink totals from the written table in
-    # ONE columnar pass (p_date, is_valid, level, tool only) — this replaces
-    # what used to be two separate full scans (a per-date groupBy and a
-    # global flag aggregate); the sink totals are summed client-side from
-    # the per-date rows (dates are few)
-    per_part_rows = (
-        spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}")
-        # this run's scope only: todo/counts must not absorb dates another
-        # run_id owns (run_id is constant per file -> row-group pruning)
-        .filter(F.col("run_id") == run_id)
-        .select(
-            F.col("p_date").cast("string").alias("p_date"),
-            "is_valid",
-            "level",
-            "tool",
-        )
-        .groupBy("p_date")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)), F.lit(0)
-            ).alias("bad"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("is_valid")
-                        & F.col("level").isin("ERROR", "CRITICAL"),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            ).alias("n_err"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("is_valid") & (F.col("tool") != ""), 1).otherwise(0)
-                ),
-                F.lit(0),
-            ).alias("n_tool"),
-        )
-        .collect()
-    )
-    flag_counts = {
-        "sink_errors": sum(r.n_err for r in per_part_rows),
-        "sink_tool_calls": sum(r.n_tool for r in per_part_rows),
-        "sink_anomalies": sum(r.bad for r in per_part_rows),
-    }
-    per_part = {r.p_date: (r.n, r.bad) for r in per_part_rows if r.p_date not in done}
-    todo = sorted(per_part) if pre_todo is None else pre_todo
-    if todo:
+        flag_counts = {
+            "sink_errors": sum(r.n_err for r in per_part_rows),
+            "sink_tool_calls": sum(r.n_tool for r in per_part_rows),
+            "sink_anomalies": sum(r.bad for r in per_part_rows),
+        }
+        per_part = {
+            r.p_date: (r.n, r.bad) for r in per_part_rows if r.p_date not in done
+        }
+        todo = sorted(per_part) if pre_todo is None else pre_todo
+        if not todo:
+            return flag_counts, todo, []
         now = time.time()
         _append(
             spark,
             out_dir,
             "_lineage",
             [
-                (run_id, STAGE_CLASSIFIED, p, int(per_part.get(p, (0, 0))[0]), now, "committed")
+                (run_id, STAGE_CLASSIFIED, p, per_part.get(p, (0, 0))[0], now, "committed")
                 for p in todo
             ],
             LINEAGE_SCHEMA,
         )
-        metrics_rows += [
-            (
-                run_id,
-                STAGE_CLASSIFIED,
-                p,
-                int(per_part.get(p, (0, 0))[0]),
-                int(per_part.get(p, (0, 0))[0]),
-                int(per_part.get(p, (0, 0))[1]),
-                now - t_stage,
-            )
-            for p in todo
-        ]
+        # the write's wall time once, at partition "*"; per-date rows carry
+        # counts only (rows_out = valid rows), so every column sums cleanly
+        stage_rows = [(run_id, STAGE_CLASSIFIED, "*", None, None, None, stage_write_s)]
+        for p in todo:
+            n, bad = per_part.get(p, (0, 0))
+            stage_rows.append((run_id, STAGE_CLASSIFIED, p, n, n - bad, bad, None))
+        return flag_counts, todo, stage_rows
 
     # ---- stage 2+3: sink fan-out and report aggregation, CONCURRENT -------
-    # The three sink writes and the dedup/buckets job are independent reads
-    # of the same stage table; submitting them from driver threads (Spark's
-    # scheduler is thread-safe; session.py enables FAIR mode) lets the small
-    # sink jobs fill executor slots the wide dedup shuffle leaves idle —
-    # the serial driver tail becomes one barrier instead of six queued jobs.
+    # The stage commit (per-date counts + lineage), the three sink writes
+    # and the dedup/buckets job are independent reads of the same stage
+    # table; submitting them from driver threads (Spark's scheduler is
+    # thread-safe; session.py enables FAIR mode) lets the small jobs fill
+    # executor slots the wide dedup shuffle leaves idle — the serial driver
+    # tail becomes one barrier instead of a queue of small jobs.
     from concurrent.futures import ThreadPoolExecutor
 
     stage_df = spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}").filter(
@@ -529,26 +466,12 @@ def run_pipeline(
         "sink_anomalies": route.anomalies_sink,
     }
 
-    n_days = max(1, len(per_part_rows))
-
     def _write_sink(sink: str, builder) -> float:
         t_s = time.time()
         out = builder(stage_df).withColumn("run_id", F.lit(run_id)).withColumn(
             "p_date", _p_date("ts_ms")
         )
-        # cluster by (date, hash-salt) before the partitioned write: without
-        # it every scan task writes a sliver file into every date it touches
-        # (tasks x dates files — measured 114-200 files per sf0.1 sink, 30
-        # after; the dynamic-overwrite commit pays per file). Salt count
-        # derives from the sink's actual row count (known from the stage-
-        # table aggregate above), so file sizing tracks data volume at any
-        # scale.
-        files_sink = files_for(int(flag_counts[sink]), n_days, floor=1)
-        out = out.repartition(
-            F.col("p_date"),
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(files_sink)),
-        )
-        out.write.mode("overwrite").partitionBy("p_date").parquet(f"{out_dir}/{sink}")
+        _write_by_date(out, f"{out_dir}/{sink}")
         return time.time() - t_s
 
     def _write_buckets():
@@ -597,7 +520,7 @@ def run_pipeline(
 
         def _write_dated_results():
             # one task per date before the partitioned write (same sliver-
-            # file rationale as _write_sink; measured 736 -> 30 files and
+            # file rationale as _write_by_date; measured 736 -> 30 files and
             # 1.98 s -> 0.46 s for this write at sf0.1). The cluster table
             # is orders of magnitude smaller than the row stream, so a
             # date's clusters always fit one write task comfortably.
@@ -693,9 +616,11 @@ def run_pipeline(
         )
 
     t_stage = time.time()
-    with ThreadPoolExecutor(len(sink_builders) + 1) as ex:
+    with ThreadPoolExecutor(len(sink_builders) + 2) as ex:
+        commit_fut = ex.submit(_commit_stage)
         sink_futs = {s: ex.submit(_write_sink, s, b) for s, b in sink_builders.items()}
         buckets_fut = ex.submit(_write_buckets)
+        flag_counts, todo, metrics_rows = commit_fut.result()
         for sink, fut in sink_futs.items():
             el = fut.result()
             n = int(flag_counts[sink])

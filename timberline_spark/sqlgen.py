@@ -229,31 +229,6 @@ def q_parse(d: Dialect = DUCKDB) -> str:
     )
 
 
-def q_validate(d: Dialect = DUCKDB) -> str:
-    return _q(
-        d,
-        "SELECT COALESCE(anomaly_reason, 'valid') AS reason, COUNT(*) AS n"
-        " FROM classified GROUP BY 1",
-    )
-
-
-def q_enrich_severity(d: Dialect = DUCKDB) -> str:
-    return _q(
-        d,
-        "SELECT level, severity, severity_score, is_error, is_warning,"
-        " COUNT(*) AS n FROM enriched WHERE level IS NOT NULL"
-        " GROUP BY 1,2,3,4,5",
-    )
-
-
-def q_enrich_tool_role(d: Dialect = DUCKDB) -> str:
-    return _q(
-        d,
-        "SELECT tool_category, is_sensitive, role_class, COUNT(*) AS n"
-        " FROM enriched GROUP BY 1,2,3",
-    )
-
-
 def q_route_errors(d: Dialect = DUCKDB) -> str:
     return _q(
         d,
@@ -277,14 +252,6 @@ def q_route_anomalies(d: Dialect = DUCKDB) -> str:
         d,
         f"SELECT conv_id, turn_idx, {d.epoch_ms('ts')} AS ts_ms,"
         " anomaly_reason AS reason FROM flagged WHERE NOT is_valid",
-    )
-
-
-def q_sampling(d: Dialect = DUCKDB) -> str:
-    return _q(
-        d,
-        "SELECT keep_level, keep_sampled, COUNT(*) AS n FROM flagged"
-        " WHERE is_valid GROUP BY 1,2",
     )
 
 
@@ -592,24 +559,6 @@ JOIN (
   GROUP BY t.conv_id, t.turn_idx
 ) s ON s.conv_id = k.conv_id AND s.turn_idx = k.turn_idx
 ORDER BY s.score DESC, k.conv_id, k.turn_idx LIMIT {limit}""",
-    )
-
-
-def q_recent_reports(d: Dialect = DUCKDB, n: int = 5) -> str:
-    return _q(
-        d,
-        "SELECT fingerprint, cluster_severity, cluster_score, last_ts_ms"
-        f" FROM scored ORDER BY last_ts_ms DESC, fingerprint LIMIT {n}",
-    )
-
-
-def q_top20_clusters(d: Dialect = DUCKDB, n: int = 20) -> str:
-    return _q(
-        d,
-        "SELECT fingerprint, cluster_severity, cluster_score,"
-        " total_log_count, error_count FROM scored"
-        " ORDER BY cluster_score DESC, total_log_count DESC, fingerprint"
-        f" LIMIT {n}",
     )
 
 
