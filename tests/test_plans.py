@@ -108,8 +108,15 @@ def test_parse_plan_has_single_from_json(spark):
     pushes the filter below and inlines the whole parse tree into the
     predicate (kept_rows: 1.15 s -> 28 s at sf0.1); so no Filter condition
     may contain from_json. A Spark upgrade that constant-folds the fence's
-    1-element shuffle fails here instead of silently slowing down."""
+    1-element shuffle fails here instead of silently slowing down.
+
+    Each grammar regex runs at most twice per row in `parse` and
+    `kept_rows` (an rlike test plus one group-splitting replace); a regex
+    Column shared across CASE branches instead of a named alias embeds one
+    copy per branch. The pandas lane plans exactly one Arrow UDF and no
+    from_json."""
     from timberline_spark import queries as Q
+    from timberline_spark.parse import RE_FB_LOG, RE_KLOG, RE_PLAIN
 
     for name in ("parse", "kept_rows", "route_errors", "route_tool_calls",
                  "route_anomalies"):
@@ -119,6 +126,14 @@ def test_parse_plan_has_single_from_json(spark):
         assert plan.count("from_json") == 1, (name, plan.count("from_json"))
         inlined = [c for c in _filter_conditions(optimized) if "from_json" in c]
         assert not inlined, (name, inlined[0][:300])
+        if name in ("parse", "kept_rows"):
+            runs = {p: plan.count(p) for p in (RE_PLAIN, RE_KLOG, RE_FB_LOG)}
+            assert max(runs.values()) <= 2, (name, runs)
+
+    df = Q.PIPELINE_QUERIES["parse_pandas_udf"](spark, SF_TINY)
+    assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    assert physical.count("ArrowEvalPython") == 1, physical
 
 
 def test_cosine_pairs_candidate_join_is_equi(spark):

@@ -25,19 +25,26 @@ Reimplements (Spark-first) the reference's parse surface:
   (``stream.go:20-58`` — the reference falls back to now(); we fall back to
   the row's ``ts`` column so reruns are byte-identical).
 
-Two implementations with identical output:
+One grammar spec, two capture lanes. A lane only extracts the raw captures
+named in ``_RAW``: regex groups per ``_REGEX_CAPTURES``, JSON fields typed by
+``JSON_SCHEMA``, labels by ``LABEL_PATHS``. :func:`_assemble` alone turns
+them into the parsed fields — grammar precedence, the per-grammar level and
+message, the ``service`` coalesce and the ``text_ts_ms`` rule — the same
+rules the DuckDB oracle writes as SQL (``sqlgen.pipeline_ctes``).
 
-- ``impl="native"`` (default): ``regexp_extract`` + ``from_json`` — JVM-side,
-  whole-stage-codegen, zero Python in the hot path. This is the 100 TB path.
-- ``impl="pandas"``: one vectorized Arrow-batched pandas UDF applying the
-  precompiled regexes + ``json.loads`` and returning a struct — the "Lua
-  scripting filter" extension point (``fluent-bit-configmap.yaml:59-62``)
-  expressed the Spark way. Kept for parity testing and for grammars that
-  outgrow the declarative path.
+- ``impl="native"`` (default): one ``from_json`` and one regex group-split
+  per pattern — JVM-side, whole-stage codegen, no Python. The product path.
+- ``impl="pandas"``: one Arrow-batched pandas UDF (one ``json.loads`` per
+  row, one ``.str.extract`` per pattern) returning the captures as a flat
+  struct — the "Lua scripting filter" extension point
+  (``fluent-bit-configmap.yaml:59-62``) expressed the Spark way. It backs
+  the ``parse_pandas_udf`` query.
 
-Regex patterns use only constructs Java regex and RE2 (DuckDB) parse
-identically, so the DuckDB oracle re-runs the same patterns; the JSON path
-is oracled with DuckDB's json_extract_string on the same JSONPaths.
+Regex patterns use only constructs Java regex, Python ``re`` and RE2
+(DuckDB) parse identically, so the DuckDB oracle re-runs the same patterns.
+Java runs them under UNIX_LINES ``(?d)`` so that, as in Python and RE2, only
+``\\n`` ends a line for ``.``. The JSON path is oracled with DuckDB's
+json_extract_string on the same JSONPaths.
 """
 
 from __future__ import annotations
@@ -63,21 +70,41 @@ RE_KLOG = (
 )
 # level prefix inside the Fluent Bit log field. (?s) (DOTALL) is embedded in
 # the pattern so all three engines (Java regex, Python re, DuckDB/RE2) agree
-# that a log field containing a newline still parses as fluentbit grammar —
-# without it the native path would route newline-bearing logs to anomalies
-# while the pandas path accepted them.
+# that a log field containing a newline still parses as fluentbit grammar.
 RE_FB_LOG = r"(?s)^([A-Z]+) (.*)$"
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
+_STR = T.StringType()
+_MAP = T.MapType(_STR, _STR)
 # permissive schema for the dual-shape JSON ingest: the union of both
 # accepted shapes; from_json leaves absent keys null (PERMISSIVE mode)
-JSON_SCHEMA = (
-    "level string, service string, message string,"
-    " date double, log string, source string,"
-    " labels map<string,string>, kubernetes_labels map<string,string>,"
-    " kubernetes struct<labels:map<string,string>>"
+JSON_SCHEMA = T.StructType(
+    [T.StructField(f, _STR) for f in ("level", "service", "message")]
+    + [T.StructField("date", T.DoubleType())]
+    + [T.StructField(f, _STR) for f in ("log", "source")]
+    + [T.StructField(f, _MAP) for f in ("labels", "kubernetes_labels")]
+    + [T.StructField("kubernetes", T.StructType([T.StructField("labels", _MAP)]))]
 )
+# P15 label fallback chain (models/log.py:177-199): the first path holding
+# an object wins whole; maps are not merged across paths
+LABEL_PATHS = (("labels",), ("kubernetes_labels",), ("kubernetes", "labels"))
+
+# Raw-capture contract: each lane yields exactly the columns of _RAW (null
+# when a pattern does not match or a key is absent), and only _assemble
+# reads them. Regex captures: (source column, pattern, {capture: group});
+# every pattern ends in its (.*)$ group.
+_REGEX_CAPTURES = (
+    ("text", RE_PLAIN, {"plain_ts": 1, "plain_lvl": 2, "plain_svc": 3, "plain_msg": 4}),
+    ("text", RE_KLOG, {"klog_lvl": 1, "klog_svc": 4, "klog_msg": 6}),
+    ("j_log", RE_FB_LOG, {"fb_lvl": 1, "fb_msg": 2}),
+)
+_J_FIELDS = ("level", "service", "message", "source", "log", "date")
+_RAW = {
+    **{f"j_{f}": JSON_SCHEMA[f].dataType for f in _J_FIELDS},
+    "j_labels": _MAP,
+    **{name: _STR for _, _, groups in _REGEX_CAPTURES for name in groups},
+}
 
 # Flexible-timestamp surface (stream.go:20-58 + log_generator.py:70-79):
 # every format the reference accepts, tried in order. Fallback is NULL (the
@@ -93,8 +120,6 @@ FLEX_TS_FORMATS = [
     "yyyy-MM-dd HH:mm:ss,SSS",  # python-logging comma-millis
     "MMM dd HH:mm:ss yyyy",  # syslog + explicit year
 ]
-
-PARSED_FIELDS = ["grammar", "level_raw", "service", "message", "text_ts_ms", "labels"]
 
 
 def flexible_ts_ms(c: Column) -> Column:
@@ -115,7 +140,7 @@ def seconds_heuristic_ms(num: Column) -> Column:
     Applies to the ALTERNATE numeric ``timestamp`` surface (stream.go:77-90
     applies the <1e12 heuristic there); the Fluent Bit ``date`` field is
     always seconds and is multiplied unconditionally (stream.go
-    transformToLogEntry), handled inline in the parse paths."""
+    transformToLogEntry), in :func:`_assemble`."""
     return F.when(num < 1e12, (num * 1000).cast("long")).otherwise(
         num.cast("long")
     )
@@ -132,6 +157,8 @@ def parse_turns(df: DataFrame, impl: str = "native") -> DataFrame:
     parsed out of the text, null when the grammar carries no timestamp),
     labels (open map<string,string> metadata after the 3-path fallback),
     conv_key (numeric conversation key used by the deterministic sampler).
+    ``impl`` picks the capture lane, ``"native"`` or ``"pandas"``; the
+    output is the same either way.
 
     conv_key is the cross-engine polynomial hash of the conv_id STRING
     (extras/xhash.py char_hash) — never null for any id format. The input
@@ -139,238 +166,169 @@ def parse_turns(df: DataFrame, impl: str = "native") -> DataFrame:
     number from ``conv-N``-shaped ids only, which silently null-sampled
     (dropped) every INFO/DEBUG turn of a UUID-keyed conversation.
     """
-    if impl == "native":
-        df = _parse_native(df)
-    elif impl == "pandas":
-        df = _parse_pandas(df)
-    else:
+    if impl not in _LANES:
         raise ValueError(f"unknown parse impl: {impl}")
+    df = _assemble(_LANES[impl](df))
     return df.withColumn("conv_key", char_hash(F.col("conv_id")))
 
 
-def _group_split(t: Column, pattern: str, groups: int) -> Column:
-    """All capture groups of an anchored pattern in ONE regex execution.
+def _assemble(df: DataFrame) -> DataFrame:
+    """The parsed fields from the raw captures, which it then drops.
 
-    ``regexp_replace`` of a ``^...$``-anchored pattern substitutes the whole
-    string (minus an optional final line terminator, which Java's ``$``
-    leaves in place) with the SEP-delimited groups; splitting on SEP yields
-    ``["", g1, ..., gN(+terminator)]``. One matcher run replaces N
-    ``regexp_extract`` runs of the same pattern (round-7 optimization: the
-    plain grammar ran RE_PLAIN four times per matching row). Callers gate
-    this under the already-computed match condition, so a non-matching row
-    never reaches it and the sentinel character cannot be confused with
-    input text. The LAST group may contain SEP or carry the terminator;
-    use :func:`_last_group` to reassemble it exactly."""
-    repl = "".join(_GROUP_SEP + f"${i}" for i in range(1, groups + 1))
-    return F.split(F.regexp_replace(t, pattern, repl), _GROUP_SEP)
-
-
-def _last_group(parts: Column, n_lead: int) -> Column:
-    """Reassemble the final ``(.*)$`` group from a :func:`_group_split`
-    array: rejoin any SEP-containing pieces, then strip the single final
-    line terminator that ``$`` excludes from the group but
-    ``regexp_replace`` leaves after the substitution."""
-    tail = F.array_join(
-        F.slice(parts, n_lead + 2, F.size(parts)), _GROUP_SEP
+    - Precedence plain > json > fluentbit > klog; each grammar picks its own
+      level_raw and message. Direct-shape JSON is accepted whenever it
+      carries a level or a non-empty message — the reference's direct parse
+      requires only Message != "" and defaults a missing level to INFO later
+      (stream.go:60-67, log.go:66-86) — so level_raw may be null while
+      grammar is still 'json'; enrich_turns covers the missing level.
+    - ``service`` coalesces across grammars, whichever one matched: the
+      direct shape carries ``service``, the Fluent Bit shape ``source``.
+    - ``text_ts_ms``: the plain grammar's wall clock, else the Fluent Bit
+      ``date`` whenever the log carries a level. ``date`` is epoch SECONDS,
+      multiplied by 1000 unconditionally (stream.go transformToLogEntry).
+    """
+    c = F.col
+    json_match = c("j_level").isNotNull() | (
+        _nullif_empty(c("j_message")).isNotNull() & c("j_log").isNull()
     )
-    return F.regexp_replace(tail, _TRAIL_TERM_RE, "")
+    grammar = level_raw = message = F  # F.when opens each CASE, Column.when extends it
+    for name, match, lvl, msg in (
+        ("plain", c("plain_lvl").isNotNull(), "plain_lvl", "plain_msg"),
+        ("json", json_match, "j_level", "j_message"),
+        ("fluentbit", c("fb_lvl").isNotNull(), "fb_lvl", "fb_msg"),
+        ("klog", c("klog_lvl").isNotNull(), "klog_lvl", "klog_msg"),
+    ):
+        grammar = grammar.when(match, name)
+        level_raw = level_raw.when(match, c(lvl))
+        message = message.when(match, c(msg))
+    plain_ts = F.try_to_timestamp(c("plain_ts"), F.lit(TS_FMT))
+    fb_ts = F.when(c("fb_lvl").isNotNull(), (c("j_date") * 1000).cast("long"))
+    service = F.coalesce(*map(c, ("plain_svc", "j_service", "j_source", "klog_svc")))
+    return df.withColumns(
+        {
+            "grammar": grammar,
+            "level_raw": level_raw,
+            "service": service,
+            "message": message,
+            "text_ts_ms": F.coalesce(F.unix_millis(plain_ts), fb_ts),
+            "labels": c("j_labels"),
+        }
+    ).drop(*_RAW)
 
 
-_GROUP_SEP = "\x01"
-# Java regex line terminators that '.' excludes and '$' can precede
-_TRAIL_TERM_RE = '(?:\\r\\n|[\\n\\r\\u0085\\u2028\\u2029])$'
+_SEP = "\x01"
 
 
-def _parse_native(df: DataFrame) -> DataFrame:
+def _native_captures(df: DataFrame) -> DataFrame:
+    """The raw captures on the JVM.
+
+    The parsed JSON struct and each pattern's group-split array are
+    materialized ONCE as named columns, and every capture is read from them.
+    Building each capture from a shared Python ``Column`` instead would embed
+    an independent copy per use (round 2 shipped 25 JsonToStructs copies, a
+    measured 2x parse cost at sf0.1); as non-cheap multi-referenced aliases,
+    CollapseProject keeps them un-inlined, so each regex runs at most twice
+    per row: one ``rlike`` match test and one group-splitting replace gated
+    on it (asserted in tests/test_plans.py).
+
+    The replace substitutes the anchored match with its SEP-delimited groups
+    plus a closing SEP, so the split reads ``["", g1, ..., gN, rest]``, where
+    ``rest`` is what ``$`` left after the match: "" or a final newline. The
+    last group ``(.*)`` may itself contain SEP, so it is rejoined from
+    everything between g(N-1) and ``rest``.
+    """
     t = F.col("text")
-    # Materialize the parsed JSON struct ONCE as a named column and extract
-    # every field from it. Building each derived column from a shared Python
-    # `Column` object would embed an independent JsonToStructs copy per use
-    # (25 in the round-2 optimized plan — measured 2x parse cost at sf0.1);
-    # as a non-cheap multi-referenced alias, CollapseProject keeps this one
-    # un-inlined, so the optimized plan carries exactly 1 JsonToStructs
-    # (asserted in tests/test_plans.py).
     df = df.withColumn("_j", F.when(t.startswith("{"), F.from_json(t, JSON_SCHEMA)))
-    # Each anchored grammar regex runs at most TWICE per row (one rlike match
-    # test + one group-splitting replace, gated on the match), not once per
-    # extracted group: round 6 ran RE_PLAIN four times and RE_KLOG three
-    # times on each matching row. Like `_j`, the split arrays are named
-    # non-cheap multi-referenced aliases, so CollapseProject keeps them
-    # evaluated once.
-    df = df.withColumn(
-        "_pp", F.when(t.rlike(RE_PLAIN), _group_split(t, RE_PLAIN, 4))
-    ).withColumn("_kp", F.when(t.rlike(RE_KLOG), _group_split(t, RE_KLOG, 6)))
     j = F.col("_j")
-    pp = F.col("_pp")
-    kp = F.col("_kp")
-    plain_lvl = F.element_at(pp, 3)  # [A-Z]+: non-empty whenever matched
-    json_lvl = j["level"]
-    fb_lvl = F.when(
-        j["log"].isNotNull(), _nullif_empty(F.regexp_extract(j["log"], RE_FB_LOG, 1))
-    )
-    klog_char = F.element_at(kp, 2)  # [IEWF]: non-empty whenever matched
-    # Grammar lanes. Direct-shape JSON is accepted whenever it carries a
-    # non-empty message — the reference's direct parse requires only
-    # Message != "" and defaults a missing level to INFO later
-    # (stream.go:60-67, log.go:66-86) — so `level` may be absent and
-    # level_raw null while grammar is still 'json'; the INFO-default path
-    # in enrich_turns covers the missing level.
-    cond_plain = pp.isNotNull()
-    cond_json = json_lvl.isNotNull() | (
-        _nullif_empty(j["message"]).isNotNull() & j["log"].isNull()
-    )
-    cond_fb = fb_lvl.isNotNull()
-    cond_klog = kp.isNotNull()
-    grammar = (
-        F.when(cond_plain, "plain")
-        .when(cond_json, "json")
-        .when(cond_fb, "fluentbit")
-        .when(cond_klog, "klog")
-    )
-    level_raw = (
-        F.when(cond_plain, plain_lvl)
-        .when(cond_json, json_lvl)
-        .when(cond_fb, fb_lvl)
-        .when(cond_klog, klog_char)
-    )
-    # direct shape carries `service`, Fluent Bit shape carries `source`
-    service = F.coalesce(
-        F.element_at(pp, 4),  # null when unmatched; [A-Za-z0-9-]+ otherwise
-        j["service"],
-        j["source"],
-        F.element_at(kp, 5),
-    )
-    message = (
-        F.when(cond_plain, _last_group(pp, 3))
-        .when(cond_json, j["message"])
-        .when(cond_fb, F.regexp_extract(j["log"], RE_FB_LOG, 2))
-        .when(cond_klog, _last_group(kp, 5))
-    )
-    # Flexible timestamp (P5 analog): the plain grammar embeds a full
-    # wall-clock date; the Fluent Bit `date` field is epoch SECONDS and is
-    # multiplied by 1000 unconditionally (stream.go transformToLogEntry —
-    # the <1e12 heuristic applies only to the alternate `timestamp` field,
-    # see seconds_heuristic_ms). try_to_timestamp -> null on failure.
-    plain_ts = F.try_to_timestamp(F.element_at(pp, 2), F.lit(TS_FMT))
-    text_ts_ms = F.coalesce(
-        F.unix_millis(plain_ts),
-        F.when(cond_fb, (j["date"] * 1000).cast("long")),
-    )
-    # P15 label fallback chain (models/log.py:177-199)
-    labels = F.coalesce(
-        j["labels"], j["kubernetes_labels"], j["kubernetes"]["labels"]
-    )
-    return (
-        df.withColumn("grammar", grammar)
-        .withColumn("level_raw", level_raw)
-        .withColumn("service", service)
-        .withColumn("message", message)
-        .withColumn("text_ts_ms", text_ts_ms)
-        .withColumn("labels", labels)
-        .drop("_j", "_pp", "_kp")
-    )
+    raw = {f"j_{f}": j[f] for f in _J_FIELDS}
+    raw["j_labels"] = F.coalesce(*(_walk(j, path) for path in LABEL_PATHS))
+    temps = ["_j"] + [f"_p{i}" for i in range(len(_REGEX_CAPTURES))]
+    for tmp, (src, pattern, groups) in zip(temps[1:], _REGEX_CAPTURES):
+        s = t if src == "text" else raw[src]
+        pattern = "(?d)" + pattern  # UNIX_LINES: only \n ends a line
+        n = max(groups.values())
+        repl = "".join(f"{_SEP}${g}" for g in range(1, n + 1)) + _SEP
+        df = df.withColumn(
+            tmp, F.when(s.rlike(pattern), F.split(F.regexp_replace(s, pattern, repl), _SEP))
+        )
+        p = F.col(tmp)
+        for name, g in groups.items():
+            raw[name] = (
+                F.element_at(p, g + 1)
+                if g < n
+                else F.array_join(F.slice(p, n + 1, F.size(p) - n - 1), _SEP)
+            )
+    return df.withColumns(raw).drop(*temps)
 
 
-# ---------------------------------------------------------------------------
-# pandas-UDF grok variant (Arrow-batched, no per-row Python at the API level)
-# ---------------------------------------------------------------------------
-_GROK_SCHEMA = T.StructType(
-    [
-        T.StructField("grammar", T.StringType()),
-        T.StructField("level_raw", T.StringType()),
-        T.StructField("service", T.StringType()),
-        T.StructField("message", T.StringType()),
-        T.StructField("text_ts_ms", T.LongType()),
-        T.StructField("labels", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-_C_PLAIN = re.compile(RE_PLAIN)
-_C_KLOG = re.compile(RE_KLOG)
-_C_FB = re.compile(RE_FB_LOG)  # DOTALL comes from the inline (?s) flag
+def _walk(c: Column, path: tuple) -> Column:
+    for key in path:
+        c = c[key]
+    return c
 
 
-def _grok_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized grok over one Arrow batch: .str.extract + json.loads."""
+def _pandas_captures(df: DataFrame) -> DataFrame:
+    """The raw captures from ONE Arrow-batched pandas UDF returning a flat
+    struct, materialized once and then expanded."""
+    schema = T.StructType([T.StructField(n, t) for n, t in _RAW.items()])
+    captures = F.pandas_udf(_capture_batch, returnType=schema)
+    return df.withColumn("_raw", captures(F.col("text"))).select("*", "_raw.*").drop("_raw")
+
+
+def _capture_batch(texts: pd.Series) -> pd.DataFrame:
+    """The raw captures of one Arrow batch: one ``json.loads`` per row, then
+    one vectorized ``.str.extract`` per pattern."""
+    docs = [_load_json(s) for s in texts]
     out = pd.DataFrame(index=texts.index)
-    plain = texts.str.extract(_C_PLAIN)
-    klog = texts.str.extract(_C_KLOG)
+    for f in _J_FIELDS:
+        typ = JSON_SCHEMA[f].dataType
+        out[f"j_{f}"] = [None if d is None else _as_spark(d.get(f), typ) for d in docs]
+    out["j_labels"] = [None if d is None else _labels(d) for d in docs]
+    for src, pattern, groups in _REGEX_CAPTURES:
+        m = (texts if src == "text" else out[src]).str.extract(re.compile(pattern))
+        for name, g in groups.items():
+            out[name] = m[g - 1]
+    return out[list(_RAW)]
 
-    def _load(s):
-        if isinstance(s, str) and s.startswith("{"):
-            try:
-                return json.loads(s)
-            except ValueError:
-                return None
-        return None
 
-    parsed = texts.map(_load)
+_JSON = json.JSONDecoder()
 
-    def _field(k):
-        return parsed.map(lambda d: d.get(k) if isinstance(d, dict) else None)
 
-    j_lvl, j_svc, j_msg = _field("level"), _field("service"), _field("message")
-    j_log, j_src, j_date = _field("log"), _field("source"), _field("date")
-    fb = j_log.map(lambda s: _C_FB.match(s) if isinstance(s, str) else None)
-    fb_lvl = fb.map(lambda m: m.group(1) if m else None)
-    fb_msg = fb.map(lambda m: m.group(2) if m else None)
-
-    def _labels(d):
-        if not isinstance(d, dict):
+def _load_json(s) -> dict | None:
+    """from_json's reading of one text: its leading JSON object (Jackson
+    stops there, so trailing text is ignored), else None."""
+    if isinstance(s, str) and s.startswith("{"):
+        try:
+            return _JSON.raw_decode(s)[0]
+        except ValueError:
             return None
-        for path in ("labels", "kubernetes_labels"):
-            if isinstance(d.get(path), dict):
-                return d[path]
-        k8s = d.get("kubernetes")
-        if isinstance(k8s, dict) and isinstance(k8s.get("labels"), dict):
-            return k8s["labels"]
+    return None
+
+
+def _as_spark(v, typ: T.DataType):
+    """A ``json.loads`` value cast the way ``from_json`` casts it to ``typ``:
+    a non-string value in a string field becomes its JSON text; a
+    non-number in a double field and a non-object in a map field become
+    null."""
+    if v is None:
         return None
-
-    labels = parsed.map(_labels)
-
-    has_plain = plain[1].notna()
-    # direct-shape JSON: a level OR a non-empty message (absent level stays
-    # null and defaults to INFO downstream) — same lanes as _parse_native
-    has_json = (j_lvl.notna() | (j_msg.notna() & (j_msg != "") & j_log.isna())) & ~has_plain
-    has_fb = fb_lvl.notna() & ~has_plain & ~has_json
-    has_klog = klog[0].notna() & ~has_plain & ~has_json & ~has_fb
-
-    out["grammar"] = pd.Series(pd.NA, index=texts.index, dtype="object")
-    out.loc[has_plain, "grammar"] = "plain"
-    out.loc[has_json, "grammar"] = "json"
-    out.loc[has_fb, "grammar"] = "fluentbit"
-    out.loc[has_klog, "grammar"] = "klog"
-
-    out["level_raw"] = plain[1].where(
-        has_plain, j_lvl.where(has_json, fb_lvl.where(has_fb, klog[0]))
-    )
-    out["service"] = plain[2].where(
-        has_plain, j_svc.where(has_json, j_src.where(has_fb, klog[3]))
-    )
-    out["message"] = plain[3].where(
-        has_plain, j_msg.where(has_json, fb_msg.where(has_fb, klog[5]))
-    )
-    ts = pd.to_datetime(
-        plain[0].where(has_plain), format="%Y-%m-%d %H:%M:%S", errors="coerce"
-    )
-    ms = (ts - pd.Timestamp("1970-01-01")) / pd.Timedelta(milliseconds=1)
-    # `date` is always epoch seconds (stream.go transformToLogEntry
-    # multiplies unconditionally; no <1e12 heuristic on this field)
-    fb_ms = j_date.map(
-        lambda v: None
-        if v is None or v != v  # None or NaN (pandas coerces None -> NaN)
-        else int(v * 1000)
-    )
-    out["text_ts_ms"] = ms.astype("Int64").where(has_plain, fb_ms.where(has_fb))
-    out["labels"] = labels
-    return out
+    if isinstance(typ, T.StringType):
+        return v if isinstance(v, str) else json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+    if isinstance(typ, T.DoubleType):
+        return float(v) if isinstance(v, (int, float)) and not isinstance(v, bool) else None
+    if isinstance(v, dict):  # map<string,string>
+        return {k: _as_spark(x, typ.valueType) for k, x in v.items()}
+    return None
 
 
-def _parse_pandas(df: DataFrame) -> DataFrame:
-    grok = F.pandas_udf(_grok_batch, returnType=_GROK_SCHEMA)
-    # materialize the struct once, then expand — avoids re-running the UDF
-    # per extracted field
-    df = df.withColumn("_grok", grok(F.col("text")))
-    for f in PARSED_FIELDS:
-        df = df.withColumn(f, F.col("_grok")[f])
-    return df.drop("_grok")
+def _labels(doc: dict) -> dict | None:
+    for path in LABEL_PATHS:
+        v = doc
+        for key in path:
+            v = v.get(key) if isinstance(v, dict) else None
+        if isinstance(v, dict):
+            return _as_spark(v, _MAP)
+    return None
+
+
+_LANES = {"native": _native_captures, "pandas": _pandas_captures}

@@ -44,7 +44,8 @@ def q_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_parse_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same parse, vectorized pandas-UDF grok path (must equal q_parse)."""
+    """Same parse through the Arrow-batched pandas-UDF capture lane (must
+    equal q_parse)."""
     df = parse_turns(load_transcripts(spark, sf_dir), impl="pandas")
     return df.select(
         "conv_id", "turn_idx", "grammar", "level_raw", "service", "message", "text_ts_ms"
