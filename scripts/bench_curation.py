@@ -5,17 +5,20 @@ Builds an N-doc documents table (default 8M) by replicating the sf0.1
 synthetic corpus with per-replica doc ids and a replica token appended to
 the text (so documents stay DISTINCT — the dedup keeper join must carry
 the full table, which is exactly the shuffle being measured), then runs
-the curation runner end-to-end in a fresh JVM per key mode and reports:
+the curation runner end-to-end in a fresh JVM and reports:
 
 - wall time (min-of-N full runs in a warm JVM, fresh out dirs)
 - total shuffle write bytes for the app (Spark UI REST API), and the
-  per-stage bytes of every stage writing >1% of the total — the hard
-  evidence for (a) the hash-key vs text-key dedup shuffle delta and
-  (b) the "two corpus-wide shuffles" plan claim.
+  per-stage bytes of every stage writing >1% of the total — the evidence
+  for the "two corpus-wide shuffles" plan claim.
+
+The dedup window is keyed on xxhash64 of the normalized text. The
+exact-text-key baseline it was measured against (3.36 GB of shuffle at
+8M docs) is recorded in BENCH_curation_8m_r6.json.
 
 Usage:
   python scripts/bench_curation.py --n-docs 8000000 \
-      --out /dev/shm/tl_cur_bench --json BENCH_curation_8m_r6.json
+      --out /dev/shm/tl_cur_bench --json BENCH_curation_8m.json
 """
 
 from __future__ import annotations
@@ -67,7 +70,7 @@ def build_input(n_docs: int, path: str) -> int:
     return n
 
 
-def _child(mode: str, input_dir: str, scratch: str, trials: int) -> None:
+def _child(input_dir: str, scratch: str, trials: int) -> None:
     """Fresh-JVM body: warmup on the tiny corpus, then min-of-N timed full
     runs; emit one JSON line with timings + app shuffle-stage metrics."""
     from timberline_spark.curation import run_curation
@@ -81,16 +84,15 @@ def _child(mode: str, input_dir: str, scratch: str, trials: int) -> None:
     )
     # JIT/codegen warmup (first trial in a JVM pays 2-8x otherwise)
     warm_out = tempfile.mkdtemp(prefix="cw_", dir=scratch)
-    run_curation(spark, "/root/testdata/sf0.01", warm_out, run_id="warm",
-                 dedup_key_mode=mode)
+    run_curation(spark, os.path.join(os.path.dirname(SF_SRC), "sf0.01"), warm_out,
+                 run_id="warm")
     shutil.rmtree(warm_out, ignore_errors=True)
 
     best, metrics = None, None
     for t in range(trials):
         out = tempfile.mkdtemp(prefix=f"c{t}_", dir=scratch)
         t0 = time.time()
-        m = run_curation(spark, input_dir, out, run_id=f"t{t}",
-                         dedup_key_mode=mode)
+        m = run_curation(spark, input_dir, out, run_id=f"t{t}")
         el = time.time() - t0
         shutil.rmtree(out, ignore_errors=True)
         if best is None or el < best:
@@ -115,7 +117,6 @@ def _child(mode: str, input_dir: str, scratch: str, trials: int) -> None:
         key=lambda x: -x["shuffleWriteBytes"],
     )
     print(json.dumps({
-        "mode": mode,
         "best_sec": round(best, 3),
         "trials": trials,
         "curation_metrics": metrics,
@@ -131,12 +132,12 @@ def main(argv=None):
     ap.add_argument("--out", default="/dev/shm/tl_cur_bench")
     ap.add_argument("--json", default=None, help="write combined JSON here")
     ap.add_argument("--trials", type=int, default=2)
-    ap.add_argument("--child", default=None, help=argparse.SUPPRESS)
+    ap.add_argument("--child", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--input-dir", default=None, help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
 
     if args.child:
-        _child(args.child, args.input_dir, args.out, args.trials)
+        _child(args.input_dir, args.out, args.trials)
         return
 
     os.makedirs(args.out, exist_ok=True)
@@ -145,31 +146,21 @@ def main(argv=None):
         n = build_input(args.n_docs, input_dir)
         print(f"built {n} docs at {input_dir}", file=sys.stderr)
 
-    results = {}
-    for mode in ("hash", "text"):
-        p = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--child", mode, "--input-dir", input_dir,
-             "--out", args.out, "--trials", str(args.trials)],
-            capture_output=True, text=True, cwd=REPO,
-        )
-        json_lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-        if p.returncode != 0 or not json_lines:
-            sys.stderr.write(p.stdout[-2000:] + "\n" + p.stderr[-4000:] + "\n")
-            raise RuntimeError(f"{mode} child failed rc={p.returncode}")
-        line = json_lines[-1]
-        results[mode] = json.loads(line)
-        print(line, file=sys.stderr)
-
-    h, t = results["hash"], results["text"]
+    p = subprocess.run(
+        [sys.executable, os.path.abspath(__file__),
+         "--child", "--input-dir", input_dir,
+         "--out", args.out, "--trials", str(args.trials)],
+        capture_output=True, text=True, cwd=REPO,
+    )
+    json_lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    if p.returncode != 0 or not json_lines:
+        sys.stderr.write(p.stdout[-2000:] + "\n" + p.stderr[-4000:] + "\n")
+        raise RuntimeError(f"child failed rc={p.returncode}")
+    res = json.loads(json_lines[-1])
     combined = {
         "n_docs": args.n_docs,
-        "hash": h,
-        "text": t,
-        "shuffle_bytes_delta_pct": round(
-            100.0 * (t["app_shuffle_write_bytes"] - h["app_shuffle_write_bytes"])
-            / max(t["app_shuffle_write_bytes"], 1), 1),
-        "throughput_docs_per_sec_hash": round(args.n_docs / h["best_sec"], 1),
+        "hash": res,
+        "throughput_docs_per_sec_hash": round(args.n_docs / res["best_sec"], 1),
     }
     out = json.dumps(combined)
     print(out)

@@ -41,23 +41,40 @@ def test_curation_runner_end_to_end(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_curation_tags_agree_with_standalone_operators(spark):
+def test_curation_tags_agree_with_standalone_operators(spark, tmp_path):
     """The runner's per-doc tags must match the independently oracled
-    standalone operators it composes."""
+    standalone operators it composes. The corpus gets one extra document
+    on the punctuation bound: 1,000 of its 4,999 chars are punctuation
+    (ratio 0.20004), which doc_curated and its oracle round to 0.2 and
+    keep, so the runner's gate must keep it too."""
     from timberline_spark.extras import textfns as tf
 
-    tagged = curate_docs(spark, SF_TINY)
-    quota_ids = {r.doc_id for r in tf.doc_quota_sample(spark, SF_TINY).collect()}
+    boundary = " ".join(f"the w{i}" for i in range(500))[:3999].ljust(3999, "x")
+    boundary += "." * 1000
+    assert len(boundary) == 4999
+    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
+    boundary_id = docs.agg(F.max("doc_id")).first()[0] + 1
+    docs.unionByName(
+        spark.createDataFrame(
+            [(boundary_id, boundary, "en", "src0", len(boundary))], docs.schema
+        )
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    sf = str(tmp_path)
+
+    tagged = curate_docs(spark, sf)
+    quota_ids = {r.doc_id for r in tf.doc_quota_sample(spark, sf).collect()}
     got_quota = {r.doc_id for r in tagged.filter("pass_quota").collect()}
     assert got_quota == quota_ids
     # curated operator = quality AND keeper (no quota/repetition gate);
     # the runner's quality gate adds the repetition screen, so its
     # quality+keeper set is a subset of doc_curated's
-    curated_ids = {r.doc_id for r in tf.doc_curated(spark, SF_TINY).collect()}
+    curated_ids = {r.doc_id for r in tf.doc_curated(spark, sf).collect()}
     got_qk = {
         r.doc_id for r in tagged.filter("pass_quality AND is_keeper").collect()
     }
     assert got_qk <= curated_ids
+    assert boundary_id in curated_ids
+    assert boundary_id in got_qk
 
 
 def test_curation_deterministic(spark):

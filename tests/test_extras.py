@@ -186,56 +186,6 @@ def test_kmeans_handles_small_and_noncontiguous_ids(spark, tmp_path):
     assert out == oracle
 
 
-def test_kmeans_maxmin_init_spreads_seeds(spark, tmp_path):
-    """Deterministic farthest-point ('maxmin') seeding: when the k lowest
-    vec_ids are all packed into one dense blob, lowid seeds all land in the
-    blob, while maxmin picks the lowest id first and then the farthest
-    vector — so its seed set covers both blobs, and the Lloyd's pass that
-    follows puts the two blobs in different cells. Also: duplicate-only
-    tables stop early (< k seeds), the search is deterministic, and an
-    unknown init name raises."""
-    dim = sim.EMBED_DIM
-    rows = []
-    for i in range(20):  # blob A near the origin, ids 0..19
-        rows.append((i, [0.001 * ((i + j) % 5) for j in range(dim)], 0))
-    for i in range(20):  # blob B far away, ids 100..119
-        rows.append((100 + i, [9.0 + 0.001 * ((i + j) % 5) for j in range(dim)], 1))
-    df = spark.createDataFrame(
-        [(a, [float(x) for x in b], c) for a, b, c in rows],
-        "vec_id long, embedding array<float>, label int",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    sf = str(tmp_path)
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    rounded = F.transform(F.col("embedding"), lambda x: F.round(x.cast("double"), 6))
-    seeds = sim._maxmin_seeds(emb, rounded, 4)
-    assert len(seeds) == 4
-    assert seeds == sim._maxmin_seeds(emb, rounded, 4)  # deterministic
-    # seed 0 = lowest vec_id (blob A); seed 1 = the farthest vector (blob B)
-    assert seeds[0][0] < 1.0 and seeds[1][0] > 8.0
-
-    # end-to-end: maxmin centroids separate the blobs into distinct cells
-    cents = sim.kmeans_centroids(spark, sf, k=4, init="maxmin")
-    assigned = emb.select(
-        "vec_id",
-        F.element_at(sim._nearest_cells(F.col("embedding"), cents, 1), 1).alias("cl"),
-    ).collect()
-    cells_a = {r.cl for r in assigned if r.vec_id < 100}
-    cells_b = {r.cl for r in assigned if r.vec_id >= 100}
-    assert cells_a.isdisjoint(cells_b)
-
-    # duplicates can't support more centers: 3 distinct points, k=8 -> 3 seeds
-    dup = spark.createDataFrame(
-        [(i, [float(i % 3)] * dim, 0) for i in range(12)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    assert len(sim._maxmin_seeds(dup, rounded, 8)) == 3
-
-    with pytest.raises(ValueError, match="unknown init"):
-        sim.kmeans_centroids(spark, sf, init="bogus")
-
-
 def test_knn_ivf_recall_sweep_monotone_to_exact(spark):
     """VERDICT round 4 demand #5: recall over nprobe must be monotone
     non-decreasing and reach EXACTLY 1.0 at nprobe = K (probing every cell
@@ -777,12 +727,6 @@ def test_multimodal_binary_and_features(spark):
     # n_bytes matches the metadata the JVM side computed
     meta = {r.doc_id: r.meta.n_bytes for r in df.filter("doc_id < 5").collect()}
     assert all(meta[r.doc_id] == r.n_bytes for r in rows)
-
-
-def test_multimodal_real_decode_is_gated(spark):
-    df = mm.attach_binary(spark, SF_TINY).limit(1)
-    with pytest.raises(Exception, match="NotImplementedError|real image"):
-        mm.decode_features(df, real_decode=True).collect()
 
 
 def test_frame_sample_shapes(spark):

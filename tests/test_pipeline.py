@@ -28,31 +28,185 @@ def full_run(spark, outdirs):
     return run_pipeline(spark, SF_TINY, outdirs[0], run_id="r1")
 
 
+OUTPUT_TABLES = (
+    "stage_classified", "sink_errors", "sink_tool_calls", "sink_anomalies",
+    "analysis_results", "analysis_summary", "report_buckets", "top_issues",
+    "report_summary",
+)
+
+
+def _assert_converged(spark, ref_dir, got_dir):
+    """Every output table and the report document of ``got_dir`` equal
+    ``ref_dir``'s; ``_lineage`` holds exactly one committed row per date, and
+    ``_metrics`` the same multiset of rows (wall times aside)."""
+    import collections
+    import json
+
+    for t in OUTPUT_TABLES:
+        a = normalize(spark.read.parquet(f"{ref_dir}/{t}").toPandas())
+        b = normalize(spark.read.parquet(f"{got_dir}/{t}").toPandas())
+        assert a.equals(b), t
+
+    def lineage(d):
+        rows = sorted(
+            (r.run_id, r.stage, r.partition, r.rows, r.status)
+            for r in spark.read.parquet(f"{d}/_lineage").collect()
+        )
+        assert len({r[:3] for r in rows}) == len(rows), "a date committed twice"
+        return rows
+
+    def metrics(d):
+        return collections.Counter(
+            (r.run_id, r.stage, r.partition, r.rows_in, r.rows_out, r.invalid)
+            for r in spark.read.parquet(f"{d}/_metrics").collect()
+        )
+
+    assert lineage(got_dir) == lineage(ref_dir)
+    assert metrics(got_dir) == metrics(ref_dir)
+
+    def report(d):
+        with open(f"{d}/daily_analysis_r1.json") as fh:
+            return json.load(fh)
+
+    assert report(got_dir) == report(ref_dir)
+
+
 def test_resume_produces_identical_sinks(spark, outdirs, full_run):
+    """Incremental input: half of the dates first, then the other half's
+    files added to the same input table. The rerun skips the committed
+    dates, processes only the new ones, and ends equal to one run over the
+    union; a third run has nothing to do. The halves share no date (split
+    on the pipeline's own p_date): rows arriving later for a committed date
+    are not picked up, by design."""
+    from timberline_spark import route
+    from timberline_spark.enrich import enrich_turns
+    from timberline_spark.parse import parse_turns
+    from timberline_spark.pipeline import _p_date
+    from timberline_spark.transcripts import load_transcripts
+
     full_dir, resume_dir = outdirs
+    assert full_run.partitions_processed and not full_run.partitions_skipped
 
-    # one-shot run
-    res_full = full_run
-    assert res_full.partitions_processed  # did work
-    assert not res_full.partitions_skipped
+    tr = load_transcripts(spark, SF_TINY)
+    p_dates = route.classify_turns(enrich_turns(spark, parse_turns(tr))).select(
+        "conv_id", "turn_idx", _p_date("effective_ts_ms").alias("p_date")
+    )
+    tagged = tr.join(p_dates, ["conv_id", "turn_idx"]).select(*tr.columns, "p_date")
+    dates = sorted(r.p_date for r in p_dates.select("p_date").distinct().collect())
+    assert dates == full_run.partitions_processed
+    first, later = dates[: len(dates) // 2], dates[len(dates) // 2 :]
 
-    # interrupted run: only 2 partitions, then resume
-    res_a = run_pipeline(spark, SF_TINY, resume_dir, run_id="r1", max_partitions=2)
-    assert len(res_a.partitions_processed) == 2
-    res_b = run_pipeline(spark, SF_TINY, resume_dir, run_id="r1")
-    assert set(res_b.partitions_skipped) == set(res_a.partitions_processed)
-    assert not (set(res_b.partitions_processed) & set(res_a.partitions_processed))
+    in_base = tempfile.mkdtemp(prefix="tl_incr_in_")
+    try:
+        table = f"{in_base}/transcripts"
+        tagged.filter(F.col("p_date").isin(first)).drop("p_date").write.parquet(table)
+        res_a = run_pipeline(spark, "", resume_dir, run_id="r1", input_table=table)
+        assert res_a.partitions_processed == first
+        assert not res_a.partitions_skipped
 
-    # resumed output == one-shot output, exactly, for every sink
-    for sink in ["sink_errors", "sink_tool_calls", "sink_anomalies",
-                 "report_buckets", "top_issues", "report_summary"]:
-        a = normalize(spark.read.parquet(f"{full_dir}/{sink}").toPandas())
-        b = normalize(spark.read.parquet(f"{resume_dir}/{sink}").toPandas())
-        assert a.equals(b), sink
+        tagged.filter(F.col("p_date").isin(later)).drop("p_date").write.mode(
+            "append"
+        ).parquet(table)
+        res_b = run_pipeline(spark, "", resume_dir, run_id="r1", input_table=table)
+        assert res_b.partitions_skipped == first
+        assert res_b.partitions_processed == later
+        _assert_converged(spark, full_dir, resume_dir)
 
-    # third run: everything already committed -> no partitions processed
-    res_c = run_pipeline(spark, SF_TINY, resume_dir, run_id="r1")
-    assert not res_c.partitions_processed
+        # third run: everything already committed -> no partitions processed
+        res_c = run_pipeline(spark, "", resume_dir, run_id="r1", input_table=table)
+        assert not res_c.partitions_processed
+        assert res_c.partitions_skipped == dates
+        _assert_converged(spark, full_dir, resume_dir)
+    finally:
+        shutil.rmtree(in_base, ignore_errors=True)
+
+
+class _Crash(RuntimeError):
+    """The failure a crash-injection test raises."""
+
+
+CRASH_POINTS = (
+    "after_stage_write",
+    "after_lineage_append",
+    "between_dated_and_rollup_writes",
+    "before_small_table_writes",
+    "after_metrics_append",
+)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeypatch, point):
+    """A crash at a commit point, then a rerun with the same run_id: every
+    table equals the uninterrupted run's, ``_lineage`` holds one committed
+    row per date and ``_metrics`` one set of rows. The stage commit, the
+    sinks and the aggregate run concurrently, so every failure after the
+    stage write first waits until the lineage append has been seen: the
+    crash point is then fixed, not a race."""
+    import os
+    import threading
+
+    from timberline_spark import aggregate as agg
+    from timberline_spark import pipeline as P
+    from timberline_spark import route
+
+    out = str(tmp_path / "out")
+    lineage_seen = threading.Event()
+    real_append = P._append
+
+    def append(spark_, out_dir, table, *a, **kw):
+        real_append(spark_, out_dir, table, *a, **kw)
+        if table == "_lineage":
+            lineage_seen.set()
+
+    def crash_after_lineage(*_a, **_kw):
+        assert lineage_seen.wait(600), "the lineage append never happened"
+        raise _Crash(point)
+
+    monkeypatch.setattr(P, "_append", append)
+    expected = _Crash
+    if point == "after_stage_write":
+        real_write = P._write_by_date
+
+        def write(df, path):
+            real_write(df, path)
+            if path.endswith(P.STAGE_CLASSIFIED):
+                raise _Crash(point)
+
+        monkeypatch.setattr(P, "_write_by_date", write)
+    elif point == "after_lineage_append":
+        # the errors sink fails: sink_errors is never written
+        monkeypatch.setattr(route, "errors_sink", crash_after_lineage)
+    elif point == "between_dated_and_rollup_writes":
+        # the rollup chain fails; the dated writes beside it on the pool
+        # still finish before the error propagates
+        monkeypatch.setattr(agg, "dedup_rollup", crash_after_lineage)
+    elif point == "before_small_table_writes":
+        real_small = P._write_small_table
+
+        def small(out_dir, table, *a):
+            if table == "top_issues":
+                crash_after_lineage()
+            real_small(out_dir, table, *a)
+
+        monkeypatch.setattr(P, "_write_small_table", small)
+    else:  # after the _metrics append: the report document cannot be written
+        os.makedirs(f"{out}/daily_analysis_r1.json")
+        expected = IsADirectoryError
+
+    with pytest.raises(expected):
+        run_pipeline(spark, SF_TINY, out, run_id="r1")
+    monkeypatch.undo()
+    assert os.path.isdir(f"{out}/_lineage") == (point != "after_stage_write")
+    assert os.path.isdir(f"{out}/_metrics") == (point == "after_metrics_append")
+    if point == "after_metrics_append":
+        os.rmdir(f"{out}/daily_analysis_r1.json")
+
+    res = run_pipeline(spark, SF_TINY, out, run_id="r1")
+    if point == "after_stage_write":
+        assert res.partitions_processed == full_run.partitions_processed
+    else:
+        assert res.partitions_skipped == full_run.partitions_processed
+    _assert_converged(spark, outdirs[0], out)
 
 
 def test_lineage_and_metrics_written(spark, outdirs, full_run):
@@ -188,7 +342,8 @@ def test_dedup_rollup_audit_parity(spark):
     """VERDICT round 4 demand #6 / ADVICE: dedup_rollup re-hashes dedup_key,
     so it must run the same collision audit as dedup_turns — sentinel column
     present, zero on this corpus, result otherwise identical, and any
-    per-date verdict from the input is OR-folded in (both key modes)."""
+    per-date verdict from the input is OR-folded in. The audit leaves the
+    dedup_turns result unchanged too, with its sentinel at zero."""
     from timberline_spark import aggregate as agg
     from timberline_spark import route
     from timberline_spark.enrich import enrich_turns
@@ -202,12 +357,15 @@ def test_dedup_rollup_audit_parity(spark):
         )
     ).withColumn("p_date", _p_date("effective_ts_ms"))
     dated = agg.dedup_turns(kept, extra_keys=("p_date",), audit=True).cache()
+    assert dated.filter("key_collision").count() == 0
+    assert normalize(dated.drop("key_collision").toPandas()).equals(
+        normalize(agg.dedup_turns(kept, extra_keys=("p_date",)).toPandas())
+    )
     plain = normalize(agg.dedup_rollup(dated.drop("key_collision")).toPandas())
-    for hash_key in (True, False):
-        audited = agg.dedup_rollup(dated, hash_key=hash_key, audit=True)
-        assert "key_collision" in audited.columns
-        assert audited.filter("key_collision").count() == 0
-        assert normalize(audited.drop("key_collision").toPandas()).equals(plain)
+    audited = agg.dedup_rollup(dated, audit=True)
+    assert "key_collision" in audited.columns
+    assert audited.filter("key_collision").count() == 0
+    assert normalize(audited.drop("key_collision").toPandas()).equals(plain)
     # a per-date collision verdict propagates through the rollup
     poisoned = dated.withColumn("key_collision", F.lit(True))
     assert (
@@ -215,32 +373,6 @@ def test_dedup_rollup_audit_parity(spark):
         == 0
     )
     dated.unpersist()
-
-
-def test_dedup_hash_key_escape_hatch(spark):
-    """DEDUP_HASH_KEY contract: the exact-string-key path produces output
-    identical to the default hashed-key path (no collisions in this corpus),
-    and the audit sentinel reports zero collision groups."""
-    from timberline_spark import aggregate as agg
-    from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
-    from timberline_spark.transcripts import load_transcripts
-
-    kept = route.kept_turns(
-        route.classify_turns(
-            enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-        )
-    ).cache()
-    hashed = normalize(agg.dedup_turns(kept, hash_key=True).toPandas())
-    exact = normalize(agg.dedup_turns(kept, hash_key=False).toPandas())
-    assert hashed.equals(exact)
-    audited = agg.dedup_turns(kept, audit=True)
-    assert "key_collision" in audited.columns
-    assert audited.filter("key_collision").count() == 0
-    # audit mode does not change the dedup result itself
-    assert normalize(audited.drop("key_collision").toPandas()).equals(hashed)
-    kept.unpersist()
 
 
 def test_audit_hash_uses_independent_byte_stream(spark):
@@ -268,32 +400,6 @@ def test_audit_hash_uses_independent_byte_stream(spark):
                  "false is_warning", "map('a','b') labels")
     plan = agg.dedup_turns(kept, audit=True)._jdf.queryExecution().analyzed().toString()
     assert "concat(lower(message" in plan, plan[:500]
-
-
-def test_dedup_hash_key_false_pipeline_runs(spark, monkeypatch):
-    """CODE-REVIEW round 4 (confirmed): the documented escape hatch
-    (aggregate.DEDUP_HASH_KEY = False) must RUN — the audit column the
-    pipeline's collision metric reads has to exist in exact-key mode too,
-    with identical sink output."""
-    from timberline_spark import aggregate as agg
-
-    a = tempfile.mkdtemp(prefix="tl_exact_")
-    b = tempfile.mkdtemp(prefix="tl_hashk_")
-    try:
-        monkeypatch.setattr(agg, "DEDUP_HASH_KEY", False)
-        run_pipeline(spark, SF_TINY, a, run_id="ek")
-        monkeypatch.setattr(agg, "DEDUP_HASH_KEY", True)
-        run_pipeline(spark, SF_TINY, b, run_id="ek")
-        for t in ["report_buckets", "report_summary", "top_issues"]:
-            x = normalize(spark.read.parquet(f"{a}/{t}").toPandas())
-            y = normalize(spark.read.parquet(f"{b}/{t}").toPandas())
-            assert x.equals(y), t
-        m = spark.read.parquet(f"{a}/_metrics")
-        rows = m.filter(F.col("stage") == "dedup_hash_collisions").collect()
-        assert rows and all(r.rows_out == 0 for r in rows)
-    finally:
-        shutil.rmtree(a, ignore_errors=True)
-        shutil.rmtree(b, ignore_errors=True)
 
 
 def test_collision_metric_written(spark, outdirs, full_run):

@@ -35,15 +35,6 @@ from .dicts import LEVEL_META, SEVERITY_BUCKETS
 FREQ_BONUS_THRESHOLD = 10  # clusters with >= 10 total occurrences score +1
 TOP_ISSUES_N = 10  # models/log.py:296-299
 
-# Default group-key mode for dedup_turns/dedup_rollup: True shuffles the
-# 8-byte xxhash64 of the normalized message (roughly halves shuffle bytes
-# on the heaviest stage); False shuffles the exact string key — the escape
-# hatch for datasets where the ~n^2/2^65 64-bit collision odds (≈3% at 10^9
-# DISTINCT messages) are unacceptable. Both paths produce identical output
-# when no collision occurs (tests/test_pipeline.py pins this).
-DEDUP_HASH_KEY = True
-
-
 def _level_priority(col):
     expr = F.lit(0)
     for level, priority, _ in LEVEL_META:
@@ -54,7 +45,6 @@ def _level_priority(col):
 def dedup_turns(
     kept: DataFrame,
     extra_keys: tuple[str, ...] = (),
-    hash_key: bool | None = None,
     audit: bool = False,
 ) -> DataFrame:
     """Exact-key dedup: one row per normalized message, with duplicate_count.
@@ -67,16 +57,14 @@ def dedup_turns(
     the dated one via :func:`dedup_rollup` (min/sum are associative), so the
     pipeline never runs the wide dedup shuffle twice.
 
-    hash_key (default: module constant DEDUP_HASH_KEY) picks the shuffle
-    key: the 8-byte xxhash64 of the normalized message, or the exact string
-    key. ``audit=True`` (hash mode only) appends a ``key_collision`` boolean
-    per group: min/max of a SECOND independent 64-bit hash within the group
-    (16 extra map-side-combined bytes per group, never the string) — any
-    group whose members disagree under the second hash merged two distinct
-    messages under the first. The pipeline surfaces the sum in _metrics.
+    The shuffle key is the 8-byte xxhash64 of the normalized message.
+    ``audit=True`` appends a ``key_collision`` boolean per group: min/max
+    of a SECOND independent 64-bit hash within the group (16 extra
+    map-side-combined bytes per group, never the string) — any group whose
+    members disagree under the second hash merged two distinct messages
+    under the first. The pipeline surfaces the sum in _metrics. The exact
+    reference is the DuckDB oracle's ``GROUP BY`` on the string itself.
     """
-    if hash_key is None:
-        hash_key = DEDUP_HASH_KEY
     exact = F.lower(F.col("message"))
     # Group on xxhash64(lower(message)), NOT the message itself: the wide
     # dedup shuffle otherwise carries the full message twice (as the group
@@ -84,10 +72,8 @@ def dedup_turns(
     # shuffle bytes on the heaviest stage; dedup_key is re-derived from the
     # winning rep's message (identical for every group member). A 64-bit
     # collision would merge two unrelated messages into one count — odds
-    # ~n^2/2^65 (≈3% at 10^9 DISTINCT messages); pass hash_key=False (or
-    # set DEDUP_HASH_KEY = False) to shuffle exact keys instead, or
-    # audit=True to keep the cheap key and count collisions.
-    df = kept.withColumn("dedup_h", F.xxhash64(exact) if hash_key else exact)
+    # ~n^2/2^65 (≈3% at 10^9 DISTINCT messages); audit=True counts them.
+    df = kept.withColumn("dedup_h", F.xxhash64(exact))
     # min(struct(...)) hash-aggregate instead of a row_number window: gets
     # map-side partial aggregation and avoids the per-partition sort — the
     # difference between "works" and "works at 100 TB". The struct's leading
@@ -115,7 +101,7 @@ def dedup_turns(
         F.max("effective_ts_ms").alias("last_ts_ms"),
     ]
     extra_cols = []
-    if audit and hash_key:
+    if audit:
         # independent second hash over a DIFFERENT byte sequence. NOT
         # multi-arg xxhash64(exact, lit): Spark folds that as
         # XXH64("audit", seed=XXH64(exact)) — a chained hash where a
@@ -125,11 +111,6 @@ def dedup_turns(
         h2 = F.xxhash64(F.concat(exact, F.lit("#audit")))
         aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
         extra_cols = [(F.col("_h2min") != F.col("_h2max")).alias("key_collision")]
-    elif audit:
-        # exact string keys cannot collide; the column still exists so the
-        # pipeline's collision metric works in BOTH key modes (the escape
-        # hatch must not crash the run it exists to rescue)
-        extra_cols = [F.lit(False).alias("key_collision")]
     g = df.groupBy(*extra_keys, "dedup_h").agg(*aggs)
     return g.select(*extra_keys, *_unpack_rep(), *extra_cols)
 
@@ -153,9 +134,7 @@ def _unpack_rep():
     ]
 
 
-def dedup_rollup(
-    dated: DataFrame, hash_key: bool | None = None, audit: bool = False
-) -> DataFrame:
+def dedup_rollup(dated: DataFrame, audit: bool = False) -> DataFrame:
     """Global dedup derived from a per-date dedup frame WITHOUT re-shuffling
     the raw rows: min(rep)/sum(count)/min/max are associative, and a date
     group's rep carries first_ts_ms == its effective_ts_ms (the min-struct's
@@ -184,9 +163,6 @@ def dedup_rollup(
         F.col("message"),
         F.to_json(F.col("labels")).alias("labels_json"),
     )
-    if hash_key is None:
-        hash_key = DEDUP_HASH_KEY
-    key = F.xxhash64(F.col("dedup_key")) if hash_key else F.col("dedup_key")
     aggs = [
         F.min(rep).alias("rep"),
         F.sum("duplicate_count").alias("duplicate_count"),
@@ -194,44 +170,36 @@ def dedup_rollup(
         F.max("last_ts_ms").alias("last_ts_ms"),
     ]
     extra_cols = []
-    has_inherited = "key_collision" in dated.columns
     if audit:
-        coll = None
-        if hash_key:
-            # same independent-byte-stream construction as dedup_turns
-            # (concat, NOT multi-arg xxhash64 — that chains seeds)
-            h2 = F.xxhash64(F.concat(F.col("dedup_key"), F.lit("#audit")))
-            aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
-            coll = F.col("_h2min") != F.col("_h2max")
-        if has_inherited:
+        # same independent-byte-stream construction as dedup_turns
+        # (concat, NOT multi-arg xxhash64 — that chains seeds)
+        h2 = F.xxhash64(F.concat(F.col("dedup_key"), F.lit("#audit")))
+        aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
+        coll = F.col("_h2min") != F.col("_h2max")
+        if "key_collision" in dated.columns:
             aggs.append(
                 F.max(F.col("key_collision").cast("int")).alias("_inherited")
             )
-            inherited = F.col("_inherited") == 1
-            coll = inherited if coll is None else (coll | inherited)
-        extra_cols = [
-            (coll if coll is not None else F.lit(False)).alias("key_collision")
-        ]
-    g = dated.groupBy(key.alias("dedup_h")).agg(*aggs)
+            coll = coll | (F.col("_inherited") == 1)
+        extra_cols = [coll.alias("key_collision")]
+    g = dated.groupBy(F.xxhash64(F.col("dedup_key")).alias("dedup_h")).agg(*aggs)
     return g.select(*_unpack_rep(), *extra_cols)
 
 
-def dedup_examples(kept: DataFrame, n_examples: int = 3) -> DataFrame:
-    """First-N-examples dedup retention (milvus.go:374-397 with
-    MIN_EXAMPLES_BEFORE_EXCLUSION=3, config.go:46): the first 3 occurrences
-    of each duplicate group stay stored as examples; later occurrences only
-    count. The window partitions on the high-cardinality dedup_key (never a
-    global sort), so it parallelizes at any scale."""
-    df = kept.withColumn("dedup_key", F.lower(F.col("message")))
+def _first_n_examples(df: DataFrame, key: str, n_examples: int) -> DataFrame:
+    """The first ``n_examples`` occurrences of each ``key`` group, ranked by
+    (effective_ts_ms, conv_id, turn_idx), each carrying the group size.
+    The window partitions on the high-cardinality key (never a global
+    sort), so it parallelizes at any scale."""
     order = [F.col("effective_ts_ms"), F.col("conv_id"), F.col("turn_idx")]
-    w = Window.partitionBy("dedup_key").orderBy(*order)
-    wc = Window.partitionBy("dedup_key")
+    w = Window.partitionBy(key).orderBy(*order)
+    wc = Window.partitionBy(key)
     return (
         df.withColumn("example_rank", F.row_number().over(w))
         .withColumn("duplicate_count", F.count(F.lit(1)).over(wc))
         .filter(F.col("example_rank") <= n_examples)
         .select(
-            "dedup_key",
+            key,
             "example_rank",
             "conv_id",
             "turn_idx",
@@ -242,6 +210,15 @@ def dedup_examples(kept: DataFrame, n_examples: int = 3) -> DataFrame:
             "duplicate_count",
         )
     )
+
+
+def dedup_examples(kept: DataFrame, n_examples: int = 3) -> DataFrame:
+    """First-N-examples dedup retention (milvus.go:374-397 with
+    MIN_EXAMPLES_BEFORE_EXCLUSION=3, config.go:46): the first 3 occurrences
+    of each duplicate group stay stored as examples; later occurrences only
+    count."""
+    df = kept.withColumn("dedup_key", F.lower(F.col("message")))
+    return _first_n_examples(df, "dedup_key", n_examples)
 
 
 def dedup_examples_simhash(kept: DataFrame, n_examples: int = 3) -> DataFrame:
@@ -254,11 +231,10 @@ def dedup_examples_simhash(kept: DataFrame, n_examples: int = 3) -> DataFrame:
     (milvus.go:354-409, config.go:45) — SimHash buckets are the
     shuffle-keyable analog.
 
-    Scale shape: the simhash is a pure per-row projection riding the scan;
-    the window partitions on the high-cardinality 32-bit key (never a
-    global sort). Hamming-radius > 0 matching needs banded multi-probe
-    (see extras.dedup.doc_minhash_lsh_pairs for the banding pattern) — out
-    of scope for the first-3-kept retention semantics here.
+    Scale shape: the simhash is a pure per-row projection riding the scan.
+    Hamming-radius > 0 matching needs banded multi-probe (see
+    extras.dedup.doc_minhash_lsh_pairs for the banding pattern) — out of
+    scope for the first-3-kept retention semantics here.
     """
     from .extras.dedup import with_simhash
 
@@ -270,25 +246,7 @@ def dedup_examples_simhash(kept: DataFrame, n_examples: int = 3) -> DataFrame:
         "message",
         "simhash",
     )
-    order = [F.col("effective_ts_ms"), F.col("conv_id"), F.col("turn_idx")]
-    w = Window.partitionBy("simhash").orderBy(*order)
-    wc = Window.partitionBy("simhash")
-    return (
-        df.withColumn("example_rank", F.row_number().over(w))
-        .withColumn("duplicate_count", F.count(F.lit(1)).over(wc))
-        .filter(F.col("example_rank") <= n_examples)
-        .select(
-            "simhash",
-            "example_rank",
-            "conv_id",
-            "turn_idx",
-            "level",
-            "service",
-            "message",
-            F.col("effective_ts_ms").alias("ts_ms"),
-            "duplicate_count",
-        )
-    )
+    return _first_n_examples(df, "simhash", n_examples)
 
 
 def cluster_fingerprint(message_col, level_col):

@@ -38,13 +38,14 @@ from .extras.textfns import (
     CURATE_MAX_PUNCT_RATIO,
     CURATE_MAX_TOKENS,
     CURATE_MIN_TOKENS,
-    LANG_STOPWORD_MIN_RATIO,
     PACK_SHARD_STRIDE,
     PACK_TOKEN_BUDGET,
-    PUNCT_RE,
     QUOTA_DEFAULT_PCT,
     QUOTA_OVERRIDES,
-    STOPWORD_RE,
+    _is_en,
+    _n_stopwords,
+    _norm_text,
+    _punct_ratio,
     _tokens,
     max_equal_run,
     sorted_bigrams,
@@ -63,7 +64,6 @@ def curate_docs(
     overrides: dict[str, int] | None = None,
     budget: int = PACK_TOKEN_BUDGET,
     shards: int | None = None,
-    dedup_key_mode: str = "hash",
 ) -> DataFrame:
     """One frame per input document, tagged with its curation fate.
 
@@ -101,10 +101,12 @@ def curate_docs(
     second-hash sentinel as aggregate.dedup_turns: ``key_collision`` is
     true for every member of a group whose members disagree under
     ``xxhash64(norm_text || '#audit')``, and the runner surfaces the sum.
-    ``dedup_key_mode='text'`` keeps the exact-string key (collision-free by
-    construction, key_collision always false) — the measurable baseline for
-    the shuffle-byte delta (BENCH.md "Curation dedup shuffle-byte cut") and
-    the escape hatch if a collision is ever observed.
+    The exact-text keeper reference is the DuckDB oracle of ``doc_curated``.
+
+    The quality gate takes its stopword count, its rounded punctuation
+    ratio and the normalized key from the same textfns helpers as
+    ``doc_curated``, so a document passes the runner's language, length
+    and punctuation gates exactly when it passes ``doc_curated``'s.
     """
     from pyspark.sql import Window
 
@@ -119,14 +121,7 @@ def curate_docs(
     s1b = s1.select("doc_id", "source", "text", "toks",
                     sorted_bigrams(F.col("toks")).alias("bigrams"))
     n_tok = F.size("toks").cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    n_punct = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(PUNCT_RE), 0))
-        .cast("long")
-    )
+    norm = _norm_text(F.col("text"))
     dup_frac = F.when(
         n_tok > 0,
         (n_tok - F.size(F.array_distinct("toks")).cast("long")) / n_tok,
@@ -135,34 +130,19 @@ def curate_docs(
         F.size("bigrams") > 0,
         max_equal_run(F.col("bigrams")) / F.size("bigrams").cast("double"),
     )
-    from .extras.dedup import _norm_text
-
-    norm = _norm_text(F.col("text"))
-    if dedup_key_mode == "hash":
-        key_col = F.xxhash64(norm)
-        # independent second hash over DIFFERENT bytes (concat, not
-        # multi-arg xxhash64 — that chains seeds; see aggregate.dedup_turns)
-        audit_col = F.xxhash64(F.concat(norm, F.lit("#audit")))
-    elif dedup_key_mode == "text":
-        key_col = norm
-        audit_col = F.lit(0).cast("long")  # exact keys cannot collide
-    else:
-        raise ValueError(f"unknown dedup_key_mode: {dedup_key_mode!r}")
     scored = s1b.select(
         "doc_id",
         "source",
         n_tok.alias("n_tokens"),
-        key_col.alias("norm_h"),
-        audit_col.alias("norm_h2"),
+        F.xxhash64(norm).alias("norm_h"),
+        # independent second hash over DIFFERENT bytes (concat, not
+        # multi-arg xxhash64 — that chains seeds; see aggregate.dedup_turns)
+        F.xxhash64(F.concat(norm, F.lit("#audit"))).alias("norm_h2"),
         (
-            (n_tok > 0)
-            & (n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO)
+            _is_en(n_tok, _n_stopwords(F.col("text")))
             & (n_tok >= CURATE_MIN_TOKENS)
             & (n_tok <= CURATE_MAX_TOKENS)
-            & (
-                n_punct / F.nullif(F.length("text").cast("double"), F.lit(0.0))
-                <= CURATE_MAX_PUNCT_RATIO
-            )
+            & (_punct_ratio(F.col("text")) <= CURATE_MAX_PUNCT_RATIO)
             & (F.coalesce(dup_frac <= CURATE_MAX_DUP_TOKEN_FRAC, F.lit(False)))
             # Gopher-style modal-bigram screen: drops degenerate boilerplate
             # where one 2-gram dominates; <2-token docs have no bigrams and
@@ -321,12 +301,6 @@ def main(argv=None):
         "--pack-shards", type=int, default=None,
         help="packing shard count (default: the session's defaultParallelism)",
     )
-    ap.add_argument(
-        "--dedup-key-mode", choices=("hash", "text"), default="hash",
-        help="dedup window key: xxhash64(norm_text) (default; 8-byte"
-        " shuffle key + collision audit) or the exact norm text"
-        " (collision-free baseline / escape hatch)",
-    )
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
     spark = get_spark("timberline_curation", cores=args.cores)
@@ -338,7 +312,6 @@ def main(argv=None):
         default_pct=args.quota_default_pct,
         budget=args.pack_budget,
         shards=args.pack_shards,
-        dedup_key_mode=args.dedup_key_mode,
     )
     print(json.dumps(metrics))
 

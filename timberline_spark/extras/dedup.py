@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import xhash as xh
-from .textfns import TOKEN_RE
+from .textfns import TOKEN_RE, _norm_text
 
 SHINGLE_K = 3
 MINHASH_PERMS = 16
@@ -54,7 +54,7 @@ def _perm_coeffs(j: int) -> tuple[int, int]:
     return (a | 1), b  # odd a
 
 
-def spread_for_compute(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the frame's scan parallelism is below
     the session's core count.
 
@@ -68,15 +68,10 @@ def spread_for_compute(df: DataFrame, partitions: int | None = None) -> DataFram
     expensive chain. On a many-file corpus (scan partitions >= cores) this
     is a NO-OP — the cluster-scale plan pays nothing.
     """
-    sc = df.sparkSession.sparkContext
-    target = partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def _norm_text(col):
-    return F.regexp_replace(F.trim(F.lower(col)), "[ ]+", " ")
 
 
 def _shingles(col):

@@ -3,11 +3,10 @@
 Pattern for image/audio/video at 100 TB: the payload is an opaque ``binary``
 column with a typed metadata struct beside it; decode / feature-extract /
 frame-sample run as Arrow-batched ``mapInPandas`` over partition-sized
-batches. The decode libraries are not in this container, so the decode step
-is a clearly-marked deterministic fake behind ``decode_features`` (set
-``real_decode=True`` to see the NotImplementedError gate); the Spark-side
-plumbing — schema, partitioning, UDF signature, batch shape — is real and
-tested.
+batches. The decode libraries (PIL/librosa/ffmpeg) are not installed, so
+the decode step is a clearly-marked deterministic fake behind
+``decode_features``; the Spark-side plumbing — schema, partitioning, UDF
+signature, batch shape — is real and tested.
 """
 
 from __future__ import annotations
@@ -74,21 +73,15 @@ def _fake_features(payload: bytes) -> list[float]:
     ]
 
 
-def decode_features(df: DataFrame, real_decode: bool = False) -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column.
 
-    real_decode=True is the hook where PIL/librosa/ffmpeg would run; those
-    libraries are not in this container, so it raises NotImplementedError.
-    The deterministic fake keeps the distributed plumbing testable.
+    ``_fake_features`` stands where a real decoder would run per payload;
+    the deterministic fake keeps the distributed plumbing testable.
     """
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if real_decode:
-                raise NotImplementedError(
-                    "real image/audio decode requires PIL/librosa/ffmpeg, "
-                    "not available in this environment"
-                )
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -381,67 +381,18 @@ def _nearest_cells(emb_col, centroids: list[list[float]], n: int) -> Column:
     return F.transform(ordered, lambda s: s["j"])
 
 
-def _maxmin_seeds(emb: DataFrame, rounded: Column, k: int) -> list[list[float]]:
-    """Deterministic farthest-point (k-center greedy) seeding: seed 0 is the
-    lowest vec_id's rounded embedding; each next seed is the vector with the
-    MAX min rounded-L2 distance to the seeds chosen so far (ties -> lower
-    vec_id). k-1 TakeOrdered passes over the cached rounded frame, each
-    collecting a single row — driver traffic is k x dim doubles, the same
-    shape as the Lloyd's rounds that follow, so it scales to quantizer-sized
-    k (K ~ sqrt(N)). Stops early (returning < k seeds) once every remaining
-    vector coincides with a chosen seed — duplicated points can't support
-    more distinct centers."""
-    pts = emb.select("vec_id", rounded.alias("c")).cache()
-    try:
-        first = pts.orderBy("vec_id").limit(1).collect()
-        if not first:
-            return []
-        seeds = [list(first[0].c)]
-        while len(seeds) < k:
-            min_d = F.array_min(
-                F.transform(
-                    _lit_doubles(seeds), lambda s: _l2_sq_to_lit(F.col("c"), s)
-                )
-            )
-            nxt = (
-                pts.select("vec_id", "c", min_d.alias("d"))
-                .orderBy(F.desc("d"), F.asc("vec_id"))
-                .limit(1)
-                .collect()
-            )
-            if not nxt or nxt[0].d <= 0.0:
-                break
-            seeds.append(list(nxt[0].c))
-        return seeds
-    finally:
-        pts.unpersist()
-
-
 def kmeans_centroids(
     spark: SparkSession,
     sf_dir: str,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    init: str = "lowid",
 ) -> list[list[float]]:
     """Fixed-iteration Lloyd's k-means over the embeddings table, fully
-    deterministic: seed centroids per ``init`` (coordinates rounded to
-    6 dp), `iters` rounds of (assign -> per-dim mean, rounded to 6 dp),
-    empty cells keep their previous centroid. Centroids pass through the
+    deterministic: seed centroids = the k lowest vec_ids present
+    (coordinates rounded to 6 dp), `iters` rounds of (assign -> per-dim
+    mean, rounded to 6 dp), empty cells keep their previous centroid. Centroids pass through the
     driver each round (k x dim doubles — exactly how MLlib's k-means
     broadcasts centroids); all per-row math is JVM-side.
-
-    ``init="lowid"`` (default, the oracle-checked path) seeds with the k
-    lowest vec_ids present. ``init="maxmin"`` is deterministic
-    farthest-point (k-center greedy) seeding — the seedless analog of
-    k-means++: start from the lowest vec_id, then repeatedly take the
-    vector with the MAX min-distance to the chosen seeds (ties -> lower
-    vec_id). One TakeOrdered job per seed (k-1 extra passes, each
-    returning a single row to the driver), so it suits quantizer-sized k
-    (K ~ sqrt(N) — see COVERAGE.md); spread-out seeds avoid the lowid
-    failure mode where all k seeds land in one dense region and Lloyd's
-    fixed iterations never escape it. No DuckDB oracle is registered for
-    maxmin (the driver-checked `emb_kmeans` query stays on lowid).
 
     The 6-dp rounding at every assign/update step is what makes the DuckDB
     oracle bit-identical: the only cross-engine FP hazard left is the
@@ -451,21 +402,13 @@ def kmeans_centroids(
     rounded = F.transform(
         F.col("embedding"), lambda x: F.round(x.cast("double"), 6)
     )
-    if init == "maxmin":
-        centroids = _maxmin_seeds(emb, rounded, k)
-    elif init == "lowid":
-        # init = the k LOWEST vec_ids PRESENT, labeled by rank position —
-        # not `vec_id < k`, which crashes on tables with < k rows and
-        # silently diverges from the oracle when low ids are non-contiguous
-        seeds = (
-            emb.orderBy("vec_id")
-            .limit(k)
-            .select("vec_id", rounded.alias("c"))
-            .collect()
-        )
-        centroids = [list(r.c) for r in sorted(seeds, key=lambda r: r.vec_id)]
-    else:
-        raise ValueError(f"kmeans_centroids: unknown init {init!r}")
+    # init = the k LOWEST vec_ids PRESENT, labeled by rank position — not
+    # `vec_id < k`, which crashes on tables with < k rows and silently
+    # diverges from the oracle when low ids are non-contiguous
+    seeds = (
+        emb.orderBy("vec_id").limit(k).select("vec_id", rounded.alias("c")).collect()
+    )
+    centroids = [list(r.c) for r in sorted(seeds, key=lambda r: r.vec_id)]
     if not centroids:
         raise ValueError("kmeans_centroids: embeddings table is empty")
     k = len(centroids)  # k_eff <= requested k when the table is small
@@ -520,15 +463,12 @@ def emb_knn_ivf(
     k: int = 5,
     n_queries: int = 10,
     nprobe: int = IVF_NPROBE,
-    init: str = "lowid",
 ) -> DataFrame:
     """IVF ANN top-k: probe the nprobe nearest k-means cells per query,
     exact-cosine rescore the cell members, rank. Recall < 1.0 by
     construction (bounded probes) — measured against emb_knn_brute in
-    tests. Same output schema as the other knn operators. ``init``
-    selects the quantizer seeding (see :func:`kmeans_centroids`);
-    the oracle-checked driver query stays on ``lowid``."""
-    centroids = kmeans_centroids(spark, sf_dir, init=init)
+    tests. Same output schema as the other knn operators."""
+    centroids = kmeans_centroids(spark, sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     assigned = emb.select(
         "vec_id",

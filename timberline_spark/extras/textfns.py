@@ -35,6 +35,33 @@ def _tokens(col):
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
 
 
+# The per-document signals every gate below shares (doc_quality,
+# doc_lang_id, doc_text_stats, doc_curated and curation.curate_docs): one
+# definition each, so a gate cannot drift from the operator it composes.
+def _n_stopwords(col) -> Column:
+    return F.size(F.regexp_extract_all(F.lower(col), F.lit(STOPWORD_RE), 0)).cast("long")
+
+
+def _n_punct(col) -> Column:
+    return F.size(F.regexp_extract_all(F.lower(col), F.lit(PUNCT_RE), 0)).cast("long")
+
+
+def _punct_ratio(col) -> Column:
+    """Punctuation chars per char, rounded to 4 dp like the oracle's
+    ``ROUND(…, 4)``: the value the punctuation gate compares."""
+    return F.round(_n_punct(col) / F.nullif(F.length(col).cast("double"), F.lit(0.0)), 4)
+
+
+def _is_en(n_tok: Column, n_stop: Column) -> Column:
+    return (n_tok > 0) & (
+        n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO
+    )
+
+
+def _norm_text(col) -> Column:
+    return F.regexp_replace(F.trim(F.lower(col)), "[ ]+", " ")
+
+
 def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return df.select(
@@ -53,14 +80,8 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = _tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    n_punct = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(PUNCT_RE), 0))
-        .cast("long")
-    )
+    n_stop = _n_stopwords(F.col("text"))
+    n_punct = _n_punct(F.col("text"))
     total_tok_chars = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
@@ -72,9 +93,7 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(n_stop / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4).alias(
             "stopword_ratio"
         ),
-        F.round(n_punct / F.nullif(F.length("text").cast("double"), F.lit(0.0)), 4).alias(
-            "punct_ratio"
-        ),
+        _punct_ratio(F.col("text")).alias("punct_ratio"),
         F.round(
             total_tok_chars / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4
         ).alias("mean_token_len"),
@@ -86,15 +105,8 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = _tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    pred = F.when(
-        (n_tok > 0)
-        & (n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO),
-        "en",
-    ).otherwise("unknown")
+    n_stop = _n_stopwords(F.col("text"))
+    pred = F.when(_is_en(n_tok, n_stop), "en").otherwise("unknown")
     return df.select(
         "doc_id", F.col("lang").alias("lang_label"), pred.alias("lang_pred")
     )
@@ -131,14 +143,8 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "text", _tokens(F.col("text")).alias("toks")
     )
     n_tok = F.size("toks").cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    n_punct = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(PUNCT_RE), 0))
-        .cast("long")
-    )
+    n_stop = _n_stopwords(F.col("text"))
+    n_punct = _n_punct(F.col("text"))
     total_tok_chars = F.aggregate(
         F.col("toks"), F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
@@ -147,11 +153,7 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: (acc * FP_MULT + F.length(x) * 17 + F.ascii(x)) % FP_MOD,
     )
-    lang_pred = F.when(
-        (n_tok > 0)
-        & (n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO),
-        "en",
-    ).otherwise("unknown")
+    lang_pred = F.when(_is_en(n_tok, n_stop), "en").otherwise("unknown")
     return s1.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
@@ -165,9 +167,7 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(n_stop / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4).alias(
             "stopword_ratio"
         ),
-        F.round(
-            n_punct / F.nullif(F.length("text").cast("double"), F.lit(0.0)), 4
-        ).alias("punct_ratio"),
+        _punct_ratio(F.col("text")).alias("punct_ratio"),
         F.round(
             total_tok_chars / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4
         ).alias("mean_token_len"),
@@ -212,25 +212,13 @@ def doc_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = _tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    n_punct = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(PUNCT_RE), 0))
-        .cast("long")
-    )
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "[ ]+", " ")
+    n_stop = _n_stopwords(F.col("text"))
     scored = df.select(
         "doc_id",
-        norm.alias("norm_text"),
+        _norm_text(F.col("text")).alias("norm_text"),
         n_tok.alias("n_tokens"),
-        F.round(n_punct / F.nullif(F.length("text").cast("double"), F.lit(0.0)), 4)
-        .alias("punct_ratio"),
-        (
-            (n_tok > 0)
-            & (n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO)
-        ).alias("is_en"),
+        _punct_ratio(F.col("text")).alias("punct_ratio"),
+        _is_en(n_tok, n_stop).alias("is_en"),
     )
     wk = Window.partitionBy(F.xxhash64(F.col("norm_text")))
     return (

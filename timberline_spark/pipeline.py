@@ -14,14 +14,19 @@ report) as a resumable batch DAG over date partitions:
 - a ``_metrics`` table records rows_in/rows_out/invalid per stage per
   partition (the reference's Prometheus counters,
   ``log-ingestor/internal/handlers/stream.go:108-158``); a stage's wall
-  time is recorded once, in its partition ``*`` row.
+  time is recorded once, in its partition ``*`` row. Each run_id owns one
+  ``_metrics`` file, rewritten whole (every date of the run) by each
+  attempt.
 
 Dynamic partition overwrite makes every write idempotent: re-processing a
 partition replaces it byte-identically (all transforms are deterministic),
 so a crash between "write" and "lineage append" is safe. The driver-written
 tables (``_lineage``, ``_metrics``, ``top_issues``, ``report_summary``) are
 published by atomic rename, so a crash mid-write never leaves a truncated
-or missing table behind.
+or missing table behind. The sinks and the aggregate tables are rebuilt
+from all of the run's stage dates on every attempt, so a rerun after a
+crash at any later point converges to the outputs of an uninterrupted run
+(tests/test_pipeline.py injects one crash per commit point).
 
 Scale notes (the 100 TB story):
 
@@ -127,14 +132,28 @@ def _publish_parquet(t, table_dir: str, name: str) -> None:
     os.replace(tmp, os.path.join(table_dir, name))
 
 
-def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
+def _metrics_file(run_id: str) -> str:
+    """The one ``_metrics`` file of a run, named by a hash of its run_id."""
+    import hashlib
+
+    return f"part-run-{hashlib.sha256(run_id.encode()).hexdigest()[:32]}.parquet"
+
+
+def _append(
+    spark: SparkSession, out_dir: str, table: str, rows, schema: str,
+    file_name: str | None = None,
+):
     """Append tiny bookkeeping rows as ONE driver-written parquet file.
 
     These are a handful of rows per run; a Spark job for each (the round-2
     coalesce(1) writes) costs a full schedule/commit round-trip on a real
     cluster — part of the measured ~20 s serial tail that caps N->4N
     scaling. pyarrow on the driver writes the same parquet with zero
-    cluster involvement; Spark reads the directory identically."""
+    cluster involvement; Spark reads the directory identically.
+
+    A fixed ``file_name`` replaces that file instead of adding one: the run's
+    ``_metrics`` rows (``_metrics_file``) are republished whole by every
+    attempt, so a rerun after a crash leaves exactly one set of them."""
     if not rows:
         return
     import uuid
@@ -149,7 +168,7 @@ def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
     t = pa.table(
         {name: pa.array(list(col), type=typ) for (name, typ), col in zip(fields, cols)}
     )
-    _publish_parquet(t, f"{out_dir}/{table}", f"part-{uuid.uuid4().hex}.parquet")
+    _publish_parquet(t, f"{out_dir}/{table}", file_name or f"part-{uuid.uuid4().hex}.parquet")
 
 
 SMALL_TABLE_FILE = "part-00000.parquet"
@@ -247,7 +266,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str,
     replicate: int = 1,
-    max_partitions: int | None = None,
     input_table: str | None = None,
     webhook_url: str | None = None,
     webhook_spool: str | None = None,
@@ -258,8 +276,10 @@ def run_pipeline(
 
     Partition unit = event date. Partitions already committed for this
     run_id (per the _lineage table) are skipped — that is the
-    resume-from-checkpoint behavior. max_partitions limits work per
-    invocation (used by tests to simulate an interrupted run).
+    resume-from-checkpoint behavior: a rerun after a crash, or after new
+    input files for new dates were added to ``input_table``, processes only
+    the uncommitted dates. Rows that arrive later for an already-committed
+    date are not picked up.
 
     fuzzy_buckets=True additionally merges near-miss clusters (the
     reference's DBSCAN analog, engine.py:104-106: clusters feed the report,
@@ -352,24 +372,13 @@ def run_pipeline(
         }
     else:  # fresh out_dir: no Spark job needed to learn there's no lineage
         done: set[str] = set()
-    # The todo list normally comes from the written table afterwards (no
-    # extra pass over the raw input). Only max_partitions (test hook for
-    # simulating interruption) needs the partition list up front.
-    pre_todo = None
-    if max_partitions is not None:
-        all_parts = sorted(
-            r.p_date for r in classified.select("p_date").distinct().collect()
-        )
-        pre_todo = [p for p in all_parts if p not in done][:max_partitions]
-
+    # The todo list comes from the written table afterwards (no extra pass
+    # over the raw input).
     t_write = time.time()
     batch = classified
-    if pre_todo is not None:
-        batch = batch.filter(F.col("p_date").isin(pre_todo))
-    elif done:
+    if done:
         batch = batch.filter(~F.col("p_date").isin(sorted(done)))
-    if pre_todo is None or pre_todo:
-        _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
+    _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
     stage_write_s = time.time() - t_write
 
     def _commit_stage():
@@ -422,28 +431,23 @@ def run_pipeline(
             "sink_tool_calls": sum(r.n_tool for r in per_part_rows),
             "sink_anomalies": sum(r.bad for r in per_part_rows),
         }
-        per_part = {
-            r.p_date: (r.n, r.bad) for r in per_part_rows if r.p_date not in done
-        }
-        todo = sorted(per_part) if pre_todo is None else pre_todo
-        if not todo:
-            return flag_counts, todo, []
-        now = time.time()
-        _append(
-            spark,
-            out_dir,
-            "_lineage",
-            [
-                (run_id, STAGE_CLASSIFIED, p, per_part.get(p, (0, 0))[0], now, "committed")
-                for p in todo
-            ],
-            LINEAGE_SCHEMA,
-        )
+        per_part = {r.p_date: (r.n, r.bad) for r in per_part_rows}
+        todo = sorted(p for p in per_part if p not in done)
+        if todo:
+            now = time.time()
+            _append(
+                spark,
+                out_dir,
+                "_lineage",
+                [(run_id, STAGE_CLASSIFIED, p, per_part[p][0], now, "committed") for p in todo],
+                LINEAGE_SCHEMA,
+            )
         # the write's wall time once, at partition "*"; per-date rows carry
-        # counts only (rows_out = valid rows), so every column sums cleanly
+        # counts only (rows_out = valid rows), so every column sums cleanly.
+        # Rows for EVERY date of the run, committed now or by an earlier
+        # attempt: the run's _metrics file is rewritten whole each attempt.
         stage_rows = [(run_id, STAGE_CLASSIFIED, "*", None, None, None, stage_write_s)]
-        for p in todo:
-            n, bad = per_part.get(p, (0, 0))
+        for p, (n, bad) in sorted(per_part.items()):
             stage_rows.append((run_id, STAGE_CLASSIFIED, p, n, n - bad, bad, None))
         return flag_counts, todo, stage_rows
 
@@ -488,7 +492,7 @@ def run_pipeline(
         # result branches below then read the cached frame concurrently
         # instead of racing to populate it) AND count hash-key collision
         # groups in the same pass — the sentinel for the 64-bit dedup key
-        # (see aggregate.DEDUP_HASH_KEY; nonzero lands in _metrics)
+        # (nonzero lands in _metrics)
         n_collisions = deduped_d.filter(F.col("key_collision")).count()
         # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one
         # result row set per analysis_date): results partitioned by
@@ -636,8 +640,8 @@ def run_pipeline(
         (run_id, "aggregate", "*", None, counts["report_buckets"], None, time.time() - t_stage)
     )
     # dedup hash-key collision sentinel: groups whose members disagree under
-    # an independent second hash (expected 0; nonzero = rerun with
-    # aggregate.DEDUP_HASH_KEY = False for exact string keys)
+    # an independent second hash (expected 0; nonzero = two distinct
+    # messages were merged under one 64-bit key and counted as one)
     metrics_rows.append(
         (run_id, "dedup_hash_collisions", "*", None, int(n_collisions), None, None)
     )
@@ -649,7 +653,10 @@ def run_pipeline(
             int(n_rollup_collisions), None, None,
         )
     )
-    _append(spark, out_dir, "_metrics", metrics_rows, METRICS_SCHEMA)
+    _append(
+        spark, out_dir, "_metrics", metrics_rows, METRICS_SCHEMA,
+        file_name=_metrics_file(run_id),
+    )
 
     # S6 analog: single JSON report document (reporting/generator.py:101-131)
     # — the human-facing daily report; built from the already-collected rows.
@@ -743,7 +750,6 @@ def main(argv=None):
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--replicate", type=int, default=1)
-    ap.add_argument("--max-partitions", type=int, default=None)
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--input-table", default=None, help="pre-built transcripts parquet")
     ap.add_argument("--webhook-url", default=None, help="POST the report summary here")
@@ -777,7 +783,6 @@ def main(argv=None):
         args.out,
         args.run_id,
         replicate=args.replicate,
-        max_partitions=args.max_partitions,
         input_table=args.input_table,
         webhook_url=args.webhook_url,
         webhook_spool=args.webhook_spool,
