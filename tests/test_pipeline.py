@@ -141,7 +141,8 @@ def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeyp
     row per date and ``_metrics`` one set of rows. The stage commit, the
     sinks and the aggregate run concurrently, so every failure after the
     stage write first waits until the lineage append has been seen: the
-    crash point is then fixed, not a race."""
+    crash point is then fixed, not a race. The failed attempt leaves no
+    persisted frame cached in the session."""
     import os
     import threading
 
@@ -151,10 +152,12 @@ def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeyp
 
     out = str(tmp_path / "out")
     lineage_seen = threading.Event()
-    real_append = P._append
+    real_publish_rows = P._publish_rows
 
-    def append(spark_, out_dir, table, *a, **kw):
-        real_append(spark_, out_dir, table, *a, **kw)
+    def publish_rows(out_dir, table, *a):
+        if table == "top_issues" and point == "before_small_table_writes":
+            crash_after_lineage()
+        real_publish_rows(out_dir, table, *a)
         if table == "_lineage":
             lineage_seen.set()
 
@@ -162,13 +165,13 @@ def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeyp
         assert lineage_seen.wait(600), "the lineage append never happened"
         raise _Crash(point)
 
-    monkeypatch.setattr(P, "_append", append)
+    monkeypatch.setattr(P, "_publish_rows", publish_rows)
     expected = _Crash
     if point == "after_stage_write":
         real_write = P._write_by_date
 
-        def write(df, path):
-            real_write(df, path)
+        def write(df, path, *a):
+            real_write(df, path, *a)
             if path.endswith(P.STAGE_CLASSIFIED):
                 raise _Crash(point)
 
@@ -180,22 +183,19 @@ def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeyp
         # the rollup chain fails; the dated writes beside it on the pool
         # still finish before the error propagates
         monkeypatch.setattr(agg, "dedup_rollup", crash_after_lineage)
-    elif point == "before_small_table_writes":
-        real_small = P._write_small_table
-
-        def small(out_dir, table, *a):
-            if table == "top_issues":
-                crash_after_lineage()
-            real_small(out_dir, table, *a)
-
-        monkeypatch.setattr(P, "_write_small_table", small)
-    else:  # after the _metrics append: the report document cannot be written
+    elif point == "after_metrics_append":
+        # the report document cannot be published over a directory
         os.makedirs(f"{out}/daily_analysis_r1.json")
         expected = IsADirectoryError
 
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    cached_before = n_cached()
     with pytest.raises(expected):
         run_pipeline(spark, SF_TINY, out, run_id="r1")
     monkeypatch.undo()
+    assert n_cached() <= cached_before
     assert os.path.isdir(f"{out}/_lineage") == (point != "after_stage_write")
     assert os.path.isdir(f"{out}/_metrics") == (point == "after_metrics_append")
     if point == "after_metrics_append":
@@ -238,14 +238,22 @@ def test_lineage_and_metrics_written(spark, outdirs, full_run):
 
 def test_date_partitioned_tables_one_file_per_date(spark, tmp_path):
     """Files are sized by bytes, not by a row-count salt: at this scale
-    every date of the stage table and of each sink is exactly one file.
-    (Three replicas: enough rows that a per-date salt would show, as the
-    former floor of 4 stage files per date did from here up.)"""
+    every date of the stage table, of each sink and of the two dated
+    result tables is exactly one file. (Three replicas: enough rows that a
+    per-date salt would show, as the former floor of 4 stage files per
+    date did from here up.)"""
     import os
 
     run_pipeline(spark, SF_TINY, str(tmp_path), run_id="layout", replicate=3)
-    for table in ("stage_classified", "sink_errors", "sink_tool_calls", "sink_anomalies"):
-        dates = [d for d in os.listdir(tmp_path / table) if d.startswith("p_date=")]
+    for table, col in (
+        ("stage_classified", "p_date"),
+        ("sink_errors", "p_date"),
+        ("sink_tool_calls", "p_date"),
+        ("sink_anomalies", "p_date"),
+        ("analysis_results", "analysis_date"),
+        ("analysis_summary", "analysis_date"),
+    ):
+        dates = [d for d in os.listdir(tmp_path / table) if d.startswith(f"{col}=")]
         assert dates, table
         for d in dates:
             files = [f for f in os.listdir(tmp_path / table / d) if f.endswith(".parquet")]
@@ -505,20 +513,19 @@ def test_iceberg_surface(spark):
         )
 
 
-def test_write_small_table_complex_types(spark, tmp_path):
-    """_write_small_table must not crash on non-primitive columns
+def test_publish_rows_complex_types(spark, tmp_path):
+    """_publish_rows must not crash on non-primitive columns
     (timestamps, arrays) — pyarrow inference covers what the type map
     doesn't."""
     import datetime
 
-    from timberline_spark.pipeline import _write_small_table
+    from timberline_spark.pipeline import _publish_rows
 
     df = spark.createDataFrame(
         [("a", datetime.datetime(2024, 1, 1, 12), [1, 2, 3])],
         "name string, at timestamp, xs array<int>",
     )
-    rows = [r.asDict() for r in df.collect()]
-    _write_small_table(str(tmp_path), "t_complex", df.schema, rows)
+    _publish_rows(str(tmp_path), "t_complex", df.schema, df.collect())
     back = spark.read.parquet(f"{tmp_path}/t_complex").collect()
     assert len(back) == 1 and back[0].name == "a" and list(back[0].xs) == [1, 2, 3]
 
@@ -606,13 +613,14 @@ def test_resume_refuses_config_drift(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_driver_writes_are_crash_safe(spark, tmp_path, monkeypatch):
-    """A crash inside a driver-side parquet write (simulated: the writer
-    leaves a truncated file behind, then raises) must leave the previous
-    table unchanged and readable, with no partial file visible to readers —
-    for the overwritten result tables (top_issues / report_summary) and
-    the appended bookkeeping (_lineage / _metrics). The next successful
-    overwrite sweeps the stray."""
+def test_driver_writes_are_crash_safe(spark, outdirs, full_run, tmp_path, monkeypatch):
+    """A crash inside a driver-side write (simulated: the writer leaves a
+    truncated file behind, then raises) must leave the previous file
+    unchanged and readable, with no partial file visible to readers — for
+    the overwritten result tables (top_issues / report_summary), the
+    appended bookkeeping (_lineage / _metrics) and the report JSON of a
+    rerun. The next successful publish sweeps the stray."""
+    import json
     import os
 
     import pyarrow.parquet as pq
@@ -625,8 +633,8 @@ def test_driver_writes_are_crash_safe(spark, tmp_path, monkeypatch):
         [T.StructField("k", T.StringType()), T.StructField("n", T.LongType())]
     )
     lineage_row = ("r1", P.STAGE_CLASSIFIED, "2024-01-01", 1, 0.0, "committed")
-    P._write_small_table(out, "top_issues", schema, [{"k": "a", "n": 1}])
-    P._append(spark, out, "_lineage", [lineage_row], P.LINEAGE_SCHEMA)
+    P._publish_rows(out, "top_issues", schema, [("a", 1)], P.SMALL_TABLE_FILE)
+    P._publish_rows(out, "_lineage", P.LINEAGE_SCHEMA, [lineage_row])
 
     def visible(table):
         # what Spark's and pyarrow's directory readers list
@@ -651,15 +659,35 @@ def test_driver_writes_are_crash_safe(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "write_table", crash)
     with pytest.raises(OSError):
-        P._write_small_table(out, "top_issues", schema, [{"k": "b", "n": 2}])
+        P._publish_rows(out, "top_issues", schema, [("b", 2)], P.SMALL_TABLE_FILE)
     with pytest.raises(OSError):
-        P._append(spark, out, "_lineage", [lineage_row], P.LINEAGE_SCHEMA)
+        P._publish_rows(out, "_lineage", P.LINEAGE_SCHEMA, [lineage_row])
     monkeypatch.undo()
 
     for t, (files, data) in before.items():
         assert visible(t) == files, t
         assert rows(t) == data, t
 
-    P._write_small_table(out, "top_issues", schema, [{"k": "b", "n": 2}])
+    P._publish_rows(out, "top_issues", schema, [("b", 2)], P.SMALL_TABLE_FILE)
     assert os.listdir(f"{out}/top_issues") == [P.SMALL_TABLE_FILE]
     assert rows("top_issues") == [{"k": "b", "n": 2}]
+
+    # the report JSON: a rerun whose document write fails partway
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(outdirs[0], run_dir)
+    doc_path = f"{run_dir}/daily_analysis_r1.json"
+    with open(doc_path) as fh:
+        old_doc = fh.read()
+    files_before = sorted(f for f in os.listdir(run_dir) if not f.startswith("."))
+
+    def partial_dump(obj, fh, **kwargs):
+        fh.write(json.dumps(obj, **kwargs)[:20])
+        raise OSError("simulated crash mid-write")
+
+    monkeypatch.setattr(json, "dump", partial_dump)
+    with pytest.raises(OSError):
+        run_pipeline(spark, SF_TINY, run_dir, run_id="r1")
+    monkeypatch.undo()
+    with open(doc_path) as fh:
+        assert fh.read() == old_doc
+    assert sorted(f for f in os.listdir(run_dir) if not f.startswith(".")) == files_before

@@ -65,22 +65,55 @@ def dedup_turns(
     under the first. The pipeline surfaces the sum in _metrics. The exact
     reference is the DuckDB oracle's ``GROUP BY`` on the string itself.
     """
-    exact = F.lower(F.col("message"))
-    # Group on xxhash64(lower(message)), NOT the message itself: the wide
-    # dedup shuffle otherwise carries the full message twice (as the group
-    # key AND inside the rep struct). The 8-byte key roughly halves
-    # shuffle bytes on the heaviest stage; dedup_key is re-derived from the
-    # winning rep's message (identical for every group member). A 64-bit
-    # collision would merge two unrelated messages into one count — odds
-    # ~n^2/2^65 (≈3% at 10^9 DISTINCT messages); audit=True counts them.
-    df = kept.withColumn("dedup_h", F.xxhash64(exact))
+    return _dedup_groups(
+        kept, extra_keys, F.lower(F.col("message")), F.count(F.lit(1)),
+        "effective_ts_ms", "effective_ts_ms", audit,
+    )
+
+
+def dedup_rollup(dated: DataFrame, audit: bool = False) -> DataFrame:
+    """Global dedup derived from a per-date dedup frame WITHOUT re-shuffling
+    the raw rows: min(rep)/sum(count)/min/max are associative, and a date
+    group's rep carries first_ts_ms == its effective_ts_ms (the min-struct's
+    leading field), so re-packing the struct reproduces the exact global
+    representative. Input is one row per (date, message) — orders of
+    magnitude smaller than the kept stream.
+
+    ``audit=True`` mirrors the :func:`dedup_turns` collision sentinel at
+    THIS stage's hashed groupBy (ADVICE round 4: a cross-date 64-bit
+    collision introduced here was invisible to the per-date audit): the
+    same independent second hash of the incoming ``dedup_key`` strings is
+    min/max-aggregated per rollup group, and any per-date ``key_collision``
+    verdict present on the input is OR-folded in, so the output column
+    covers both hashed-group stages.
+    """
+    return _dedup_groups(
+        dated, (), F.col("dedup_key"), F.sum("duplicate_count"),
+        "first_ts_ms", "last_ts_ms", audit,
+    )
+
+
+def _dedup_groups(
+    df: DataFrame, keys, key_text, count, first_ts: str, last_ts: str, audit: bool
+) -> DataFrame:
+    """One row per (``keys``, ``key_text``) group: the earliest
+    representative, ``count`` as duplicate_count, and the group's first and
+    last timestamps (min of ``first_ts``, max of ``last_ts``)."""
+    # Group on xxhash64(key_text), NOT the text itself: the wide dedup
+    # shuffle otherwise carries the full message twice (as the group key
+    # AND inside the rep struct). The 8-byte key roughly halves shuffle
+    # bytes on the heaviest stage; dedup_key is re-derived from the winning
+    # rep's message (identical for every group member). A 64-bit collision
+    # would merge two unrelated messages into one count — odds ~n^2/2^65
+    # (≈3% at 10^9 DISTINCT messages); audit=True counts them.
+    df = df.withColumn("dedup_h", F.xxhash64(key_text))
     # min(struct(...)) hash-aggregate instead of a row_number window: gets
     # map-side partial aggregation and avoids the per-partition sort — the
     # difference between "works" and "works at 100 TB". The struct's leading
     # fields (effective_ts_ms, conv_id, turn_idx) are a unique total order,
     # so the winner is deterministic at any parallelism.
     rep = F.struct(
-        F.col("effective_ts_ms"),
+        F.col(first_ts).alias("effective_ts_ms"),
         F.col("conv_id"),
         F.col("turn_idx"),
         F.col("level"),
@@ -96,23 +129,27 @@ def dedup_turns(
     )
     aggs = [
         F.min(rep).alias("rep"),
-        F.count(F.lit(1)).alias("duplicate_count"),
-        F.min("effective_ts_ms").alias("first_ts_ms"),
-        F.max("effective_ts_ms").alias("last_ts_ms"),
+        count.alias("duplicate_count"),
+        F.min(first_ts).alias("first_ts_ms"),
+        F.max(last_ts).alias("last_ts_ms"),
     ]
     extra_cols = []
     if audit:
         # independent second hash over a DIFFERENT byte sequence. NOT
-        # multi-arg xxhash64(exact, lit): Spark folds that as
-        # XXH64("audit", seed=XXH64(exact)) — a chained hash where a
+        # multi-arg xxhash64(key_text, lit): Spark folds that as
+        # XXH64("audit", seed=XXH64(key_text)) — a chained hash where a
         # first-hash collision implies a second-hash collision, making the
-        # sentinel structurally blind. Hashing concat(exact, salt) feeds
+        # sentinel structurally blind. Hashing concat(key_text, salt) feeds
         # different bytes, so the two collision events are independent.
-        h2 = F.xxhash64(F.concat(exact, F.lit("#audit")))
+        h2 = F.xxhash64(F.concat(key_text, F.lit("#audit")))
         aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
-        extra_cols = [(F.col("_h2min") != F.col("_h2max")).alias("key_collision")]
-    g = df.groupBy(*extra_keys, "dedup_h").agg(*aggs)
-    return g.select(*extra_keys, *_unpack_rep(), *extra_cols)
+        coll = F.col("_h2min") != F.col("_h2max")
+        if "key_collision" in df.columns:
+            aggs.append(F.max(F.col("key_collision").cast("int")).alias("_inherited"))
+            coll = coll | (F.col("_inherited") == 1)
+        extra_cols = [coll.alias("key_collision")]
+    g = df.groupBy(*keys, "dedup_h").agg(*aggs)
+    return g.select(*keys, *_unpack_rep(), *extra_cols)
 
 
 def _unpack_rep():
@@ -132,58 +169,6 @@ def _unpack_rep():
         F.col("first_ts_ms"),
         F.col("last_ts_ms"),
     ]
-
-
-def dedup_rollup(dated: DataFrame, audit: bool = False) -> DataFrame:
-    """Global dedup derived from a per-date dedup frame WITHOUT re-shuffling
-    the raw rows: min(rep)/sum(count)/min/max are associative, and a date
-    group's rep carries first_ts_ms == its effective_ts_ms (the min-struct's
-    leading field), so re-packing the struct reproduces the exact global
-    representative. Input is one row per (date, message) — orders of
-    magnitude smaller than the kept stream.
-
-    ``audit=True`` mirrors the :func:`dedup_turns` collision sentinel at
-    THIS stage's hashed groupBy (ADVICE round 4: a cross-date 64-bit
-    collision introduced here was invisible to the per-date audit): the
-    same independent second hash of the incoming ``dedup_key`` strings is
-    min/max-aggregated per rollup group, and any per-date ``key_collision``
-    verdict present on the input is OR-folded in, so the output column
-    covers both hashed-group stages.
-    """
-    rep = F.struct(
-        F.col("first_ts_ms").alias("effective_ts_ms"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.col("level"),
-        F.col("severity"),
-        F.col("severity_score"),
-        F.col("is_error"),
-        F.col("is_warning"),
-        F.col("service"),
-        F.col("message"),
-        F.to_json(F.col("labels")).alias("labels_json"),
-    )
-    aggs = [
-        F.min(rep).alias("rep"),
-        F.sum("duplicate_count").alias("duplicate_count"),
-        F.min("first_ts_ms").alias("first_ts_ms"),
-        F.max("last_ts_ms").alias("last_ts_ms"),
-    ]
-    extra_cols = []
-    if audit:
-        # same independent-byte-stream construction as dedup_turns
-        # (concat, NOT multi-arg xxhash64 — that chains seeds)
-        h2 = F.xxhash64(F.concat(F.col("dedup_key"), F.lit("#audit")))
-        aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
-        coll = F.col("_h2min") != F.col("_h2max")
-        if "key_collision" in dated.columns:
-            aggs.append(
-                F.max(F.col("key_collision").cast("int")).alias("_inherited")
-            )
-            coll = coll | (F.col("_inherited") == 1)
-        extra_cols = [coll.alias("key_collision")]
-    g = dated.groupBy(F.xxhash64(F.col("dedup_key")).alias("dedup_h")).agg(*aggs)
-    return g.select(*_unpack_rep(), *extra_cols)
 
 
 def _first_n_examples(df: DataFrame, key: str, n_examples: int) -> DataFrame:

@@ -20,10 +20,13 @@ report) as a resumable batch DAG over date partitions:
 
 Dynamic partition overwrite makes every write idempotent: re-processing a
 partition replaces it byte-identically (all transforms are deterministic),
-so a crash between "write" and "lineage append" is safe. The driver-written
-tables (``_lineage``, ``_metrics``, ``top_issues``, ``report_summary``) are
-published by atomic rename, so a crash mid-write never leaves a truncated
-or missing table behind. The sinks and the aggregate tables are rebuilt
+so a crash between "write" and "lineage append" is safe. Every file the
+driver writes itself (``_lineage``, ``_metrics``, ``top_issues``,
+``report_summary``, the pinned run config and the report JSON) goes through
+one primitive, ``_publish``: a hidden temp file, then ``os.replace``, so a
+crash mid-write never leaves a truncated or missing file behind. The
+frames the aggregate tail persists are released on every exit, a failed
+attempt included. The sinks and the aggregate tables are rebuilt
 from all of the run's stage dates on every attempt, so a rerun after a
 crash at any later point converges to the outputs of an uninterrupted run
 (tests/test_pipeline.py injects one crash per commit point).
@@ -31,8 +34,11 @@ crash at any later point converges to the outputs of an uninterrupted run
 Scale notes (the 100 TB story):
 
 - The fan-out computes the classified frame once and writes it as a stage
-  table; the four sinks then read that columnar checkpoint instead of
-  re-parsing raw text four times.
+  table; the sinks and the dedup then read that columnar checkpoint
+  instead of re-parsing raw text. After the stage write, the driver runs
+  the dedup -> dated -> rollup chain on its own thread while ONE thread
+  pool submits the independent jobs beside it (stage commit, three sinks,
+  two dated writes, two report collects).
 - Sinks are partitioned by event date -> partition pruning for the daily
   analysis window (engine.py:84-86).
 - Hot conversations skew the dedup/cluster groupBys; those group on
@@ -49,10 +55,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,12 +76,14 @@ SINKS = ("sink_errors", "sink_tool_calls", "sink_anomalies")
 AGG_TABLES = ("report_buckets", "top_issues", "report_summary")
 
 LINEAGE_SCHEMA = (
-    "run_id string, stage string, partition string, rows bigint,"
-    " committed_at double, status string"
+    T.StructType().add("run_id", "string").add("stage", "string")
+    .add("partition", "string").add("rows", "long")
+    .add("committed_at", "double").add("status", "string")
 )
 METRICS_SCHEMA = (
-    "run_id string, stage string, partition string, rows_in bigint,"
-    " rows_out bigint, invalid bigint, elapsed_sec double"
+    T.StructType().add("run_id", "string").add("stage", "string")
+    .add("partition", "string").add("rows_in", "long").add("rows_out", "long")
+    .add("invalid", "long").add("elapsed_sec", "double")
 )
 
 
@@ -89,47 +100,42 @@ def _p_date(col):
     return F.date_format(F.to_timestamp(F.col(col) / 1000.0), "yyyy-MM-dd")
 
 
-def _write_by_date(df: DataFrame, path: str) -> None:
-    """Overwrite the ``p_date`` partitions of ``df`` at ``path``, with files
+def _write_by_date(df: DataFrame, path: str, col: str = "p_date") -> None:
+    """Overwrite the ``col`` date partitions of ``df`` at ``path``, with files
     sized by bytes, not by row counts. The AQE rebalance hint routes each
     date to one write task, so a small date is one file. A date larger than
     ``advisoryPartitionSizeInBytes`` (64 MB, session.py) is split into
     files of about that size. Without the shuffle, every scan task would
     write a sliver file into every date it touches (tasks x dates files),
     and every created file costs the commit."""
-    df.hint("rebalance", "p_date").write.mode("overwrite").partitionBy(
-        "p_date"
-    ).parquet(path)
+    df.hint("rebalance", col).write.mode("overwrite").partitionBy(col).parquet(path)
 
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    import os
+def _publish(path: str, write) -> None:
+    """Create or replace the file ``path`` crash-safely.
 
-    if not os.path.isdir(f"{out_dir}/_lineage"):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(f"{out_dir}/_lineage")
-
-
-_PA_TYPES = {"string": "string", "bigint": "int64", "double": "float64"}
-
-
-def _publish_parquet(t, table_dir: str, name: str) -> None:
-    """Write pyarrow table ``t`` as ``table_dir/name`` crash-safely.
-
-    The bytes go to a dot-prefixed temp file first — Spark's and pyarrow's
-    directory readers skip hidden files — and one ``os.replace`` then
-    publishes the finished file. A crash mid-write (process killed, disk
-    full) therefore leaves at most a hidden stray, never a truncated
-    visible part that would break the next read of the table."""
-    import os
-    import uuid
-
-    import pyarrow.parquet as pq
-
+    ``write(tmp)`` fills a dot-prefixed temp file beside it — Spark's and
+    pyarrow's directory readers skip hidden files — and one ``os.replace``
+    then publishes the finished file. A crash mid-write (process killed,
+    disk full) therefore leaves at most a hidden stray, never a truncated
+    visible file, and a reader sees the old file or the new one. The next
+    publish of the same name sweeps the strays of interrupted ones."""
+    table_dir, name = os.path.split(path)
     os.makedirs(table_dir, exist_ok=True)
     tmp = os.path.join(table_dir, f".{name}.{uuid.uuid4().hex}.tmp")
-    pq.write_table(t, tmp)
-    os.replace(tmp, os.path.join(table_dir, name))
+    write(tmp)
+    os.replace(tmp, path)
+    for stray in os.listdir(table_dir):
+        if stray.startswith(f".{name}.") and stray.endswith(".tmp"):
+            os.remove(os.path.join(table_dir, stray))
+
+
+def _publish_json(path: str, doc) -> None:
+    def write(tmp):
+        with open(tmp, "w") as fh:
+            json.dump(doc, fh, indent=2, default=str)
+
+    _publish(path, write)
 
 
 def _metrics_file(run_id: str) -> str:
@@ -139,64 +145,34 @@ def _metrics_file(run_id: str) -> str:
     return f"part-run-{hashlib.sha256(run_id.encode()).hexdigest()[:32]}.parquet"
 
 
-def _append(
-    spark: SparkSession, out_dir: str, table: str, rows, schema: str,
-    file_name: str | None = None,
-):
-    """Append tiny bookkeeping rows as ONE driver-written parquet file.
-
-    These are a handful of rows per run; a Spark job for each (the round-2
-    coalesce(1) writes) costs a full schedule/commit round-trip on a real
-    cluster — part of the measured ~20 s serial tail that caps N->4N
-    scaling. pyarrow on the driver writes the same parquet with zero
-    cluster involvement; Spark reads the directory identically.
-
-    A fixed ``file_name`` replaces that file instead of adding one: the run's
-    ``_metrics`` rows (``_metrics_file``) are republished whole by every
-    attempt, so a rerun after a crash leaves exactly one set of them."""
-    if not rows:
-        return
-    import uuid
-
-    import pyarrow as pa
-
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split()
-        fields.append((name, getattr(pa, _PA_TYPES[typ])()))
-    cols = list(zip(*rows))
-    t = pa.table(
-        {name: pa.array(list(col), type=typ) for (name, typ), col in zip(fields, cols)}
-    )
-    _publish_parquet(t, f"{out_dir}/{table}", file_name or f"part-{uuid.uuid4().hex}.parquet")
-
-
 SMALL_TABLE_FILE = "part-00000.parquet"
 
 
-def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
-    """Overwrite a tiny result table (<= tens of rows, already collected)
-    with one driver-written parquet file — replaces a coalesce(1) Spark job
-    (same serial-tail rationale as _append). Schema is translated from the
-    Spark schema so an empty result still writes a typed, readable table.
-    Types outside the primitive map (timestamp/array/decimal/...) fall back
-    to pyarrow's type inference over the collected values instead of
-    crashing the run on a KeyError.
+def _publish_rows(
+    out_dir: str, table: str, schema: T.StructType, rows, name: str | None = None
+) -> None:
+    """Publish tiny driver-side rows (tuples in ``schema`` order) as ONE
+    parquet file ``out_dir/table/name``.
 
-    The table is always the single file SMALL_TABLE_FILE, so the overwrite
-    is one atomic rename over the previous version (see _publish_parquet):
-    a reader, or a crash, sees the old table or the new one, never a
-    missing or half-written one. Anything else in the directory (strays of
-    an interrupted write) is swept after the rename."""
-    import os
+    These are a handful of rows per run: bookkeeping, or a result already
+    collected. A Spark job for each (the round-2 coalesce(1) writes) costs
+    a full schedule/commit round-trip on a real cluster — part of the
+    measured ~20 s serial tail that caps N->4N scaling. pyarrow on the
+    driver writes the same parquet with zero cluster involvement.
 
+    Without ``name`` the rows land in a new file (the ``_lineage`` append).
+    A fixed name replaces that file: the run's ``_metrics`` rows
+    (``_metrics_file``) are republished whole by every attempt, and a
+    small result table is the single file SMALL_TABLE_FILE. Columns are
+    typed from the Spark schema, so an empty table stays readable; types
+    outside the primitive map (arrays, maps, decimals) fall back to
+    pyarrow's inference over the values instead of failing the run."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    type_map = {
-        "long": pa.int64(),
+    pa_types = {
         "bigint": pa.int64(),
         "int": pa.int32(),
-        "integer": pa.int32(),
         "double": pa.float64(),
         "float": pa.float32(),
         "string": pa.string(),
@@ -206,24 +182,15 @@ def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
         "timestamp_ntz": pa.timestamp("us"),
         "binary": pa.binary(),
     }
-    fields = [
-        (f.name, type_map.get(f.dataType.simpleString()))
-        for f in spark_schema.fields
-    ]
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
     t = pa.table(
         {
-            # type=None -> pyarrow infers from the values (complex Spark
-            # types: arrays, maps, decimals); typed when the map covers it
-            # so empty tables stay readable with the right schema
-            name: pa.array([d[name] for d in row_dicts], type=typ)
-            for name, typ in fields
+            f.name: pa.array(list(col), type=pa_types.get(f.dataType.simpleString()))
+            for f, col in zip(schema.fields, cols)
         }
     )
-    table_dir = f"{out_dir}/{table}"
-    _publish_parquet(t, table_dir, SMALL_TABLE_FILE)
-    for name in os.listdir(table_dir):
-        if name != SMALL_TABLE_FILE:
-            os.remove(os.path.join(table_dir, name))
+    name = name or f"part-{uuid.uuid4().hex}.parquet"
+    _publish(f"{out_dir}/{table}/{name}", lambda tmp: pq.write_table(t, tmp))
 
 
 def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
@@ -237,8 +204,6 @@ def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
     JSON; any later invocation with the same (out_dir, run_id) must
     match or it fails loudly naming the drifted flags.
     """
-    import os
-
     path = f"{out_dir}/_run_config/{run_id}.json"
     if os.path.exists(path):
         with open(path) as f:
@@ -253,11 +218,7 @@ def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
                 + " — rerun with the original flags or use a new run_id/out_dir"
             )
         return
-    os.makedirs(f"{out_dir}/_run_config", exist_ok=True)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, path)
+    _publish_json(path, cfg)
 
 
 def run_pipeline(
@@ -356,12 +317,10 @@ def run_pipeline(
         "p_date", _p_date("effective_ts_ms")
     ).withColumn("run_id", F.lit(run_id))
 
-    import os
-
     if os.path.isdir(f"{out_dir}/_lineage"):
         done = {
             r.partition
-            for r in _read_lineage(spark, out_dir)
+            for r in spark.read.parquet(f"{out_dir}/_lineage")
             .filter(
                 (F.col("run_id") == run_id)
                 & (F.col("stage") == STAGE_CLASSIFIED)
@@ -386,7 +345,7 @@ def run_pipeline(
         # in ONE columnar pass (p_date, is_valid, level, tool only); the sink
         # totals are summed client-side from the per-date rows (dates are
         # few). Nothing in stage 2+3 needs these counts, so this job runs on
-        # the stage-2 pool beside the sinks instead of ahead of them; the
+        # the pool beside the sinks instead of ahead of them; the
         # lineage append still follows the stage write, as resume requires.
         per_part_rows = (
             spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}")
@@ -435,12 +394,11 @@ def run_pipeline(
         todo = sorted(p for p in per_part if p not in done)
         if todo:
             now = time.time()
-            _append(
-                spark,
+            _publish_rows(
                 out_dir,
                 "_lineage",
-                [(run_id, STAGE_CLASSIFIED, p, per_part[p][0], now, "committed") for p in todo],
                 LINEAGE_SCHEMA,
+                [(run_id, STAGE_CLASSIFIED, p, per_part[p][0], now, "committed") for p in todo],
             )
         # the write's wall time once, at partition "*"; per-date rows carry
         # counts only (rows_out = valid rows), so every column sums cleanly.
@@ -452,14 +410,14 @@ def run_pipeline(
         return flag_counts, todo, stage_rows
 
     # ---- stage 2+3: sink fan-out and report aggregation, CONCURRENT -------
-    # The stage commit (per-date counts + lineage), the three sink writes
-    # and the dedup/buckets job are independent reads of the same stage
-    # table; submitting them from driver threads (Spark's scheduler is
-    # thread-safe; session.py enables FAIR mode) lets the small jobs fill
-    # executor slots the wide dedup shuffle leaves idle — the serial driver
-    # tail becomes one barrier instead of a queue of small jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The stage commit (per-date counts + lineage), the three sink writes,
+    # the two dated writes and the two report collects are independent
+    # jobs; each gets its own thread of ONE pool, sized so none queues
+    # behind another (Spark's scheduler is thread-safe; session.py enables
+    # FAIR mode), and the small jobs fill executor slots the wide dedup
+    # shuffle leaves idle. This thread runs the dedup -> dated -> rollup
+    # chain the dated writes and the collects depend on, so the serial
+    # driver tail is one barrier instead of a queue of small jobs.
     stage_df = spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}").filter(
         F.col("run_id") == run_id
     ).drop("run_id")
@@ -478,84 +436,88 @@ def run_pipeline(
         _write_by_date(out, f"{out_dir}/{sink}")
         return time.time() - t_s
 
-    def _write_buckets():
-        # the wide dedup shuffle runs ONCE, keyed per analysis date; the
-        # global view is an associative rollup of the (tiny) dated frame.
-        # Scored buckets are persisted in memory while being written, and
-        # top-issues + summary + the JSON report doc all derive from the
-        # cached frames — no parquet read-backs, no extra .count() jobs.
-        t_s = time.time()
-        deduped_d = agg.dedup_turns(
-            route.kept_turns(stage_df), extra_keys=("p_date",), audit=True
-        ).persist()
-        # materialize the ONE wide shuffle before fanning out (the three
-        # result branches below then read the cached frame concurrently
-        # instead of racing to populate it) AND count hash-key collision
-        # groups in the same pass — the sentinel for the 64-bit dedup key
-        # (nonzero lands in _metrics)
-        n_collisions = deduped_d.filter(F.col("key_collision")).count()
-        # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one
-        # result row set per analysis_date): results partitioned by
-        # analysis_date + dynamic partition overwrite = MERGE keyed by date.
-        # A second run touches only the dates present in ITS input; other
-        # runs' dates survive, and re-running a date is idempotent (all
-        # transforms deterministic).
-        # fuzzy mode: one component map over DISTINCT templates, applied
-        # to the dated AND global aggregations (scale shape: the graph is
-        # O(cluster count); each aggregation stays one hash-agg shuffle)
-        comp = (
-            agg.fuzzy_component_map(deduped_d.drop("key_collision"))
-            if fuzzy_buckets
-            else None
-        )
-        dated_buckets = (
-            agg.report_buckets_merged(
-                deduped_d.drop("key_collision"), comp, extra_keys=("p_date",)
+    t_stage = time.time()
+    # The four persisted frames are released in the finally on every exit,
+    # a failed attempt included; the finally runs after the pool has
+    # drained (the with block waits), so no write still reading a cached
+    # frame loses it mid-job.
+    deduped_d = scored_d = scored = basis = None
+    try:
+        # threads: the commit, the sinks, two dated writes, two collects
+        with ThreadPoolExecutor(1 + len(sink_builders) + 2 + 2) as ex:
+            commit_fut = ex.submit(_commit_stage)
+            sink_futs = {s: ex.submit(_write_sink, s, b) for s, b in sink_builders.items()}
+            # the wide dedup shuffle runs ONCE, keyed per analysis date; the
+            # global view is an associative rollup of the (tiny) dated frame.
+            # Scored buckets are persisted in memory while being written, and
+            # top-issues + summary + the JSON report doc all derive from the
+            # cached frames — no parquet read-backs, no extra .count() jobs.
+            deduped_d = agg.dedup_turns(
+                route.kept_turns(stage_df), extra_keys=("p_date",), audit=True
+            ).persist()
+            # materialize the ONE wide shuffle before fanning out (the result
+            # branches below then read the cached frame concurrently instead
+            # of racing to populate it) AND count hash-key collision groups
+            # in the same pass — the sentinel for the 64-bit dedup key
+            # (nonzero lands in _metrics)
+            n_collisions = deduped_d.filter(F.col("key_collision")).count()
+            # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one
+            # result row set per analysis_date): results partitioned by
+            # analysis_date + dynamic partition overwrite = MERGE keyed by
+            # date. A second run touches only the dates present in ITS input;
+            # other runs' dates survive, and re-running a date is idempotent
+            # (all transforms deterministic).
+            # fuzzy mode: one component map over DISTINCT templates, applied
+            # to the dated AND global aggregations (scale shape: the graph is
+            # O(cluster count); each aggregation stays one hash-agg shuffle)
+            comp = (
+                agg.fuzzy_component_map(deduped_d.drop("key_collision"))
+                if fuzzy_buckets
+                else None
             )
-            if fuzzy_buckets
-            else agg.report_buckets(deduped_d, extra_keys=("p_date",))
-        )
-        # persisted: BOTH dated writers (results + summary) read this frame;
-        # uncached, each would re-run the dated bucket aggregation over the
-        # cached dedup frame (measured: two identical agg jobs per run)
-        scored_d = agg.score_clusters(dated_buckets).withColumnRenamed(
-            "p_date", "analysis_date"
-        ).persist()
-
-        def _write_dated_results():
-            # one task per date before the partitioned write (same sliver-
-            # file rationale as _write_by_date; measured 736 -> 30 files and
-            # 1.98 s -> 0.46 s for this write at sf0.1). The cluster table
-            # is orders of magnitude smaller than the row stream, so a
-            # date's clusters always fit one write task comfortably.
-            scored_d.repartition(F.col("analysis_date")).withColumn(
-                "run_id", F.lit(run_id)
-            ).write.mode("overwrite").partitionBy("analysis_date").parquet(
-                f"{out_dir}/analysis_results"
+            dated_buckets = (
+                agg.report_buckets_merged(
+                    deduped_d.drop("key_collision"), comp, extra_keys=("p_date",)
+                )
+                if fuzzy_buckets
+                else agg.report_buckets(deduped_d, extra_keys=("p_date",))
             )
-
-        def _write_dated_summary():
-            agg.run_summary(
-                scored_d, group_keys=("analysis_date",)
-            ).withColumn("run_id", F.lit(run_id)).write.mode(
-                "overwrite"
-            ).partitionBy("analysis_date").parquet(f"{out_dir}/analysis_summary")
-
-        with ThreadPoolExecutor(4) as dex:
+            # persisted: BOTH dated writers (results + summary) read this
+            # frame; uncached, each would re-run the dated bucket aggregation
+            # over the cached dedup frame (measured: two identical agg jobs
+            # per run)
+            scored_d = agg.score_clusters(dated_buckets).withColumnRenamed(
+                "p_date", "analysis_date"
+            ).persist()
             dated_futs = [
-                dex.submit(_write_dated_results),
-                dex.submit(_write_dated_summary),
+                # the rebalance puts each date's clusters in one write task
+                # (measured with the repartition it replaced: 736 -> 30 files
+                # and 1.98 s -> 0.46 s at sf0.1)
+                ex.submit(
+                    _write_by_date,
+                    scored_d.withColumn("run_id", F.lit(run_id)),
+                    f"{out_dir}/analysis_results",
+                    "analysis_date",
+                ),
+                # no rebalance: the groupBy already puts each date in one
+                # task, and a rebalance after it adds an exchange and a job
+                ex.submit(
+                    agg.run_summary(scored_d, group_keys=("analysis_date",))
+                    .withColumn("run_id", F.lit(run_id))
+                    .write.mode("overwrite")
+                    .partitionBy("analysis_date")
+                    .parquet,
+                    f"{out_dir}/analysis_summary",
+                ),
             ]
             # the global chain proceeds concurrently on this thread (FAIR
             # scheduler interleaves the small jobs); inputs are the cached
-            # dated frame, so nothing recomputes the wide shuffle. The
-            # rollup re-hashes dedup_key, so it runs its OWN collision
-            # audit (a cross-date collision here is invisible to the
-            # per-date sentinel); the sentinel sum rides the scored-buckets
-            # write via observe() — zero extra jobs, where it used to cost
-            # a separate materialization of the whole rollup.
-            from pyspark.sql import Observation
-
+            # dated frame, so nothing recomputes the wide shuffle. The rollup
+            # re-hashes dedup_key, so it runs its OWN collision audit (a
+            # cross-date collision here is invisible to the per-date
+            # sentinel); the sentinel sum rides the scored-buckets write via
+            # observe() — zero extra jobs, where it used to cost a separate
+            # materialization of the whole rollup.
             rollup_obs = Observation("rollup_audit")
             deduped = agg.dedup_rollup(deduped_d, audit=True)
             deduped = deduped.observe(
@@ -564,6 +526,7 @@ def run_pipeline(
                     F.sum(F.col("key_collision").cast("long")), F.lit(0)
                 ).alias("n_collisions"),
             ).drop("key_collision")
+            # persisted: the report_buckets write and both collects read it
             scored = agg.score_clusters(agg.report_buckets(deduped)).persist()
             # rebalance: AQE sizes the write partitions by advisory bytes
             # (guide §6) — one file for a small cluster table instead of one
@@ -583,56 +546,40 @@ def run_pipeline(
                 basis.withColumn("run_id", F.lit(run_id)).write.mode(
                     "overwrite"
                 ).parquet(f"{out_dir}/report_buckets_fuzzy")
-            # both collects read the persisted tiny scored frame; overlap
-            # them on the pool (two small jobs, each <= TOP_ISSUES_N rows /
-            # 1 row by construction) instead of serializing two job
-            # round-trips on this thread
+            # both collects read the persisted tiny scored frame; overlap them
+            # on the pool (two small jobs, each <= TOP_ISSUES_N rows / 1 row
+            # by construction) instead of serializing two job round-trips
             top = agg.top_issues(basis)
             summary_df = agg.run_summary(basis)
-            top_fut = dex.submit(top.collect)
-            summary_fut = dex.submit(summary_df.collect)
+            top_fut = ex.submit(top.collect)
+            summary_fut = ex.submit(summary_df.collect)
             top_rows = top_fut.result()
             summary_row = summary_fut.result()[0]
             # tiny tables from already-collected rows: driver-written, no job
             run_field = T.StructField("run_id", T.StringType())
-            _write_small_table(
-                out_dir,
-                "top_issues",
-                T.StructType(top.schema.fields + [run_field]),
-                [{**r.asDict(), "run_id": run_id} for r in top_rows],
-            )
-            _write_small_table(
-                out_dir,
-                "report_summary",
-                T.StructType(summary_df.schema.fields + [run_field]),
-                [{**summary_row.asDict(), "run_id": run_id}],
-            )
+            for table, src, rows in (
+                ("top_issues", top, top_rows),
+                ("report_summary", summary_df, [summary_row]),
+            ):
+                _publish_rows(
+                    out_dir,
+                    table,
+                    T.StructType(src.schema.fields + [run_field]),
+                    [(*r, run_id) for r in rows],
+                    SMALL_TABLE_FILE,
+                )
             for f in dated_futs:
                 f.result()
-        if fuzzy_buckets:
-            basis.unpersist()
-        scored.unpersist()
-        scored_d.unpersist()
-        deduped_d.unpersist()
-        return (
-            top_rows, summary_row, n_collisions, n_rollup_collisions,
-            time.time() - t_s,
-        )
-
-    t_stage = time.time()
-    with ThreadPoolExecutor(len(sink_builders) + 2) as ex:
-        commit_fut = ex.submit(_commit_stage)
-        sink_futs = {s: ex.submit(_write_sink, s, b) for s, b in sink_builders.items()}
-        buckets_fut = ex.submit(_write_buckets)
-        flag_counts, todo, metrics_rows = commit_fut.result()
-        for sink, fut in sink_futs.items():
-            el = fut.result()
-            n = int(flag_counts[sink])
-            counts[sink] = n
-            metrics_rows.append((run_id, sink, "*", None, n, None, el))
-        top_rows, summary_row, n_collisions, n_rollup_collisions, _ = (
-            buckets_fut.result()
-        )
+            flag_counts, todo, metrics_rows = commit_fut.result()
+            for sink, fut in sink_futs.items():
+                el = fut.result()
+                n = int(flag_counts[sink])
+                counts[sink] = n
+                metrics_rows.append((run_id, sink, "*", None, n, None, el))
+    finally:
+        for df in (deduped_d, scored_d, scored, basis):
+            if df is not None:
+                df.unpersist()
     counts["report_buckets"] = int(summary_row["clusters_found"])
     counts["top_issues"] = len(top_rows)
     counts["report_summary"] = 1
@@ -653,10 +600,7 @@ def run_pipeline(
             int(n_rollup_collisions), None, None,
         )
     )
-    _append(
-        spark, out_dir, "_metrics", metrics_rows, METRICS_SCHEMA,
-        file_name=_metrics_file(run_id),
-    )
+    _publish_rows(out_dir, "_metrics", METRICS_SCHEMA, metrics_rows, _metrics_file(run_id))
 
     # S6 analog: single JSON report document (reporting/generator.py:101-131)
     # — the human-facing daily report; built from the already-collected rows.
@@ -665,8 +609,7 @@ def run_pipeline(
         "summary": summary_row.asDict(),
         "top_issues": [r.asDict() for r in sorted(top_rows, key=lambda r: r["rank"])],
     }
-    with open(f"{out_dir}/daily_analysis_{run_id}.json", "w") as fh:
-        json.dump(report_doc, fh, indent=2, default=str)
+    _publish_json(f"{out_dir}/daily_analysis_{run_id}.json", report_doc)
 
     # S8 webhook notification (generator.py:133-166): POST the summary
     # payload, spool on failure (at-least-once; no silent drop)

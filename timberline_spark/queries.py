@@ -463,20 +463,12 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window level counts (batch expression of the streaming agg;
     the true readStream path is exercised in tests/test_streaming.py)."""
     from .route import classify_turns
+    from .streaming import level_counts
 
     df = classify_turns(enrich_turns(spark, parse_turns(load_transcripts(spark, sf_dir))))
-    return (
-        df.filter(F.col("is_valid"))
-        .groupBy(
-            F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"),
-            F.col("level"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-            "level",
-            "n",
-        )
+    # the scanned ts is timestamp_ntz; unix_millis takes a timestamp
+    return level_counts(df, ts=F.col("ts").cast("timestamp")).select(
+        F.unix_millis(F.col("w.start")).alias("window_start_ms"), "level", "n"
     )
 
 

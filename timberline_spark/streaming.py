@@ -32,6 +32,33 @@ TRANSCRIPT_SCHEMA = (
 )
 
 
+def level_counts(classified: DataFrame, window: str = "1 hour", ts="ts") -> DataFrame:
+    """Valid rows counted per (tumbling ``window`` on the ``ts`` column or
+    expression, level): the one definition behind the streaming query, its
+    batch twin and the registered ``stream_window_counts``. Columns ``w``
+    (the window's start/end struct), ``level``, ``n``; callers project the
+    window.
+
+    A streaming caller declares its watermark on ``classified``: the
+    optimizer pushes the validity filter below the watermark node (the
+    filter does not read the event-time column), so invalid rows — the
+    far-future ones included — never advance the watermark."""
+    return (
+        classified.filter(F.col("is_valid"))
+        .groupBy(F.window(ts, window).alias("w"), F.col("level"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _window_bounds(counts: DataFrame) -> DataFrame:
+    return counts.select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        "level",
+        "n",
+    )
+
+
 def stream_level_counts(
     spark: SparkSession,
     src_dir: str,
@@ -52,18 +79,7 @@ def stream_level_counts(
         .parquet(src_dir)
     )
     classified = classify_turns(enrich_turns(spark, parse_turns(stream)))
-    return (
-        classified.filter(F.col("is_valid"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("level"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "level",
-            "n",
-        )
-    )
+    return _window_bounds(level_counts(classified.withWatermark("ts", watermark), window))
 
 
 def run_available_now(
@@ -290,14 +306,4 @@ def batch_level_counts(spark: SparkSession, src_dir: str, window: str = "1 hour"
     """The identical aggregation in batch mode (streaming/batch parity check)."""
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
     classified = classify_turns(enrich_turns(spark, parse_turns(df)))
-    return (
-        classified.filter(F.col("is_valid"))
-        .groupBy(F.window("ts", window).alias("w"), F.col("level"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "level",
-            "n",
-        )
-    )
+    return _window_bounds(level_counts(classified, window))
