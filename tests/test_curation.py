@@ -5,6 +5,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from timberline_spark.curation import curate_docs, run_curation
@@ -146,3 +147,26 @@ def test_pack_contents_independent_of_shuffle_layout(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert a == b
+
+
+def test_curation_metrics_json_survives_a_crash_mid_write(spark, tmp_path, monkeypatch):
+    """A rerun that dies while writing curation_<run_id>.json leaves the
+    previous document intact and no new visible file behind."""
+    import json
+    import os
+
+    out = str(tmp_path)
+    first = run_curation(spark, SF_TINY, out, run_id="c1")
+
+    def torn_dump(doc, fh, **kw):
+        fh.write('{"run_id": "c')
+        raise OSError("disk full")
+
+    before = sorted(p for p in os.listdir(out) if not p.startswith("."))
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        run_curation(spark, SF_TINY, out, run_id="c1")
+    monkeypatch.undo()
+    with open(f"{out}/curation_c1.json") as f:
+        assert json.load(f) == first
+    assert sorted(p for p in os.listdir(out) if not p.startswith(".")) == before

@@ -20,43 +20,46 @@ pytestmark = pytest.mark.usefixtures("spark")
 
 # ---- text analysis (DuckDB oracle) ------------------------------------------
 
+# Each signal group of doc_text_stats, the one Spark definition, against
+# the standalone oracle that oracle_text_stats joins.
 TEXT_CASES = [
-    ("token_counts", tf.doc_token_counts, tf.oracle_token_counts, ()),
-    ("quality", tf.doc_quality, tf.oracle_quality,
-     ("stopword_ratio", "punct_ratio", "mean_token_len")),
-    ("lang_id", tf.doc_lang_id, tf.oracle_lang_id, ()),
-    ("fingerprint", tf.doc_fingerprint, tf.oracle_fingerprint, ()),
+    ("token_counts", ("n_ws_tokens", "n_tokens", "n_bpe_pieces", "n_chars_actual"),
+     tf.oracle_token_counts, ()),
+    ("quality", ("n_tokens", "n_stopwords", "n_punct", "stopword_ratio",
+                 "punct_ratio", "mean_token_len"),
+     tf.oracle_quality, ("stopword_ratio", "punct_ratio", "mean_token_len")),
+    ("lang_id", ("lang_label", "lang_pred"), tf.oracle_lang_id, ()),
+    ("fingerprint", ("fingerprint",), tf.oracle_fingerprint, ()),
 ]
 
 
-@pytest.mark.parametrize("name,fn,oracle,floats", TEXT_CASES, ids=[c[0] for c in TEXT_CASES])
-def test_text_ops_match_oracle(spark, duck, name, fn, oracle, floats):
-    assert_frames_equal(fn(spark, SF_TINY), duck.sql(oracle()), float_cols=floats)
+@pytest.mark.parametrize("name,cols,oracle,floats", TEXT_CASES, ids=[c[0] for c in TEXT_CASES])
+def test_text_ops_match_oracle(spark, duck, name, cols, oracle, floats):
+    assert_frames_equal(
+        tf.doc_text_stats(spark, SF_TINY).select("doc_id", *cols),
+        duck.sql(oracle()),
+        float_cols=floats,
+    )
 
 
-def test_lang_id_heuristic_behavior(spark):
+def test_lang_id_heuristic_behavior(spark, tmp_path):
     """English prose -> 'en'; stopword-free text -> 'unknown'. (The testdata
     lang labels are random noise — same text distribution per label — so we
-    assert the heuristic itself, not label agreement.)"""
-    rows = [
-        (1, "the cat sat on the mat and it was happy with this"),
-        (2, "wortschatz zeichen beispiel nummer farbe himmel wasser"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.createOrReplaceTempView("_lang_probe")
-    from pyspark.sql import functions as F
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(tf.TOKEN_RE), 0)
-    n_tok = F.size(toks).cast("long")
-    n_stop = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(tf.STOPWORD_RE), 0)
-    ).cast("long")
-    pred = F.when(
-        (n_tok > 0)
-        & (n_stop.cast("double") / n_tok.cast("double") >= tf.LANG_STOPWORD_MIN_RATIO),
-        "en",
-    ).otherwise("unknown")
-    got = {r.doc_id: r.p for r in df.select("doc_id", pred.alias("p")).collect()}
+    assert the heuristic itself, not label agreement.) The probes run
+    through doc_text_stats, the shipped operator."""
+    probes = {
+        1: "the cat sat on the mat and it was happy with this",
+        2: "wortschatz zeichen beispiel nummer farbe himmel wasser",
+        3: "",
+    }
+    schema = spark.read.parquet(f"{SF_TINY}/documents.parquet").schema
+    spark.createDataFrame(
+        [(i, t, "xx", "src0", len(t)) for i, t in probes.items()], schema
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    got = {
+        r.doc_id: r.lang_pred
+        for r in tf.doc_text_stats(spark, str(tmp_path)).collect()
+    }
     assert got == {1: "en", 2: "unknown", 3: "unknown"}
 
 
@@ -78,7 +81,14 @@ def test_jaccard_pairs_match_oracle(spark, duck):
 
 
 def test_minhash_matches_python_oracle(spark):
-    rows = dd.doc_minhash_signatures(spark, SF_TINY).filter("doc_id < 5").collect()
+    """The signature column doc_minhash_lsh_pairs bands, against a
+    pure-Python min over the same permutations."""
+    rows = (
+        dd._hashed_shingle_docs(spark, SF_TINY)
+        .select("doc_id", dd._minhash_col(F.col("sh")).alias("minhash"))
+        .filter("doc_id < 5")
+        .collect()
+    )
     docs = {
         r.doc_id: r.text
         for r in spark.read.parquet(f"{SF_TINY}/documents.parquet")

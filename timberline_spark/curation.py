@@ -35,21 +35,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extras.textfns import (
-    CURATE_MAX_PUNCT_RATIO,
-    CURATE_MAX_TOKENS,
-    CURATE_MIN_TOKENS,
-    PACK_SHARD_STRIDE,
     PACK_TOKEN_BUDGET,
     QUOTA_DEFAULT_PCT,
     QUOTA_OVERRIDES,
+    _curate_gate,
+    _doc_hash,
     _is_en,
     _n_stopwords,
     _norm_text,
+    _pack_slot,
+    _per_source,
     _punct_ratio,
     _tokens,
     max_equal_run,
     sorted_bigrams,
 )
+from .pipeline import _publish_json
 
 # repetition gates (Gopher-style; loose defaults that only drop degenerate
 # boilerplate, not ordinary prose)
@@ -103,14 +104,11 @@ def curate_docs(
     ``xxhash64(norm_text || '#audit')``, and the runner surfaces the sum.
     The exact-text keeper reference is the DuckDB oracle of ``doc_curated``.
 
-    The quality gate takes its stopword count, its rounded punctuation
-    ratio and the normalized key from the same textfns helpers as
-    ``doc_curated``, so a document passes the runner's language, length
-    and punctuation gates exactly when it passes ``doc_curated``'s.
+    The quality gate is ``doc_curated``'s ``_curate_gate`` with the two
+    repetition screens ANDed on; the quota rate, doc-id hash and pack slot
+    are the standalone operators' helpers too, so no signal is a copy.
     """
     from pyspark.sql import Window
-
-    from .extras import xhash as xh
 
     if shards is None:
         shards = spark.sparkContext.defaultParallelism
@@ -139,10 +137,11 @@ def curate_docs(
         # multi-arg xxhash64 — that chains seeds; see aggregate.dedup_turns)
         F.xxhash64(F.concat(norm, F.lit("#audit"))).alias("norm_h2"),
         (
-            _is_en(n_tok, _n_stopwords(F.col("text")))
-            & (n_tok >= CURATE_MIN_TOKENS)
-            & (n_tok <= CURATE_MAX_TOKENS)
-            & (_punct_ratio(F.col("text")) <= CURATE_MAX_PUNCT_RATIO)
+            _curate_gate(
+                _is_en(n_tok, _n_stopwords(F.col("text"))),
+                n_tok,
+                _punct_ratio(F.col("text")),
+            )
             & (F.coalesce(dup_frac <= CURATE_MAX_DUP_TOKEN_FRAC, F.lit(False)))
             # Gopher-style modal-bigram screen: drops degenerate boilerplate
             # where one 2-gram dominates; <2-token docs have no bigrams and
@@ -168,15 +167,11 @@ def curate_docs(
         ),
     )
     ov = QUOTA_OVERRIDES if overrides is None else overrides
-    rate = F.lit(int(default_pct))
-    for src, pct in sorted(ov.items()):
-        rate = F.when(F.col("source") == src, F.lit(int(pct))).otherwise(rate)
+    rate = _per_source(ov, default_pct)
     # the quota bucket (% 100) and the pack shard (% shards) share one mixed
     # hash of doc_id: stage it as a single named column so it is evaluated
     # once per row by construction (not left to codegen CSE)
-    tagged = tagged.withColumn(
-        "_mixed_hash", xh.mix32(xh.char_hash(F.col("doc_id").cast("string")))
-    )
+    tagged = tagged.withColumn("_mixed_hash", _doc_hash())
     tagged = tagged.withColumn("pass_quota", F.col("_mixed_hash") % 100 < rate)
     survives = F.col("pass_quality") & F.col("is_keeper") & F.col("pass_quota")
     tagged = tagged.withColumn("survives", survives)
@@ -196,6 +191,7 @@ def curate_docs(
     cum_before = F.coalesce(
         F.sum(F.when(F.col("survives"), F.col("n_tokens"))).over(wp), F.lit(0)
     ).cast("long")
+    pack_id, offset = _pack_slot(F.col("shard"), cum_before, budget)
     return tagged.select(
         "doc_id",
         "source",
@@ -206,11 +202,8 @@ def curate_docs(
         "pass_quota",
         "survives",
         F.when(F.col("survives"), F.col("shard")).alias("shard"),
-        F.when(
-            F.col("survives"),
-            F.col("shard") * PACK_SHARD_STRIDE + F.floor(cum_before / budget),
-        ).alias("pack_id"),
-        F.when(F.col("survives"), cum_before % budget).alias("offset_in_pack"),
+        F.when(F.col("survives"), pack_id).alias("pack_id"),
+        F.when(F.col("survives"), offset).alias("offset_in_pack"),
     )
 
 
@@ -283,8 +276,7 @@ def run_curation(
         "n_key_collisions": int(obs["n_key_collisions"] or 0),
         "elapsed_sec": round(time.time() - t0, 3),
     }
-    with open(f"{out_dir}/curation_{run_id}.json", "w") as f:
-        json.dump(metrics, f)
+    _publish_json(f"{out_dir}/curation_{run_id}.json", metrics)
     return metrics
 
 

@@ -258,11 +258,6 @@ def _hashed_shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _perm_lambda(a: int, b: int):
-    # factory keeps the HOF lambda single-arg (pyspark inspects arity)
-    return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-
 def _minhash_col(sh_col: Column) -> Column:
     """Array of MINHASH_PERMS min-hashes over a hashed-shingle array.
 
@@ -284,11 +279,6 @@ def _minhash_col(sh_col: Column) -> Column:
             F.transform(sh_col, lambda x: (x * p["a"] + p["b"]) % F.lit(MINHASH_P))
         ),
     )
-
-
-def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _hashed_shingle_docs(spark, sf_dir)
-    return docs.select("doc_id", _minhash_col(F.col("sh")).alias("minhash"))
 
 
 def doc_minhash_lsh_pairs(

@@ -5,16 +5,22 @@ higher-order functions); ratios are computed from integer counts so the
 DuckDB oracle reproduces them bit-identically.
 
 Operators:
-- token counting (whitespace + BPE-ish word regex)
-- quality scoring (length / punctuation / stopword ratios)
-- language-ID (stopword-hit n-gram heuristic)
-- document fingerprinting (rolling polynomial hash over token shape)
+- ``doc_text_stats``: token counts, quality ratios, language-ID and the
+  token-shape fingerprint in one scan (one standalone oracle per group).
+- ``doc_curated``, ``doc_quota_sample``, ``doc_quota_topn``,
+  ``doc_token_mix``, ``doc_pack_sequences``, ``doc_vocab``,
+  ``doc_tfidf_topterms``, ``doc_contamination``, ``doc_repetition``.
+
+``curation.curate_docs`` composes the helpers below (doc-id hash, per-source
+CASE, pack slot, curation gate) instead of copying them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import xhash as xh
 
 TOKEN_RE = "[a-z0-9]+"
 BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"  # word / number / punct pieces
@@ -35,9 +41,15 @@ def _tokens(col):
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
 
 
-# The per-document signals every gate below shares (doc_quality,
-# doc_lang_id, doc_text_stats, doc_curated and curation.curate_docs): one
-# definition each, so a gate cannot drift from the operator it composes.
+def _doc_hash() -> Column:
+    """The doc-id hash behind every per-document sample and shard decision
+    (quota, top-N, token mix, packing, and the curation runner's)."""
+    return xh.mix32(xh.char_hash(F.col("doc_id").cast("string")))
+
+
+# The per-document signals doc_text_stats reports and every gate below
+# (doc_curated and curation.curate_docs) takes: one definition each, so a
+# gate cannot drift from the operator it composes.
 def _n_stopwords(col) -> Column:
     return F.size(F.regexp_extract_all(F.lower(col), F.lit(STOPWORD_RE), 0)).cast("long")
 
@@ -62,80 +74,12 @@ def _norm_text(col) -> Column:
     return F.regexp_replace(F.trim(F.lower(col)), "[ ]+", " ")
 
 
-def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
-        F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0))
-        .cast("long")
-        .alias("n_bpe_pieces"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-    )
-
-
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality signals: token stats + punctuation + stopword ratios."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    n_tok = F.size(toks).cast("long")
-    n_stop = _n_stopwords(F.col("text"))
-    n_punct = _n_punct(F.col("text"))
-    total_tok_chars = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return df.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        n_punct.alias("n_punct"),
-        F.round(n_stop / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4).alias(
-            "stopword_ratio"
-        ),
-        _punct_ratio(F.col("text")).alias("punct_ratio"),
-        F.round(
-            total_tok_chars / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4
-        ).alias("mean_token_len"),
-    )
-
-
-def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-hit heuristic language ID (n-gram-free, deterministic)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    n_tok = F.size(toks).cast("long")
-    n_stop = _n_stopwords(F.col("text"))
-    pred = F.when(_is_en(n_tok, n_stop), "en").otherwise("unknown")
-    return df.select(
-        "doc_id", F.col("lang").alias("lang_label"), pred.alias("lang_pred")
-    )
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling polynomial hash over token shape (len, first-char codepoint).
-
-    Cross-engine deterministic: uses only length/ascii/arithmetic, so the
-    DuckDB oracle computes the identical value. This is the shape-level
-    document fingerprint used for cheap near-dup bucketing.
-    """
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    fp = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * FP_MULT + F.length(x) * 17 + F.ascii(x)) % FP_MOD,
-    )
-    return df.select("doc_id", fp.alias("fingerprint"))
-
-
 def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Folded registry view: token counts + quality + lang-ID + fingerprint
-    in ONE scan-only projection (the driver checks at most 50 registered
-    queries per round; these four per-doc operators share a row while each
-    column set stays individually hash-checked). At 100 TB this is also
-    simply the better plan — one scan computes all the signals instead of
-    four passes over the corpus."""
+    """Token counts + quality + lang-ID + fingerprint in ONE scan-only
+    projection: the only Spark definition of these per-document signals.
+    Its oracle joins one standalone oracle per column group, and tests
+    check each group against its own. At 100 TB this is also simply the
+    better plan — one scan computes all the signals, not four passes."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # toks staged as a named column: the mean-token-len and fingerprint
     # HOF folds below reference it repeatedly (HOF lambdas inline, not CSE)
@@ -196,6 +140,19 @@ CURATE_MAX_TOKENS = 5000
 CURATE_MAX_PUNCT_RATIO = 0.2
 
 
+def _curate_gate(is_en: Column, n_tokens: Column, punct_ratio: Column) -> Column:
+    """The language / length / punctuation gate, one left-deep conjunction:
+    ``doc_curated`` applies it (its keeper test ANDed in front of
+    ``is_en``) and the curation runner ANDs its repetition screens onto
+    it."""
+    return (
+        is_en
+        & (n_tokens >= CURATE_MIN_TOKENS)
+        & (n_tokens <= CURATE_MAX_TOKENS)
+        & (punct_ratio <= CURATE_MAX_PUNCT_RATIO)
+    )
+
+
 def doc_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data curation filter: the composition a real
     corpus pipeline runs before tokenization — language (stopword
@@ -224,11 +181,13 @@ def doc_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("keeper_id", F.min("doc_id").over(wk))
         .filter(
-            (F.col("doc_id") == F.col("keeper_id"))
-            & F.col("is_en")
-            & (F.col("n_tokens") >= CURATE_MIN_TOKENS)
-            & (F.col("n_tokens") <= CURATE_MAX_TOKENS)
-            & (F.col("punct_ratio") <= CURATE_MAX_PUNCT_RATIO)
+            # the keeper test leads the language operand: the filter stays
+            # one left-deep conjunction, keeper first
+            _curate_gate(
+                (F.col("doc_id") == F.col("keeper_id")) & F.col("is_en"),
+                F.col("n_tokens"),
+                F.col("punct_ratio"),
+            )
         )
         .select("doc_id", "n_tokens", "punct_ratio")
     )
@@ -271,6 +230,23 @@ QUOTA_DEFAULT_PCT = 30
 QUOTA_OVERRIDES = {"src0": 100, "src1": 5}
 
 
+def _per_source(values: dict[str, int], default: int) -> Column:
+    """``values[source]``, else ``default``, as a literal CASE over the tiny
+    per-source dict (quota rates, token-mix shares): never a join."""
+    out = F.lit(int(default))
+    for src, v in sorted(values.items()):
+        out = F.when(F.col("source") == src, F.lit(int(v))).otherwise(out)
+    return out
+
+
+def _sql_per_source(values: dict[str, int], default: int) -> str:
+    """DuckDB mirror of :func:`_per_source`."""
+    whens = "".join(
+        f"WHEN source = '{src}' THEN {int(v)} " for src, v in sorted(values.items())
+    )
+    return f"CASE {whens}ELSE {int(default)} END"
+
+
 def doc_quota_sample(
     spark: SparkSession,
     sf_dir: str,
@@ -279,25 +255,21 @@ def doc_quota_sample(
 ) -> DataFrame:
     """Deterministic per-stratum quota sampling over ``documents``.
 
-    A document is kept iff ``mix32(char_hash(doc_id)) % 100 < rate(source)``
-    where rate is the stratum's quota percent (``overrides`` else
-    ``default_pct``). The decision hashes the DOCUMENT ID, not the row
-    position, so it is stable under repartitioning, incremental loads, and
-    re-runs — two pipeline invocations at the same quotas keep exactly the
-    same documents. Plan shape at 100 TB: scan + filter only (no shuffle,
+    A document is kept iff ``_doc_hash() % 100 < rate(source)`` where rate
+    is the stratum's quota percent (``overrides`` else ``default_pct``).
+    The decision hashes the DOCUMENT ID, not the row position, so it is
+    stable under repartitioning, incremental loads, and re-runs — two
+    pipeline invocations at the same quotas keep exactly the same
+    documents. Plan shape at 100 TB: scan + filter only (no shuffle,
     no window, no state); the rate lookup is a literal CASE over the tiny
     quota dict, never a join. For EXACT per-stratum counts (top-N by hash
     rank instead of a rate) use a row_number window partitioned by source
     over the same hash — documented, not registered, because the rate form
     is the one that stays shuffle-free at corpus scale.
     """
-    from . import xhash as xh
-
     ov = QUOTA_OVERRIDES if overrides is None else overrides
-    rate = F.lit(int(default_pct))
-    for src, pct in sorted(ov.items()):
-        rate = F.when(F.col("source") == src, F.lit(int(pct))).otherwise(rate)
-    bucket = xh.mix32(xh.char_hash(F.col("doc_id").cast("string"))) % 100
+    rate = _per_source(ov, default_pct)
+    bucket = _doc_hash() % 100
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         df.select(
@@ -314,13 +286,8 @@ def oracle_quota_sample(
     default_pct: int = QUOTA_DEFAULT_PCT,
     overrides: dict[str, int] | None = None,
 ) -> str:
-    from . import xhash as xh
-
     ov = QUOTA_OVERRIDES if overrides is None else overrides
-    case = "CASE "
-    for src, pct in sorted(ov.items()):
-        case += f"WHEN source = '{src}' THEN {int(pct)} "
-    case += f"ELSE {int(default_pct)} END"
+    case = _sql_per_source(ov, default_pct)
     h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
     return f"""
 SELECT doc_id, source, sample_bucket, quota_pct FROM (
@@ -342,10 +309,10 @@ def doc_quota_topn(
     """EXACT per-stratum sample counts: the window twin of
     :func:`doc_quota_sample`.
 
-    Ranks documents within each source by the same deterministic doc-id
-    hash (ties broken by doc_id) and keeps the first ``n`` — so the sample
-    is still reproducible and mergeable, but the per-stratum count is
-    exactly ``min(n, |stratum|)`` instead of a binomial around a rate.
+    Ranks documents within each source by ``_doc_hash`` (ties broken by
+    doc_id) and keeps the first ``n`` — so the sample is still
+    reproducible and mergeable, but the per-stratum count is exactly
+    ``min(n, |stratum|)`` instead of a binomial around a rate.
 
     Scale shape: ONE shuffle keyed by source plus a per-stratum sort — at
     100 TB a single giant stratum makes the sort the bottleneck, so prefer
@@ -356,9 +323,7 @@ def doc_quota_topn(
     """
     from pyspark.sql import Window
 
-    from . import xhash as xh
-
-    h = xh.mix32(xh.char_hash(F.col("doc_id").cast("string")))
+    h = _doc_hash()
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
@@ -370,8 +335,6 @@ def doc_quota_topn(
 
 
 def oracle_quota_topn(n: int = QUOTA_TOPN_PER_SOURCE) -> str:
-    from . import xhash as xh
-
     h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
     return f"""
 SELECT doc_id, source, hash_rank, sample_rank FROM (
@@ -399,6 +362,15 @@ PACK_SHARD_STRIDE = 1 << 40
 PACK_SHARDS = 8
 
 
+def _pack_slot(shard: Column, cum_before: Column, budget: int) -> tuple[Column, Column]:
+    """``(pack_id, offset_in_pack)`` of a document whose first token lands
+    ``cum_before`` tokens into its shard's concatenated stream."""
+    return (
+        shard * PACK_SHARD_STRIDE + F.floor(cum_before / budget),
+        cum_before % budget,
+    )
+
+
 def doc_pack_sequences(
     spark: SparkSession,
     sf_dir: str,
@@ -407,10 +379,10 @@ def doc_pack_sequences(
 ) -> DataFrame:
     """Greedy contiguous sequence packing (GPT-style concat-and-chunk).
 
-    Documents are deterministically sharded by doc-id hash, ordered by
+    Documents are sharded by ``_doc_hash() % shards``, ordered by
     doc_id within the shard, and concatenated; a document belongs to the
-    pack in which its first token lands (``floor(cum_tokens_before /
-    budget)``). Packs can therefore overflow by up to one document's
+    pack in which its first token lands (``_pack_slot``:
+    ``floor(cum_tokens_before / budget)``). Packs can therefore overflow by up to one document's
     tokens — the standard streaming-packer contract (strict bin packing is
     neither order-preserving nor one-pass).
 
@@ -422,14 +394,10 @@ def doc_pack_sequences(
     """
     from pyspark.sql import Window
 
-    from . import xhash as xh
-
     if shards is None:
         shards = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    shard = (xh.mix32(xh.char_hash(F.col("doc_id").cast("string"))) % shards).cast(
-        "long"
-    )
+    shard = (_doc_hash() % shards).cast("long")
     n_tok = F.size(_tokens(F.col("text"))).cast("long")
     base = df.select("doc_id", shard.alias("shard"), n_tok.alias("n_tokens"))
     w = (
@@ -444,21 +412,19 @@ def doc_pack_sequences(
         "n_tokens",
         cum_before.alias("cum_before"),
     )
-    local = F.floor(F.col("cum_before") / budget).cast("long")
+    pack_id, offset = _pack_slot(F.col("shard"), F.col("cum_before"), budget)
     return out.select(
         "doc_id",
         "shard",
         "n_tokens",
-        (F.col("shard") * PACK_SHARD_STRIDE + local).alias("pack_id"),
-        (F.col("cum_before") % budget).alias("offset_in_pack"),
+        pack_id.alias("pack_id"),
+        offset.alias("offset_in_pack"),
     )
 
 
 def oracle_pack_sequences(
     budget: int = PACK_TOKEN_BUDGET, shards: int = PACK_SHARDS
 ) -> str:
-    from . import xhash as xh
-
     h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
     return f"""
 WITH base AS (
@@ -504,7 +470,7 @@ def doc_token_mix(
     token mass, scaled by 1e6, at which source s would be fully consumed).
     Source s then keeps ``rate_ppm_s = min(1e6, (share_ppm_s * M) DIV
     tokens_s)`` parts-per-million of its documents, decided by
-    ``mix32(char_hash(doc_id)) % 1e6 < rate_ppm`` — the binding source
+    ``_doc_hash() % 1e6 < rate_ppm`` — the binding source
     keeps ~everything, over-represented sources are down-sampled to the
     target ratio. All arithmetic is integer (ppm + floor division), so
     Spark and DuckDB compute bit-identical rates; untargeted sources get
@@ -515,11 +481,9 @@ def doc_token_mix(
     Scale shape: ONE combinable hash-agg to per-source token totals (rows
     == #sources), a driver-free broadcast join of the tiny rate table back
     onto the scan, then filter. No corpus-wide shuffle; the decision is
-    reproducible and mergeable across runs (same hash contract as
+    reproducible and mergeable across runs (the same ``_doc_hash`` as
     doc_quota_sample).
     """
-    from . import xhash as xh
-
     tg = TOKEN_MIX_TARGETS if targets is None else targets
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = df.select(
@@ -527,11 +491,7 @@ def doc_token_mix(
         "source",
         F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    share_ppm = F.lit(0)
-    for src, s in sorted(tg.items()):
-        share_ppm = F.when(
-            F.col("source") == src, F.lit(int(round(s * _PPM)))
-        ).otherwise(share_ppm)
+    share_ppm = _per_source({src: round(s * _PPM) for src, s in tg.items()}, 0)
     totals = (
         base.groupBy("source")
         .agg(F.sum("n_tokens").alias("src_tokens"))
@@ -562,9 +522,7 @@ def doc_token_mix(
             ).alias("rate_ppm"),
         )
     )
-    bucket = (xh.mix32(xh.char_hash(F.col("doc_id").cast("string"))) % _PPM).cast(
-        "long"
-    )
+    bucket = (_doc_hash() % _PPM).cast("long")
     return (
         base.join(F.broadcast(rates), "source")
         .withColumn("mix_bucket", bucket)
@@ -574,13 +532,8 @@ def doc_token_mix(
 
 
 def oracle_token_mix(targets: dict[str, float] | None = None) -> str:
-    from . import xhash as xh
-
     tg = TOKEN_MIX_TARGETS if targets is None else targets
-    case = "CASE "
-    for src, s in sorted(tg.items()):
-        case += f"WHEN source = '{src}' THEN {int(round(s * _PPM))} "
-    case += "ELSE 0 END"
+    case = _sql_per_source({src: round(s * _PPM) for src, s in tg.items()}, 0)
     h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
     return f"""
 WITH base AS (

@@ -602,8 +602,10 @@ def q_report_api(
 # len(PIPELINE_QUERIES) + len(EXTRA_QUERIES) <= 50 — fold near-duplicate
 # diagnostics (q_route_stats / q_enrich_dims / q_report_api, emb_knn_ann /
 # emb_cluster / multimodal / doc_text_stats) rather than dropping coverage.
-# The pipeline-side folds are the only Spark implementations of their
-# branches; the extras folds wrap standalone library operators.
+# Every fold is the one Spark definition of its rows: the pipeline-side
+# folds are the only implementations of their branches, emb_knn_ann /
+# emb_cluster / multimodal_all union calls to their standalone operators,
+# and doc_text_stats is the only text-stats operator.
 PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "transcripts": q_transcripts,
     "parse": q_parse,
@@ -649,10 +651,11 @@ def _extra_registries():
     # registry-order note: the changed-most-recently / highest-risk family
     # (ANN fold, clustering fold, multimodal fold) leads, so even if a
     # future round exceeds the driver's 50-query window the freshest
-    # operators stay inside it. Folded views (emb_knn_ann, emb_cluster,
-    # multimodal, doc_text_stats) carry the standalone operators' rows with
-    # a discriminator column; the standalone functions remain the library
-    # API and are pinned by repo tests.
+    # operators stay inside it. emb_knn_ann, emb_cluster and multimodal
+    # union their standalone operators' rows under a discriminator column;
+    # those standalone functions remain the library API. doc_text_stats has
+    # no standalone twins: tests check each column group against its own
+    # oracle.
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "emb_knn_ann": sim.emb_knn_ann,
         "emb_cluster": sim.emb_cluster,

@@ -258,8 +258,3 @@ def load_transcripts(spark: SparkSession, sf_dir: str, replicate: int = 1) -> Da
             .drop("rep")
         )
     return df
-
-
-def duckdb_transcripts_cte(events_rel: str = "events") -> str:
-    """The same derivation as a DuckDB SQL snippet (for the oracle)."""
-    return transcripts_sql(DUCKDB, events_rel)
