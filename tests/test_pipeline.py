@@ -261,12 +261,66 @@ def test_date_partitioned_tables_one_file_per_date(spark, tmp_path):
 
 
 def test_sink_counts_match_flags(spark, outdirs, full_run):
+    """Each sink holds exactly the stage rows its flags select, and the run
+    reports the rows each sink table holds, both in ``RunResult.counts``
+    and in the sink's ``_metrics`` row at partition "*"."""
     full_dir, _ = outdirs
     stage = spark.read.parquet(f"{full_dir}/stage_classified")
-    n_err = spark.read.parquet(f"{full_dir}/sink_errors").count()
-    n_anom = spark.read.parquet(f"{full_dir}/sink_anomalies").count()
-    assert n_err == stage.filter("is_valid AND level IN ('ERROR','CRITICAL')").count()
-    assert n_anom == stage.filter("NOT is_valid").count()
+    expected = {
+        "sink_errors": stage.filter("is_valid AND level IN ('ERROR','CRITICAL')").count(),
+        "sink_tool_calls": stage.filter("is_valid AND tool != ''").count(),
+        "sink_anomalies": stage.filter("NOT is_valid").count(),
+    }
+    reported = {
+        r.stage: r.rows_out
+        for r in spark.read.parquet(f"{full_dir}/_metrics")
+        .filter(F.col("partition") == "*")
+        .collect()
+    }
+    for sink, n in expected.items():
+        assert n > 0, sink
+        assert spark.read.parquet(f"{full_dir}/{sink}").count() == n, sink
+        assert full_run.counts[sink] == n, sink
+        assert reported[sink] == n, sink
+
+
+def test_empty_sink_counts_zero(spark, tmp_path):
+    """An input with no ERROR/CRITICAL line: the errors sink is empty and
+    reported as 0 rows. A sink's count rides its write, so a write of no
+    rows must still deliver it; the run is bounded so that a count that
+    never arrives fails here instead of hanging the suite."""
+    import datetime
+    import threading
+
+    ts = datetime.datetime(2024, 1, 5, 10, 0)
+    rows = [
+        ("conv-1", 0, "user", "2024-01-05 10:00:00 INFO [svc-1] started", "bash", ts),
+        ("conv-1", 1, "assistant", "2024-01-05 10:01:00 WARN [svc-1] slow", "", ts),
+        ("conv-2", 0, "user", "", "", ts),
+    ]
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    ).write.parquet(str(tmp_path / "in"))
+    out = {}
+
+    def run():
+        try:
+            out["res"] = run_pipeline(
+                spark, "", str(tmp_path / "out"), run_id="e", input_table=str(tmp_path / "in")
+            )
+        except BaseException as e:  # re-raised on the test thread
+            out["err"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "run_pipeline did not finish"
+    if "err" in out:
+        raise out["err"]
+    counts = out["res"].counts
+    assert (counts["sink_errors"], counts["sink_tool_calls"], counts["sink_anomalies"]) == (0, 1, 1)
+    metrics = spark.read.parquet(str(tmp_path / "out" / "_metrics"))
+    assert metrics.filter("stage = 'sink_errors' AND partition = '*'").first().rows_out == 0
 
 
 def test_analysis_results_upsert_by_date(spark):

@@ -136,6 +136,22 @@ def test_parse_plan_has_single_from_json(spark):
     assert physical.count("ArrowEvalPython") == 1, physical
 
 
+def test_classify_chain_is_one_projection_per_level(spark):
+    """parse -> enrich -> classify states each layer's columns once: one
+    select / withColumns per dependency level, not one withColumn per
+    column with temp columns and drops. PySpark re-analyzes the whole plan
+    on every DataFrame call, so each per-column call is one more
+    whole-plan analyzer pass on the driver (32 Project nodes here when each
+    column had its own call; the optimizer collapsed them to the same plan
+    it builds now). The bound leaves room for a few more levels, not for
+    a per-column chain."""
+    df = route.classify_turns(
+        enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
+    )
+    projects = _nodes(df._jdf.queryExecution().analyzed(), "Project")
+    assert len(projects) <= 20, len(projects)
+
+
 def test_cosine_pairs_candidate_join_is_equi(spark):
     """The near-dup candidate generator must plan an EQUI join on the
     capped dim index — never a cartesian/nested-loop product (the

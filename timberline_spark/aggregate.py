@@ -180,8 +180,12 @@ def _first_n_examples(df: DataFrame, key: str, n_examples: int) -> DataFrame:
     w = Window.partitionBy(key).orderBy(*order)
     wc = Window.partitionBy(key)
     return (
-        df.withColumn("example_rank", F.row_number().over(w))
-        .withColumn("duplicate_count", F.count(F.lit(1)).over(wc))
+        df.withColumns(
+            {
+                "example_rank": F.row_number().over(w),
+                "duplicate_count": F.count(F.lit(1)).over(wc),
+            }
+        )
         .filter(F.col("example_rank") <= n_examples)
         .select(
             key,
@@ -296,10 +300,12 @@ def report_buckets(deduped: DataFrame, extra_keys: tuple[str, ...] = ()) -> Data
     fingerprint string (level + digit-collapsed message) is re-derived from
     the winning representative, which by construction yields the group's
     fingerprint for any member."""
-    df = deduped.withColumn(
-        "fp_h",
-        F.xxhash64(cluster_fingerprint(F.col("message"), F.col("level"))),
-    ).withColumn("level_priority", _level_priority(F.col("level")))
+    df = deduped.withColumns(
+        {
+            "fp_h": F.xxhash64(cluster_fingerprint(F.col("message"), F.col("level"))),
+            "level_priority": _level_priority(F.col("level")),
+        }
+    )
     g = df.groupBy(*extra_keys, "fp_h").agg(*_bucket_aggs())
     return g.select(
         *extra_keys,
@@ -388,9 +394,12 @@ def report_buckets_merged(
     an unexpectedly large distinct-template population risks OOM — AQE
     converts the join to broadcast at runtime when the measured size
     allows, and degrades to shuffle when it doesn't."""
-    df = deduped.withColumn(
-        "fingerprint", cluster_fingerprint(F.col("message"), F.col("level"))
-    ).withColumn("level_priority", _level_priority(F.col("level")))
+    df = deduped.withColumns(
+        {
+            "fingerprint": cluster_fingerprint(F.col("message"), F.col("level")),
+            "level_priority": _level_priority(F.col("level")),
+        }
+    )
     merged = df.join(comp, "fingerprint")
     g = merged.groupBy(*extra_keys, "component").agg(
         # single-layer distinct, same rationale as n_sources in _bucket_aggs
@@ -415,7 +424,10 @@ def _truncate_message(c, limit: int = 200):
 
 
 def score_clusters(buckets: DataFrame) -> DataFrame:
-    """Rule-based severity rubric replacing the reference's LLM scorer."""
+    """Rule-based severity rubric replacing the reference's LLM scorer.
+
+    ``cluster_score`` is staged as a column: every bucket bound reads it,
+    and an inlined copy would be re-evaluated per reference."""
     base = F.lit(5)  # unknown level -> MEDIUM default (client.py:275-276)
     for level, _, score in LEVEL_META:
         base = F.when(F.col("rep_level") == level, score).otherwise(base)
@@ -431,13 +443,23 @@ def score_clusters(buckets: DataFrame) -> DataFrame:
         cond = (F.col("cluster_score") >= lo) & (F.col("cluster_score") <= hi)
         bucket = F.when(cond, name).otherwise(bucket)
         numeric = F.when(cond, num).otherwise(numeric)
-    return (
-        df.withColumn("cluster_severity", bucket)
-        .withColumn("severity_numeric", numeric)
-        .withColumn(
-            "actionable", F.col("cluster_severity").isin("medium", "high", "critical")
-        )
+    return df.withColumns(
+        {
+            "cluster_severity": bucket,
+            "severity_numeric": numeric,
+            "actionable": bucket.isin("medium", "high", "critical"),
+        }
     )
+
+
+def top_issue_order() -> list:
+    """The cluster ranking of every top-N view: score desc, then volume
+    desc, then fingerprint — a strict total order, so each cut is stable."""
+    return [
+        F.col("cluster_score").desc(),
+        F.col("total_log_count").desc(),
+        F.col("fingerprint"),
+    ]
 
 
 def top_issues(scored: DataFrame, n: int = TOP_ISSUES_N) -> DataFrame:
@@ -454,11 +476,7 @@ def top_issues(scored: DataFrame, n: int = TOP_ISSUES_N) -> DataFrame:
     aggregate — equal output, since the sort keys are a strict total
     order, but three fewer plan stages and no broadcast build job.)
     """
-    keys = [
-        F.col("cluster_score").desc(),
-        F.col("total_log_count").desc(),
-        F.col("fingerprint"),
-    ]
+    keys = top_issue_order()
     top = scored.filter(F.col("actionable")).orderBy(*keys).limit(n)
     return top.select(
         F.row_number().over(Window.orderBy(*keys)).alias("rank"),
@@ -490,30 +508,16 @@ def run_summary(scored: DataFrame, group_keys: tuple[str, ...] = ()) -> DataFram
             F.sum(F.when(F.col("actionable"), 1).otherwise(0)), F.lit(0)
         ).alias("actionable_count"),
     )
-    return (
-        totals
-        .withColumn(
-            "info_count",
-            F.col("total_logs_processed") - F.col("error_count") - F.col("warning_count"),
-        )
-        .withColumn(
-            "error_rate",
-            F.round(
-                F.col("error_count") * 100.0
-                / F.nullif(F.col("total_logs_processed"), F.lit(0)),
-                4,
-            ),
-        )
-        .withColumn(
-            "warning_rate",
-            F.round(
-                F.col("warning_count") * 100.0
-                / F.nullif(F.col("total_logs_processed"), F.lit(0)),
-                4,
-            ),
-        )
-        .withColumn(
-            "top_issues_count",
-            F.least(F.lit(TOP_ISSUES_N), F.col("actionable_count")).cast("long"),
-        )
+    total = F.nullif(F.col("total_logs_processed"), F.lit(0))
+    return totals.withColumns(
+        {
+            "info_count": F.col("total_logs_processed")
+            - F.col("error_count")
+            - F.col("warning_count"),
+            "error_rate": F.round(F.col("error_count") * 100.0 / total, 4),
+            "warning_rate": F.round(F.col("warning_count") * 100.0 / total, 4),
+            "top_issues_count": F.least(
+                F.lit(TOP_ISSUES_N), F.col("actionable_count")
+            ).cast("long"),
+        }
     )

@@ -47,14 +47,26 @@ def _fence(c: Column) -> Column:
 
 
 def _lit_map(pairs: list[tuple]) -> Column:
-    """Literal map<string, struct> from (key, {field: value}) pairs."""
-    args = []
-    for key, fields in pairs:
-        args.append(F.lit(key))
-        args.append(
-            F.struct(*[F.lit(v).alias(name) for name, v in fields.items()])
-        )
-    return F.create_map(*args)
+    """Literal map<string, struct> from (key, {field: value}) pairs, built
+    as ONE SQL expression: one JVM call, where one ``F.lit`` / ``alias``
+    per value costs py4j round trips each (~200 for the severity map, most
+    of enrich's plan-building time). It parses to the same
+    ``map(named_struct(...))`` tree, which Catalyst folds to one literal."""
+
+    def sql(v) -> str:
+        if isinstance(v, bool):
+            return str(v).lower()
+        if isinstance(v, int):
+            return str(v)
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    entries = (
+        f"{sql(key)}, named_struct("
+        + ", ".join(f"{sql(name)}, {sql(v)}" for name, v in fields.items())
+        + ")"
+        for key, fields in pairs
+    )
+    return F.expr(f"map({', '.join(entries)})")
 
 
 def _severity_map() -> Column:
@@ -107,39 +119,25 @@ def enrich_turns(
     an unknown_level anomaly. The default keeps the stricter divergence
     (documented in dicts.py) so per-sink counts surface bad levels.
     """
-    out = (
-        df.select(
-            "*",
-            _fence(
-                F.try_element_at(_severity_map(), F.col("level_raw"))
-            ).alias("_sev"),
-            _fence(F.try_element_at(_tool_map(), F.col("tool"))).alias("_tool"),
-            _fence(F.try_element_at(_role_map(), F.col("role"))).alias("_role"),
-        )
-        .withColumn("level", F.col("_sev.level"))
-        .withColumn("severity", F.col("_sev.severity"))
-        .withColumn("severity_score", F.col("_sev.severity_score"))
-        .withColumn("is_error", F.col("_sev.is_error"))
-        .withColumn("is_warning", F.col("_sev.is_warning"))
-        .withColumn("tool_category", F.col("_tool.tool_category"))
-        .withColumn("is_sensitive", F.col("_tool.is_sensitive"))
-        .withColumn("role_class", F.col("_role.role_class"))
-        .drop("_sev", "_tool", "_role")
+    out = df.columns
+    fenced = df.select(
+        *out,
+        _fence(F.try_element_at(_severity_map(), F.col("level_raw"))).alias("_sev"),
+        _fence(F.try_element_at(_tool_map(), F.col("tool"))).alias("_tool"),
+        _fence(F.try_element_at(_role_map(), F.col("role"))).alias("_role"),
     )
+    df = fenced.select(*out, "_sev.*", "_tool.*", "_role.*")
     if unknown_level_to_info:
-        info = dicts.level_defaults("INFO")
-        # snapshot the predicate BEFORE overwriting `level` — withColumn is
-        # lazy, so a condition on F.col("level") would see the updated column.
         # Keyed on grammar, not level_raw: a parsed direct-JSON line with no
         # `level` key (grammar='json', level_raw null) also defaults to INFO
-        # (log.go:66-86 GetLevel on a missing level).
-        out = out.withColumn(
-            "_unknown_level", F.col("grammar").isNotNull() & F.col("level").isNull()
+        # (log.go:66-86 GetLevel on a missing level). withColumns evaluates
+        # every column against its input, so the condition reads the
+        # dictionary's `level`, not the defaulted one.
+        unknown = F.col("grammar").isNotNull() & F.col("level").isNull()
+        df = df.withColumns(
+            {
+                col: F.when(unknown, F.lit(default)).otherwise(F.col(col))
+                for col, default in dicts.level_defaults("INFO").items()
+            }
         )
-        for col, default in info.items():
-            out = out.withColumn(
-                col,
-                F.when(F.col("_unknown_level"), F.lit(default)).otherwise(F.col(col)),
-            )
-        out = out.drop("_unknown_level")
-    return out
+    return df

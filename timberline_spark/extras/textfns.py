@@ -47,6 +47,11 @@ def _doc_hash() -> Column:
     return xh.mix32(xh.char_hash(F.col("doc_id").cast("string")))
 
 
+def _sql_doc_hash() -> str:
+    """:func:`_doc_hash` as DuckDB SQL, for the oracles."""
+    return xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
+
+
 # The per-document signals doc_text_stats reports and every gate below
 # (doc_curated and curation.curate_docs) takes: one definition each, so a
 # gate cannot drift from the operator it composes.
@@ -288,7 +293,7 @@ def oracle_quota_sample(
 ) -> str:
     ov = QUOTA_OVERRIDES if overrides is None else overrides
     case = _sql_per_source(ov, default_pct)
-    h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
+    h = _sql_doc_hash()
     return f"""
 SELECT doc_id, source, sample_bucket, quota_pct FROM (
   SELECT doc_id, source,
@@ -335,7 +340,7 @@ def doc_quota_topn(
 
 
 def oracle_quota_topn(n: int = QUOTA_TOPN_PER_SOURCE) -> str:
-    h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
+    h = _sql_doc_hash()
     return f"""
 SELECT doc_id, source, hash_rank, sample_rank FROM (
   SELECT doc_id, source, CAST(({h}) AS BIGINT) AS hash_rank,
@@ -425,7 +430,7 @@ def doc_pack_sequences(
 def oracle_pack_sequences(
     budget: int = PACK_TOKEN_BUDGET, shards: int = PACK_SHARDS
 ) -> str:
-    h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
+    h = _sql_doc_hash()
     return f"""
 WITH base AS (
   SELECT doc_id,
@@ -534,7 +539,7 @@ def doc_token_mix(
 def oracle_token_mix(targets: dict[str, float] | None = None) -> str:
     tg = TOKEN_MIX_TARGETS if targets is None else targets
     case = _sql_per_source({src: round(s * _PPM) for src, s in tg.items()}, 0)
-    h = xh.sql_mix32(xh.sql_char_hash("CAST(doc_id AS VARCHAR)"))
+    h = _sql_doc_hash()
     return f"""
 WITH base AS (
   SELECT doc_id, source,

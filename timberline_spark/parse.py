@@ -168,12 +168,16 @@ def parse_turns(df: DataFrame, impl: str = "native") -> DataFrame:
     """
     if impl not in _LANES:
         raise ValueError(f"unknown parse impl: {impl}")
-    df = _assemble(_LANES[impl](df))
-    return df.withColumn("conv_key", char_hash(F.col("conv_id")))
+    df = _LANES[impl](df)
+    return df.select(
+        *(c for c in df.columns if c not in _RAW),
+        *_assemble(),
+        char_hash(F.col("conv_id")).alias("conv_key"),
+    )
 
 
-def _assemble(df: DataFrame) -> DataFrame:
-    """The parsed fields from the raw captures, which it then drops.
+def _assemble() -> list[Column]:
+    """The parsed fields from the raw captures (which parse_turns drops).
 
     - Precedence plain > json > fluentbit > klog; each grammar picks its own
       level_raw and message. Direct-shape JSON is accepted whenever it
@@ -204,16 +208,14 @@ def _assemble(df: DataFrame) -> DataFrame:
     plain_ts = F.try_to_timestamp(c("plain_ts"), F.lit(TS_FMT))
     fb_ts = F.when(c("fb_lvl").isNotNull(), (c("j_date") * 1000).cast("long"))
     service = F.coalesce(*map(c, ("plain_svc", "j_service", "j_source", "klog_svc")))
-    return df.withColumns(
-        {
-            "grammar": grammar,
-            "level_raw": level_raw,
-            "service": service,
-            "message": message,
-            "text_ts_ms": F.coalesce(F.unix_millis(plain_ts), fb_ts),
-            "labels": c("j_labels"),
-        }
-    ).drop(*_RAW)
+    return [
+        grammar.alias("grammar"),
+        level_raw.alias("level_raw"),
+        service.alias("service"),
+        message.alias("message"),
+        F.coalesce(F.unix_millis(plain_ts), fb_ts).alias("text_ts_ms"),
+        c("j_labels").alias("labels"),
+    ]
 
 
 _SEP = "\x01"
@@ -238,27 +240,32 @@ def _native_captures(df: DataFrame) -> DataFrame:
     everything between g(N-1) and ``rest``.
     """
     t = F.col("text")
-    df = df.withColumn("_j", F.when(t.startswith("{"), F.from_json(t, JSON_SCHEMA)))
     j = F.col("_j")
     raw = {f"j_{f}": j[f] for f in _J_FIELDS}
     raw["j_labels"] = F.coalesce(*(_walk(j, path) for path in LABEL_PATHS))
-    temps = ["_j"] + [f"_p{i}" for i in range(len(_REGEX_CAPTURES))]
-    for tmp, (src, pattern, groups) in zip(temps[1:], _REGEX_CAPTURES):
+    # one projection per dependency level: _j and the splits of text, then
+    # the splits of JSON fields (they read _j), then the captures
+    of_text = {"_j": F.when(t.startswith("{"), F.from_json(t, JSON_SCHEMA))}
+    of_json = {}
+    for i, (src, pattern, groups) in enumerate(_REGEX_CAPTURES):
         s = t if src == "text" else raw[src]
         pattern = "(?d)" + pattern  # UNIX_LINES: only \n ends a line
         n = max(groups.values())
         repl = "".join(f"{_SEP}${g}" for g in range(1, n + 1)) + _SEP
-        df = df.withColumn(
-            tmp, F.when(s.rlike(pattern), F.split(F.regexp_replace(s, pattern, repl), _SEP))
+        (of_text if src == "text" else of_json)[f"_p{i}"] = F.when(
+            s.rlike(pattern), F.split(F.regexp_replace(s, pattern, repl), _SEP)
         )
-        p = F.col(tmp)
+        p = F.col(f"_p{i}")
         for name, g in groups.items():
             raw[name] = (
                 F.element_at(p, g + 1)
                 if g < n
                 else F.array_join(F.slice(p, n + 1, F.size(p) - n - 1), _SEP)
             )
-    return df.withColumns(raw).drop(*temps)
+    out = df.columns
+    for cols in (of_text, of_json):
+        df = df.withColumns(cols)
+    return df.select(*out, *(c.alias(name) for name, c in raw.items()))
 
 
 def _walk(c: Column, path: tuple) -> Column:
@@ -272,7 +279,8 @@ def _pandas_captures(df: DataFrame) -> DataFrame:
     struct, materialized once and then expanded."""
     schema = T.StructType([T.StructField(n, t) for n, t in _RAW.items()])
     captures = F.pandas_udf(_capture_batch, returnType=schema)
-    return df.withColumn("_raw", captures(F.col("text"))).select("*", "_raw.*").drop("_raw")
+    out = df.columns
+    return df.select(*out, captures(F.col("text")).alias("_raw")).select(*out, "_raw.*")
 
 
 def _capture_batch(texts: pd.Series) -> pd.DataFrame:

@@ -100,15 +100,25 @@ def _p_date(col):
     return F.date_format(F.to_timestamp(F.col(col) / 1000.0), "yyyy-MM-dd")
 
 
-def _write_by_date(df: DataFrame, path: str, col: str = "p_date") -> None:
+def _write_by_date(df: DataFrame, path: str, col: str = "p_date") -> int:
     """Overwrite the ``col`` date partitions of ``df`` at ``path``, with files
-    sized by bytes, not by row counts. The AQE rebalance hint routes each
-    date to one write task, so a small date is one file. A date larger than
-    ``advisoryPartitionSizeInBytes`` (64 MB, session.py) is split into
-    files of about that size. Without the shuffle, every scan task would
-    write a sliver file into every date it touches (tasks x dates files),
-    and every created file costs the commit."""
-    df.hint("rebalance", col).write.mode("overwrite").partitionBy(col).parquet(path)
+    sized by bytes, not by row counts, and return the rows written.
+
+    The AQE rebalance hint routes each date to one write task, so a small
+    date is one file. A date larger than ``advisoryPartitionSizeInBytes``
+    (64 MB, session.py) is split into files of about that size. Without the
+    shuffle, every scan task would write a sliver file into every date it
+    touches (tasks x dates files), and every created file costs the commit.
+
+    The row count is an observation riding the write job. It sits above the
+    rebalance: below it, AQE swaps an all-empty shuffle for an empty
+    relation once the map stage has run, and the count of an empty write
+    is lost."""
+    obs = Observation(f"rows:{path}")
+    df.hint("rebalance", col).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).partitionBy(col).parquet(path)
+    return obs.get["rows"]
 
 
 def _publish(path: str, write) -> None:
@@ -299,23 +309,21 @@ def run_pipeline(
     # run that last wrote it (dynamic overwrite keeps one writer per date),
     # which is what scopes stage 2+3 to THIS run's dates — another run's
     # dates stay in the shared tables but out of this run's aggregation.
-    classified = route.classify_turns(
-        enrich_turns(spark, parse_turns(tr))
-    ).select(*stage_cols)
+    derived = {"p_date": _p_date("effective_ts_ms"), "run_id": F.lit(run_id)}
     if redact:
         from .redact import redact_text
 
-        classified = classified.withColumn(
-            "message", redact_text(F.col("message"))
-        ).withColumn(
-            # label VALUES are open metadata (can embed identifiers on real
-            # inputs); keys are schema-like and stay
-            "labels",
-            F.transform_values(F.col("labels"), lambda _k, v: redact_text(v)),
+        derived["message"] = redact_text(F.col("message"))
+        # label VALUES are open metadata (can embed identifiers on real
+        # inputs); keys are schema-like and stay
+        derived["labels"] = F.transform_values(
+            F.col("labels"), lambda _k, v: redact_text(v)
         )
-    classified = classified.withColumn(
-        "p_date", _p_date("effective_ts_ms")
-    ).withColumn("run_id", F.lit(run_id))
+    classified = (
+        route.classify_turns(enrich_turns(spark, parse_turns(tr)))
+        .select(*stage_cols)
+        .withColumns(derived)
+    )
 
     if os.path.isdir(f"{out_dir}/_lineage"):
         done = {
@@ -340,57 +348,37 @@ def run_pipeline(
     _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
     stage_write_s = time.time() - t_write
 
+    # ---- stage 2+3: sink fan-out and report aggregation, CONCURRENT -------
+    # The stage commit (per-date counts + lineage), the three sink writes,
+    # the two dated writes and the two report collects are independent
+    # jobs; each gets its own thread of ONE pool, sized so none queues
+    # behind another (Spark's scheduler is thread-safe; session.py enables
+    # FAIR mode), and the small jobs fill executor slots the wide dedup
+    # shuffle leaves idle. This thread runs the dedup -> dated -> rollup
+    # chain the dated writes and the collects depend on, so the serial
+    # driver tail is one barrier instead of a queue of small jobs.
+    stage_df = spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}").filter(
+        F.col("run_id") == run_id
+    ).drop("run_id")
+
     def _commit_stage():
-        # per-partition counts AND the per-sink totals from the written table
-        # in ONE columnar pass (p_date, is_valid, level, tool only); the sink
-        # totals are summed client-side from the per-date rows (dates are
-        # few). Nothing in stage 2+3 needs these counts, so this job runs on
-        # the pool beside the sinks instead of ahead of them; the
-        # lineage append still follows the stage write, as resume requires.
-        per_part_rows = (
-            spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}")
-            # this run's scope only: todo/counts must not absorb dates another
-            # run_id owns (run_id is constant per file -> row-group pruning)
-            .filter(F.col("run_id") == run_id)
-            .select(
-                F.col("p_date").cast("string").alias("p_date"),
-                "is_valid",
-                "level",
-                "tool",
-            )
-            .groupBy("p_date")
+        # per-partition row and invalid counts from the written table in ONE
+        # columnar pass (p_date, is_valid only). Nothing in stage 2+3 needs
+        # them, so this job runs on the pool beside the sinks instead of
+        # ahead of them; the lineage append still follows the stage write,
+        # as resume requires. stage_df holds this run's dates only: the
+        # counts must not absorb dates another run_id owns.
+        per_part = {
+            r.p_date: (r.n, r.bad)
+            for r in stage_df.groupBy(F.col("p_date").cast("string").alias("p_date"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(
                     F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)), F.lit(0)
                 ).alias("bad"),
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("is_valid")
-                            & F.col("level").isin("ERROR", "CRITICAL"),
-                            1,
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("n_err"),
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("is_valid") & (F.col("tool") != ""), 1
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("n_tool"),
             )
             .collect()
-        )
-        flag_counts = {
-            "sink_errors": sum(r.n_err for r in per_part_rows),
-            "sink_tool_calls": sum(r.n_tool for r in per_part_rows),
-            "sink_anomalies": sum(r.bad for r in per_part_rows),
         }
-        per_part = {r.p_date: (r.n, r.bad) for r in per_part_rows}
         todo = sorted(p for p in per_part if p not in done)
         if todo:
             now = time.time()
@@ -407,20 +395,8 @@ def run_pipeline(
         stage_rows = [(run_id, STAGE_CLASSIFIED, "*", None, None, None, stage_write_s)]
         for p, (n, bad) in sorted(per_part.items()):
             stage_rows.append((run_id, STAGE_CLASSIFIED, p, n, n - bad, bad, None))
-        return flag_counts, todo, stage_rows
+        return todo, stage_rows
 
-    # ---- stage 2+3: sink fan-out and report aggregation, CONCURRENT -------
-    # The stage commit (per-date counts + lineage), the three sink writes,
-    # the two dated writes and the two report collects are independent
-    # jobs; each gets its own thread of ONE pool, sized so none queues
-    # behind another (Spark's scheduler is thread-safe; session.py enables
-    # FAIR mode), and the small jobs fill executor slots the wide dedup
-    # shuffle leaves idle. This thread runs the dedup -> dated -> rollup
-    # chain the dated writes and the collects depend on, so the serial
-    # driver tail is one barrier instead of a queue of small jobs.
-    stage_df = spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}").filter(
-        F.col("run_id") == run_id
-    ).drop("run_id")
     counts: dict[str, int] = {}
     sink_builders = {
         "sink_errors": route.errors_sink,
@@ -428,13 +404,14 @@ def run_pipeline(
         "sink_anomalies": route.anomalies_sink,
     }
 
-    def _write_sink(sink: str, builder) -> float:
+    def _write_sink(sink: str, builder) -> tuple[float, int]:
+        """Write one sink; return its wall time and the rows it wrote."""
         t_s = time.time()
-        out = builder(stage_df).withColumn("run_id", F.lit(run_id)).withColumn(
-            "p_date", _p_date("ts_ms")
+        out = builder(stage_df).withColumns(
+            {"run_id": F.lit(run_id), "p_date": _p_date("ts_ms")}
         )
-        _write_by_date(out, f"{out_dir}/{sink}")
-        return time.time() - t_s
+        rows = _write_by_date(out, f"{out_dir}/{sink}")
+        return time.time() - t_s, rows
 
     t_stage = time.time()
     # The four persisted frames are released in the finally on every exit,
@@ -570,12 +547,10 @@ def run_pipeline(
                 )
             for f in dated_futs:
                 f.result()
-            flag_counts, todo, metrics_rows = commit_fut.result()
+            todo, metrics_rows = commit_fut.result()
             for sink, fut in sink_futs.items():
-                el = fut.result()
-                n = int(flag_counts[sink])
-                counts[sink] = n
-                metrics_rows.append((run_id, sink, "*", None, n, None, el))
+                el, counts[sink] = fut.result()
+                metrics_rows.append((run_id, sink, "*", None, counts[sink], None, el))
     finally:
         for df in (deduped_d, scored_d, scored, basis):
             if df is not None:

@@ -25,6 +25,14 @@ def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return route.classify_turns(enrich_turns(spark, parse_turns(tr)))
 
 
+def _deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
+
+
+def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return agg.score_clusters(agg.report_buckets(_deduped(spark, sf_dir)))
+
+
 def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_transcripts(spark, sf_dir).select(
         "conv_id",
@@ -76,33 +84,27 @@ def q_kept_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    return d.select(
+    return _deduped(spark, sf_dir).select(
         "dedup_key", "conv_id", "turn_idx", "duplicate_count", "first_ts_ms", "last_ts_ms"
     )
 
 
 def q_report_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    return agg.report_buckets(d)
+    return agg.report_buckets(_deduped(spark, sf_dir))
 
 
 def q_report_buckets_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-miss clustering in the report path (DBSCAN eps>0 analog,
     milvus_client.py:205-215): similar-but-not-identical templates merge."""
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    return agg.report_buckets_fuzzy(d)
+    return agg.report_buckets_fuzzy(_deduped(spark, sf_dir))
 
 
 def q_top_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    return agg.top_issues(agg.score_clusters(agg.report_buckets(d)))
+    return agg.top_issues(_scored(spark, sf_dir))
 
 
 def q_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    scored = agg.score_clusters(agg.report_buckets(d))
-    return agg.run_summary(scored).select(
+    return agg.run_summary(_scored(spark, sf_dir)).select(
         "total_logs_processed",
         "error_count",
         "warning_count",
@@ -161,9 +163,7 @@ def q_common_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode -> group -> count == cluster_size over the OPEN metadata map
     (rows without labels empty the intersection, as in the reference's
     iterative dict intersection)."""
-    kept = route.kept_turns(_classified(spark, sf_dir))
-    d = agg.dedup_turns(kept)
-    d = d.withColumn(
+    d = _deduped(spark, sf_dir).withColumn(
         "fingerprint", agg.cluster_fingerprint(F.col("message"), F.col("level"))
     )
     sizes = d.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -318,11 +318,6 @@ def q_api_logs(spark: SparkSession, sf_dir: str, limit: int = 100) -> DataFrame:
     )
 
 
-def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = agg.dedup_turns(route.kept_turns(_classified(spark, sf_dir)))
-    return agg.score_clusters(agg.report_buckets(d))
-
-
 def q_flexible_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5/P6: the flexible-timestamp parse applied to the plain-grammar ts
     strings plus numeric epoch strings derived from the row ts."""
@@ -462,10 +457,9 @@ def q_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window level counts (batch expression of the streaming agg;
     the true readStream path is exercised in tests/test_streaming.py)."""
-    from .route import classify_turns
     from .streaming import level_counts
 
-    df = classify_turns(enrich_turns(spark, parse_turns(load_transcripts(spark, sf_dir))))
+    df = _classified(spark, sf_dir)
     # the scanned ts is timestamp_ntz; unix_millis takes a timestamp
     return level_counts(df, ts=F.col("ts").cast("timestamp")).select(
         F.unix_millis(F.col("w.start")).alias("window_start_ms"), "level", "n"
@@ -578,11 +572,7 @@ def q_report_api(
         )
     )
     top = (
-        scored.orderBy(
-            F.col("cluster_score").desc(),
-            F.col("total_log_count").desc(),
-            F.col("fingerprint"),
-        )
+        scored.orderBy(*agg.top_issue_order())
         .limit(n_top)
         .select(
             F.lit("top20_clusters").alias("api"),

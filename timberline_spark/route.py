@@ -62,39 +62,42 @@ def hash100(conv_key: Column, turn_idx: Column) -> Column:
 
 
 def classify_turns(df: DataFrame) -> DataFrame:
-    """Add effective_ts_ms, anomaly_reason, is_valid, hash100, kept flags."""
-    eff = F.coalesce(F.col("text_ts_ms"), F.unix_millis(F.col("ts").cast("timestamp")))
-    df = df.withColumn("effective_ts_ms", eff)
+    """Add effective_ts_ms, anomaly_reason, is_valid, hash100, kept flags.
+
+    One ``withColumns`` per dependency level: each level reads only the
+    columns of the levels before it."""
+    c = F.col
     reason = (
-        F.when(F.col("text") == "", "empty_text")
+        F.when(c("text") == "", "empty_text")
         # no grammar matched (level_raw may be null with grammar='json' —
         # a direct-shape line with a message but no level key parses fine
         # and only its level defaults downstream, log.go:66-86)
-        .when(F.col("grammar").isNull(), "unparseable_ts")
+        .when(c("grammar").isNull(), "unparseable_ts")
         # the reference rejects records whose parsed message is empty
         # (log.go:43-64 "message required")
-        .when(F.col("message").isNull() | (F.col("message") == ""), "empty_message")
+        .when(c("message").isNull() | (c("message") == ""), "empty_message")
         .when(
-            (F.col("effective_ts_ms") < TS_LOW_MS)
-            | (F.col("effective_ts_ms") > TS_HIGH_MS),
+            (c("effective_ts_ms") < TS_LOW_MS) | (c("effective_ts_ms") > TS_HIGH_MS),
             "invalid_bounds",
         )
-        .when(F.col("level").isNull(), "unknown_level")
+        .when(c("level").isNull(), "unknown_level")
     )
-    df = df.withColumn("anomaly_reason", reason)
-    df = df.withColumn("is_valid", F.col("anomaly_reason").isNull())
-    df = df.withColumn("hash100", hash100(F.col("conv_key"), F.col("turn_idx")))
-    keep_level = F.col("is_valid") & F.col("level").isin(*KEEP_LEVELS)
-    sampled = (
-        F.col("is_valid")
-        & ~F.col("level").isin(*KEEP_LEVELS)
-        & (F.col("hash100") < SAMPLING_RATE_PCT)
-    )
-    return (
-        df.withColumn("keep_level", keep_level)
-        .withColumn("keep_sampled", sampled)
-        .withColumn("kept", keep_level | sampled)
-    )
+    keep = c("level").isin(*KEEP_LEVELS)
+    for cols in (
+        {"effective_ts_ms": F.coalesce(c("text_ts_ms"), F.unix_millis(c("ts").cast("timestamp")))},
+        {"anomaly_reason": reason},
+        {
+            "is_valid": c("anomaly_reason").isNull(),
+            "hash100": hash100(c("conv_key"), c("turn_idx")),
+        },
+        {
+            "keep_level": c("is_valid") & keep,
+            "keep_sampled": c("is_valid") & ~keep & (c("hash100") < SAMPLING_RATE_PCT),
+        },
+        {"kept": c("keep_level") | c("keep_sampled")},
+    ):
+        df = df.withColumns(cols)
+    return df
 
 
 # --- per-category sinks (fan-out). Each is a projection+filter over the

@@ -26,6 +26,7 @@ Every choice is a pure function of (event_id, user_id, event_type, value, ts)
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -235,26 +236,22 @@ def load_transcripts(spark: SparkSession, sf_dir: str, replicate: int = 1) -> Da
     deterministic and the key distribution realistic (hot conversations
     remain hot within each replica).
     """
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
-    df = spark.sql(transcripts_sql(SPARK))
+    # a view name of its own, dropped once spark.sql has analyzed the query:
+    # a caller's session view named `events` is neither replaced nor read
+    view = f"tl_events_{uuid.uuid4().hex}"
+    spark.read.parquet(f"{sf_dir}/events.parquet").createTempView(view)
+    try:
+        df = spark.sql(transcripts_sql(SPARK, events_rel=view))
+    finally:
+        spark.catalog.dropTempView(view)
     if replicate > 1:
         reps = spark.range(replicate).withColumnRenamed("id", "rep")
         base_num = F.regexp_extract(F.col("conv_id"), "^conv-([0-9]+)$", 1).cast("long")
-        df = (
-            df.crossJoin(reps)
-            .withColumn(
-                "conv_id",
-                F.concat(
-                    F.lit("conv-"),
-                    F.lpad(
-                        (base_num + F.col("rep") * F.lit(REPLICA_STRIDE)).cast(
-                            "string"
-                        ),
-                        12,
-                        "0",
-                    ),
-                ),
-            )
-            .drop("rep")
+        conv_id = F.concat(
+            F.lit("conv-"),
+            F.lpad((base_num + F.col("rep") * F.lit(REPLICA_STRIDE)).cast("string"), 12, "0"),
+        )
+        df = df.crossJoin(reps).select(
+            *(conv_id.alias(c) if c == "conv_id" else c for c in df.columns)
         )
     return df
