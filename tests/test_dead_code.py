@@ -33,6 +33,7 @@ TEST_REF = "test reference: tests compare the shipped code against it"
 # "<path relative to the repo>:<function>" -> why it stays without a caller
 ALLOWED = {
     "timberline_spark/streaming.py:_window_bounds": STREAMING,
+    "timberline_spark/streaming.py:_classified_stream": STREAMING,
     "timberline_spark/streaming.py:stream_level_counts": STREAMING,
     "timberline_spark/streaming.py:run_available_now": STREAMING,
     "timberline_spark/streaming.py:run_append_windows": STREAMING,

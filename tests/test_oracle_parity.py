@@ -97,20 +97,6 @@ def test_fuzzy_buckets_merge_near_identical_messages(spark):
     assert solo.representative_message == msg_c and solo.total_log_count == 1
 
 
-def test_latency_profile_spark_dialect_executes(spark, duck):
-    """ADVICE r5: the Spark-dialect branch of q_latency_profile used
-    0-based [i] subscripts (p50 actually read p95, p99 read NULL). Pin by
-    EXECUTING both dialects and comparing."""
-    from timberline_spark.sqlgen import SPARK, q_latency_profile
-
-    spark.read.parquet(f"{SF_TINY}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    out = spark.sql(q_latency_profile(SPARK))
-    oracle = duck.sql(q_latency_profile())
-    assert_frames_equal(out, oracle)
-
-
 def test_log_search_tokenless_oracle_sql_is_valid(duck):
     """ADVICE r5: a tokenless search query used to generate 'VALUES '
     (syntax error) in the ORACLE path; it must be executable SQL returning

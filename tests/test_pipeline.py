@@ -285,42 +285,61 @@ def test_sink_counts_match_flags(spark, outdirs, full_run):
 
 
 def test_empty_sink_counts_zero(spark, tmp_path):
-    """An input with no ERROR/CRITICAL line: the errors sink is empty and
-    reported as 0 rows. A sink's count rides its write, so a write of no
-    rows must still deliver it; the run is bounded so that a count that
-    never arrives fails here instead of hanging the suite."""
+    """Inputs with an empty output: the errors sink is empty and reported
+    as 0 rows, and a run whose kept stream is empty (every row an anomaly)
+    completes with empty cluster tables and zero collision counts. A count
+    rides its write or the dedup job, so a write of no rows must still
+    deliver it; each run is bounded so that a count that never arrives
+    fails here instead of hanging the suite."""
     import datetime
     import threading
 
     ts = datetime.datetime(2024, 1, 5, 10, 0)
-    rows = [
+    no_errors = [
         ("conv-1", 0, "user", "2024-01-05 10:00:00 INFO [svc-1] started", "bash", ts),
         ("conv-1", 1, "assistant", "2024-01-05 10:01:00 WARN [svc-1] slow", "", ts),
         ("conv-2", 0, "user", "", "", ts),
     ]
-    spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    ).write.parquet(str(tmp_path / "in"))
-    out = {}
+    all_anomalies = [
+        ("conv-1", 0, "user", "", "", ts),
+        ("conv-2", 0, "user", "???", "", ts),
+    ]
 
-    def run():
-        try:
-            out["res"] = run_pipeline(
-                spark, "", str(tmp_path / "out"), run_id="e", input_table=str(tmp_path / "in")
-            )
-        except BaseException as e:  # re-raised on the test thread
-            out["err"] = e
+    def run(name, rows):
+        spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+        ).write.parquet(str(tmp_path / name / "in"))
+        out = {}
 
-    t = threading.Thread(target=run, daemon=True)
-    t.start()
-    t.join(timeout=600)
-    assert not t.is_alive(), "run_pipeline did not finish"
-    if "err" in out:
-        raise out["err"]
-    counts = out["res"].counts
+        def go():
+            try:
+                out["res"] = run_pipeline(
+                    spark, "", str(tmp_path / name / "out"), run_id="e",
+                    input_table=str(tmp_path / name / "in"),
+                )
+            except BaseException as e:  # re-raised on the test thread
+                out["err"] = e
+
+        t = threading.Thread(target=go, daemon=True)
+        t.start()
+        t.join(timeout=600)
+        assert not t.is_alive(), f"run_pipeline did not finish ({name})"
+        if "err" in out:
+            raise out["err"]
+        metrics = spark.read.parquet(str(tmp_path / name / "out" / "_metrics"))
+        return out["res"].counts, {
+            r.stage: r.rows_out for r in metrics.filter("partition = '*'").collect()
+        }
+
+    counts, metrics = run("no_errors", no_errors)
     assert (counts["sink_errors"], counts["sink_tool_calls"], counts["sink_anomalies"]) == (0, 1, 1)
-    metrics = spark.read.parquet(str(tmp_path / "out" / "_metrics"))
-    assert metrics.filter("stage = 'sink_errors' AND partition = '*'").first().rows_out == 0
+    assert metrics["sink_errors"] == 0
+
+    counts, metrics = run("all_anomalies", all_anomalies)
+    assert (counts["sink_errors"], counts["sink_tool_calls"], counts["sink_anomalies"]) == (0, 0, 2)
+    assert (counts["report_buckets"], counts["top_issues"]) == (0, 0)
+    assert metrics["dedup_hash_collisions"] == 0
+    assert metrics["dedup_rollup_hash_collisions"] == 0
 
 
 def test_analysis_results_upsert_by_date(spark):

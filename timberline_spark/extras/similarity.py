@@ -63,6 +63,19 @@ def _cosine(a, b):
     return F.round(dot / F.nullif(na * nb, F.lit(0.0)), 4)
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best-scored neighbors per query, ranked 1..k (ties on
+    neighbor_id) — the tail every kNN operator shares."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
+
+
 def emb_knn_brute(
     spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
@@ -80,14 +93,7 @@ def emb_knn_brute(
             _cosine(F.col("q_emb"), F.col("embedding")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(scored, k)
 
 
 def oracle_knn_brute(k: int = 5, n_queries: int = 10) -> str:
@@ -224,14 +230,7 @@ def emb_knn_lsh(
             _cosine(F.col("q_emb"), F.col("embedding")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(scored, k)
 
 
 def oracle_knn_lsh(k: int = 5, n_queries: int = 10) -> str:
@@ -495,14 +494,7 @@ def emb_knn_ivf(
             _cosine(F.col("q_emb"), F.col("embedding")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(scored, k)
 
 
 def _sql_l2(e: str, c: str, dim: int = EMBED_DIM) -> str:

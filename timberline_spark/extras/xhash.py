@@ -109,24 +109,6 @@ def sql_char_hash(var: str = "t") -> str:
     )
 
 
-def sql_char_hash_dialect(dialect_name: str, var: str) -> str:
-    """``char_hash`` as a SQL expression in either engine's dialect.
-
-    The Spark SQL spelling mirrors the Column builder above exactly
-    (sequence/transform/aggregate HOFs); the DuckDB spelling is
-    :func:`sql_char_hash`. Same constants, bit-identical values — this is
-    what lets the sampling hash key on an ARBITRARY conv_id string while
-    staying reproducible by the driver's DuckDB oracle."""
-    if dialect_name == "spark":
-        return (
-            f"aggregate(transform(sequence(1, length({var})),"
-            f" i -> CAST(ascii(substring({var}, i, 1)) AS BIGINT)),"
-            f" CAST(0 AS BIGINT),"
-            f" (acc, c) -> (acc * {CHAR_MULT} + c) % {HASH_MOD})"
-        )
-    return sql_char_hash(var)
-
-
 def sql_token_hashes(text_expr: str) -> str:
     return (
         f"list_transform(regexp_extract_all(lower({text_expr}), '{TOKEN_RE}'),"

@@ -434,10 +434,13 @@ def run_pipeline(
             ).persist()
             # materialize the ONE wide shuffle before fanning out (the result
             # branches below then read the cached frame concurrently instead
-            # of racing to populate it) AND count hash-key collision groups
-            # in the same pass — the sentinel for the 64-bit dedup key
-            # (nonzero lands in _metrics)
-            n_collisions = deduped_d.filter(F.col("key_collision")).count()
+            # of racing to populate it) AND, in the same job, count the dated
+            # groups and the hash-key collision groups — the sentinel for the
+            # 64-bit dedup key (nonzero lands in _metrics)
+            n_groups, n_collisions = deduped_d.agg(
+                F.count(F.lit(1)),
+                F.coalesce(F.sum(F.col("key_collision").cast("long")), F.lit(0)),
+            ).collect()[0]
             # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one
             # result row set per analysis_date): results partitioned by
             # analysis_date + dynamic partition overwrite = MERGE keyed by
@@ -494,7 +497,9 @@ def run_pipeline(
             # cross-date collision here is invisible to the per-date
             # sentinel); the sentinel sum rides the scored-buckets write via
             # observe() — zero extra jobs, where it used to cost a separate
-            # materialization of the whole rollup.
+            # materialization of the whole rollup. With no dated groups AQE
+            # drops the empty rollup below the bucket shuffle and the
+            # observation never arrives; there is nothing to audit then.
             rollup_obs = Observation("rollup_audit")
             deduped = agg.dedup_rollup(deduped_d, audit=True)
             deduped = deduped.observe(
@@ -511,7 +516,7 @@ def run_pipeline(
             scored.hint("rebalance").withColumn("run_id", F.lit(run_id)).write.mode(
                 "overwrite"
             ).parquet(f"{out_dir}/report_buckets")
-            n_rollup_collisions = rollup_obs.get["n_collisions"]
+            n_rollup_collisions = rollup_obs.get["n_collisions"] if n_groups else 0
             basis = scored
             if fuzzy_buckets:
                 # merged global table written NEXT TO the exact one; the

@@ -1,9 +1,11 @@
-"""Oracle SQL generator: the whole pipeline as one dialect-neutral CTE chain.
+"""Oracle SQL generator: the whole pipeline as one DuckDB CTE chain.
 
-The driver verifies each Spark query against ANSI SQL run by DuckDB on the
-same parquet inputs. This module builds that SQL from the same constants
-(regex patterns, dictionaries, hash arithmetic, bounds) the Spark pipeline
-uses — one source of truth, two independent executions.
+The driver verifies each Spark query against SQL run by DuckDB on the same
+parquet inputs. This module builds that SQL from the same constants (regex
+patterns, dictionaries, hash arithmetic, bounds) the Spark pipeline uses —
+one source of truth, two independent executions. Only the oracle runs it,
+so it is spelled for DuckDB alone; the transcripts derivation it starts
+from (``transcripts.transcripts_sql``) is the one SQL text both engines run.
 
 The chain mirrors the stages 1:1::
 
@@ -16,32 +18,19 @@ Each public ``q_*`` function returns a complete SELECT statement.
 from __future__ import annotations
 
 from . import dicts
-from .extras.xhash import sql_char_hash_dialect
+from .extras.xhash import sql_char_hash
 from .parse import RE_FB_LOG, RE_KLOG, RE_PLAIN
-from .transcripts import DUCKDB, SPARK, Dialect, transcripts_sql
+from .transcripts import DUCKDB, transcripts_sql
 
 
-def _re(d: Dialect, pat: str) -> str:
+def _re(pat: str) -> str:
     """Quote a regex for embedding in a SQL string literal."""
-    if d.name == "spark":
-        pat = pat.replace("\\", "\\\\")
     return pat.replace("'", "''")
 
 
-def _json_str(d: Dialect, src: str, path: str) -> str:
-    """Dialect shim for JSON string extraction (unescapes like from_json)."""
-    if d.name == "spark":
-        return f"get_json_object({src}, '{path}')"
-    return f"json_extract_string({src}, '{path}')"
-
-
-def _jtext(d: Dialect) -> str:
-    """NULL unless the row is a parseable JSON object: DuckDB's
-    json_extract_* raises on malformed JSON (no lazy CASE lanes), so the
-    source column is nulled first."""
-    if d.name == "spark":
-        return "CASE WHEN text LIKE '{%' THEN text END"
-    return "CASE WHEN text LIKE '{%' AND json_valid(text) THEN text END"
+def _json_str(path: str) -> str:
+    """JSON string extraction from ``jtext`` (unescapes like from_json)."""
+    return f"json_extract_string(jtext, '{path}')"
 
 
 def _level_priority_sql(col: str) -> str:
@@ -64,63 +53,74 @@ def _bucket_sql(score_col: str, out: str) -> str:
     return f"CASE {branches} ELSE {default} END"
 
 
-def pipeline_ctes(d: Dialect, events_rel: str = "events") -> str:
-    """The WITH-clause body shared by every oracle query."""
+def pipeline_ctes() -> str:
+    """The WITH-clause body shared by every oracle query.
+
+    Every stage is ``AS MATERIALIZED``: DuckDB INLINES single-reference
+    CTEs, substituting each stage's full expression tree into every
+    downstream reference, and the chained stages (a ~30-line CASE ``text``
+    expression referenced by ~15 regexp_extracts, then again per parsed
+    field) explode multiplicatively: the un-hinted oracle allocated
+    gigabytes and hit vm.max_map_count on a 1000-row input. MATERIALIZED
+    pins each stage to evaluate once.
+
+    ``jtext`` is NULL unless the row is a parseable JSON object: DuckDB's
+    json_extract_* raises on malformed JSON (no lazy CASE lanes), so the
+    source column is nulled first."""
     keep_levels = ",".join(f"'{v}'" for v in ("ERROR", "CRITICAL", "WARNING"))
     h100 = dicts.hash100_sql("conv_key", "turn_idx")
-    m = d.mat
     return f"""
-WITH tr AS {m}(
-{transcripts_sql(d, events_rel)}
-), parsed0 AS {m}(
+WITH tr AS MATERIALIZED (
+{transcripts_sql(DUCKDB)}
+), parsed0 AS MATERIALIZED (
   SELECT conv_id, turn_idx, role, tool, ts, text,
-    {sql_char_hash_dialect(d.name, "conv_id")} AS conv_key,
-    NULLIF(regexp_extract(text, '{_re(d, RE_PLAIN)}', 2), '') AS plain_lvl,
-    NULLIF(regexp_extract(text, '{_re(d, RE_PLAIN)}', 3), '') AS plain_svc,
-    regexp_extract(text, '{_re(d, RE_PLAIN)}', 4) AS plain_msg,
-    NULLIF(regexp_extract(text, '{_re(d, RE_PLAIN)}', 1), '') AS plain_ts,
-    {_json_str(d, "jtext", "$.level")} AS json_lvl,
-    {_json_str(d, "jtext", "$.service")} AS json_svc,
-    {_json_str(d, "jtext", "$.message")} AS json_msg,
-    {_json_str(d, "jtext", "$.log")} AS fb_log,
-    {_json_str(d, "jtext", "$.source")} AS fb_src,
-    CAST({_json_str(d, "jtext", "$.date")} AS DOUBLE) AS fb_date,
-    COALESCE({_json_str(d, "jtext", "$.labels.app")},
-             {_json_str(d, "jtext", "$.kubernetes_labels.app")},
-             {_json_str(d, "jtext", "$.kubernetes.labels.app")}) AS lab_app,
-    COALESCE({_json_str(d, "jtext", "$.labels.sev")},
-             {_json_str(d, "jtext", "$.kubernetes_labels.sev")},
-             {_json_str(d, "jtext", "$.kubernetes.labels.sev")}) AS lab_sev,
-    COALESCE({_json_str(d, "jtext", "$.labels.tier")},
-             {_json_str(d, "jtext", "$.kubernetes_labels.tier")},
-             {_json_str(d, "jtext", "$.kubernetes.labels.tier")}) AS lab_tier,
-    NULLIF(regexp_extract(text, '{_re(d, RE_KLOG)}', 1), '') AS klog_lvl,
-    NULLIF(regexp_extract(text, '{_re(d, RE_KLOG)}', 4), '') AS klog_svc,
-    regexp_extract(text, '{_re(d, RE_KLOG)}', 6) AS klog_msg
-  FROM (SELECT *, {_jtext(d)} AS jtext FROM tr) tj
-), parsed1 AS {m}(
+    {sql_char_hash("conv_id")} AS conv_key,
+    NULLIF(regexp_extract(text, '{_re(RE_PLAIN)}', 2), '') AS plain_lvl,
+    NULLIF(regexp_extract(text, '{_re(RE_PLAIN)}', 3), '') AS plain_svc,
+    regexp_extract(text, '{_re(RE_PLAIN)}', 4) AS plain_msg,
+    NULLIF(regexp_extract(text, '{_re(RE_PLAIN)}', 1), '') AS plain_ts,
+    {_json_str("$.level")} AS json_lvl,
+    {_json_str("$.service")} AS json_svc,
+    {_json_str("$.message")} AS json_msg,
+    {_json_str("$.log")} AS fb_log,
+    {_json_str("$.source")} AS fb_src,
+    CAST({_json_str("$.date")} AS DOUBLE) AS fb_date,
+    COALESCE({_json_str("$.labels.app")},
+             {_json_str("$.kubernetes_labels.app")},
+             {_json_str("$.kubernetes.labels.app")}) AS lab_app,
+    COALESCE({_json_str("$.labels.sev")},
+             {_json_str("$.kubernetes_labels.sev")},
+             {_json_str("$.kubernetes.labels.sev")}) AS lab_sev,
+    COALESCE({_json_str("$.labels.tier")},
+             {_json_str("$.kubernetes_labels.tier")},
+             {_json_str("$.kubernetes.labels.tier")}) AS lab_tier,
+    NULLIF(regexp_extract(text, '{_re(RE_KLOG)}', 1), '') AS klog_lvl,
+    NULLIF(regexp_extract(text, '{_re(RE_KLOG)}', 4), '') AS klog_svc,
+    regexp_extract(text, '{_re(RE_KLOG)}', 6) AS klog_msg
+  FROM (SELECT *, CASE WHEN text LIKE '{{%' AND json_valid(text) THEN text END AS jtext FROM tr) tj
+), parsed1 AS MATERIALIZED (
   SELECT *,
     CASE WHEN plain_lvl IS NOT NULL THEN 'plain'
          WHEN json_lvl IS NOT NULL
            OR (NULLIF(json_msg, '') IS NOT NULL AND fb_log IS NULL) THEN 'json'
          WHEN fb_lvl IS NOT NULL THEN 'fluentbit'
          WHEN klog_lvl IS NOT NULL THEN 'klog' END AS grammar
-  FROM (SELECT *, NULLIF(regexp_extract(fb_log, '{_re(d, RE_FB_LOG)}', 1), '') AS fb_lvl
+  FROM (SELECT *, NULLIF(regexp_extract(fb_log, '{_re(RE_FB_LOG)}', 1), '') AS fb_lvl
         FROM parsed0) p0
-), parsed AS {m}(
+), parsed AS MATERIALIZED (
   SELECT conv_id, turn_idx, role, tool, ts, text, conv_key,
     lab_app, lab_sev, lab_tier, grammar,
     CASE grammar WHEN 'plain' THEN plain_lvl WHEN 'json' THEN json_lvl
          WHEN 'fluentbit' THEN fb_lvl WHEN 'klog' THEN klog_lvl END AS level_raw,
     COALESCE(plain_svc, json_svc, fb_src, klog_svc) AS service,
     CASE grammar WHEN 'plain' THEN plain_msg WHEN 'json' THEN json_msg
-         WHEN 'fluentbit' THEN regexp_extract(fb_log, '{_re(d, RE_FB_LOG)}', 2)
+         WHEN 'fluentbit' THEN regexp_extract(fb_log, '{_re(RE_FB_LOG)}', 2)
          WHEN 'klog' THEN klog_msg END AS message,
-    COALESCE({d.epoch_ms(d.try_parse_ts("plain_ts"))},
+    COALESCE(epoch_ms(try_strptime(plain_ts, '%Y-%m-%d %H:%M:%S')),
              CASE WHEN fb_lvl IS NOT NULL
                THEN CAST(fb_date * 1000 AS BIGINT) END) AS text_ts_ms
   FROM parsed1
-), enriched AS {m}(
+), enriched AS MATERIALIZED (
   SELECT p.*, severity_dict.level, severity_dict.severity,
          severity_dict.severity_score, severity_dict.is_error,
          severity_dict.is_warning, tool_dict.tool_category,
@@ -129,28 +129,28 @@ WITH tr AS {m}(
   LEFT JOIN {dicts.severity_dict_values_sql()} ON p.level_raw = severity_dict.level_raw
   LEFT JOIN {dicts.tool_dict_values_sql()} ON p.tool = tool_dict.tool
   LEFT JOIN {dicts.role_dict_values_sql()} ON p.role = role_dict.role
-), classified AS {m}(
+), classified AS MATERIALIZED (
   SELECT *,
-    COALESCE(text_ts_ms, {d.epoch_ms("ts")}) AS effective_ts_ms,
+    COALESCE(text_ts_ms, epoch_ms(ts)) AS effective_ts_ms,
     CASE WHEN text = '' THEN 'empty_text'
          WHEN grammar IS NULL THEN 'unparseable_ts'
          WHEN message IS NULL OR message = '' THEN 'empty_message'
-         WHEN COALESCE(text_ts_ms, {d.epoch_ms("ts")}) < {dicts.TS_LOW_MS}
-           OR COALESCE(text_ts_ms, {d.epoch_ms("ts")}) > {dicts.TS_HIGH_MS}
+         WHEN COALESCE(text_ts_ms, epoch_ms(ts)) < {dicts.TS_LOW_MS}
+           OR COALESCE(text_ts_ms, epoch_ms(ts)) > {dicts.TS_HIGH_MS}
            THEN 'invalid_bounds'
          WHEN level IS NULL THEN 'unknown_level' END AS anomaly_reason,
     {h100} AS hash100
   FROM enriched
-), flagged AS {m}(
+), flagged AS MATERIALIZED (
   SELECT *,
     (anomaly_reason IS NULL) AS is_valid,
     (anomaly_reason IS NULL AND level IN ({keep_levels})) AS keep_level,
     (anomaly_reason IS NULL AND level NOT IN ({keep_levels})
       AND hash100 < {dicts.SAMPLING_RATE_PCT}) AS keep_sampled
   FROM classified
-), kept AS {m}(
+), kept AS MATERIALIZED (
   SELECT * FROM flagged WHERE keep_level OR keep_sampled
-), dedup AS {m}(
+), dedup AS MATERIALIZED (
   SELECT * FROM (
     SELECT LOWER(message) AS dedup_key, conv_id, turn_idx, level, severity,
            severity_score, is_error, is_warning, service, message,
@@ -162,7 +162,7 @@ WITH tr AS {m}(
            MAX(effective_ts_ms) OVER (PARTITION BY LOWER(message)) AS last_ts_ms
     FROM kept
   ) x WHERE rn = 1
-), buckets AS {m}(
+), buckets AS MATERIALIZED (
   SELECT fingerprint,
          CAST(n_unique AS BIGINT) AS n_unique,
          total_log_count, error_count, warning_count,
@@ -182,19 +182,17 @@ WITH tr AS {m}(
         OVER (PARTITION BY fingerprint) AS BIGINT) AS error_count,
       CAST(SUM(CASE WHEN is_warning THEN duplicate_count ELSE 0 END)
         OVER (PARTITION BY fingerprint) AS BIGINT) AS warning_count,
-      {"SIZE(collect_set(service) OVER (PARTITION BY fingerprint))"
-       if d.name == "spark"
-       else "COUNT(DISTINCT service) OVER (PARTITION BY fingerprint)"} AS n_sources,
+      COUNT(DISTINCT service) OVER (PARTITION BY fingerprint) AS n_sources,
       MIN(first_ts_ms) OVER (PARTITION BY fingerprint) AS cluster_first_ts_ms,
       MAX(last_ts_ms) OVER (PARTITION BY fingerprint) AS cluster_last_ts_ms
     FROM (
       SELECT dd.*,
-        dd.level || '|' || regexp_replace(LOWER(dd.message), '[0-9]+', '#'{", 'g'" if d.name == "duckdb" else ""}) AS fingerprint,
+        dd.level || '|' || regexp_replace(LOWER(dd.message), '[0-9]+', '#', 'g') AS fingerprint,
         {_level_priority_sql("dd.level")} AS level_priority
       FROM dedup dd
     ) f
   ) g WHERE rn2 = 1
-), scored AS {m}(
+), scored AS MATERIALIZED (
   SELECT *,
     {_bucket_sql("cluster_score", "name")} AS cluster_severity,
     {_bucket_sql("cluster_score", "num")} AS severity_numeric,
@@ -208,90 +206,80 @@ WITH tr AS {m}(
 )"""
 
 
-def _q(d: Dialect, body: str, events_rel: str = "events") -> str:
-    return pipeline_ctes(d, events_rel) + "\n" + body
+def _q(body: str) -> str:
+    return pipeline_ctes() + "\n" + body
 
 
 # ---- per-stage oracle queries ----------------------------------------------
 
 
-def q_transcripts(d: Dialect = DUCKDB) -> str:
+def q_transcripts() -> str:
     return _q(
-        d,
-        f"SELECT conv_id, turn_idx, role, text, tool, {d.epoch_ms('ts')} AS ts_ms FROM tr",
+        "SELECT conv_id, turn_idx, role, text, tool, epoch_ms(ts) AS ts_ms FROM tr",
     )
 
 
-def q_parse(d: Dialect = DUCKDB) -> str:
+def q_parse() -> str:
     return _q(
-        d,
         "SELECT conv_id, turn_idx, grammar, level_raw, service, message, text_ts_ms FROM parsed",
     )
 
 
-def q_route_errors(d: Dialect = DUCKDB) -> str:
+def q_route_errors() -> str:
     return _q(
-        d,
         "SELECT conv_id, turn_idx, role, tool, effective_ts_ms AS ts_ms,"
         " level, severity, severity_score, service, message"
         " FROM flagged WHERE is_valid AND level IN ('ERROR','CRITICAL')",
     )
 
 
-def q_route_tool_calls(d: Dialect = DUCKDB) -> str:
+def q_route_tool_calls() -> str:
     return _q(
-        d,
         "SELECT conv_id, turn_idx, role, tool, tool_category, is_sensitive,"
         " effective_ts_ms AS ts_ms, message"
         " FROM flagged WHERE is_valid AND tool <> ''",
     )
 
 
-def q_route_anomalies(d: Dialect = DUCKDB) -> str:
+def q_route_anomalies() -> str:
     return _q(
-        d,
-        f"SELECT conv_id, turn_idx, {d.epoch_ms('ts')} AS ts_ms,"
+        "SELECT conv_id, turn_idx, epoch_ms(ts) AS ts_ms,"
         " anomaly_reason AS reason FROM flagged WHERE NOT is_valid",
     )
 
 
-def q_kept_rows(d: Dialect = DUCKDB) -> str:
+def q_kept_rows() -> str:
     """The routed-row equality invariant: every kept turn, full identity."""
     return _q(
-        d,
         "SELECT conv_id, turn_idx, level, service, message,"
         " effective_ts_ms AS ts_ms FROM kept",
     )
 
 
-def q_dedup(d: Dialect = DUCKDB) -> str:
+def q_dedup() -> str:
     return _q(
-        d,
         "SELECT dedup_key, conv_id, turn_idx, duplicate_count,"
         " first_ts_ms, last_ts_ms FROM dedup",
     )
 
 
-def q_report_buckets(d: Dialect = DUCKDB) -> str:
+def q_report_buckets() -> str:
     return _q(
-        d,
         "SELECT fingerprint, n_unique, total_log_count, error_count,"
         " warning_count, n_sources, first_ts_ms, last_ts_ms, rep_level,"
         " representative_message FROM buckets",
     )
 
 
-def q_report_buckets_fuzzy(d: Dialect = DUCKDB, threshold: float = 0.9) -> str:
-    """Near-miss cluster merging oracle (DuckDB only: recursive CTE + list
-    functions): distinct fingerprints whose template text is token-cosine
-    similar merge via exact transitive closure, then the bucket aggregation
+def q_report_buckets_fuzzy(threshold: float = 0.9) -> str:
+    """Near-miss cluster merging oracle (recursive CTE + list functions):
+    distinct fingerprints whose template text is token-cosine similar merge via exact transitive closure, then the bucket aggregation
     groups by component. Mirrors aggregate.report_buckets_fuzzy."""
     from .extras.similarity import sql_cosine_pairs_ctes
 
-    g = ", 'g'" if d.name == "duckdb" else ""
-    fp = f"level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#'{g})"
-    base = pipeline_ctes(d).replace("\nWITH ", "\nWITH RECURSIVE ", 1)
-    return f"""{base}, fps AS {d.mat}(
+    fp = "level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#', 'g')"
+    base = pipeline_ctes().replace("\nWITH ", "\nWITH RECURSIVE ", 1)
+    return f"""{base}, fps AS MATERIALIZED (
   SELECT fingerprint AS doc_id, fingerprint AS text FROM (
     SELECT DISTINCT {fp} AS fingerprint FROM dedup) u
 ), {sql_cosine_pairs_ctes("fps", threshold)}, ccedges AS (
@@ -338,9 +326,8 @@ SELECT a.component AS fingerprint, n_templates, n_unique, total_log_count,
 FROM fzagg a JOIN fzrep USING (component)"""
 
 
-def q_top_issues(d: Dialect = DUCKDB) -> str:
+def q_top_issues() -> str:
     return _q(
-        d,
         """SELECT rank, fingerprint, cluster_severity, cluster_score,
        total_log_count, error_count, representative_message
 FROM (
@@ -351,9 +338,8 @@ FROM (
     )
 
 
-def q_dedup_examples(d: Dialect = DUCKDB, n_examples: int = 3) -> str:
+def q_dedup_examples(n_examples: int = 3) -> str:
     return _q(
-        d,
         f"""SELECT dedup_key, example_rank, conv_id, turn_idx, level, service,
        message, ts_ms, duplicate_count
 FROM (
@@ -368,19 +354,17 @@ FROM (
     )
 
 
-def q_dedup_simhash(d: Dialect = DUCKDB, n_examples: int = 3) -> str:
-    """First-3-examples dedup keyed by the message SimHash (DuckDB only —
-    the hash arithmetic helpers emit DuckDB list syntax, like
-    q_log_search). Mirrors aggregate.dedup_examples_simhash."""
+def q_dedup_simhash(n_examples: int = 3) -> str:
+    """First-3-examples dedup keyed by the message SimHash. Mirrors
+    aggregate.dedup_examples_simhash."""
     from .extras.dedup import sql_mixed_token_hashes, sql_simhash_expr
 
     return _q(
-        d,
-        f""", ksh0 AS {d.mat}(
+        f""", ksh0 AS MATERIALIZED (
   SELECT conv_id, turn_idx, level, service, message, effective_ts_ms,
          {sql_mixed_token_hashes('message')} AS hs
   FROM kept
-), ksh AS {d.mat}(
+), ksh AS MATERIALIZED (
   SELECT conv_id, turn_idx, level, service, message, effective_ts_ms,
          {sql_simhash_expr('hs')} AS simhash
   FROM ksh0
@@ -399,42 +383,38 @@ FROM (
     )
 
 
-def q_route_stats(d: Dialect = DUCKDB) -> str:
+def q_route_stats() -> str:
     """Folded validate + sampling diagnostics: one registered query, both
     operator outputs intact (the driver caps its per-round check at 50
     queries, so near-duplicate small diagnostics share a row — VERDICT r5
     next-round #1)."""
-    vt = d.str_type
     return _q(
-        d,
-        f"""SELECT 'validate' AS check_name,
+        """SELECT 'validate' AS check_name,
        COALESCE(anomaly_reason, 'valid') AS reason,
        CAST(NULL AS BOOLEAN) AS keep_level,
        CAST(NULL AS BOOLEAN) AS keep_sampled,
        COUNT(*) AS n
 FROM classified GROUP BY 1, 2
 UNION ALL
-SELECT 'sampling' AS check_name, CAST(NULL AS {vt}) AS reason,
+SELECT 'sampling' AS check_name, CAST(NULL AS VARCHAR) AS reason,
        keep_level, keep_sampled, COUNT(*) AS n
 FROM flagged WHERE is_valid GROUP BY 1, 2, 3, 4""",
     )
 
 
-def q_enrich_dims(d: Dialect = DUCKDB) -> str:
+def q_enrich_dims() -> str:
     """Folded severity + tool/role broadcast-dictionary enrichment counts
     (one registered query, both dictionary joins checked)."""
-    vt = d.str_type
     return _q(
-        d,
-        f"""SELECT 'severity' AS dim, level, severity, severity_score,
+        """SELECT 'severity' AS dim, level, severity, severity_score,
        is_error, is_warning,
-       CAST(NULL AS {vt}) AS tool_category,
+       CAST(NULL AS VARCHAR) AS tool_category,
        CAST(NULL AS BOOLEAN) AS is_sensitive,
-       CAST(NULL AS {vt}) AS role_class, COUNT(*) AS n
+       CAST(NULL AS VARCHAR) AS role_class, COUNT(*) AS n
 FROM enriched WHERE level IS NOT NULL GROUP BY 1, 2, 3, 4, 5, 6
 UNION ALL
-SELECT 'tool_role' AS dim, CAST(NULL AS {vt}) AS level,
-       CAST(NULL AS {vt}) AS severity,
+SELECT 'tool_role' AS dim, CAST(NULL AS VARCHAR) AS level,
+       CAST(NULL AS VARCHAR) AS severity,
        CAST(NULL AS INTEGER) AS severity_score,
        CAST(NULL AS BOOLEAN) AS is_error, CAST(NULL AS BOOLEAN) AS is_warning,
        tool_category, is_sensitive, role_class, COUNT(*) AS n
@@ -442,11 +422,10 @@ FROM enriched GROUP BY 1, 2, 3, 4, 5, 6, 7, 8, 9""",
     )
 
 
-def q_report_api(d: Dialect = DUCKDB, n_recent: int = 5, n_top: int = 20) -> str:
+def q_report_api(n_recent: int = 5, n_top: int = 20) -> str:
     """Folded recent-reports + top-20-clusters API caps (both ORDER BY ..
     LIMIT shapes checked from one registered query)."""
     return _q(
-        d,
         f"""SELECT * FROM (
   SELECT 'recent_reports' AS api, fingerprint, cluster_severity,
          cluster_score, last_ts_ms,
@@ -465,14 +444,13 @@ SELECT * FROM (
     )
 
 
-def q_level_info_default(d: Dialect = DUCKDB) -> str:
+def q_level_info_default() -> str:
     """P8 reference semantics: an independent enrich->classify->route chain
     where a parsed-but-unknown level coalesces to INFO (log.go:66-86)."""
     info = dicts.level_defaults("INFO")
     keep_levels = ",".join(f"'{v}'" for v in ("ERROR", "CRITICAL", "WARNING"))
     h100 = dicts.hash100_sql("conv_key", "turn_idx")
     return _q(
-        d,
         f"""SELECT level, severity, COUNT(*) AS n,
        CAST(SUM(CASE WHEN keep_level OR keep_sampled THEN 1 ELSE 0 END) AS BIGINT) AS kept_n
 FROM (
@@ -484,12 +462,12 @@ FROM (
   FROM (
     SELECT p.*, COALESCE(severity_dict.level, '{info["level"]}') AS level,
            COALESCE(severity_dict.severity, '{info["severity"]}') AS severity,
-           COALESCE(text_ts_ms, {d.epoch_ms("ts")}) AS eff_ms,
+           COALESCE(text_ts_ms, epoch_ms(ts)) AS eff_ms,
       CASE WHEN text = '' THEN 'empty_text'
            WHEN p.grammar IS NULL THEN 'unparseable_ts'
            WHEN message IS NULL OR message = '' THEN 'empty_message'
-           WHEN COALESCE(text_ts_ms, {d.epoch_ms("ts")}) < {dicts.TS_LOW_MS}
-             OR COALESCE(text_ts_ms, {d.epoch_ms("ts")}) > {dicts.TS_HIGH_MS}
+           WHEN COALESCE(text_ts_ms, epoch_ms(ts)) < {dicts.TS_LOW_MS}
+             OR COALESCE(text_ts_ms, epoch_ms(ts)) > {dicts.TS_HIGH_MS}
              THEN 'invalid_bounds' END AS anomaly_reason
     FROM parsed p
     LEFT JOIN {dicts.severity_dict_values_sql()} ON p.level_raw = severity_dict.level_raw
@@ -498,11 +476,10 @@ FROM (
     )
 
 
-def q_api_logs(d: Dialect = DUCKDB, limit: int = 100) -> str:
+def q_api_logs(limit: int = 100) -> str:
     from .queries import API_SERVICE, API_T0_MS, API_T1_MS
 
     return _q(
-        d,
         "SELECT conv_id, turn_idx, effective_ts_ms AS ts_ms,"
         " level, service, message FROM kept"
         f" WHERE effective_ts_ms >= {API_T0_MS}"
@@ -512,7 +489,7 @@ def q_api_logs(d: Dialect = DUCKDB, limit: int = 100) -> str:
     )
 
 
-def q_log_search(d: Dialect = DUCKDB, query: str | None = None, limit: int | None = None) -> str:
+def q_log_search(query: str | None = None, limit: int | None = None) -> str:
     """Oracle for the semantic log search: the same query-side weights
     (computed once in Python, embedded as literals) joined against the
     hashed-token inverted index of kept messages."""
@@ -527,7 +504,6 @@ def q_log_search(d: Dialect = DUCKDB, query: str | None = None, limit: int | Non
         # (the Spark path returns an empty frame; 'VALUES ' would be a
         # syntax error). Same columns/types as the populated branch.
         return _q(
-            d,
             """SELECT conv_id, turn_idx, level, service, message,
        effective_ts_ms AS ts_ms, CAST(0.0 AS DOUBLE) AS score
 FROM kept WHERE FALSE""",
@@ -537,8 +513,7 @@ FROM kept WHERE FALSE""",
     # both the score join and the norms (mirroring the Spark tf -> norm
     # reuse) instead of tokenizing every kept message twice
     return _q(
-        d,
-        f""", lstf AS {d.mat}(
+        f""", lstf AS MATERIALIZED (
   SELECT conv_id, turn_idx, dim, COUNT(*) AS cnt FROM (
     SELECT conv_id, turn_idx,
            unnest({xh.sql_token_hashes('message')}) % {DOC_COSINE_DIM} AS dim
@@ -562,23 +537,18 @@ ORDER BY s.score DESC, k.conv_id, k.turn_idx LIMIT {limit}""",
     )
 
 
-def q_stream_window_counts(d: Dialect = DUCKDB) -> str:
+def q_stream_window_counts() -> str:
     """Tumbling 1h window counts (Spark window() aligns to epoch hours ==
     date_trunc('hour') for whole-hour windows)."""
-    trunc = (
-        "date_trunc('hour', ts)" if d.name == "duckdb" else "date_trunc('hour', ts)"
-    )
     return _q(
-        d,
-        f"SELECT {d.epoch_ms(trunc)} AS window_start_ms, level, COUNT(*) AS n"
+        "SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms, level, COUNT(*) AS n"
         " FROM flagged WHERE is_valid GROUP BY 1, 2",
     )
 
 
-def q_conv_stats(d: Dialect = DUCKDB) -> str:
+def q_conv_stats() -> str:
     """Per-conversation rollup (see queries.q_conv_stats)."""
     return _q(
-        d,
         """SELECT conv_id, n_turns, n_user_turns, n_assistant_turns,
        n_tool_calls, n_distinct_tools, n_errors, first_ts_ms, last_ts_ms,
        last_ts_ms - first_ts_ms AS duration_ms,
@@ -598,24 +568,17 @@ FROM (
     )
 
 
-def q_latency_profile(d: Dialect = DUCKDB) -> str:
+def q_latency_profile() -> str:
     """Per-service latency percentiles (see queries.q_latency_profile).
     quantile_cont == Spark's exact percentile (linear interpolation at
     p*(n-1)) — same definition, bit-identical after 4-dp rounding."""
     from .queries import LATENCY_RE
 
-    pat = _re(d, LATENCY_RE)
-    if d.name == "duckdb":
-        q = "quantile_cont(ms, [0.5, 0.95, 0.99])"
-        # DuckDB list subscripts are 1-based
-        p50, p95, p99 = f"({q})[1]", f"({q})[2]", f"({q})[3]"
-    else:
-        # Spark array subscripts are 0-based; element_at is 1-based and
-        # reads the same as the DuckDB branch
-        q = "percentile(ms, array(0.5D, 0.95D, 0.99D))"
-        p50, p95, p99 = (f"element_at({q}, {i})" for i in (1, 2, 3))
+    pat = _re(LATENCY_RE)
+    q = "quantile_cont(ms, [0.5, 0.95, 0.99])"
+    # DuckDB list subscripts are 1-based
+    p50, p95, p99 = f"({q})[1]", f"({q})[2]", f"({q})[3]"
     return _q(
-        d,
         f"""SELECT service, CAST(COUNT(*) AS BIGINT) AS n_timed,
        ROUND({p50}, 4) AS p50_ms,
        ROUND({p95}, 4) AS p95_ms,
@@ -629,13 +592,12 @@ FROM (
     )
 
 
-def q_conv_sessions(d: Dialect = DUCKDB) -> str:
+def q_conv_sessions() -> str:
     """Gap-based sessionization (see queries.q_conv_sessions).
     SESSION_GAP_MS is imported from queries to keep one source of truth."""
     from .queries import SESSION_GAP_MS
 
     return _q(
-        d,
         f"""SELECT conv_id, session_idx,
        CAST(COUNT(*) AS BIGINT) AS n_turns,
        CAST(MIN(effective_ts_ms) AS BIGINT) AS session_start_ms,
@@ -661,7 +623,7 @@ FROM (
     )
 
 
-def q_redact(d: Dialect = DUCKDB) -> str:
+def q_redact() -> str:
     """PII/identifier scrub of raw transcript text (see
     :mod:`timberline_spark.redact`): sequential regexp_replace chain plus
     per-class match counts on the original text."""
@@ -670,17 +632,13 @@ def q_redact(d: Dialect = DUCKDB) -> str:
     repl = "text"
     counts = []
     total = []
-    g = ", 'g'" if d.name == "duckdb" else ""
     for name, pat, tag in REDACT_PATTERNS:
-        p = _re(d, pat)
-        repl = f"regexp_replace({repl}, '{p}', '{tag}'{g})"
+        p = _re(pat)
+        repl = f"regexp_replace({repl}, '{p}', '{tag}', 'g')"
         cnt = f"CAST(len(regexp_extract_all(text, '{p}')) AS BIGINT)"
-        if d.name == "spark":
-            cnt = f"CAST(regexp_count(text, '{p}') AS BIGINT)"
         counts.append(f"{cnt} AS n_{name}")
         total.append(cnt)
     return _q(
-        d,
         "SELECT conv_id, turn_idx, "
         f"{repl} AS redacted_text, "
         + ", ".join(counts)
@@ -688,45 +646,35 @@ def q_redact(d: Dialect = DUCKDB) -> str:
     )
 
 
-def q_flexible_ts(d: Dialect = DUCKDB) -> str:
+def q_flexible_ts() -> str:
     """Oracle for the flexible-timestamp parse on this corpus's surfaces:
     the plain-grammar ts string and a numeric epoch-seconds string (the
     seconds-vs-millis heuristic multiplies by 1000)."""
-    if d.name == "duckdb":
-        txt = (
-            "epoch_ms(try_strptime(NULLIF(regexp_extract(text,"
-            f" '{_re(d, RE_PLAIN)}', 1), ''), '%Y-%m-%d %H:%M:%S'))"
-        )
-        num = "CAST(floor(epoch(ts)) AS BIGINT) * 1000"
-    else:
-        txt = (
-            "unix_millis(try_to_timestamp(NULLIF(regexp_extract(text,"
-            f" '{_re(d, RE_PLAIN)}', 1), ''), 'yyyy-MM-dd HH:mm:ss'))"
-        )
-        num = "unix_seconds(cast(ts as timestamp)) * 1000"
+    txt = (
+        "epoch_ms(try_strptime(NULLIF(regexp_extract(text,"
+        f" '{_re(RE_PLAIN)}', 1), ''), '%Y-%m-%d %H:%M:%S'))"
+    )
     return _q(
-        d,
-        f"SELECT conv_id, turn_idx, {txt} AS text_ts_ms, {num} AS num_ts_ms FROM tr",
+        f"SELECT conv_id, turn_idx, {txt} AS text_ts_ms,"
+        " CAST(floor(epoch(ts)) AS BIGINT) * 1000 AS num_ts_ms FROM tr",
     )
 
 
-def q_recent_logs(d: Dialect = DUCKDB, n: int = 1000) -> str:
+def q_recent_logs(n: int = 1000) -> str:
     return _q(
-        d,
         "SELECT conv_id, turn_idx, level, service, message,"
         " effective_ts_ms AS ts_ms FROM kept"
         f" ORDER BY effective_ts_ms DESC, conv_id, turn_idx LIMIT {n}",
     )
 
 
-def q_label_canon(d: Dialect = DUCKDB) -> str:
+def q_label_canon() -> str:
     # The Spark side canonicalizes an OPEN map (sorted k=v joined with '|');
     # the oracle is an independent formulation exploiting corpus knowledge:
     # labels, when present, are exactly {app, tier} (and 'app' < 'tier'),
     # surfaced through all three fallback paths (labels / kubernetes_labels
     # / kubernetes.labels — models/log.py:177-199).
     return _q(
-        d,
         "SELECT conv_id, turn_idx,"
         " CASE WHEN lab_app IS NOT NULL THEN"
         "   'app=' || lab_app || '|sev=' || lab_sev || '|tier=' || lab_tier"
@@ -735,15 +683,12 @@ def q_label_canon(d: Dialect = DUCKDB) -> str:
     )
 
 
-def q_common_labels(d: Dialect = DUCKDB) -> str:
-    g = ", 'g'" if d.name == "duckdb" else ""
+def q_common_labels() -> str:
     fp = (
-        "SELECT level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#'"
-        + g
-        + ") AS fingerprint, lab_app, lab_sev, lab_tier FROM dedup"
+        "SELECT level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#', 'g')"
+        " AS fingerprint, lab_app, lab_sev, lab_tier FROM dedup"
     )
     return _q(
-        d,
         f"""SELECT kv.fingerprint, kv.k, kv.v
 FROM (
   SELECT fingerprint, 'app' AS k, lab_app AS v FROM ({fp}) a WHERE lab_app IS NOT NULL
@@ -760,9 +705,8 @@ HAVING COUNT(*) = sz.n""",
     )
 
 
-def q_summary(d: Dialect = DUCKDB) -> str:
+def q_summary() -> str:
     return _q(
-        d,
         """SELECT t.total_logs_processed, t.error_count, t.warning_count,
        t.total_logs_processed - t.error_count - t.warning_count AS info_count,
        ROUND(t.error_count * 100.0 / NULLIF(t.total_logs_processed, 0), 4) AS error_rate,
@@ -782,4 +726,4 @@ FROM (
     )
 
 
-__all__ = [n for n in dir() if n.startswith("q_")] + ["pipeline_ctes", "SPARK", "DUCKDB"]
+__all__ = [n for n in dir() if n.startswith("q_")] + ["pipeline_ctes"]

@@ -59,10 +59,22 @@ def _window_bounds(counts: DataFrame) -> DataFrame:
     )
 
 
+def _classified_stream(
+    spark: SparkSession, src_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """The transcripts directory as a streaming source through the batch
+    path's parse -> enrich -> classify chain."""
+    stream = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+    )
+    return classify_turns(enrich_turns(spark, parse_turns(stream)))
+
+
 def stream_level_counts(
     spark: SparkSession,
     src_dir: str,
-    checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
     max_files_per_trigger: int = 8,
@@ -73,12 +85,7 @@ def stream_level_counts(
     beyond the watermark is dropped — the streaming expression of the
     reference's validity-window rejection.
     """
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    classified = classify_turns(enrich_turns(spark, parse_turns(stream)))
+    classified = _classified_stream(spark, src_dir, max_files_per_trigger)
     return _window_bounds(level_counts(classified.withWatermark("ts", watermark), window))
 
 
@@ -95,7 +102,7 @@ def run_available_now(
     bounds state when the same query runs in append/update mode on a real
     sink."""
     q = (
-        stream_level_counts(spark, src_dir, checkpoint_dir)
+        stream_level_counts(spark, src_dir)
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("complete")
@@ -127,8 +134,7 @@ def run_append_windows(
     micro-batch per source file so the watermark advances between files."""
     q = (
         stream_level_counts(
-            spark, src_dir, checkpoint_dir, window, watermark,
-            max_files_per_trigger=max_files_per_trigger,
+            spark, src_dir, window, watermark, max_files_per_trigger=max_files_per_trigger
         )
         .writeStream.format("parquet")
         .option("path", out_dir)
@@ -162,8 +168,7 @@ def start_processing_time(
     is the long-running deployment shape."""
     return (
         stream_level_counts(
-            spark, src_dir, checkpoint_dir, window, watermark,
-            max_files_per_trigger=max_files_per_trigger,
+            spark, src_dir, window, watermark, max_files_per_trigger=max_files_per_trigger
         )
         .writeStream.format("parquet")
         .option("path", out_dir)
@@ -236,18 +241,12 @@ def stream_dedup_examples(
     as the registered ``dedup_simhash`` query)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    classified = classify_turns(enrich_turns(spark, parse_turns(stream)))
-    base = classified.filter(F.col("kept")).select(
-        "conv_id",
-        "turn_idx",
-        "level",
-        "message",
-        F.col("effective_ts_ms").alias("ts_ms"),
+    base = (
+        _classified_stream(spark, src_dir, max_files_per_trigger)
+        .filter(F.col("kept"))
+        .select(
+            "conv_id", "turn_idx", "level", "message", F.col("effective_ts_ms").alias("ts_ms")
+        )
     )
     if key_mode == "simhash":
         from .extras.dedup import with_simhash

@@ -35,7 +35,9 @@ from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class Dialect:
-    """SQL dialect shims for the few functions Spark and DuckDB spell differently."""
+    """The few functions Spark and DuckDB spell differently in
+    :func:`transcripts_sql`, the one SQL text both engines run (Spark in
+    :func:`load_transcripts`, DuckDB in the oracle)."""
 
     name: str
     str_type: str
@@ -55,32 +57,10 @@ class Dialect:
             return f"date_format({e}, 'HH:mm:ss')"
         return f"strftime({e}, '%H:%M:%S')"
 
-    def epoch_ms(self, e: str) -> str:
-        if self.name == "spark":
-            return f"unix_millis(cast({e} as timestamp))"
-        return f"epoch_ms({e})"
-
     def epoch_s(self, e: str) -> str:
         if self.name == "spark":
             return f"unix_seconds(cast({e} as timestamp))"
         return f"CAST(floor(epoch({e})) AS BIGINT)"
-
-    def try_parse_ts(self, e: str) -> str:  # from 'YYYY-MM-DD HH:MM:SS'
-        if self.name == "spark":
-            return f"try_to_timestamp({e}, 'yyyy-MM-dd HH:mm:ss')"
-        return f"try_strptime({e}, '%Y-%m-%d %H:%M:%S')"
-
-    @property
-    def mat(self) -> str:
-        """CTE materialization hint. DuckDB INLINES single-reference CTEs,
-        substituting each stage's full expression tree into every downstream
-        reference — the pipeline's chained CTEs (a ~30-line CASE `text`
-        expression referenced by ~15 regexp_extracts, then again per parsed
-        field) explode multiplicatively: the un-hinted oracle allocated
-        gigabytes and hit vm.max_map_count on a 1000-row input. MATERIALIZED
-        pins each stage to evaluate once. Spark CTEs need no hint (Catalyst
-        subexpression handling keeps plans linear)."""
-        return "MATERIALIZED " if self.name == "duckdb" else ""
 
 
 SPARK = Dialect("spark", "STRING")
