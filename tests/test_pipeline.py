@@ -79,8 +79,6 @@ def test_resume_produces_identical_sinks(spark, outdirs, full_run):
     on the pipeline's own p_date): rows arriving later for a committed date
     are not picked up, by design."""
     from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
     from timberline_spark.pipeline import _p_date
     from timberline_spark.transcripts import load_transcripts
 
@@ -88,7 +86,7 @@ def test_resume_produces_identical_sinks(spark, outdirs, full_run):
     assert full_run.partitions_processed and not full_run.partitions_skipped
 
     tr = load_transcripts(spark, SF_TINY)
-    p_dates = route.classify_turns(enrich_turns(spark, parse_turns(tr))).select(
+    p_dates = route.classified(tr).select(
         "conv_id", "turn_idx", _p_date("effective_ts_ms").alias("p_date")
     )
     tagged = tr.join(p_dates, ["conv_id", "turn_idx"]).select(*tr.columns, "p_date")
@@ -400,15 +398,11 @@ def test_dedup_rollup_equals_direct(spark):
     dedup exactly (the pipeline relies on this to shuffle raw rows once)."""
     from timberline_spark import aggregate as agg
     from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
     from timberline_spark.pipeline import _p_date
     from timberline_spark.transcripts import load_transcripts
 
     kept = route.kept_turns(
-        route.classify_turns(
-            enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-        )
+        route.classified(load_transcripts(spark, SF_TINY))
     ).withColumn("p_date", _p_date("effective_ts_ms"))
     direct = normalize(agg.dedup_turns(kept).toPandas())
     rolled = normalize(
@@ -427,15 +421,11 @@ def test_dedup_rollup_audit_parity(spark):
     dedup_turns result unchanged too, with its sentinel at zero."""
     from timberline_spark import aggregate as agg
     from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
     from timberline_spark.pipeline import _p_date
     from timberline_spark.transcripts import load_transcripts
 
     kept = route.kept_turns(
-        route.classify_turns(
-            enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-        )
+        route.classified(load_transcripts(spark, SF_TINY))
     ).withColumn("p_date", _p_date("effective_ts_ms"))
     dated = agg.dedup_turns(kept, extra_keys=("p_date",), audit=True).cache()
     assert dated.filter("key_collision").count() == 0

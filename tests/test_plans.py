@@ -31,9 +31,7 @@ def _plan(df, mode="formatted"):
 @pytest.fixture(scope="module")
 def stage_table(spark):
     out = tempfile.mkdtemp(prefix="tl_plan_")
-    df = route.classify_turns(
-        enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-    )
+    df = route.classified(load_transcripts(spark, SF_TINY))
     df.write.mode("overwrite").parquet(out)
     yield out
     shutil.rmtree(out, ignore_errors=True)
@@ -145,9 +143,7 @@ def test_classify_chain_is_one_projection_per_level(spark):
     column had its own call; the optimizer collapsed them to the same plan
     it builds now). The bound leaves room for a few more levels, not for
     a per-column chain."""
-    df = route.classify_turns(
-        enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-    )
+    df = route.classified(load_transcripts(spark, SF_TINY))
     projects = _nodes(df._jdf.queryExecution().analyzed(), "Project")
     assert len(projects) <= 20, len(projects)
 
@@ -221,7 +217,7 @@ def test_classify_is_single_stage_no_shuffle(spark, stage_table):
     tr = spark.read.parquet(stage_table).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
-    df = route.classify_turns(enrich_turns(spark.sparkSession if hasattr(spark, "sparkSession") else spark, parse_turns(tr)))
+    df = route.classified(tr)
     plan = _plan(df, "simple")
     # only broadcast exchanges, no shuffle exchange on the fact side
     for line in plan.splitlines():
@@ -266,3 +262,37 @@ def test_no_per_element_literal_arrays():
         if pattern.search(line)
     ]
     assert not hits, hits
+
+
+def test_each_pipeline_policy_is_spelled_once():
+    """The Spark operators, the oracle SQL, streaming and curation read one
+    definition of each policy; a second spelling can drift from the first
+    (a curation gate and two top-issue orderings once did). Scan the source
+    for literal re-spellings and for the parse -> enrich -> classify chain
+    outside route.classified."""
+    import inspect
+
+    q = "[\"']"
+    patterns = {
+        "audit salt": rf"{q}#audit{q}",
+        "token regex": rf"{q}\[a-z0-9\]\+{q}",
+        "error classes": rf"{q}ERROR{q},\s*{q}CRITICAL{q}",
+        "actionable severities": rf"{q}medium{q},\s*{q}high{q},\s*{q}critical{q}",
+        "classify chain": r"classify_turns\(enrich_turns\(",
+    }
+    root = Path(__file__).resolve().parent.parent / "timberline_spark"
+    sources = {
+        path.relative_to(root).as_posix(): path.read_text()
+        for path in sorted(root.rglob("*.py"))
+    }
+    hits = {
+        what: [
+            f"{rel}:{n}"
+            for rel, text in sources.items()
+            for n, line in enumerate(text.splitlines(), 1)
+            if re.search(pat, line)
+        ]
+        for what, pat in patterns.items()
+    }
+    assert {what: len(h) for what, h in hits.items()} == dict.fromkeys(patterns, 1), hits
+    assert re.search(patterns["classify chain"], inspect.getsource(route.classified))

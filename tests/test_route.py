@@ -12,17 +12,13 @@ from pyspark.sql import functions as F
 from timberline_spark import route
 from timberline_spark.dicts import SAMPLING_RATE_PCT, HASH_A, HASH_B, HASH_P
 from timberline_spark.extras.xhash import py_char_hash
-from timberline_spark.enrich import enrich_turns
-from timberline_spark.parse import parse_turns
 from timberline_spark.transcripts import load_transcripts
 
 SF = "/root/testdata/sf0.001"
 
 
 def _classified(spark):
-    return route.classify_turns(
-        enrich_turns(spark, parse_turns(load_transcripts(spark, SF)))
-    )
+    return route.classified(load_transcripts(spark, SF))
 
 
 def test_sampling_is_pure_function_of_keys(spark):
@@ -53,7 +49,7 @@ def test_sampling_covers_arbitrary_conv_id_formats(spark):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    out = route.classify_turns(enrich_turns(spark, parse_turns(df))).cache()
+    out = route.classified(df).cache()
     # nothing null-hashes, nothing is dropped from classification
     assert out.filter(F.col("hash100").isNull()).count() == 0
     assert out.filter(F.col("kept").isNull()).count() == 0
@@ -107,7 +103,7 @@ def test_bounds_validation(spark):
         data,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    out = route.classify_turns(enrich_turns(spark, parse_turns(df)))
+    out = route.classified(df)
     got = {r.turn_idx: (r.is_valid, r.anomaly_reason) for r in out.collect()}
     assert got[0] == (False, "invalid_bounds")
     assert got[1] == (False, "invalid_bounds")

@@ -190,8 +190,6 @@ def test_stateful_streaming_dedup_equals_batch(spark):
     (single micro-batch over a ts-sorted source)."""
     from timberline_spark import aggregate as agg
     from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
 
     src = tempfile.mkdtemp(prefix="tl_sdedup_src_")
     ckpt = tempfile.mkdtemp(prefix="tl_sdedup_ckpt_")
@@ -214,11 +212,7 @@ def test_stateful_streaming_dedup_equals_batch(spark):
         streamed = run_dedup_examples_available_now(
             spark, src, ckpt, "sdedup", max_files_per_trigger=100
         )
-        kept = route.kept_turns(
-            route.classify_turns(
-                enrich_turns(spark, parse_turns(spark.read.parquet(src)))
-            )
-        )
+        kept = route.kept_turns(route.classified(spark.read.parquet(src)))
         batch = agg.dedup_examples(kept).select(
             "dedup_key", "example_rank", "conv_id", "turn_idx", "level",
             "message", "ts_ms"
@@ -243,14 +237,10 @@ def test_session_window_builtin_equals_gaps_and_islands(spark):
 
     mine = q_conv_sessions(spark, SF_TINY).toPandas()
 
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
-    from timberline_spark.route import classify_turns
+    from timberline_spark.route import classified
 
     df = (
-        classify_turns(
-            enrich_turns(spark, parse_turns(load_transcripts(spark, SF_TINY)))
-        )
+        classified(load_transcripts(spark, SF_TINY))
         .filter(F.col("is_valid"))
         .select(
             "conv_id",
@@ -291,11 +281,9 @@ def test_redact_composes_with_streaming_classify(spark):
 
     from pyspark.sql import functions as F
 
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
     from timberline_spark.redact import redact_text
-    from timberline_spark.route import classify_turns
-    from timberline_spark.streaming import TRANSCRIPT_SCHEMA
+    from timberline_spark.route import classified
+    from timberline_spark.transcripts import TRANSCRIPT_SCHEMA
 
     src = _tf.mkdtemp(prefix="tl_rd_src_")
     ckpt = _tf.mkdtemp(prefix="tl_rd_ckpt_")
@@ -305,7 +293,7 @@ def test_redact_composes_with_streaming_classify(spark):
         ).parquet(src)
 
         def scrubbed(df):
-            c = classify_turns(enrich_turns(spark, parse_turns(df)))
+            c = classified(df)
             return c.filter(F.col("is_valid")).select(
                 "conv_id", "turn_idx", redact_text(F.col("message")).alias("msg")
             )
@@ -346,8 +334,6 @@ def test_streaming_simhash_dedup_merges_near_identical(spark):
 
     from timberline_spark import aggregate as agg
     from timberline_spark import route
-    from timberline_spark.enrich import enrich_turns
-    from timberline_spark.parse import parse_turns
 
     src = tempfile.mkdtemp(prefix="tl_shdedup_src_")
     ckpt = tempfile.mkdtemp(prefix="tl_shdedup_ckpt_")
@@ -397,11 +383,7 @@ def test_streaming_simhash_dedup_merges_near_identical(spark):
         assert exact.select("dedup_key").distinct().count() > 2
 
         # batch twin parity (single ts-ordered micro-batch == batch sort)
-        kept = route.kept_turns(
-            route.classify_turns(
-                enrich_turns(spark, parse_turns(spark.read.parquet(src)))
-            )
-        )
+        kept = route.kept_turns(route.classified(spark.read.parquet(src)))
         batch = agg.dedup_examples_simhash(kept).select(
             F.col("simhash").cast("string").alias("dedup_key"),
             "example_rank", "conv_id", "turn_idx", "level", "message", "ts_ms",

@@ -1,6 +1,7 @@
 """North-rule packaging check: the pipeline runs via spark-submit
---py-files with every import resolved from dist/timberline_spark.zip
-(cwd outside the repo, so the zip is the only source of the package)."""
+--py-files with every import resolved from a zip built by
+scripts/package.sh (cwd outside the repo, so the zip is the only source of
+the package), and the committed dist/timberline_spark.zip is that zip."""
 
 from __future__ import annotations
 
@@ -21,11 +22,20 @@ SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not on this host"
 )
 def test_spark_submit_py_files_runs_pipeline():
-    subprocess.run(["sh", f"{REPO}/scripts/package.sh"], check=True, cwd=REPO)
     work = tempfile.mkdtemp(prefix="tl_submit_")
     try:
+        # build from a copy (outside the submit cwd), so the test never
+        # rewrites the tracked zip and the source tree is not importable
+        build = f"{work}/build"
+        shutil.copytree(f"{REPO}/timberline_spark", f"{build}/timberline_spark")
+        os.makedirs(f"{build}/scripts")
+        shutil.copy(f"{REPO}/scripts/package.sh", f"{build}/scripts")
+        subprocess.run(["sh", f"{build}/scripts/package.sh"], check=True)
+        built = f"{build}/dist/timberline_spark.zip"
+        with open(built, "rb") as a, open(f"{REPO}/dist/timberline_spark.zip", "rb") as b:
+            assert a.read() == b.read(), "dist/timberline_spark.zip is stale: run scripts/package.sh"
         shutil.copy(f"{REPO}/run_pipeline.py", work)
-        shutil.copy(f"{REPO}/dist/timberline_spark.zip", work)
+        shutil.copy(built, work)
         r = subprocess.run(
             [
                 SPARK_SUBMIT,

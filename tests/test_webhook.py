@@ -6,6 +6,8 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
+import pytest
+
 from timberline_spark.webhook import post_report
 
 
@@ -77,3 +79,40 @@ def test_webhook_spools_on_unreachable(tmp_path):
 def test_webhook_spool_only_no_url(tmp_path):
     res = post_report({"run_id": "w4"}, spool_dir=str(tmp_path))
     assert not res["delivered"] and res["spooled"]
+
+
+def test_webhook_spool_crash_keeps_earlier_spool(tmp_path, monkeypatch):
+    """A crash mid-spool (the write truncates its file, then raises) leaves
+    the earlier spool of the same run_id intact and no partial file
+    visible: the spool is published through a hidden temp file."""
+    import builtins
+    import os
+
+    import timberline_spark.webhook as W
+
+    first = post_report({"run_id": "w5", "n": 1}, spool_dir=str(tmp_path))
+    real_open = builtins.open
+
+    class _Crashing:
+        def __init__(self, *a, **k):
+            self.fh = real_open(*a, **k)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, s):
+            self.fh.write(s[: len(s) // 2])
+            self.fh.flush()
+            raise OSError("disk full")
+
+    monkeypatch.setattr(W, "open", _Crashing, raising=False)
+    with pytest.raises(OSError, match="disk full"):
+        post_report({"run_id": "w5", "n": 2}, spool_dir=str(tmp_path))
+    monkeypatch.undo()
+    visible = [n for n in os.listdir(tmp_path) if not n.startswith(".")]
+    assert visible == ["webhook_w5.json"]
+    with open(first["spooled"]) as fh:
+        assert json.load(fh) == {"run_id": "w5", "n": 1}

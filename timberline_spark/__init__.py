@@ -14,8 +14,8 @@ Stages (reference semantics cited per module):
   (test/bench input synthesis; no external data).
 - :mod:`timberline_spark.parse`       — grok/regex parse of raw turn text
   (fluent-bit parsers + log-ingestor dual-format parse).
-- :mod:`timberline_spark.enrich`      — broadcast dictionary joins
-  (severity / tool / role).
+- :mod:`timberline_spark.enrich`      — literal-map dictionary lookups,
+  no joins (severity / tool / role).
 - :mod:`timberline_spark.route`       — validation + deterministic
   keep/sample routing, fan-out to per-category sinks.
 - :mod:`timberline_spark.aggregate`   — dedup (duplicate_count), cluster

@@ -27,17 +27,28 @@ Reference semantics re-expressed as single-shuffle Spark plans:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dicts import LEVEL_META, SEVERITY_BUCKETS
+from . import dicts
 
-FREQ_BONUS_THRESHOLD = 10  # clusters with >= 10 total occurrences score +1
-TOP_ISSUES_N = 10  # models/log.py:296-299
+
+def dedup_key(message: Column) -> Column:
+    """The exact-dedup group key of a message: its lowercased text."""
+    return F.lower(message)
+
+
+def audit_hash(key_text: Column) -> Column:
+    """A 64-bit hash independent of ``xxhash64(key_text)``, for collision
+    audits. NOT multi-arg xxhash64(key_text, lit): Spark folds that as
+    XXH64("audit", seed=XXH64(key_text)), so a first-hash collision implies
+    a second-hash one and the sentinel is blind; concat feeds other bytes."""
+    return F.xxhash64(F.concat(key_text, F.lit("#audit")))
+
 
 def _level_priority(col):
     expr = F.lit(0)
-    for level, priority, _ in LEVEL_META:
+    for level, priority, _ in dicts.LEVEL_META:
         expr = F.when(col == level, priority).otherwise(expr)
     return expr
 
@@ -66,7 +77,7 @@ def dedup_turns(
     reference is the DuckDB oracle's ``GROUP BY`` on the string itself.
     """
     return _dedup_groups(
-        kept, extra_keys, F.lower(F.col("message")), F.count(F.lit(1)),
+        kept, extra_keys, dedup_key(F.col("message")), F.count(F.lit(1)),
         "effective_ts_ms", "effective_ts_ms", audit,
     )
 
@@ -135,13 +146,7 @@ def _dedup_groups(
     ]
     extra_cols = []
     if audit:
-        # independent second hash over a DIFFERENT byte sequence. NOT
-        # multi-arg xxhash64(key_text, lit): Spark folds that as
-        # XXH64("audit", seed=XXH64(key_text)) — a chained hash where a
-        # first-hash collision implies a second-hash collision, making the
-        # sentinel structurally blind. Hashing concat(key_text, salt) feeds
-        # different bytes, so the two collision events are independent.
-        h2 = F.xxhash64(F.concat(key_text, F.lit("#audit")))
+        h2 = audit_hash(key_text)
         aggs += [F.min(h2).alias("_h2min"), F.max(h2).alias("_h2max")]
         coll = F.col("_h2min") != F.col("_h2max")
         if "key_collision" in df.columns:
@@ -154,7 +159,7 @@ def _dedup_groups(
 
 def _unpack_rep():
     return [
-        F.lower(F.col("rep.message")).alias("dedup_key"),
+        dedup_key(F.col("rep.message")).alias("dedup_key"),
         F.col("rep.conv_id").alias("conv_id"),
         F.col("rep.turn_idx").alias("turn_idx"),
         F.col("rep.level").alias("level"),
@@ -201,16 +206,16 @@ def _first_n_examples(df: DataFrame, key: str, n_examples: int) -> DataFrame:
     )
 
 
-def dedup_examples(kept: DataFrame, n_examples: int = 3) -> DataFrame:
+def dedup_examples(kept: DataFrame, n_examples: int = dicts.DEDUP_EXAMPLES_N) -> DataFrame:
     """First-N-examples dedup retention (milvus.go:374-397 with
     MIN_EXAMPLES_BEFORE_EXCLUSION=3, config.go:46): the first 3 occurrences
     of each duplicate group stay stored as examples; later occurrences only
     count."""
-    df = kept.withColumn("dedup_key", F.lower(F.col("message")))
+    df = kept.withColumn("dedup_key", dedup_key(F.col("message")))
     return _first_n_examples(df, "dedup_key", n_examples)
 
 
-def dedup_examples_simhash(kept: DataFrame, n_examples: int = 3) -> DataFrame:
+def dedup_examples_simhash(kept: DataFrame, n_examples: int = dicts.DEDUP_EXAMPLES_N) -> DataFrame:
     """First-N-examples dedup keyed by the message's 32-bit SimHash instead
     of the exact normalized string: near-identical messages (differing in a
     few low-weight tokens whose votes don't flip any bit sign) share one
@@ -416,7 +421,7 @@ def report_buckets_merged(
     )
 
 
-def _truncate_message(c, limit: int = 200):
+def _truncate_message(c, limit: int = dicts.REPORT_MESSAGE_LIMIT):
     """Message truncation for reports (generator.py:93-99)."""
     return F.when(
         F.length(c) > limit, F.concat(F.substring(c, 1, limit - 3), F.lit("..."))
@@ -429,17 +434,17 @@ def score_clusters(buckets: DataFrame) -> DataFrame:
     ``cluster_score`` is staged as a column: every bucket bound reads it,
     and an inlined copy would be re-evaluated per reference."""
     base = F.lit(5)  # unknown level -> MEDIUM default (client.py:275-276)
-    for level, _, score in LEVEL_META:
+    for level, _, score in dicts.LEVEL_META:
         base = F.when(F.col("rep_level") == level, score).otherwise(base)
     score = F.least(
-        F.lit(10),
+        F.lit(dicts.SCORE_MAX),
         base
-        + F.when(F.col("total_log_count") >= FREQ_BONUS_THRESHOLD, 1).otherwise(0),
+        + F.when(F.col("total_log_count") >= dicts.FREQ_BONUS_THRESHOLD, 1).otherwise(0),
     )
     df = buckets.withColumn("cluster_score", score)
     bucket = F.lit("medium")
     numeric = F.lit(5)
-    for lo, hi, name, num in SEVERITY_BUCKETS:
+    for lo, hi, name, num in dicts.SEVERITY_BUCKETS:
         cond = (F.col("cluster_score") >= lo) & (F.col("cluster_score") <= hi)
         bucket = F.when(cond, name).otherwise(bucket)
         numeric = F.when(cond, num).otherwise(numeric)
@@ -447,7 +452,7 @@ def score_clusters(buckets: DataFrame) -> DataFrame:
         {
             "cluster_severity": bucket,
             "severity_numeric": numeric,
-            "actionable": bucket.isin("medium", "high", "critical"),
+            "actionable": bucket.isin(*dicts.ACTIONABLE_SEVERITIES),
         }
     )
 
@@ -462,7 +467,7 @@ def top_issue_order() -> list:
     ]
 
 
-def top_issues(scored: DataFrame, n: int = TOP_ISSUES_N) -> DataFrame:
+def top_issues(scored: DataFrame, n: int = dicts.TOP_ISSUES_N) -> DataFrame:
     """Top-N actionable clusters (W3) with deterministic tie-breaks.
 
     orderBy().limit(n) plans TakeOrderedAndProject — a parallel partial
@@ -517,7 +522,7 @@ def run_summary(scored: DataFrame, group_keys: tuple[str, ...] = ()) -> DataFram
             "error_rate": F.round(F.col("error_count") * 100.0 / total, 4),
             "warning_rate": F.round(F.col("warning_count") * 100.0 / total, 4),
             "top_issues_count": F.least(
-                F.lit(TOP_ISSUES_N), F.col("actionable_count")
+                F.lit(dicts.TOP_ISSUES_N), F.col("actionable_count")
             ).cast("long"),
         }
     )

@@ -34,6 +34,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .aggregate import audit_hash
 from .extras.textfns import (
     PACK_TOKEN_BUDGET,
     QUOTA_DEFAULT_PCT,
@@ -46,10 +47,10 @@ from .extras.textfns import (
     _pack_slot,
     _per_source,
     _punct_ratio,
-    _tokens,
     max_equal_run,
     sorted_bigrams,
 )
+from .extras.xhash import tokens
 from .pipeline import _publish_json
 
 # repetition gates (Gopher-style; loose defaults that only drop degenerate
@@ -101,7 +102,7 @@ def curate_docs(
     keeper, so each window partition carries the same independent
     second-hash sentinel as aggregate.dedup_turns: ``key_collision`` is
     true for every member of a group whose members disagree under
-    ``xxhash64(norm_text || '#audit')``, and the runner surfaces the sum.
+    ``aggregate.audit_hash(norm_text)``, and the runner surfaces the sum.
     The exact-text keeper reference is the DuckDB oracle of ``doc_curated``.
 
     The quality gate is ``doc_curated``'s ``_curate_gate`` with the two
@@ -113,7 +114,7 @@ def curate_docs(
     if shards is None:
         shards = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    s1 = df.select("doc_id", "source", "text", _tokens(F.col("text")).alias("toks"))
+    s1 = df.select("doc_id", "source", "text", tokens(F.col("text")).alias("toks"))
     # bigrams staged as a named column BEFORE max_equal_run references it
     # (HOF lambdas inline, not CSE, repeated exprs — see doc_repetition)
     s1b = s1.select("doc_id", "source", "text", "toks",
@@ -133,9 +134,7 @@ def curate_docs(
         "source",
         n_tok.alias("n_tokens"),
         F.xxhash64(norm).alias("norm_h"),
-        # independent second hash over DIFFERENT bytes (concat, not
-        # multi-arg xxhash64 — that chains seeds; see aggregate.dedup_turns)
-        F.xxhash64(F.concat(norm, F.lit("#audit"))).alias("norm_h2"),
+        audit_hash(norm).alias("norm_h2"),
         (
             _curate_gate(
                 _is_en(n_tok, _n_stopwords(F.col("text"))),

@@ -10,12 +10,14 @@ Reference semantics reproduced here (file:line into /root/reference):
   (1-4 low->2, 5-6 medium->5, 7-8 high->7, 9-10 critical->9); scoring-failure
   default = MEDIUM (``ai-analyzer/analyzer/llm/client.py:275-276``).
 - Error/warning classes: ``ai-analyzer/analyzer/analysis/engine.py:110-111``
-  (ERROR|CRITICAL -> error class, WARNING -> warning class).
+  (ERROR|CRITICAL -> ``ERROR_LEVELS``, WARNING -> ``WARNING_LEVELS``).
 - Keep/sample routing rule: ``helm/timberline/templates/
   fluent-bit-configmap.yaml:77-107`` — keep every line whose level matches
-  error/fatal/warn/panic, sample the rest at 10% (``values.yaml:25``). Our
-  sampling is a deterministic arithmetic hash, not math.random, so routed-row
-  sets are identical at every parallelism level.
+  error/fatal/warn/panic (``KEEP_LEVELS``), sample the rest at 10%
+  (``values.yaml:25``). Our sampling is a deterministic arithmetic hash, not
+  math.random, so routed-row sets are identical at every parallelism level.
+- Dedup/report policy: ``DEDUP_EXAMPLES_N``, ``TOP_ISSUES_N``, ``SCORE_MAX``,
+  ``FREQ_BONUS_THRESHOLD``, ``ACTIONABLE_SEVERITIES``, ``REPORT_MESSAGE_LIMIT``.
 - Timestamp validity bounds: ``log-ingestor/internal/models/log.go:43-64``
   (reject ts==0 / empty message / > now+1h / < now-10y). "now" is pinned to
   the reference snapshot date 2026-01-09T00:00:00Z for determinism (the
@@ -92,6 +94,18 @@ SEVERITY_BUCKETS: list[tuple[int, int, str, int]] = [
     (9, 10, "critical", 9),
 ]
 
+ERROR_LEVELS = ("ERROR", "CRITICAL")
+WARNING_LEVELS = ("WARNING",)
+KEEP_LEVELS = (*ERROR_LEVELS, *WARNING_LEVELS)  # error|fatal|warn|panic rule
+
+# -- dedup and report policy -------------------------------------------------
+DEDUP_EXAMPLES_N = 3  # MIN_EXAMPLES_BEFORE_EXCLUSION: milvus.go:374-397, config.go:46
+TOP_ISSUES_N = 10  # models/log.py:296-299
+FREQ_BONUS_THRESHOLD = 10  # clusters with >= 10 total occurrences score +1
+SCORE_MAX = SEVERITY_BUCKETS[-1][1]  # cluster scores clamp to the top bucket
+ACTIONABLE_SEVERITIES = ("medium", "high", "critical")
+REPORT_MESSAGE_LIMIT = 200  # representative-message truncation, generator.py:93-99
+
 TOOL_DICT: list[tuple[str, str, bool]] = [
     ("bash", "shell", True),
     ("search", "retrieval", False),
@@ -124,8 +138,8 @@ def severity_dict_rows() -> list[tuple[str, str, str, int, bool, bool]]:
                 canon,
                 bucket,
                 score,
-                canon in ("ERROR", "CRITICAL"),
-                canon == "WARNING",
+                canon in ERROR_LEVELS,
+                canon in WARNING_LEVELS,
             )
         )
     return rows
@@ -134,16 +148,9 @@ def severity_dict_rows() -> list[tuple[str, str, str, int, bool, bool]]:
 def level_defaults(level: str) -> dict:
     """The enrichment attributes a canonical level implies — used for the
     reference's default-INFO fallback (log.go:66-86)."""
-    meta = {lv: sc for lv, _, sc in LEVEL_META}
-    score = meta[level]
-    bucket = next(b for lo, hi, b, _ in SEVERITY_BUCKETS if lo <= score <= hi)
-    return {
-        "level": level,
-        "severity": bucket,
-        "severity_score": score,
-        "is_error": level in ("ERROR", "CRITICAL"),
-        "is_warning": level == "WARNING",
-    }
+    row = next(r for r in severity_dict_rows() if r[1] == level)
+    keys = ("level", "severity", "severity_score", "is_error", "is_warning")
+    return dict(zip(keys, row[1:]))
 
 
 # ---- SQL VALUES literals for the DuckDB oracle ------------------------------

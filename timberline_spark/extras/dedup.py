@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import xhash as xh
-from .textfns import TOKEN_RE, _norm_text
+from .textfns import _norm_text
 
 SHINGLE_K = 3
 MINHASH_PERMS = 16
@@ -95,9 +95,7 @@ def _shingles(col):
         )).otherwise(F.array().cast("array<string>"))
         return F.array_distinct(sh)
 
-    return xh.let(
-        F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0), _build
-    )
+    return xh.let(xh.tokens(col), _build)
 
 
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,7 +463,7 @@ WITH sh0 AS (
   SELECT doc_id, list_distinct(list_transform(
       range(1, greatest(len(toks) - {SHINGLE_K - 2}, 1)),
       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-  FROM (SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS toks
+  FROM (SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
         FROM documents)
 ), docs AS (
   SELECT doc_id, sh, len(sh) AS n_sh FROM sh0 WHERE len(sh) > 0

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from . import xhash as xh
 
-TOKEN_RE = "[a-z0-9]+"
 BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"  # word / number / punct pieces
 EN_STOPWORDS = (
     "the,a,of,and,to,in,is,it,that,was,for,on,are,as,with,at,by,an,be,this"
@@ -35,10 +34,6 @@ LANG_STOPWORD_MIN_RATIO = 0.03  # >=3% stopword tokens -> English
 # cross-engine polynomial over (token length, first char) per token.
 FP_MULT = 31
 FP_MOD = 1_000_000_007
-
-
-def _tokens(col):
-    return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
 
 
 def _doc_hash() -> Column:
@@ -89,7 +84,7 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # toks staged as a named column: the mean-token-len and fingerprint
     # HOF folds below reference it repeatedly (HOF lambdas inline, not CSE)
     s1 = df.select(
-        "doc_id", "lang", "text", _tokens(F.col("text")).alias("toks")
+        "doc_id", "lang", "text", xh.tokens(F.col("text")).alias("toks")
     )
     n_tok = F.size("toks").cast("long")
     n_stop = _n_stopwords(F.col("text"))
@@ -172,7 +167,7 @@ def doc_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
+    toks = xh.tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
     n_stop = _n_stopwords(F.col("text"))
     scored = df.select(
@@ -203,12 +198,12 @@ def oracle_curated() -> str:
 WITH scored AS (
   SELECT doc_id,
     regexp_replace(trim(lower(text)), '[ ]+', ' ', 'g') AS norm_text,
-    CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens,
+    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
     ROUND(len(regexp_extract_all(lower(text), '{PUNCT_RE}'))
       / NULLIF(CAST(length(text) AS DOUBLE), 0.0), 4) AS punct_ratio,
-    (len(regexp_extract_all(lower(text), '{TOKEN_RE}')) > 0 AND
+    (len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) > 0 AND
      CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS DOUBLE)
-       / len(regexp_extract_all(lower(text), '{TOKEN_RE}'))
+       / len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'))
        >= {LANG_STOPWORD_MIN_RATIO}) AS is_en
   FROM documents
 ), keepers AS (
@@ -403,7 +398,7 @@ def doc_pack_sequences(
         shards = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     shard = (_doc_hash() % shards).cast("long")
-    n_tok = F.size(_tokens(F.col("text"))).cast("long")
+    n_tok = F.size(xh.tokens(F.col("text"))).cast("long")
     base = df.select("doc_id", shard.alias("shard"), n_tok.alias("n_tokens"))
     w = (
         Window.partitionBy("shard")
@@ -435,7 +430,7 @@ def oracle_pack_sequences(
 WITH base AS (
   SELECT doc_id,
     CAST(({h}) % {int(shards)} AS BIGINT) AS shard,
-    CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens
+    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens
   FROM documents
 ),
 c AS (
@@ -494,7 +489,7 @@ def doc_token_mix(
     base = df.select(
         "doc_id",
         "source",
-        F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.size(xh.tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     share_ppm = _per_source({src: round(s * _PPM) for src, s in tg.items()}, 0)
     totals = (
@@ -543,7 +538,7 @@ def oracle_token_mix(targets: dict[str, float] | None = None) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, source,
-    CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens
+    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens
   FROM documents
 ), totals AS (
   SELECT source, SUM(n_tokens) AS src_tokens,
@@ -583,7 +578,7 @@ def doc_vocab(spark: SparkSession, sf_dir: str, top_k: int = VOCAB_TOP_K) -> Dat
     from pyspark.sql import Window
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = df.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
+    toks = df.select("doc_id", F.explode(xh.tokens(F.col("text"))).alias("token"))
     counts = toks.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("n_occurrences"),
         F.count_distinct("doc_id").cast("long").alias("n_docs"),
@@ -604,7 +599,7 @@ FROM (
     CAST(COUNT(*) AS BIGINT) AS n_occurrences,
     CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
   FROM (
-    SELECT doc_id, unnest(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS token
+    SELECT doc_id, unnest(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS token
     FROM documents
   ) GROUP BY token
 ) ORDER BY n_occurrences DESC, token ASC LIMIT {int(top_k)}"""
@@ -637,7 +632,7 @@ def doc_tfidf_topterms(
     from pyspark.sql import Window
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = df.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
+    toks = df.select("doc_id", F.explode(xh.tokens(F.col("text"))).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -664,7 +659,7 @@ def doc_tfidf_topterms(
 def oracle_tfidf_topterms(top_n: int = TFIDF_TOP_TERMS) -> str:
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS token
+  SELECT doc_id, unnest(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS token
   FROM documents
 ),
 tf AS (
@@ -753,14 +748,14 @@ def oracle_contamination(
     return f"""
 WITH probes(probe_id, probe_text) AS (VALUES {probe_values}),
 dt AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS toks
+  SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
   FROM documents
 ),
 ds AS (
   SELECT doc_id, unnest({sh}) AS shingle FROM dt
 ),
 pt AS (
-  SELECT probe_id, regexp_extract_all(lower(probe_text), '{TOKEN_RE}') AS toks
+  SELECT probe_id, regexp_extract_all(lower(probe_text), '{xh.TOKEN_RE}') AS toks
   FROM probes
 ),
 ps AS (
@@ -844,7 +839,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Catalyst does not CSE across when()/HOF lambda boundaries) — measured
     # 16.9 s vs 0.5 s for identical output at sf0.1.
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    s1 = df.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    s1 = df.select("doc_id", xh.tokens(F.col("text")).alias("toks"))
     s2 = s1.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_tokens"),
@@ -884,7 +879,7 @@ def oracle_repetition() -> str:
     # implementation.
     return f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS toks
+  SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
   FROM documents
 ),
 g AS (
@@ -914,7 +909,7 @@ def oracle_token_counts() -> str:
     return f"""
 SELECT doc_id,
   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-  CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens,
+  CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
   CAST(len(regexp_extract_all(text, '{BPE_RE}')) AS BIGINT) AS n_bpe_pieces,
   CAST(length(text) AS BIGINT) AS n_chars_actual
 FROM documents"""
@@ -924,10 +919,10 @@ def oracle_quality() -> str:
     return f"""
 WITH c AS (
   SELECT doc_id, text,
-    CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens,
+    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
     CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS BIGINT) AS n_stopwords,
     CAST(len(regexp_extract_all(lower(text), '{PUNCT_RE}')) AS BIGINT) AS n_punct,
-    CAST(list_sum(list_transform(regexp_extract_all(lower(text), '{TOKEN_RE}'),
+    CAST(list_sum(list_transform(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'),
         t -> length(t))) AS BIGINT) AS tok_chars
   FROM documents
 )
@@ -942,7 +937,7 @@ def oracle_lang_id() -> str:
     return f"""
 WITH c AS (
   SELECT doc_id, lang,
-    CAST(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS BIGINT) AS n_tokens,
+    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
     CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS BIGINT) AS n_stopwords
   FROM documents
 )
@@ -958,7 +953,7 @@ def oracle_fingerprint() -> str:
 SELECT doc_id,
   list_reduce(
     list_prepend(CAST(0 AS BIGINT),
-      list_transform(regexp_extract_all(lower(text), '{TOKEN_RE}'),
+      list_transform(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'),
                      t -> CAST(length(t) * 17 + ascii(t) AS BIGINT))),
     (acc, x) -> (acc * {FP_MULT} + x) % {FP_MOD}) AS fingerprint
 FROM documents"""

@@ -60,10 +60,14 @@ def char_hash(col: Column) -> Column:
     )
 
 
+def tokens(text_col: Column) -> Column:
+    """array<string> of the TOKEN_RE tokens of the lowercased text."""
+    return F.regexp_extract_all(F.lower(text_col), F.lit(TOKEN_RE), 0)
+
+
 def token_hashes(text_col: Column) -> Column:
     """array<long> of per-token polynomial hashes (lowercased TOKEN_RE)."""
-    toks = F.regexp_extract_all(F.lower(text_col), F.lit(TOKEN_RE), 0)
-    return F.transform(toks, char_hash)
+    return F.transform(tokens(text_col), char_hash)
 
 
 def shingle_hashes(tok_hash_col: Column, k: int = 3) -> Column:

@@ -67,13 +67,10 @@ from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import route
-from .enrich import enrich_turns
-from .parse import parse_turns
-from .transcripts import load_transcripts
+from .transcripts import TRANSCRIPT_SCHEMA, load_transcripts
 
 STAGE_CLASSIFIED = "stage_classified"
 SINKS = ("sink_errors", "sink_tool_calls", "sink_anomalies")
-AGG_TABLES = ("report_buckets", "top_issues", "report_summary")
 
 LINEAGE_SCHEMA = (
     T.StructType().add("run_id", "string").add("stage", "string")
@@ -174,30 +171,14 @@ def _publish_rows(
     A fixed name replaces that file: the run's ``_metrics`` rows
     (``_metrics_file``) are republished whole by every attempt, and a
     small result table is the single file SMALL_TABLE_FILE. Columns are
-    typed from the Spark schema, so an empty table stays readable; types
-    outside the primitive map (arrays, maps, decimals) fall back to
-    pyarrow's inference over the values instead of failing the run."""
+    typed by PySpark's own Spark -> Arrow converter, so an empty table stays
+    readable and complex types (arrays, maps, timestamps) need no mapping."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pa_types = {
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "string": pa.string(),
-        "boolean": pa.bool_(),
-        "date": pa.date32(),
-        "timestamp": pa.timestamp("us"),
-        "timestamp_ntz": pa.timestamp("us"),
-        "binary": pa.binary(),
-    }
-    cols = list(zip(*rows)) or [()] * len(schema.fields)
-    t = pa.table(
-        {
-            f.name: pa.array(list(col), type=pa_types.get(f.dataType.simpleString()))
-            for f, col in zip(schema.fields, cols)
-        }
+    t = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)
     )
     name = name or f"part-{uuid.uuid4().hex}.parquet"
     _publish(f"{out_dir}/{table}/{name}", lambda tmp: pq.write_table(t, tmp))
@@ -320,7 +301,7 @@ def run_pipeline(
             F.col("labels"), lambda _k, v: redact_text(v)
         )
     classified = (
-        route.classify_turns(enrich_turns(spark, parse_turns(tr)))
+        route.classified(tr)
         .select(*stage_cols)
         .withColumns(derived)
     )
@@ -613,9 +594,7 @@ def iceberg_ddl(table: str = "transcripts") -> str:
     """The Iceberg DDL this layout maps to on a real cluster (S5 analog —
     log-ingestor/internal/storage/milvus.go:100-179 collection bootstrap)."""
     return (
-        f"CREATE TABLE IF NOT EXISTS {table} ("
-        " conv_id string, turn_idx int, role string, text string,"
-        " tool string, ts timestamp)"
+        f"CREATE TABLE IF NOT EXISTS {table} ( {TRANSCRIPT_SCHEMA})"
         " USING iceberg PARTITIONED BY (days(ts), bucket(64, conv_id))"
     )
 

@@ -21,8 +21,7 @@ from .transcripts import load_transcripts
 
 
 def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = load_transcripts(spark, sf_dir)
-    return route.classify_turns(enrich_turns(spark, parse_turns(tr)))
+    return route.classified(load_transcripts(spark, sf_dir))
 
 
 def _deduped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,16 +28,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dicts import (
+    ERROR_LEVELS,
     HASH_A,
     HASH_B,
     HASH_P,
+    KEEP_LEVELS,
     SAMPLING_RATE_PCT,
     TS_HIGH_MS,
     TS_LOW_MS,
 )
-
-KEEP_LEVELS = ("ERROR", "CRITICAL", "WARNING")  # error|fatal|warn|panic rule
-ERROR_SINK_LEVELS = ("ERROR", "CRITICAL")
+from .enrich import enrich_turns
+from .parse import parse_turns
 
 ANOMALY_REASONS = (
     "empty_text",
@@ -100,6 +101,11 @@ def classify_turns(df: DataFrame) -> DataFrame:
     return df
 
 
+def classified(tr: DataFrame) -> DataFrame:
+    """A transcripts frame through the parse -> enrich -> classify chain."""
+    return classify_turns(enrich_turns(tr.sparkSession, parse_turns(tr)))
+
+
 # --- per-category sinks (fan-out). Each is a projection+filter over the
 # classified frame; Catalyst prunes columns and pushes the filters to the
 # scan when these run straight off the source table. -------------------------
@@ -107,7 +113,7 @@ def classify_turns(df: DataFrame) -> DataFrame:
 
 def errors_sink(df: DataFrame) -> DataFrame:
     return df.filter(
-        F.col("is_valid") & F.col("level").isin(*ERROR_SINK_LEVELS)
+        F.col("is_valid") & F.col("level").isin(*ERROR_LEVELS)
     ).select(
         "conv_id",
         "turn_idx",

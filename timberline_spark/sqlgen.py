@@ -3,9 +3,13 @@
 The driver verifies each Spark query against SQL run by DuckDB on the same
 parquet inputs. This module builds that SQL from the same constants (regex
 patterns, dictionaries, hash arithmetic, bounds) the Spark pipeline uses —
-one source of truth, two independent executions. Only the oracle runs it,
-so it is spelled for DuckDB alone; the transcripts derivation it starts
-from (``transcripts.transcripts_sql``) is the one SQL text both engines run.
+one source of truth, two independent executions: the policy constants
+(``KEEP_LEVELS``, ``ERROR_LEVELS``, ``DEDUP_EXAMPLES_N``, ``TOP_ISSUES_N``,
+``FREQ_BONUS_THRESHOLD``, ``SCORE_MAX``, ``ACTIONABLE_SEVERITIES``,
+``REPORT_MESSAGE_LIMIT``) come from :mod:`dicts`, and :func:`_fingerprint_sql`
+alone builds the cluster fingerprint. Only the oracle runs this SQL, so it
+is spelled for DuckDB alone; the transcripts derivation it starts from
+(``transcripts.transcripts_sql``) is the one SQL text both engines run.
 
 The chain mirrors the stages 1:1::
 
@@ -31,6 +35,16 @@ def _re(pat: str) -> str:
 def _json_str(path: str) -> str:
     """JSON string extraction from ``jtext`` (unescapes like from_json)."""
     return f"json_extract_string(jtext, '{path}')"
+
+
+def _sql_in(values) -> str:
+    """A SQL ``IN`` list of string literals."""
+    return ",".join(f"'{v}'" for v in values)
+
+
+def _fingerprint_sql(level: str, message: str) -> str:
+    """:func:`aggregate.cluster_fingerprint` as DuckDB SQL."""
+    return f"{level} || '|' || regexp_replace(LOWER({message}), '[0-9]+', '#', 'g')"
 
 
 def _level_priority_sql(col: str) -> str:
@@ -67,7 +81,7 @@ def pipeline_ctes() -> str:
     ``jtext`` is NULL unless the row is a parseable JSON object: DuckDB's
     json_extract_* raises on malformed JSON (no lazy CASE lanes), so the
     source column is nulled first."""
-    keep_levels = ",".join(f"'{v}'" for v in ("ERROR", "CRITICAL", "WARNING"))
+    keep_levels = _sql_in(dicts.KEEP_LEVELS)
     h100 = dicts.hash100_sql("conv_key", "turn_idx")
     return f"""
 WITH tr AS MATERIALIZED (
@@ -169,8 +183,8 @@ WITH tr AS MATERIALIZED (
          CAST(n_sources AS BIGINT) AS n_sources,
          cluster_first_ts_ms AS first_ts_ms, cluster_last_ts_ms AS last_ts_ms,
          level AS rep_level,
-         CASE WHEN LENGTH(message) > 200
-              THEN SUBSTRING(message, 1, 197) || '...' ELSE message
+         CASE WHEN LENGTH(message) > {dicts.REPORT_MESSAGE_LIMIT}
+              THEN SUBSTRING(message, 1, {dicts.REPORT_MESSAGE_LIMIT - 3}) || '...' ELSE message
          END AS representative_message
   FROM (
     SELECT *,
@@ -187,7 +201,7 @@ WITH tr AS MATERIALIZED (
       MAX(last_ts_ms) OVER (PARTITION BY fingerprint) AS cluster_last_ts_ms
     FROM (
       SELECT dd.*,
-        dd.level || '|' || regexp_replace(LOWER(dd.message), '[0-9]+', '#', 'g') AS fingerprint,
+        {_fingerprint_sql("dd.level", "dd.message")} AS fingerprint,
         {_level_priority_sql("dd.level")} AS level_priority
       FROM dedup dd
     ) f
@@ -196,11 +210,11 @@ WITH tr AS MATERIALIZED (
   SELECT *,
     {_bucket_sql("cluster_score", "name")} AS cluster_severity,
     {_bucket_sql("cluster_score", "num")} AS severity_numeric,
-    {_bucket_sql("cluster_score", "name")} IN ('medium','high','critical') AS actionable
+    {_bucket_sql("cluster_score", "name")} IN ({_sql_in(dicts.ACTIONABLE_SEVERITIES)}) AS actionable
   FROM (
     SELECT b.*,
-      LEAST(10, {_base_score_sql("rep_level")}
-        + CASE WHEN total_log_count >= 10 THEN 1 ELSE 0 END) AS cluster_score
+      LEAST({dicts.SCORE_MAX}, {_base_score_sql("rep_level")}
+        + CASE WHEN total_log_count >= {dicts.FREQ_BONUS_THRESHOLD} THEN 1 ELSE 0 END) AS cluster_score
     FROM buckets b
   ) s
 )"""
@@ -229,7 +243,7 @@ def q_route_errors() -> str:
     return _q(
         "SELECT conv_id, turn_idx, role, tool, effective_ts_ms AS ts_ms,"
         " level, severity, severity_score, service, message"
-        " FROM flagged WHERE is_valid AND level IN ('ERROR','CRITICAL')",
+        f" FROM flagged WHERE is_valid AND level IN ({_sql_in(dicts.ERROR_LEVELS)})",
     )
 
 
@@ -277,7 +291,7 @@ def q_report_buckets_fuzzy(threshold: float = 0.9) -> str:
     groups by component. Mirrors aggregate.report_buckets_fuzzy."""
     from .extras.similarity import sql_cosine_pairs_ctes
 
-    fp = "level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#', 'g')"
+    fp = _fingerprint_sql("level", "message")
     base = pipeline_ctes().replace("\nWITH ", "\nWITH RECURSIVE ", 1)
     return f"""{base}, fps AS MATERIALIZED (
   SELECT fingerprint AS doc_id, fingerprint AS text FROM (
@@ -309,8 +323,8 @@ def q_report_buckets_fuzzy(threshold: float = 0.9) -> str:
   FROM fz GROUP BY component
 ), fzrep AS (
   SELECT component, level AS rep_level,
-    CASE WHEN LENGTH(message) > 200
-         THEN SUBSTRING(message, 1, 197) || '...' ELSE message
+    CASE WHEN LENGTH(message) > {dicts.REPORT_MESSAGE_LIMIT}
+         THEN SUBSTRING(message, 1, {dicts.REPORT_MESSAGE_LIMIT - 3}) || '...' ELSE message
     END AS representative_message
   FROM (
     -- rn3: fz inherits dedup's rn (constant 1); an alias named rn would
@@ -328,17 +342,17 @@ FROM fzagg a JOIN fzrep USING (component)"""
 
 def q_top_issues() -> str:
     return _q(
-        """SELECT rank, fingerprint, cluster_severity, cluster_score,
+        f"""SELECT rank, fingerprint, cluster_severity, cluster_score,
        total_log_count, error_count, representative_message
 FROM (
   SELECT *, ROW_NUMBER() OVER (ORDER BY cluster_score DESC,
       total_log_count DESC, fingerprint) AS rank
   FROM scored WHERE actionable
-) t WHERE rank <= 10""",
+) t WHERE rank <= {dicts.TOP_ISSUES_N}""",
     )
 
 
-def q_dedup_examples(n_examples: int = 3) -> str:
+def q_dedup_examples(n_examples: int = dicts.DEDUP_EXAMPLES_N) -> str:
     return _q(
         f"""SELECT dedup_key, example_rank, conv_id, turn_idx, level, service,
        message, ts_ms, duplicate_count
@@ -354,7 +368,7 @@ FROM (
     )
 
 
-def q_dedup_simhash(n_examples: int = 3) -> str:
+def q_dedup_simhash(n_examples: int = dicts.DEDUP_EXAMPLES_N) -> str:
     """First-3-examples dedup keyed by the message SimHash. Mirrors
     aggregate.dedup_examples_simhash."""
     from .extras.dedup import sql_mixed_token_hashes, sql_simhash_expr
@@ -448,7 +462,7 @@ def q_level_info_default() -> str:
     """P8 reference semantics: an independent enrich->classify->route chain
     where a parsed-but-unknown level coalesces to INFO (log.go:66-86)."""
     info = dicts.level_defaults("INFO")
-    keep_levels = ",".join(f"'{v}'" for v in ("ERROR", "CRITICAL", "WARNING"))
+    keep_levels = _sql_in(dicts.KEEP_LEVELS)
     h100 = dicts.hash100_sql("conv_key", "turn_idx")
     return _q(
         f"""SELECT level, severity, COUNT(*) AS n,
@@ -685,7 +699,7 @@ def q_label_canon() -> str:
 
 def q_common_labels() -> str:
     fp = (
-        "SELECT level || '|' || regexp_replace(LOWER(message), '[0-9]+', '#', 'g')"
+        f"SELECT {_fingerprint_sql('level', 'message')}"
         " AS fingerprint, lab_app, lab_sev, lab_tier FROM dedup"
     )
     return _q(
@@ -707,12 +721,12 @@ HAVING COUNT(*) = sz.n""",
 
 def q_summary() -> str:
     return _q(
-        """SELECT t.total_logs_processed, t.error_count, t.warning_count,
+        f"""SELECT t.total_logs_processed, t.error_count, t.warning_count,
        t.total_logs_processed - t.error_count - t.warning_count AS info_count,
        ROUND(t.error_count * 100.0 / NULLIF(t.total_logs_processed, 0), 4) AS error_rate,
        ROUND(t.warning_count * 100.0 / NULLIF(t.total_logs_processed, 0), 4) AS warning_rate,
        c.clusters_found, c.actionable_count,
-       CAST(LEAST(10, c.actionable_count) AS BIGINT) AS top_issues_count
+       CAST(LEAST({dicts.TOP_ISSUES_N}, c.actionable_count) AS BIGINT) AS top_issues_count
 FROM (
   SELECT CAST(COALESCE(SUM(duplicate_count), 0) AS BIGINT) AS total_logs_processed,
          CAST(COALESCE(SUM(CASE WHEN is_error THEN duplicate_count ELSE 0 END), 0) AS BIGINT) AS error_count,

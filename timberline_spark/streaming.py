@@ -22,14 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .enrich import enrich_turns
-from .parse import parse_turns
-from .route import classify_turns
-
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string,"
-    " ts timestamp"
-)
+from . import route
+from .aggregate import dedup_key
+from .dicts import DEDUP_EXAMPLES_N
+from .transcripts import TRANSCRIPT_SCHEMA
 
 
 def level_counts(classified: DataFrame, window: str = "1 hour", ts="ts") -> DataFrame:
@@ -69,7 +65,7 @@ def _classified_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
     )
-    return classify_turns(enrich_turns(spark, parse_turns(stream)))
+    return route.classified(stream)
 
 
 def stream_level_counts(
@@ -186,7 +182,6 @@ def start_processing_time(
 # Streaming expression: applyInPandasWithState keyed on dedup_key, a per-key
 # seen-counter as state, emitting only rows whose arrival rank is <= 3.
 
-DEDUP_EXAMPLES_N = 3
 _DEDUP_OUT_SCHEMA = (
     "dedup_key string, example_rank int, conv_id string, turn_idx int,"
     " level string, message string, ts_ms long"
@@ -251,25 +246,15 @@ def stream_dedup_examples(
     if key_mode == "simhash":
         from .extras.dedup import with_simhash
 
-        kept = with_simhash(base, "message", "_simhash").select(
-            F.col("_simhash").cast("string").alias("dedup_key"),
-            "conv_id",
-            "turn_idx",
-            "level",
-            "message",
-            "ts_ms",
-        )
+        base = with_simhash(base, "message", "_simhash")
+        key = F.col("_simhash").cast("string")
     elif key_mode == "exact":
-        kept = base.select(
-            F.lower(F.col("message")).alias("dedup_key"),
-            "conv_id",
-            "turn_idx",
-            "level",
-            "message",
-            "ts_ms",
-        )
+        key = dedup_key(F.col("message"))
     else:
         raise ValueError(f"unknown key_mode: {key_mode!r}")
+    kept = base.select(
+        key.alias("dedup_key"), "conv_id", "turn_idx", "level", "message", "ts_ms"
+    )
     return kept.groupBy("dedup_key").applyInPandasWithState(
         _dedup_examples_fn,
         _DEDUP_OUT_SCHEMA,
@@ -304,5 +289,4 @@ def run_dedup_examples_available_now(
 def batch_level_counts(spark: SparkSession, src_dir: str, window: str = "1 hour") -> DataFrame:
     """The identical aggregation in batch mode (streaming/batch parity check)."""
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
-    classified = classify_turns(enrich_turns(spark, parse_turns(df)))
-    return _window_bounds(level_counts(classified, window))
+    return _window_bounds(level_counts(route.classified(df), window))

@@ -66,6 +66,11 @@ class Dialect:
 SPARK = Dialect("spark", "STRING")
 DUCKDB = Dialect("duckdb", "VARCHAR")
 
+TRANSCRIPT_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string,"
+    " ts timestamp"
+)
+
 # bench-replica conv_id offset: must exceed any source user_id so replica
 # conv_id spaces stay disjoint (the scaling bench and dedup determinism rely
 # on that). 10^10 >> any seeded user_id; the sampling hash keys on the

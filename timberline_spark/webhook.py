@@ -10,7 +10,7 @@ path):
 - on failure (or with no URL configured) the payload is SPOOLED to a local
   directory instead of being dropped — the at-least-once stand-in for the
   reference's fire-and-forget POST, and the only honest behavior in an
-  offline sandbox;
+  offline sandbox. The spool is published atomically (``pipeline._publish``);
 - both paths are exercised in tests/test_webhook.py (a real localhost HTTP
   server for the POST path; the spool fallback via an unroutable URL).
 """
@@ -62,11 +62,15 @@ def post_report(
                 time.sleep(backoff * (2**attempt))
     spooled = None
     if spool_dir:
-        os.makedirs(spool_dir, exist_ok=True)
+        from .pipeline import _publish  # lazy: the POST path needs no pyspark
+
+        def write(tmp):
+            with open(tmp, "w") as fh:
+                fh.write(body.decode("utf-8"))
+
         run_id = payload.get("run_id", "report")
         spooled = os.path.join(spool_dir, f"webhook_{run_id}.json")
-        with open(spooled, "w") as fh:
-            fh.write(body.decode("utf-8"))
+        _publish(spooled, write)
     return {
         "delivered": False,
         "status": status,
