@@ -268,8 +268,8 @@ def test_each_pipeline_policy_is_spelled_once():
     """The Spark operators, the oracle SQL, streaming and curation read one
     definition of each policy; a second spelling can drift from the first
     (a curation gate and two top-issue orderings once did). Scan the source
-    for literal re-spellings and for the parse -> enrich -> classify chain
-    outside route.classified."""
+    for literal re-spellings (the DuckDB tokenizer included) and for the
+    parse -> enrich -> classify chain outside route.classified."""
     import inspect
 
     q = "[\"']"
@@ -278,6 +278,9 @@ def test_each_pipeline_policy_is_spelled_once():
         "token regex": rf"{q}\[a-z0-9\]\+{q}",
         "error classes": rf"{q}ERROR{q},\s*{q}CRITICAL{q}",
         "actionable severities": rf"{q}medium{q},\s*{q}high{q},\s*{q}critical{q}",
+        # the medium bucket row in dicts; the unknown-level default reads it
+        "medium default": rf"{q}medium{q}(?!,\s*{q}high)|ELSE 5\b|lit\(5\)",
+        "token SQL": r"regexp_extract_all\(lower\(",
         "classify chain": r"classify_turns\(enrich_turns\(",
     }
     root = Path(__file__).resolve().parent.parent / "timberline_spark"

@@ -433,7 +433,7 @@ def score_clusters(buckets: DataFrame) -> DataFrame:
 
     ``cluster_score`` is staged as a column: every bucket bound reads it,
     and an inlined copy would be re-evaluated per reference."""
-    base = F.lit(5)  # unknown level -> MEDIUM default (client.py:275-276)
+    base = F.lit(dicts.DEFAULT_SCORE)
     for level, _, score in dicts.LEVEL_META:
         base = F.when(F.col("rep_level") == level, score).otherwise(base)
     score = F.least(
@@ -442,8 +442,8 @@ def score_clusters(buckets: DataFrame) -> DataFrame:
         + F.when(F.col("total_log_count") >= dicts.FREQ_BONUS_THRESHOLD, 1).otherwise(0),
     )
     df = buckets.withColumn("cluster_score", score)
-    bucket = F.lit("medium")
-    numeric = F.lit(5)
+    bucket = F.lit(dicts.DEFAULT_SEVERITY)
+    numeric = F.lit(dicts.DEFAULT_SEVERITY_NUMERIC)
     for lo, hi, name, num in dicts.SEVERITY_BUCKETS:
         cond = (F.col("cluster_score") >= lo) & (F.col("cluster_score") <= hi)
         bucket = F.when(cond, name).otherwise(bucket)

@@ -94,6 +94,10 @@ SEVERITY_BUCKETS: list[tuple[int, int, str, int]] = [
     (9, 10, "critical", 9),
 ]
 
+# an unknown level scores and buckets as MEDIUM, the scoring-failure default
+# (client.py:275-276): base score = the bucket's lower bound
+DEFAULT_SCORE, _, DEFAULT_SEVERITY, DEFAULT_SEVERITY_NUMERIC = SEVERITY_BUCKETS[1]
+
 ERROR_LEVELS = ("ERROR", "CRITICAL")
 WARNING_LEVELS = ("WARNING",)
 KEEP_LEVELS = (*ERROR_LEVELS, *WARNING_LEVELS)  # error|fatal|warn|panic rule

@@ -463,7 +463,7 @@ WITH sh0 AS (
   SELECT doc_id, list_distinct(list_transform(
       range(1, greatest(len(toks) - {SHINGLE_K - 2}, 1)),
       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-  FROM (SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
+  FROM (SELECT doc_id, {xh.sql_tokens('text')} AS toks
         FROM documents)
 ), docs AS (
   SELECT doc_id, sh, len(sh) AS n_sh FROM sh0 WHERE len(sh) > 0

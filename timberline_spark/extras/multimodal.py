@@ -94,15 +94,6 @@ def decode_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_batches, schema=FEATURE_SCHEMA)
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
 def frame_sample(df: DataFrame, every: int = 4) -> DataFrame:
     """Sample every Nth fixed-size 'frame' from the payload (video analog).
 

@@ -198,12 +198,12 @@ def oracle_curated() -> str:
 WITH scored AS (
   SELECT doc_id,
     regexp_replace(trim(lower(text)), '[ ]+', ' ', 'g') AS norm_text,
-    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
-    ROUND(len(regexp_extract_all(lower(text), '{PUNCT_RE}'))
+    CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens,
+    ROUND(len({xh.sql_tokens('text', PUNCT_RE)})
       / NULLIF(CAST(length(text) AS DOUBLE), 0.0), 4) AS punct_ratio,
-    (len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) > 0 AND
-     CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS DOUBLE)
-       / len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'))
+    (len({xh.sql_tokens('text')}) > 0 AND
+     CAST(len({xh.sql_tokens('text', STOPWORD_RE)}) AS DOUBLE)
+       / len({xh.sql_tokens('text')})
        >= {LANG_STOPWORD_MIN_RATIO}) AS is_en
   FROM documents
 ), keepers AS (
@@ -430,7 +430,7 @@ def oracle_pack_sequences(
 WITH base AS (
   SELECT doc_id,
     CAST(({h}) % {int(shards)} AS BIGINT) AS shard,
-    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens
+    CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens
   FROM documents
 ),
 c AS (
@@ -538,7 +538,7 @@ def oracle_token_mix(targets: dict[str, float] | None = None) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, source,
-    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens
+    CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens
   FROM documents
 ), totals AS (
   SELECT source, SUM(n_tokens) AS src_tokens,
@@ -599,7 +599,7 @@ FROM (
     CAST(COUNT(*) AS BIGINT) AS n_occurrences,
     CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
   FROM (
-    SELECT doc_id, unnest(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS token
+    SELECT doc_id, unnest({xh.sql_tokens('text')}) AS token
     FROM documents
   ) GROUP BY token
 ) ORDER BY n_occurrences DESC, token ASC LIMIT {int(top_k)}"""
@@ -659,7 +659,7 @@ def doc_tfidf_topterms(
 def oracle_tfidf_topterms(top_n: int = TFIDF_TOP_TERMS) -> str:
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS token
+  SELECT doc_id, unnest({xh.sql_tokens('text')}) AS token
   FROM documents
 ),
 tf AS (
@@ -748,14 +748,14 @@ def oracle_contamination(
     return f"""
 WITH probes(probe_id, probe_text) AS (VALUES {probe_values}),
 dt AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
+  SELECT doc_id, {xh.sql_tokens('text')} AS toks
   FROM documents
 ),
 ds AS (
   SELECT doc_id, unnest({sh}) AS shingle FROM dt
 ),
 pt AS (
-  SELECT probe_id, regexp_extract_all(lower(probe_text), '{xh.TOKEN_RE}') AS toks
+  SELECT probe_id, {xh.sql_tokens('probe_text')} AS toks
   FROM probes
 ),
 ps AS (
@@ -879,7 +879,7 @@ def oracle_repetition() -> str:
     # implementation.
     return f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{xh.TOKEN_RE}') AS toks
+  SELECT doc_id, {xh.sql_tokens('text')} AS toks
   FROM documents
 ),
 g AS (
@@ -909,7 +909,7 @@ def oracle_token_counts() -> str:
     return f"""
 SELECT doc_id,
   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-  CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
+  CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens,
   CAST(len(regexp_extract_all(text, '{BPE_RE}')) AS BIGINT) AS n_bpe_pieces,
   CAST(length(text) AS BIGINT) AS n_chars_actual
 FROM documents"""
@@ -919,10 +919,10 @@ def oracle_quality() -> str:
     return f"""
 WITH c AS (
   SELECT doc_id, text,
-    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
-    CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS BIGINT) AS n_stopwords,
-    CAST(len(regexp_extract_all(lower(text), '{PUNCT_RE}')) AS BIGINT) AS n_punct,
-    CAST(list_sum(list_transform(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'),
+    CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens,
+    CAST(len({xh.sql_tokens('text', STOPWORD_RE)}) AS BIGINT) AS n_stopwords,
+    CAST(len({xh.sql_tokens('text', PUNCT_RE)}) AS BIGINT) AS n_punct,
+    CAST(list_sum(list_transform({xh.sql_tokens('text')},
         t -> length(t))) AS BIGINT) AS tok_chars
   FROM documents
 )
@@ -937,8 +937,8 @@ def oracle_lang_id() -> str:
     return f"""
 WITH c AS (
   SELECT doc_id, lang,
-    CAST(len(regexp_extract_all(lower(text), '{xh.TOKEN_RE}')) AS BIGINT) AS n_tokens,
-    CAST(len(regexp_extract_all(lower(text), '{STOPWORD_RE}')) AS BIGINT) AS n_stopwords
+    CAST(len({xh.sql_tokens('text')}) AS BIGINT) AS n_tokens,
+    CAST(len({xh.sql_tokens('text', STOPWORD_RE)}) AS BIGINT) AS n_stopwords
   FROM documents
 )
 SELECT doc_id, lang AS lang_label,
@@ -953,7 +953,7 @@ def oracle_fingerprint() -> str:
 SELECT doc_id,
   list_reduce(
     list_prepend(CAST(0 AS BIGINT),
-      list_transform(regexp_extract_all(lower(text), '{xh.TOKEN_RE}'),
+      list_transform({xh.sql_tokens('text')},
                      t -> CAST(length(t) * 17 + ascii(t) AS BIGINT))),
     (acc, x) -> (acc * {FP_MULT} + x) % {FP_MOD}) AS fingerprint
 FROM documents"""

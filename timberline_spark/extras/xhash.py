@@ -113,11 +113,14 @@ def sql_char_hash(var: str = "t") -> str:
     )
 
 
+def sql_tokens(text_expr: str, regex: str = TOKEN_RE) -> str:
+    """:func:`tokens` as DuckDB SQL; the oracles also count stopword and
+    punctuation matches of the lowercased text through ``regex``."""
+    return f"regexp_extract_all(lower({text_expr}), '{regex}')"
+
+
 def sql_token_hashes(text_expr: str) -> str:
-    return (
-        f"list_transform(regexp_extract_all(lower({text_expr}), '{TOKEN_RE}'),"
-        f" t -> {sql_char_hash('t')})"
-    )
+    return f"list_transform({sql_tokens(text_expr)}, t -> {sql_char_hash('t')})"
 
 
 def sql_shingle_hashes(hs: str = "hs", k: int = 3) -> str:

@@ -338,9 +338,15 @@ def run_pipeline(
     # shuffle leaves idle. This thread runs the dedup -> dated -> rollup
     # chain the dated writes and the collects depend on, so the serial
     # driver tail is one barrier instead of a queue of small jobs.
-    stage_df = spark.read.parquet(f"{out_dir}/{STAGE_CLASSIFIED}").filter(
-        F.col("run_id") == run_id
-    ).drop("run_id")
+    # The driver already holds the stage table's schema; passing it skips the
+    # footer-inference job. p_date is a string column when written and reads
+    # back as the date partition value inference would give it.
+    stage_schema = T.StructType(
+        [T.StructField(f.name, T.DateType()) if f.name == "p_date" else f for f in batch.schema]
+    )
+    stage_df = spark.read.schema(stage_schema).parquet(
+        f"{out_dir}/{STAGE_CLASSIFIED}"
+    ).filter(F.col("run_id") == run_id).drop("run_id")
 
     def _commit_stage():
         # per-partition row and invalid counts from the written table in ONE

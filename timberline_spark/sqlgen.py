@@ -54,7 +54,7 @@ def _level_priority_sql(col: str) -> str:
 
 def _base_score_sql(col: str) -> str:
     whens = " ".join(f"WHEN '{lv}' THEN {sc}" for lv, _, sc in dicts.LEVEL_META)
-    return f"CASE {col} {whens} ELSE 5 END"
+    return f"CASE {col} {whens} ELSE {dicts.DEFAULT_SCORE} END"
 
 
 def _bucket_sql(score_col: str, out: str) -> str:
@@ -63,7 +63,9 @@ def _bucket_sql(score_col: str, out: str) -> str:
         + (f"'{name}'" if out == "name" else str(num))
         for lo, hi, name, num in dicts.SEVERITY_BUCKETS
     )
-    default = "'medium'" if out == "name" else "5"
+    default = (
+        f"'{dicts.DEFAULT_SEVERITY}'" if out == "name" else dicts.DEFAULT_SEVERITY_NUMERIC
+    )
     return f"CASE {branches} ELSE {default} END"
 
 
