@@ -1,21 +1,26 @@
-"""Dead-code guard: every top-level function in ``timberline_spark/`` must be
-reachable from a product entry point, or be allowlisted with a reason.
+"""Dead-code guard: every top-level function and module-level constant in
+``timberline_spark/`` must be reachable from a product entry point, or be
+allowlisted with a reason.
 
-Reachability is by name over the AST, so it over-approximates (two
-functions sharing a name are both reached when either name is used):
+A constant is a module-level assignment to plain names (``X = ...``,
+``A, B = ...``; dunder names aside). Reachability is by name over the AST,
+so it over-approximates (two definitions sharing a name are both reached
+when either name is used):
 
-- roots are the package's module-level code (both query registries, the
-  ``__main__`` blocks, decorators and argument defaults) plus every line of
-  ``bench.py``, ``run_pipeline.py``, ``__spark_entry__.py``, ``scripts/``
-  and ``perfbench/``;
-- a reached function reaches every name it mentions: ``Name`` ids,
-  attribute names and identifier-shaped string constants;
+- roots are the package's other module-level code (the ``__main__``
+  blocks, imports, class bodies, decorators and argument defaults) plus
+  every line of ``bench.py``, ``run_pipeline.py``, ``__spark_entry__.py``,
+  ``scripts/`` and ``perfbench/``;
+- a reached function or constant reaches every name it mentions: ``Name``
+  ids, attribute names and identifier-shaped string constants (a
+  constant through its assigned value, e.g. a query registry through the
+  functions it lists);
 - ``getattr(obj, f"prefix{...}")`` reaches every function whose name
   starts with the literal prefix (``__spark_entry__.oracle_sql`` looks up
   ``sqlgen.q_<query>`` that way).
 
-Tests are not roots: a function only a test calls is dead code unless the
-allowlist says why the test needs it.
+Tests are not roots: a function or constant only a test uses is dead code
+unless the allowlist says why the test needs it.
 """
 
 from __future__ import annotations
@@ -29,8 +34,10 @@ PKG = ROOT / "timberline_spark"
 
 STREAMING = "streaming product surface: the continuous-ingest mode (COVERAGE.md S1)"
 TEST_REF = "test reference: tests compare the shipped code against it"
+EMBEDDING = "embedding-service surrogate (COVERAGE.md): no pipeline stage embeds text yet"
 
-# "<path relative to the repo>:<function>" -> why it stays without a caller
+# "<path relative to the repo>:<function or constant>" -> why it stays
+# without a caller
 ALLOWED = {
     "timberline_spark/streaming.py:_window_bounds": STREAMING,
     "timberline_spark/streaming.py:_classified_stream": STREAMING,
@@ -41,6 +48,9 @@ ALLOWED = {
     "timberline_spark/streaming.py:_dedup_examples_fn": STREAMING,
     "timberline_spark/streaming.py:stream_dedup_examples": STREAMING,
     "timberline_spark/streaming.py:run_dedup_examples_available_now": STREAMING,
+    "timberline_spark/streaming.py:_DEDUP_STATE_SCHEMA": STREAMING,
+    "timberline_spark/streaming.py:_DEDUP_OUT_SCHEMA": STREAMING,
+    "timberline_spark/extras/similarity.py:embed_texts": EMBEDDING,
     "timberline_spark/streaming.py:batch_level_counts": TEST_REF,
     "timberline_spark/extras/xhash.py:py_mix32": TEST_REF,
     "timberline_spark/extras/xhash.py:py_shingle_hashes": TEST_REF,
@@ -70,8 +80,25 @@ def _mentions(node: ast.AST) -> tuple[set[str], set[str]]:
     return names, prefixes
 
 
-def _unreachable() -> dict[str, ast.FunctionDef]:
-    defs: dict[str, ast.FunctionDef] = {}
+def _constant_names(stmt: ast.stmt) -> list[str]:
+    """The names a module-level constant assignment binds, else []."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        targets = [stmt.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return [n for n in names if not n.startswith("__")]
+
+
+def _unreachable() -> dict[str, ast.stmt]:
+    defs: dict[str, ast.stmt] = {}
     roots: list[ast.AST] = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(ROOT).as_posix()
@@ -80,6 +107,8 @@ def _unreachable() -> dict[str, ast.FunctionDef]:
                 defs[f"{rel}:{stmt.name}"] = stmt
                 a = stmt.args
                 roots += [*stmt.decorator_list, *a.defaults, *filter(None, a.kw_defaults)]
+            elif bound := _constant_names(stmt):
+                defs.update((f"{rel}:{n}", stmt) for n in bound)
             else:
                 roots.append(stmt)
     entry = [ROOT / "bench.py", ROOT / "run_pipeline.py", ROOT / "__spark_entry__.py"]
@@ -96,9 +125,9 @@ def _unreachable() -> dict[str, ast.FunctionDef]:
     while True:
         new = [
             key
-            for key, fn in defs.items()
+            for key in defs
             if key not in reached
-            and (fn.name in names or any(fn.name.startswith(p) for p in prefixes))
+            and (_name(key) in names or any(_name(key).startswith(p) for p in prefixes))
         ]
         if not new:
             return {k: v for k, v in defs.items() if k not in reached}
@@ -109,14 +138,18 @@ def _unreachable() -> dict[str, ast.FunctionDef]:
             prefixes |= p
 
 
+def _name(key: str) -> str:
+    return key.rsplit(":", 1)[1]
+
+
 def test_every_package_function_is_reachable_or_allowlisted():
     dead = _unreachable()
     unexplained = sorted(
-        f"{k} (line {fn.lineno})" for k, fn in dead.items() if k not in ALLOWED
+        f"{k} (line {node.lineno})" for k, node in dead.items() if k not in ALLOWED
     )
     assert not unexplained, (
-        "unreachable top-level functions; delete them, or allowlist each with "
-        f"its reason: {unexplained}"
+        "unreachable top-level functions or constants; delete them, or "
+        f"allowlist each with its reason: {unexplained}"
     )
     stale = sorted(k for k in ALLOWED if k not in dead)
     assert not stale, f"allowlisted but now reachable or gone: {stale}"
@@ -124,6 +157,6 @@ def test_every_package_function_is_reachable_or_allowlisted():
     tests = " ".join(p.read_text() for p in here.parent.glob("test_*.py") if p != here)
     unused = sorted(
         k for k, why in ALLOWED.items()
-        if why == TEST_REF and not re.search(rf"\b{k.rsplit(':', 1)[1]}\b", tests)
+        if why == TEST_REF and not re.search(rf"\b{_name(k)}\b", tests)
     )
     assert not unused, f"allowlisted as a test reference, but no test uses: {unused}"

@@ -237,12 +237,16 @@ def test_lineage_and_metrics_written(spark, outdirs, full_run):
 def test_date_partitioned_tables_one_file_per_date(spark, tmp_path):
     """Files are sized by bytes, not by a row-count salt: at this scale
     every date of the stage table, of each sink and of the two dated
-    result tables is exactly one file. (Three replicas: enough rows that a
-    per-date salt would show, as the former floor of 4 stage files per
-    date did from here up.)"""
+    result tables is exactly one file, and so is each global cluster table,
+    the fuzzy one included. (Three replicas: enough rows that a per-date
+    salt would show, as the former floor of 4 stage files per date did
+    from here up.)"""
     import os
 
-    run_pipeline(spark, SF_TINY, str(tmp_path), run_id="layout", replicate=3)
+    run_pipeline(spark, SF_TINY, str(tmp_path), run_id="layout", replicate=3, fuzzy_buckets=True)
+    for table in ("report_buckets", "report_buckets_fuzzy"):
+        files = [f for f in os.listdir(tmp_path / table) if f.endswith(".parquet")]
+        assert len(files) == 1, (table, files)
     for table, col in (
         ("stage_classified", "p_date"),
         ("sink_errors", "p_date"),

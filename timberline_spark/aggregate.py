@@ -250,14 +250,57 @@ def cluster_fingerprint(message_col, level_col):
     )
 
 
-def _bucket_aggs() -> list:
-    """The per-cluster aggregate list + min(struct) representative shared
-    by the exact and fuzzy report paths — ONE definition so the two paths
-    cannot drift. Representative order (milvus_client.py:331-349): priority
-    desc, recency desc, then (conv_id, turn_idx) asc — encoded as a
-    min(struct) by negating the numeric desc keys, so the whole bucket
-    build is one hash aggregate (map-side combinable; no window sort).
-    Requires a `level_priority` column on the input."""
+def report_buckets(
+    deduped: DataFrame, comp: DataFrame | None = None, extra_keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Cluster-level aggregates + representative, one shuffle (hash-agg only).
+
+    Without ``comp`` a cluster is one exact fingerprint (level +
+    digit-collapsed message). Like dedup_turns, the shuffle then groups on
+    xxhash64(fingerprint), and the fingerprint string is re-derived from the
+    winning representative, which by construction yields the group's
+    fingerprint for any member.
+
+    With ``comp`` (the :func:`fuzzy_component_map` of these rows) a cluster
+    is one fuzzy component: the (tiny) map is joined onto the rows, the
+    shuffle groups on the component, and the output carries it as
+    ``fingerprint``, plus ``n_templates`` (how many exact fingerprints
+    merged into it). No explicit broadcast hint on the map join (ADVICE
+    round 4): comp is expected tiny, but forcing broadcast on an
+    unexpectedly large distinct-template population risks OOM — AQE
+    converts the join to broadcast at runtime when the measured size
+    allows, and degrades to shuffle when it doesn't.
+
+    Representative order (milvus_client.py:331-349): priority desc, recency
+    desc, then (conv_id, turn_idx) asc — encoded as a min(struct) by
+    negating the numeric desc keys, so the whole bucket build is one hash
+    aggregate (map-side combinable; no window sort)."""
+    fp = cluster_fingerprint(F.col("message"), F.col("level"))
+    priority = _level_priority(F.col("level"))
+    aggs = {}
+    if comp is None:
+        df = deduped.withColumns({"fp_h": F.xxhash64(fp), "level_priority": priority})
+        key, label = "fp_h", cluster_fingerprint(F.col("rep.message"), F.col("rep.level"))
+    else:
+        df = deduped.withColumns({"fingerprint": fp, "level_priority": priority})
+        df, key, label = df.join(comp, "fingerprint"), "component", F.col("component")
+        aggs["n_templates"] = F.size(F.collect_set("fingerprint")).cast("long")
+    dup = F.col("duplicate_count")
+    aggs |= {
+        "n_unique": F.count(F.lit(1)),
+        "total_log_count": F.sum(dup),
+        "error_count": F.sum(F.when(F.col("is_error"), dup).otherwise(F.lit(0))),
+        "warning_count": F.sum(F.when(F.col("is_warning"), dup).otherwise(F.lit(0))),
+        # size(collect_set) == countDistinct (both ignore nulls) but stays a
+        # SINGLE aggregation layer: countDistinct plans Spark's two-level
+        # distinct rewrite — an extra Exchange + aggregate pass over the
+        # deduped stream per bucket build (round 7; plan diff 2 Exchange ->
+        # 1 for report_buckets). The set is bounded by the service domain;
+        # n_templates above is the same single-layer distinct.
+        "n_sources": F.size(F.collect_set("service")).cast("long"),
+        "first_ts_ms": F.min("first_ts_ms"),
+        "last_ts_ms": F.max("last_ts_ms"),
+    }
     rep = F.struct(
         (-F.col("level_priority")).alias("neg_priority"),
         (-F.col("last_ts_ms")).alias("neg_last_ts"),
@@ -266,58 +309,13 @@ def _bucket_aggs() -> list:
         F.col("level"),
         F.col("message"),
     )
-    return [
-        F.count(F.lit(1)).alias("n_unique"),
-        F.sum("duplicate_count").alias("total_log_count"),
-        F.sum(
-            F.when(F.col("is_error"), F.col("duplicate_count")).otherwise(F.lit(0))
-        ).alias("error_count"),
-        F.sum(
-            F.when(F.col("is_warning"), F.col("duplicate_count")).otherwise(F.lit(0))
-        ).alias("warning_count"),
-        # size(collect_set) == countDistinct (both ignore nulls) but stays a
-        # SINGLE aggregation layer: countDistinct plans Spark's two-level
-        # distinct rewrite — an extra Exchange + aggregate pass over the
-        # deduped stream per bucket build (round 7; plan diff 2 Exchange ->
-        # 1 for report_buckets). The set is bounded by the service domain.
-        F.size(F.collect_set("service")).cast("long").alias("n_sources"),
-        F.min("first_ts_ms").alias("first_ts_ms"),
-        F.max("last_ts_ms").alias("last_ts_ms"),
-        F.min(rep).alias("rep"),
-    ]
-
-
-_BUCKET_OUT = [
-    "n_unique",
-    "total_log_count",
-    "error_count",
-    "warning_count",
-    "n_sources",
-    "first_ts_ms",
-    "last_ts_ms",
-]
-
-
-def report_buckets(deduped: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """Cluster-level aggregates + representative, one shuffle (hash-agg only).
-
-    Like dedup_turns, the shuffle groups on xxhash64(fingerprint) — the
-    fingerprint string (level + digit-collapsed message) is re-derived from
-    the winning representative, which by construction yields the group's
-    fingerprint for any member."""
-    df = deduped.withColumns(
-        {
-            "fp_h": F.xxhash64(cluster_fingerprint(F.col("message"), F.col("level"))),
-            "level_priority": _level_priority(F.col("level")),
-        }
+    g = df.groupBy(*extra_keys, key).agg(
+        *(c.alias(name) for name, c in aggs.items()), F.min(rep).alias("rep")
     )
-    g = df.groupBy(*extra_keys, "fp_h").agg(*_bucket_aggs())
     return g.select(
         *extra_keys,
-        cluster_fingerprint(F.col("rep.message"), F.col("rep.level")).alias(
-            "fingerprint"
-        ),
-        *_BUCKET_OUT,
+        label.alias("fingerprint"),
+        *aggs,
         F.col("rep.level").alias("rep_level"),
         _truncate_message(F.col("rep.message")).alias("representative_message"),
     )
@@ -359,7 +357,7 @@ def report_buckets_fuzzy(
     # returning — the function leaks no storage
     deduped = deduped.persist()
     comp = fuzzy_component_map(deduped, threshold, max_iter)
-    out = reliable_checkpoint(report_buckets_merged(deduped, comp))
+    out = reliable_checkpoint(report_buckets(deduped, comp))
     deduped.unpersist()
     return out
 
@@ -385,39 +383,6 @@ def fuzzy_component_map(
     ).select("doc_a", "doc_b")
     return connected_components(fps, pairs, max_iter).select(
         F.col("doc_id").alias("fingerprint"), "component"
-    )
-
-
-def report_buckets_merged(
-    deduped: DataFrame, comp: DataFrame, extra_keys: tuple[str, ...] = ()
-) -> DataFrame:
-    """Bucket aggregation grouped by fuzzy component instead of exact
-    fingerprint: join the (tiny) component map onto the deduped frame, then
-    ONE hash-agg shuffle keyed by (*extra_keys, component) — the same scale
-    shape as :func:`report_buckets`. No explicit broadcast hint on the map
-    join (ADVICE round 4): comp is expected tiny, but forcing broadcast on
-    an unexpectedly large distinct-template population risks OOM — AQE
-    converts the join to broadcast at runtime when the measured size
-    allows, and degrades to shuffle when it doesn't."""
-    df = deduped.withColumns(
-        {
-            "fingerprint": cluster_fingerprint(F.col("message"), F.col("level")),
-            "level_priority": _level_priority(F.col("level")),
-        }
-    )
-    merged = df.join(comp, "fingerprint")
-    g = merged.groupBy(*extra_keys, "component").agg(
-        # single-layer distinct, same rationale as n_sources in _bucket_aggs
-        F.size(F.collect_set("fingerprint")).cast("long").alias("n_templates"),
-        *_bucket_aggs(),
-    )
-    return g.select(
-        *extra_keys,
-        F.col("component").alias("fingerprint"),
-        "n_templates",
-        *_BUCKET_OUT,
-        F.col("rep.level").alias("rep_level"),
-        _truncate_message(F.col("rep.message")).alias("representative_message"),
     )
 
 

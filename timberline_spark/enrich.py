@@ -25,10 +25,14 @@ from . import dicts
 def _fence(c: Column) -> Column:
     """Value-identity filter-pushdown fence.
 
-    ``element_at(shuffle(array(c)), 1)`` always evaluates to ``c`` (a
+    ``element_at(shuffle(array(c), 0), 1)`` always evaluates to ``c`` (a
     1-element shuffle is the identity), but ``shuffle`` is flagged
     non-deterministic, so PushDownPredicates will not rewrite filters
-    through the projection that contains it.
+    through the projection that contains it. A fixed seed keeps it so
+    (``Shuffle`` is ``Stateful``). The seed is pinned because an unseeded
+    ``shuffle`` draws a random one per DataFrame build, and that literal in
+    the generated code made every build of the same plan compile a new
+    whole-stage class.
 
     Why this matters: the broadcast joins the literal-map lookups replaced
     were, incidentally, optimizer barriers. Without a barrier, a filter on
@@ -43,7 +47,7 @@ def _fence(c: Column) -> Column:
     single-evaluation plan shape (optimization guide §4.4 is the same
     maneuver for expensive UDFs).
     """
-    return F.element_at(F.shuffle(F.array(c)), 1)
+    return F.element_at(F.shuffle(F.array(c), 0), 1)
 
 
 def _lit_map(pairs: list[tuple]) -> Column:

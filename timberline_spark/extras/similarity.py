@@ -673,7 +673,8 @@ FROM ({oracle_centroid_rep()}) rep_q"""
 # ---- embedding surrogate (pandas UDF) ---------------------------------------
 
 
-def _embed_batch(texts: pd.Series) -> pd.Series:
+@F.pandas_udf(T.ArrayType(T.FloatType()))
+def embed_texts(texts: pd.Series) -> pd.Series:
     """Hash-projection embedding: token crc32 -> bucket count, L2-normalized."""
     out = []
     for t in texts:
@@ -686,9 +687,6 @@ def _embed_batch(texts: pd.Series) -> pd.Series:
             vec /= n
         out.append(vec.astype(np.float32).tolist())
     return pd.Series(out)
-
-
-embed_texts = F.pandas_udf(_embed_batch, returnType=T.ArrayType(T.FloatType()))
 
 
 DOC_COSINE_DIM = 1024  # hashed token dimensions for the sparse cosine join

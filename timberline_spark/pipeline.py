@@ -33,12 +33,18 @@ crash at any later point converges to the outputs of an uninterrupted run
 
 Scale notes (the 100 TB story):
 
-- The fan-out computes the classified frame once and writes it as a stage
-  table; the sinks and the dedup then read that columnar checkpoint
-  instead of re-parsing raw text. After the stage write, the driver runs
-  the dedup -> dated -> rollup chain on its own thread while ONE thread
-  pool submits the independent jobs beside it (stage commit, three sinks,
-  two dated writes, two report collects).
+- ``run_pipeline`` is a short chain of module-level stage functions that
+  take and return plain values (frames, counts, rows, timings):
+  ``_stage_frame`` classifies the input once, ``_write_stage`` writes it as
+  the stage table, and the sinks and the dedup then read that columnar
+  checkpoint instead of re-parsing raw text. After the stage write ONE
+  thread pool runs the independent jobs (``_commit_stage``, three
+  ``_write_sink``, the two dated writes and the two report collects) while
+  the driver thread runs ``_report``'s dedup -> dated -> rollup chain;
+  ``_publish_run`` then writes ``_metrics``, the report JSON and the
+  webhook post. Exact and fuzzy clusters come from one builder,
+  ``aggregate.report_buckets``, and every global cluster table is written
+  by ``_write_global`` (rebalanced: one file for a small table).
 - Sinks are partitioned by event date -> partition pruning for the daily
   analysis window (engine.py:84-86).
 - Hot conversations skew the dedup/cluster groupBys; those group on
@@ -61,7 +67,7 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -212,6 +218,280 @@ def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
     _publish_json(path, cfg)
 
 
+def _stage_frame(tr: DataFrame, run_id: str, redact: bool) -> DataFrame:
+    """Classify ``tr`` (parse + enrich + validate + route flags) into the
+    stage frame: the stage columns plus ``p_date`` and ``run_id``.
+
+    ``redact`` scrubs PII/identifier tokens (:mod:`timberline_spark.redact`)
+    from the parsed ``message`` AND the ``labels`` map values BEFORE the
+    stage checkpoint, so the free-text surfaces of every downstream table —
+    the category sinks, report-bucket example messages, the report JSON
+    document, the webhook payload — carry only scrubbed text. Scope note:
+    structured key columns (``conv_id``, label KEYS, ``anomaly_reason``)
+    are NOT rewritten — anomaly_reason is a closed enum and conv_id is the
+    join/grouping identity (rewriting it would break dedup and resume);
+    treat conv_id as pseudonymous and map it outside the pipeline if the
+    hand-off requires it. This is the compliance gate for the reference's
+    LLM hand-off (ai-analyzer llm_client.py embeds raw log text in
+    prompts); cost is a per-row projection fused into the classify stage.
+
+    The stage table is the PARSED representation (what every downstream
+    consumer needs): it drops the raw text and the parse intermediates,
+    which roughly halves the parquet-encode and shuffle bytes. The raw text
+    stays addressable in the source table by (conv_id, turn_idx). run_id
+    rides along: a date partition belongs to the run that last wrote it
+    (dynamic overwrite keeps one writer per date), which is what scopes the
+    sinks and the report to THIS run's dates — another run's dates stay in
+    the shared tables but out of this run's aggregation."""
+    derived = {"p_date": _p_date("effective_ts_ms"), "run_id": F.lit(run_id)}
+    if redact:
+        from .redact import redact_text
+
+        derived["message"] = redact_text(F.col("message"))
+        # label VALUES are open metadata (can embed identifiers on real
+        # inputs); keys are schema-like and stay
+        derived["labels"] = F.transform_values(
+            F.col("labels"), lambda _k, v: redact_text(v)
+        )
+    return route.classified(tr).select(
+        "conv_id", "turn_idx", "role", "tool", "tool_category", "is_sensitive",
+        "ts", "service", "message", "level", "severity", "severity_score",
+        "is_error", "is_warning", "effective_ts_ms", "anomaly_reason",
+        "is_valid", "keep_level", "keep_sampled", "kept", "conv_key", "labels",
+    ).withColumns(derived)
+
+
+def _committed_dates(spark: SparkSession, out_dir: str, run_id: str) -> set[str]:
+    """The stage dates ``_lineage`` marks committed for ``run_id``. A fresh
+    ``out_dir`` has no lineage, and no Spark job runs to learn that."""
+    if not os.path.isdir(f"{out_dir}/_lineage"):
+        return set()
+    lineage = spark.read.parquet(f"{out_dir}/_lineage").filter(
+        (F.col("run_id") == run_id)
+        & (F.col("stage") == STAGE_CLASSIFIED)
+        & (F.col("status") == "committed")
+    )
+    return {r.partition for r in lineage.select("partition").collect()}
+
+
+def _write_stage(
+    classified: DataFrame, out_dir: str, run_id: str, done: set[str]
+) -> tuple[float, DataFrame]:
+    """Write the dates of ``classified`` not in ``done`` to the stage table;
+    return the write's wall time and this run's stage frame, read back.
+
+    The dates to commit come from the written table afterwards (no extra
+    pass over the raw input). The driver already holds the table's schema;
+    passing it skips the footer-inference job. p_date is a string column
+    when written and reads back as the date partition value inference would
+    give it."""
+    t = time.time()
+    batch = classified.filter(~F.col("p_date").isin(sorted(done))) if done else classified
+    _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
+    write_s = time.time() - t
+    schema = T.StructType(
+        [T.StructField(f.name, T.DateType()) if f.name == "p_date" else f for f in batch.schema]
+    )
+    stage_df = classified.sparkSession.read.schema(schema).parquet(
+        f"{out_dir}/{STAGE_CLASSIFIED}"
+    )
+    return write_s, stage_df.filter(F.col("run_id") == run_id).drop("run_id")
+
+
+def _commit_stage(
+    stage_df: DataFrame, out_dir: str, run_id: str, done: set[str]
+) -> tuple[list[str], dict[str, tuple[int, int]]]:
+    """Commit the stage write: count each date of the run (rows, invalid
+    rows) in ONE columnar pass over the written table (p_date, is_valid
+    only), and append the dates not in ``done`` to ``_lineage``. Returns
+    those dates and every date's counts.
+
+    Nothing downstream needs the counts, so this job runs on the pool beside
+    the sinks instead of ahead of them; the lineage append still follows the
+    stage write, as resume requires. ``stage_df`` holds this run's dates
+    only: the counts must not absorb dates another run_id owns."""
+    per_date = {
+        r.p_date: (r.n, r.bad)
+        for r in stage_df.groupBy(F.col("p_date").cast("string").alias("p_date"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)), F.lit(0)).alias("bad"),
+        )
+        .collect()
+    }
+    todo = sorted(p for p in per_date if p not in done)
+    if todo:
+        now = time.time()
+        rows = [(run_id, STAGE_CLASSIFIED, p, per_date[p][0], now, "committed") for p in todo]
+        _publish_rows(out_dir, "_lineage", LINEAGE_SCHEMA, rows)
+    return todo, per_date
+
+
+def _write_sink(stage_df: DataFrame, out_dir: str, run_id: str, sink: str) -> tuple[float, int]:
+    """Write ``sink`` (one of SINKS) from the stage frame; return its wall
+    time and the rows it wrote."""
+    t = time.time()
+    build = {
+        "sink_errors": route.errors_sink,
+        "sink_tool_calls": route.tool_calls_sink,
+        "sink_anomalies": route.anomalies_sink,
+    }[sink]
+    out = build(stage_df).withColumns({"run_id": F.lit(run_id), "p_date": _p_date("ts_ms")})
+    rows = _write_by_date(out, f"{out_dir}/{sink}")
+    return time.time() - t, rows
+
+
+def _write_global(
+    buckets: DataFrame, out_dir: str, run_id: str, table: str, cached: list[DataFrame]
+) -> DataFrame:
+    """Score the global ``buckets``, persist them (the write and the report
+    collects read them) and write them as ``table``; return the scored frame.
+    The rebalance lets AQE size the write partitions by advisory bytes
+    (guide §6): one file for a small cluster table instead of one sliver per
+    aggregate task, ~64 MB files at scale."""
+    scored = agg.score_clusters(buckets).persist()
+    cached.append(scored)
+    scored.hint("rebalance").withColumn("run_id", F.lit(run_id)).write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/{table}")
+    return scored
+
+
+def _report(
+    ex: ThreadPoolExecutor, stage_df: DataFrame, out_dir: str, run_id: str,
+    fuzzy: bool, cached: list[DataFrame],
+) -> tuple[list, Row, int, int]:
+    """The report chain: dedup -> dated -> rollup -> collects on this thread,
+    the dated writes and the two collects on ``ex``. Writes
+    ``analysis_results``, ``analysis_summary``, ``report_buckets`` (and with
+    ``fuzzy`` ``report_buckets_fuzzy``), ``top_issues`` and
+    ``report_summary``; returns the top-issue rows, the summary row and the
+    dated and rollup hash-collision counts. Every frame it persists goes
+    into ``cached``, to be released once ``ex`` has drained."""
+    # the wide dedup shuffle runs ONCE, keyed per analysis date; the global
+    # view is an associative rollup of the (tiny) dated frame. Scored
+    # buckets are persisted in memory while being written, and top-issues +
+    # summary + the JSON report doc all derive from the cached frames — no
+    # parquet read-backs, no extra .count() jobs.
+    deduped_d = agg.dedup_turns(
+        route.kept_turns(stage_df), extra_keys=("p_date",), audit=True
+    ).persist()
+    cached.append(deduped_d)
+    # materialize the ONE wide shuffle before fanning out (the result
+    # branches below then read the cached frame concurrently instead of
+    # racing to populate it) AND, in the same job, count the dated groups and
+    # the hash-key collision groups — the sentinel for the 64-bit dedup key
+    # (nonzero lands in _metrics)
+    n_groups, n_collisions = deduped_d.agg(
+        F.count(F.lit(1)),
+        F.coalesce(F.sum(F.col("key_collision").cast("long")), F.lit(0)),
+    ).collect()[0]
+    # fuzzy mode: one component map over DISTINCT templates, applied to the
+    # dated AND global aggregations (scale shape: the graph is O(cluster
+    # count); each aggregation stays one hash-agg shuffle)
+    comp = agg.fuzzy_component_map(deduped_d) if fuzzy else None
+    # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one result
+    # row set per analysis_date): results partitioned by analysis_date +
+    # dynamic partition overwrite = MERGE keyed by date. A second run touches
+    # only the dates present in ITS input; other runs' dates survive, and
+    # re-running a date is idempotent (all transforms deterministic).
+    # Persisted: BOTH dated writers read it; uncached, each would re-run the
+    # dated bucket aggregation (measured: two identical agg jobs per run).
+    scored_d = agg.score_clusters(
+        agg.report_buckets(deduped_d, comp, ("p_date",))
+    ).withColumnRenamed("p_date", "analysis_date").persist()
+    cached.append(scored_d)
+    dated = [
+        # the rebalance puts each date's clusters in one write task (measured
+        # with the repartition it replaced: 736 -> 30 files and 1.98 s ->
+        # 0.46 s at sf0.1)
+        ex.submit(
+            _write_by_date,
+            scored_d.withColumn("run_id", F.lit(run_id)),
+            f"{out_dir}/analysis_results",
+            "analysis_date",
+        ),
+        # no rebalance: the groupBy already puts each date in one task, and
+        # a rebalance after it adds an exchange and a job
+        ex.submit(
+            agg.run_summary(scored_d, group_keys=("analysis_date",))
+            .withColumn("run_id", F.lit(run_id))
+            .write.mode("overwrite")
+            .partitionBy("analysis_date")
+            .parquet,
+            f"{out_dir}/analysis_summary",
+        ),
+    ]
+    # the global chain proceeds concurrently on this thread (FAIR scheduler
+    # interleaves the small jobs); inputs are the cached dated frame, so
+    # nothing recomputes the wide shuffle. The rollup re-hashes dedup_key, so
+    # it runs its OWN collision audit (a cross-date collision here is
+    # invisible to the per-date sentinel); the sentinel sum rides the
+    # report_buckets write via observe() — zero extra jobs. With no dated
+    # groups AQE drops the empty rollup below the bucket shuffle and the
+    # observation never arrives; there is nothing to audit then.
+    rollup_obs = Observation("rollup_audit")
+    deduped = agg.dedup_rollup(deduped_d, audit=True).observe(
+        rollup_obs,
+        F.coalesce(F.sum(F.col("key_collision").cast("long")), F.lit(0)).alias("n_collisions"),
+    )
+    basis = _write_global(agg.report_buckets(deduped), out_dir, run_id, "report_buckets", cached)
+    if comp is not None:
+        # the merged table NEXT TO the exact one; the report derives from the
+        # merged clustering, like the reference's DBSCAN-fed report
+        basis = _write_global(
+            agg.report_buckets(deduped, comp), out_dir, run_id, "report_buckets_fuzzy", cached
+        )
+    n_rollup_collisions = rollup_obs.get["n_collisions"] if n_groups else 0
+    # both collects read the persisted tiny scored frame; overlap them on the
+    # pool (two small jobs, each <= TOP_ISSUES_N rows / 1 row by
+    # construction) instead of serializing two job round-trips
+    top, summary = agg.top_issues(basis), agg.run_summary(basis)
+    top_fut, summary_fut = ex.submit(top.collect), ex.submit(summary.collect)
+    top_rows, summary_row = top_fut.result(), summary_fut.result()[0]
+    # tiny tables from already-collected rows: driver-written, no job
+    run_field = T.StructField("run_id", T.StringType())
+    for table, src, rows in (
+        ("top_issues", top, top_rows),
+        ("report_summary", summary, [summary_row]),
+    ):
+        _publish_rows(
+            out_dir,
+            table,
+            T.StructType(src.schema.fields + [run_field]),
+            [(*r, run_id) for r in rows],
+            SMALL_TABLE_FILE,
+        )
+    for f in dated:
+        f.result()
+    return top_rows, summary_row, int(n_collisions), int(n_rollup_collisions)
+
+
+def _publish_run(
+    out_dir: str, run_id: str, metrics: list[tuple], top_rows: list, summary_row: Row,
+    webhook_url: str | None, webhook_spool: str | None,
+) -> dict | None:
+    """Publish the run's ``_metrics`` file and its JSON report, then post
+    the report to the webhook when one is configured; return the post's
+    delivery record, or None."""
+    _publish_rows(out_dir, "_metrics", METRICS_SCHEMA, metrics, _metrics_file(run_id))
+    # S6 analog: single JSON report document (reporting/generator.py:101-131)
+    # — the human-facing daily report; built from the already-collected rows.
+    report_doc = {
+        "run_id": run_id,
+        "summary": summary_row.asDict(),
+        "top_issues": [r.asDict() for r in sorted(top_rows, key=lambda r: r["rank"])],
+    }
+    _publish_json(f"{out_dir}/daily_analysis_{run_id}.json", report_doc)
+    # S8 webhook notification (generator.py:133-166): POST the summary
+    # payload, spool on failure (at-least-once; no silent drop)
+    if not (webhook_url or webhook_spool):
+        return None
+    from .webhook import post_report
+
+    return post_report(report_doc, url=webhook_url, spool_dir=webhook_spool)
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -241,18 +521,12 @@ def run_pipeline(
     one as ``report_buckets_fuzzy``, and top_issues + the report summary
     derive from the merged clustering.
 
-    redact=True scrubs PII/identifier tokens (:mod:`timberline_spark.redact`)
-    from the parsed ``message`` AND the ``labels`` map values BEFORE the
-    stage checkpoint, so the free-text surfaces of every downstream table —
-    the category sinks, report-bucket example messages, the report JSON
-    document, the webhook payload — carry only scrubbed text. Scope note:
-    structured key columns (``conv_id``, label KEYS, ``anomaly_reason``)
-    are NOT rewritten — anomaly_reason is a closed enum and conv_id is the
-    join/grouping identity (rewriting it would break dedup and resume);
-    treat conv_id as pseudonymous and map it outside the pipeline if the
-    hand-off requires it. This is the compliance gate for the reference's
-    LLM hand-off (ai-analyzer llm_client.py embeds raw log text in
-    prompts); cost is a per-row projection fused into the classify stage.
+    redact=True scrubs PII/identifier tokens from every free-text surface
+    before the stage checkpoint (:func:`_stage_frame` gives the scope).
+
+    The stages are the functions above: ``_stage_frame`` ->
+    ``_write_stage`` -> (``_commit_stage`` | ``_write_sink`` x3 |
+    ``_report``) on one pool -> ``_publish_run``.
     """
     t0 = time.time()
     _pin_run_config(
@@ -273,326 +547,69 @@ def run_pipeline(
         tr = spark.read.parquet(input_table)
     else:
         tr = load_transcripts(spark, sf_dir, replicate=replicate)
+    classified = _stage_frame(tr, run_id, redact)
+    done = _committed_dates(spark, out_dir, run_id)
+    stage_write_s, stage_df = _write_stage(classified, out_dir, run_id, done)
 
-    # ---- stage 1: classify (parse+enrich+validate+route flags), checkpoint
-    # The checkpoint drops the raw text + parse intermediates: the stage
-    # table is the PARSED representation (what every downstream consumer
-    # needs), which roughly halves the parquet-encode and shuffle bytes.
-    # The raw text stays addressable in the source table by (conv_id,
-    # turn_idx).
-    stage_cols = [
-        "conv_id", "turn_idx", "role", "tool", "tool_category", "is_sensitive",
-        "ts", "service", "message", "level", "severity", "severity_score",
-        "is_error", "is_warning", "effective_ts_ms", "anomaly_reason",
-        "is_valid", "keep_level", "keep_sampled", "kept", "conv_key", "labels",
-    ]
-    # run_id rides along in the stage table: a date partition belongs to the
-    # run that last wrote it (dynamic overwrite keeps one writer per date),
-    # which is what scopes stage 2+3 to THIS run's dates — another run's
-    # dates stay in the shared tables but out of this run's aggregation.
-    derived = {"p_date": _p_date("effective_ts_ms"), "run_id": F.lit(run_id)}
-    if redact:
-        from .redact import redact_text
-
-        derived["message"] = redact_text(F.col("message"))
-        # label VALUES are open metadata (can embed identifiers on real
-        # inputs); keys are schema-like and stay
-        derived["labels"] = F.transform_values(
-            F.col("labels"), lambda _k, v: redact_text(v)
-        )
-    classified = (
-        route.classified(tr)
-        .select(*stage_cols)
-        .withColumns(derived)
-    )
-
-    if os.path.isdir(f"{out_dir}/_lineage"):
-        done = {
-            r.partition
-            for r in spark.read.parquet(f"{out_dir}/_lineage")
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == STAGE_CLASSIFIED)
-                & (F.col("status") == "committed")
-            )
-            .select("partition")
-            .collect()
-        }
-    else:  # fresh out_dir: no Spark job needed to learn there's no lineage
-        done: set[str] = set()
-    # The todo list comes from the written table afterwards (no extra pass
-    # over the raw input).
-    t_write = time.time()
-    batch = classified
-    if done:
-        batch = batch.filter(~F.col("p_date").isin(sorted(done)))
-    _write_by_date(batch, f"{out_dir}/{STAGE_CLASSIFIED}")
-    stage_write_s = time.time() - t_write
-
-    # ---- stage 2+3: sink fan-out and report aggregation, CONCURRENT -------
-    # The stage commit (per-date counts + lineage), the three sink writes,
-    # the two dated writes and the two report collects are independent
-    # jobs; each gets its own thread of ONE pool, sized so none queues
-    # behind another (Spark's scheduler is thread-safe; session.py enables
-    # FAIR mode), and the small jobs fill executor slots the wide dedup
-    # shuffle leaves idle. This thread runs the dedup -> dated -> rollup
-    # chain the dated writes and the collects depend on, so the serial
-    # driver tail is one barrier instead of a queue of small jobs.
-    # The driver already holds the stage table's schema; passing it skips the
-    # footer-inference job. p_date is a string column when written and reads
-    # back as the date partition value inference would give it.
-    stage_schema = T.StructType(
-        [T.StructField(f.name, T.DateType()) if f.name == "p_date" else f for f in batch.schema]
-    )
-    stage_df = spark.read.schema(stage_schema).parquet(
-        f"{out_dir}/{STAGE_CLASSIFIED}"
-    ).filter(F.col("run_id") == run_id).drop("run_id")
-
-    def _commit_stage():
-        # per-partition row and invalid counts from the written table in ONE
-        # columnar pass (p_date, is_valid only). Nothing in stage 2+3 needs
-        # them, so this job runs on the pool beside the sinks instead of
-        # ahead of them; the lineage append still follows the stage write,
-        # as resume requires. stage_df holds this run's dates only: the
-        # counts must not absorb dates another run_id owns.
-        per_part = {
-            r.p_date: (r.n, r.bad)
-            for r in stage_df.groupBy(F.col("p_date").cast("string").alias("p_date"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)), F.lit(0)
-                ).alias("bad"),
-            )
-            .collect()
-        }
-        todo = sorted(p for p in per_part if p not in done)
-        if todo:
-            now = time.time()
-            _publish_rows(
-                out_dir,
-                "_lineage",
-                LINEAGE_SCHEMA,
-                [(run_id, STAGE_CLASSIFIED, p, per_part[p][0], now, "committed") for p in todo],
-            )
-        # the write's wall time once, at partition "*"; per-date rows carry
-        # counts only (rows_out = valid rows), so every column sums cleanly.
-        # Rows for EVERY date of the run, committed now or by an earlier
-        # attempt: the run's _metrics file is rewritten whole each attempt.
-        stage_rows = [(run_id, STAGE_CLASSIFIED, "*", None, None, None, stage_write_s)]
-        for p, (n, bad) in sorted(per_part.items()):
-            stage_rows.append((run_id, STAGE_CLASSIFIED, p, n, n - bad, bad, None))
-        return todo, stage_rows
-
-    counts: dict[str, int] = {}
-    sink_builders = {
-        "sink_errors": route.errors_sink,
-        "sink_tool_calls": route.tool_calls_sink,
-        "sink_anomalies": route.anomalies_sink,
-    }
-
-    def _write_sink(sink: str, builder) -> tuple[float, int]:
-        """Write one sink; return its wall time and the rows it wrote."""
-        t_s = time.time()
-        out = builder(stage_df).withColumns(
-            {"run_id": F.lit(run_id), "p_date": _p_date("ts_ms")}
-        )
-        rows = _write_by_date(out, f"{out_dir}/{sink}")
-        return time.time() - t_s, rows
-
-    t_stage = time.time()
-    # The four persisted frames are released in the finally on every exit,
-    # a failed attempt included; the finally runs after the pool has
+    # The stage commit, the three sink writes, the two dated writes and the
+    # two report collects are independent jobs; each gets its own thread of
+    # ONE pool, sized so none queues behind another (Spark's scheduler is
+    # thread-safe; session.py enables FAIR mode), and the small jobs fill
+    # executor slots the wide dedup shuffle leaves idle. This thread runs the
+    # report chain the dated writes and the collects depend on, so the
+    # serial driver tail is one barrier instead of a queue of small jobs.
+    # The frames the chain persists are released in the finally on every
+    # exit, a failed attempt included; the finally runs after the pool has
     # drained (the with block waits), so no write still reading a cached
     # frame loses it mid-job.
-    deduped_d = scored_d = scored = basis = None
+    t_stage = time.time()
+    cached: list[DataFrame] = []
     try:
-        # threads: the commit, the sinks, two dated writes, two collects
-        with ThreadPoolExecutor(1 + len(sink_builders) + 2 + 2) as ex:
-            commit_fut = ex.submit(_commit_stage)
-            sink_futs = {s: ex.submit(_write_sink, s, b) for s, b in sink_builders.items()}
-            # the wide dedup shuffle runs ONCE, keyed per analysis date; the
-            # global view is an associative rollup of the (tiny) dated frame.
-            # Scored buckets are persisted in memory while being written, and
-            # top-issues + summary + the JSON report doc all derive from the
-            # cached frames — no parquet read-backs, no extra .count() jobs.
-            deduped_d = agg.dedup_turns(
-                route.kept_turns(stage_df), extra_keys=("p_date",), audit=True
-            ).persist()
-            # materialize the ONE wide shuffle before fanning out (the result
-            # branches below then read the cached frame concurrently instead
-            # of racing to populate it) AND, in the same job, count the dated
-            # groups and the hash-key collision groups — the sentinel for the
-            # 64-bit dedup key (nonzero lands in _metrics)
-            n_groups, n_collisions = deduped_d.agg(
-                F.count(F.lit(1)),
-                F.coalesce(F.sum(F.col("key_collision").cast("long")), F.lit(0)),
-            ).collect()[0]
-            # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one
-            # result row set per analysis_date): results partitioned by
-            # analysis_date + dynamic partition overwrite = MERGE keyed by
-            # date. A second run touches only the dates present in ITS input;
-            # other runs' dates survive, and re-running a date is idempotent
-            # (all transforms deterministic).
-            # fuzzy mode: one component map over DISTINCT templates, applied
-            # to the dated AND global aggregations (scale shape: the graph is
-            # O(cluster count); each aggregation stays one hash-agg shuffle)
-            comp = (
-                agg.fuzzy_component_map(deduped_d.drop("key_collision"))
-                if fuzzy_buckets
-                else None
+        with ThreadPoolExecutor(1 + len(SINKS) + 2 + 2) as ex:
+            commit = ex.submit(_commit_stage, stage_df, out_dir, run_id, done)
+            sinks = [ex.submit(_write_sink, stage_df, out_dir, run_id, s) for s in SINKS]
+            top_rows, summary_row, n_collisions, n_rollup_collisions = _report(
+                ex, stage_df, out_dir, run_id, fuzzy_buckets, cached
             )
-            dated_buckets = (
-                agg.report_buckets_merged(
-                    deduped_d.drop("key_collision"), comp, extra_keys=("p_date",)
-                )
-                if fuzzy_buckets
-                else agg.report_buckets(deduped_d, extra_keys=("p_date",))
-            )
-            # persisted: BOTH dated writers (results + summary) read this
-            # frame; uncached, each would re-run the dated bucket aggregation
-            # over the cached dedup frame (measured: two identical agg jobs
-            # per run)
-            scored_d = agg.score_clusters(dated_buckets).withColumnRenamed(
-                "p_date", "analysis_date"
-            ).persist()
-            dated_futs = [
-                # the rebalance puts each date's clusters in one write task
-                # (measured with the repartition it replaced: 736 -> 30 files
-                # and 1.98 s -> 0.46 s at sf0.1)
-                ex.submit(
-                    _write_by_date,
-                    scored_d.withColumn("run_id", F.lit(run_id)),
-                    f"{out_dir}/analysis_results",
-                    "analysis_date",
-                ),
-                # no rebalance: the groupBy already puts each date in one
-                # task, and a rebalance after it adds an exchange and a job
-                ex.submit(
-                    agg.run_summary(scored_d, group_keys=("analysis_date",))
-                    .withColumn("run_id", F.lit(run_id))
-                    .write.mode("overwrite")
-                    .partitionBy("analysis_date")
-                    .parquet,
-                    f"{out_dir}/analysis_summary",
-                ),
-            ]
-            # the global chain proceeds concurrently on this thread (FAIR
-            # scheduler interleaves the small jobs); inputs are the cached
-            # dated frame, so nothing recomputes the wide shuffle. The rollup
-            # re-hashes dedup_key, so it runs its OWN collision audit (a
-            # cross-date collision here is invisible to the per-date
-            # sentinel); the sentinel sum rides the scored-buckets write via
-            # observe() — zero extra jobs, where it used to cost a separate
-            # materialization of the whole rollup. With no dated groups AQE
-            # drops the empty rollup below the bucket shuffle and the
-            # observation never arrives; there is nothing to audit then.
-            rollup_obs = Observation("rollup_audit")
-            deduped = agg.dedup_rollup(deduped_d, audit=True)
-            deduped = deduped.observe(
-                rollup_obs,
-                F.coalesce(
-                    F.sum(F.col("key_collision").cast("long")), F.lit(0)
-                ).alias("n_collisions"),
-            ).drop("key_collision")
-            # persisted: the report_buckets write and both collects read it
-            scored = agg.score_clusters(agg.report_buckets(deduped)).persist()
-            # rebalance: AQE sizes the write partitions by advisory bytes
-            # (guide §6) — one file for a small cluster table instead of one
-            # sliver per aggregate task, ~64 MB files at scale
-            scored.hint("rebalance").withColumn("run_id", F.lit(run_id)).write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/report_buckets")
-            n_rollup_collisions = rollup_obs.get["n_collisions"] if n_groups else 0
-            basis = scored
-            if fuzzy_buckets:
-                # merged global table written NEXT TO the exact one; the
-                # report (top issues + summary) derives from the merged
-                # clustering, like the reference's DBSCAN-fed report
-                basis = agg.score_clusters(
-                    agg.report_buckets_merged(deduped, comp)
-                ).persist()
-                basis.withColumn("run_id", F.lit(run_id)).write.mode(
-                    "overwrite"
-                ).parquet(f"{out_dir}/report_buckets_fuzzy")
-            # both collects read the persisted tiny scored frame; overlap them
-            # on the pool (two small jobs, each <= TOP_ISSUES_N rows / 1 row
-            # by construction) instead of serializing two job round-trips
-            top = agg.top_issues(basis)
-            summary_df = agg.run_summary(basis)
-            top_fut = ex.submit(top.collect)
-            summary_fut = ex.submit(summary_df.collect)
-            top_rows = top_fut.result()
-            summary_row = summary_fut.result()[0]
-            # tiny tables from already-collected rows: driver-written, no job
-            run_field = T.StructField("run_id", T.StringType())
-            for table, src, rows in (
-                ("top_issues", top, top_rows),
-                ("report_summary", summary_df, [summary_row]),
-            ):
-                _publish_rows(
-                    out_dir,
-                    table,
-                    T.StructType(src.schema.fields + [run_field]),
-                    [(*r, run_id) for r in rows],
-                    SMALL_TABLE_FILE,
-                )
-            for f in dated_futs:
-                f.result()
-            todo, metrics_rows = commit_fut.result()
-            for sink, fut in sink_futs.items():
-                el, counts[sink] = fut.result()
-                metrics_rows.append((run_id, sink, "*", None, counts[sink], None, el))
+            todo, per_date = commit.result()
+            sink_runs = [f.result() for f in sinks]
     finally:
-        for df in (deduped_d, scored_d, scored, basis):
-            if df is not None:
-                df.unpersist()
-    counts["report_buckets"] = int(summary_row["clusters_found"])
-    counts["top_issues"] = len(top_rows)
-    counts["report_summary"] = 1
-    metrics_rows.append(
-        (run_id, "aggregate", "*", None, counts["report_buckets"], None, time.time() - t_stage)
-    )
-    # dedup hash-key collision sentinel: groups whose members disagree under
-    # an independent second hash (expected 0; nonzero = two distinct
-    # messages were merged under one 64-bit key and counted as one)
-    metrics_rows.append(
-        (run_id, "dedup_hash_collisions", "*", None, int(n_collisions), None, None)
-    )
-    # same sentinel for the rollup's OWN hashed groupBy (covers cross-date
-    # collisions the per-date audit cannot see; includes inherited verdicts)
-    metrics_rows.append(
-        (
-            run_id, "dedup_rollup_hash_collisions", "*", None,
-            int(n_rollup_collisions), None, None,
-        )
-    )
-    _publish_rows(out_dir, "_metrics", METRICS_SCHEMA, metrics_rows, _metrics_file(run_id))
-
-    # S6 analog: single JSON report document (reporting/generator.py:101-131)
-    # — the human-facing daily report; built from the already-collected rows.
-    report_doc = {
-        "run_id": run_id,
-        "summary": summary_row.asDict(),
-        "top_issues": [r.asDict() for r in sorted(top_rows, key=lambda r: r["rank"])],
+        for df in cached:
+            df.unpersist()
+    counts = {sink: rows for sink, (_, rows) in zip(SINKS, sink_runs)}
+    counts |= {
+        "report_buckets": int(summary_row["clusters_found"]),
+        "top_issues": len(top_rows),
+        "report_summary": 1,
     }
-    _publish_json(f"{out_dir}/daily_analysis_{run_id}.json", report_doc)
-
-    # S8 webhook notification (generator.py:133-166): POST the summary
-    # payload, spool on failure (at-least-once; no silent drop)
-    if webhook_url or webhook_spool:
-        from .webhook import post_report
-
-        counts["webhook"] = post_report(
-            report_doc, url=webhook_url, spool_dir=webhook_spool
-        )
-
+    # Every date of the run, committed now or by an earlier attempt: the
+    # run's _metrics file is rewritten whole each attempt. A wall time is
+    # recorded once, at partition "*"; per-date rows carry counts only
+    # (rows_out = valid rows), so every column sums cleanly. The collision
+    # sentinels count groups whose members disagree under an independent
+    # second hash (expected 0; nonzero = two distinct messages merged under
+    # one 64-bit key): per date, then in the rollup's OWN hashed groupBy
+    # (cross-date collisions the per-date audit cannot see, inherited
+    # verdicts included).
+    metrics = [
+        (run_id, STAGE_CLASSIFIED, "*", None, None, None, stage_write_s),
+        *(
+            (run_id, STAGE_CLASSIFIED, p, n, n - bad, bad, None)
+            for p, (n, bad) in sorted(per_date.items())
+        ),
+        *((run_id, sink, "*", None, rows, None, el) for sink, (el, rows) in zip(SINKS, sink_runs)),
+        (run_id, "aggregate", "*", None, counts["report_buckets"], None, time.time() - t_stage),
+        (run_id, "dedup_hash_collisions", "*", None, n_collisions, None, None),
+        (run_id, "dedup_rollup_hash_collisions", "*", None, n_rollup_collisions, None, None),
+    ]
+    webhook = _publish_run(
+        out_dir, run_id, metrics, top_rows, summary_row, webhook_url, webhook_spool
+    )
+    if webhook is not None:
+        counts["webhook"] = webhook
     return RunResult(
-        run_id=run_id,
-        partitions_processed=todo,
-        partitions_skipped=sorted(done),
-        counts=counts,
-        elapsed_sec=time.time() - t0,
+        run_id, partitions_processed=todo, partitions_skipped=sorted(done),
+        counts=counts, elapsed_sec=time.time() - t0,
     )
 
 

@@ -354,7 +354,7 @@ def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("tool") != "", one).otherwise(0))
         .cast("long")
         .alias("n_tool_calls"),
-        # single-layer distinct (see aggregate._bucket_aggs n_sources): the
+        # single-layer distinct (see aggregate.report_buckets n_sources): the
         # set is bounded by the tool dictionary
         F.size(F.collect_set(F.when(F.col("tool") != "", F.col("tool"))))
         .cast("long")

@@ -40,15 +40,6 @@ from .dicts import (
 from .enrich import enrich_turns
 from .parse import parse_turns
 
-ANOMALY_REASONS = (
-    "empty_text",
-    "unparseable_ts",
-    "empty_message",
-    "invalid_bounds",
-    "unknown_level",
-)
-
-
 def hash100(conv_key: Column, turn_idx: Column) -> Column:
     """Deterministic per-turn hash in [0, 100) — pure BIGINT arithmetic.
 

@@ -72,10 +72,12 @@ def get_spark(
         # 913 distinct whole-stage classes, run_pipeline alone 120-155. The
         # default of 100 entries made every warm run_pipeline recompile
         # ~150 of them (Janino, ~12 ms mean each, on the driver and on task
-        # threads). With 2048 a warm run_pipeline compiles 1 class and a
-        # warm query ~1 (a per-build literal). Guava evicts per segment, so a
-        # cap near the working set still misses. Cost: cached classes stay
-        # loaded; +9 MB metaspace after that pass (194 vs 185 MB).
+        # threads). With 2048 a warm run_pipeline compiles none, and a second
+        # pass of the queries 16-18 classes in 3 of them (which 3 varies from
+        # pass to pass; enrich.py pins the fence seed that made every
+        # build's plan new). Guava evicts per segment, so a cap near the
+        # working set still misses. Cost: cached classes stay loaded; +9 MB
+        # metaspace after that pass (194 vs 185 MB).
         .config("spark.sql.codegen.cache.maxEntries", "2048")
         # PySpark's DataFrame-debugging call-site capture: ~10 py4j round
         # trips around every F.* / Column call (active session, a conf and
