@@ -341,20 +341,14 @@ def _write_sink(stage_df: DataFrame, out_dir: str, run_id: str, sink: str) -> tu
     return time.time() - t, rows
 
 
-def _write_global(
-    buckets: DataFrame, out_dir: str, run_id: str, table: str, cached: list[DataFrame]
-) -> DataFrame:
-    """Score the global ``buckets``, persist them (the write and the report
-    collects read them) and write them as ``table``; return the scored frame.
-    The rebalance lets AQE size the write partitions by advisory bytes
-    (guide §6): one file for a small cluster table instead of one sliver per
-    aggregate task, ~64 MB files at scale."""
-    scored = agg.score_clusters(buckets).persist()
-    cached.append(scored)
+def _write_global(scored: DataFrame, out_dir: str, run_id: str, table: str) -> None:
+    """Write the scored global buckets as ``table``. The rebalance lets AQE
+    size the write partitions by advisory bytes (guide §6): one file for a
+    small cluster table instead of one sliver per aggregate task, ~64 MB
+    files at scale."""
     scored.hint("rebalance").withColumn("run_id", F.lit(run_id)).write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/{table}")
-    return scored
 
 
 def _report(
@@ -435,13 +429,17 @@ def _report(
         rollup_obs,
         F.coalesce(F.sum(F.col("key_collision").cast("long")), F.lit(0)).alias("n_collisions"),
     )
-    basis = _write_global(agg.report_buckets(deduped), out_dir, run_id, "report_buckets", cached)
-    if comp is not None:
-        # the merged table NEXT TO the exact one; the report derives from the
-        # merged clustering, like the reference's DBSCAN-fed report
-        basis = _write_global(
-            agg.report_buckets(deduped, comp), out_dir, run_id, "report_buckets_fuzzy", cached
-        )
+    # fuzzy mode writes the merged table NEXT TO the exact one, and the
+    # report derives from the merged clustering, like the reference's
+    # DBSCAN-fed report. Only the report's basis is persisted (its write and
+    # the two collects read it); the exact table in fuzzy mode is read once.
+    exact = agg.score_clusters(agg.report_buckets(deduped))
+    merged = agg.score_clusters(agg.report_buckets(deduped, comp)) if comp is not None else None
+    basis = (exact if merged is None else merged).persist()
+    cached.append(basis)
+    _write_global(exact, out_dir, run_id, "report_buckets")
+    if merged is not None:
+        _write_global(merged, out_dir, run_id, "report_buckets_fuzzy")
     n_rollup_collisions = rollup_obs.get["n_collisions"] if n_groups else 0
     # both collects read the persisted tiny scored frame; overlap them on the
     # pool (two small jobs, each <= TOP_ISSUES_N rows / 1 row by

@@ -10,7 +10,21 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Local filesystem that sets file modes with java.nio, not a forked chmod
+# (jvm/src, built by scripts/build_jar.sh). Without libhadoop, Hadoop's
+# RawLocalFileSystem forks /bin/chmod for every file, .crc file and
+# directory it creates: 608 processes in every warm run_pipeline on the
+# perfbench daily input, none with this class (JFR jdk.ProcessStart; 4
+# vCPUs, local[4]). Modes, .crc files and output rows stay the same. Traced
+# daily seed 901, three runs each: sink-write task time 4.4-5.2 -> 1.9-2.1 s,
+# trace.e2e_s 5.3-6.7 -> 3.9-4.5 s. Cost: one more 2 kB jar on the driver
+# and executor classpaths.
+NIO_FS_JAR = os.path.join(REPO_ROOT, "jvm", "timberline-fs.jar")
+NIO_FS_CLASS = "timberline.fs.NioLocalFileSystem"
 
 
 def get_spark(
@@ -31,6 +45,11 @@ def get_spark(
     N-executor cluster, used by bench.py --scaling. Executor JVMs inherit
     the driver's Python environment; PYTHONPATH is forwarded so shipped
     code resolves on executors (the spark-submit --py-files analog).
+
+    When this call launches the JVM and ``NIO_FS_JAR`` exists, ``file://``
+    is served by ``NIO_FS_CLASS``. A JVM that is already running (under
+    spark-submit, or started earlier in this process) keeps Hadoop's
+    default: the class may not be on its classpath.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or None
     if master is None:
@@ -103,12 +122,20 @@ def get_spark(
             "spark.executor.extraJavaOptions",
             f"-XX:ActiveProcessorCount={exec_cores}",
         )
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         b = b.config(
             "spark.executorEnv.PYTHONPATH",
-            f"{repo_root}:{os.environ.get('PYTHONPATH', '')}".rstrip(":"),
+            f"{REPO_ROOT}:{os.environ.get('PYTHONPATH', '')}".rstrip(":"),
         )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if (
+        SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+        and os.path.exists(NIO_FS_JAR)
+    ):
+        b = b.config("spark.hadoop.fs.file.impl", NIO_FS_CLASS)
+        for k in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+            conf[k] = os.pathsep.join(filter(None, (NIO_FS_JAR, conf.get(k))))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
