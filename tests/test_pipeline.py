@@ -207,6 +207,36 @@ def test_rerun_after_crash_converges(spark, outdirs, full_run, tmp_path, monkeyp
     _assert_converged(spark, outdirs[0], out)
 
 
+def test_run_leaves_callers_session_conf(spark, tmp_path):
+    """The date writes carry their dynamic overwrite on the writer: a
+    session the caller set to static overwrite is still static after a
+    run. (The resume and crash tests run under the static default and show
+    that only the run's own dates are replaced.)"""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        run_pipeline(spark, SF_TINY, str(tmp_path / "out"), run_id="conf")
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_fuzzy_run_releases_its_checkpoints(spark, tmp_path):
+    """A fuzzy run frees what its component map checkpoints (the distinct
+    templates and every connected-components round), not only what it
+    persists: the session holds no persistent RDD after a run that it did
+    not hold before. (Compared by RDD id: Spark's cleaner may drop older
+    unreferenced RDDs meanwhile.)"""
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    run_pipeline(spark, SF_TINY, str(tmp_path / "a"), run_id="fz1", fuzzy_buckets=True)
+    before = persistent()
+    run_pipeline(spark, SF_TINY, str(tmp_path / "b"), run_id="fz2", fuzzy_buckets=True)
+    assert persistent() - before == set()
+
+
 def test_lineage_and_metrics_written(spark, outdirs, full_run):
     full_dir, _ = outdirs
     lineage = spark.read.parquet(f"{full_dir}/_lineage")

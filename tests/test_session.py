@@ -8,10 +8,11 @@ import subprocess
 
 import pytest
 from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from timberline_spark.pipeline import _write_by_date, run_pipeline
-from timberline_spark.session import NIO_FS_JAR, REPO_ROOT
+from timberline_spark.session import NIO_FS_JAR, REPO_ROOT, get_spark
 
 from .conftest import SF_TINY
 
@@ -21,6 +22,34 @@ def test_dataframe_debugging_is_off(spark):
     every Column call captures its Python call site over py4j."""
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+
+
+def test_sql_settings_depart_from_spark_defaults(spark, monkeypatch):
+    """No spark.sql.* value that get_spark sets equals Spark's own default:
+    a setting that restates a default changes nothing and hides which
+    settings the pipeline depends on. The defaults come from a fresh
+    SQLConf (a session's own conf reports the values set on it). The
+    session time zone is left out: its default is the JVM's zone, so it
+    can equal the pinned UTC on one host and not on the next."""
+    seen = {}
+    builder = SparkSession.Builder
+    real_config = builder.config
+
+    def config(self, key=None, value=None, *a, **kw):
+        seen[key] = value
+        return real_config(self, key, value, *a, **kw)
+
+    monkeypatch.setattr(builder, "config", config)
+    monkeypatch.setattr(builder, "getOrCreate", lambda self: spark)
+    get_spark("timberline_tests", cores=8, shuffle_partitions=8)
+    defined = spark._jvm.org.apache.spark.sql.internal.SQLConf().getAllDefinedConfs()
+    defaults = {defined.apply(i)._1(): defined.apply(i)._2() for i in range(defined.size())}
+    sql = {
+        k: v for k, v in seen.items()
+        if k and k.startswith("spark.sql.") and k != "spark.sql.session.timeZone"
+    }
+    assert "spark.sql.shuffle.partitions" in sql
+    assert {k: v for k, v in sql.items() if defaults.get(k) == v} == {}
 
 
 def test_back_to_back_runs_reuse_generated_code(spark, tmp_path):
@@ -43,6 +72,10 @@ def test_local_writes_start_no_process(spark, tmp_path):
     jvm = spark._jvm
     day = F.timestamp_seconds(1_700_000_000 + F.col("id") % 12 * 86_400)
     df = spark.range(240).withColumn("p_date", F.date_format(day, "yyyy-MM-dd"))
+    # a SparkSession that earlier work left to the garbage collector deletes
+    # its artifact directory with a forked `rm -rf` once collected: collect
+    # now, so that happens during the warm-up write, not the recorded one
+    jvm.java.lang.System.gc()
     _write_by_date(df, str(tmp_path / "warm"))
     jfr = jvm.java.io.File(str(tmp_path / "r.jfr")).toPath()
     rec = jvm.jdk.jfr.Recording()

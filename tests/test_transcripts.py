@@ -23,3 +23,18 @@ def test_load_transcripts_keeps_callers_events_view(spark):
         assert tr.count() == spark.read.parquet(f"{SF_TINY}/events.parquet").count()
     finally:
         spark.catalog.dropTempView("events")
+
+
+def test_q_transcripts_builds_without_a_job(spark):
+    """``events.parquet`` is read with its schema written down, so building
+    and planning a query over it runs no schema-inference job."""
+    from timberline_spark.queries import q_transcripts
+
+    sc = spark.sparkContext
+    group = "q_transcripts_build"
+    sc.setJobGroup(group, "build q_transcripts")
+    try:
+        q_transcripts(spark, SF_TINY)._jdf.queryExecution().optimizedPlan()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

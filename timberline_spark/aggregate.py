@@ -349,16 +349,17 @@ def report_buckets_fuzzy(
     templates merged into the cluster); fingerprint carries the component
     label (the lexicographically-min member fingerprint).
     """
-    from .extras.similarity import reliable_checkpoint
+    from .extras.similarity import release, reliable_checkpoint
 
     # the dedup frame feeds BOTH the template graph and the final
     # aggregation; persist it so the upstream parse+dedup chain runs once,
-    # and checkpoint the (tiny) output so the cache can be dropped before
-    # returning — the function leaks no storage
+    # and checkpoint the (tiny) output so the cache and the component map
+    # are released before returning
     deduped = deduped.persist()
     comp = fuzzy_component_map(deduped, threshold, max_iter)
     out = reliable_checkpoint(report_buckets(deduped, comp))
     deduped.unpersist()
+    release(comp)
     return out
 
 
@@ -373,17 +374,22 @@ def fuzzy_component_map(
     the returned frame is component-labeled by the lexicographically-min
     member fingerprint and is tiny (cluster count, not row count). The
     pipeline computes it once and applies it to both the dated and the
-    global bucket aggregations."""
-    from .extras.similarity import connected_components, cosine_pairs
+    global bucket aggregations, then frees its checkpoint (``release``).
+    The distinct templates, the one deep input, are checkpointed: uncut,
+    every connected-components round re-plans the dedup chain (BENCH.md,
+    "Settings and lineage cuts, each measured")."""
+    from .extras.similarity import (
+        connected_components, cosine_pairs, release, reliable_checkpoint,
+    )
 
     fp = cluster_fingerprint(F.col("message"), F.col("level"))
-    fps = deduped.select(fp.alias("doc_id")).distinct()
+    fps = reliable_checkpoint(deduped.select(fp.alias("doc_id")).distinct())
     pairs = cosine_pairs(
         fps.withColumn("text", F.col("doc_id")), threshold
     ).select("doc_a", "doc_b")
-    return connected_components(fps, pairs, max_iter).select(
-        F.col("doc_id").alias("fingerprint"), "component"
-    )
+    comp = connected_components(fps, pairs, max_iter)
+    release(fps)
+    return comp.select(F.col("doc_id").alias("fingerprint"), "component")
 
 
 def _truncate_message(c, limit: int = dicts.REPORT_MESSAGE_LIMIT):

@@ -704,11 +704,10 @@ RARE_DIMS_PER_DOC = 2
 def _cosine_weights(docs: DataFrame) -> DataFrame:
     """L2-normalized sparse weight table (doc_id, dim, w) over
     DOC_COSINE_DIM hashed token dimensions — the front half of
-    :func:`cosine_pairs`. Checkpointed: it is referenced several
-    times downstream (candidate index, prefix selection, both rescore
-    sides), and Spark does not share common subplans, so each reference
-    would re-run the whole tokenize+hash+aggregate chain. Tiny relative to
-    the corpus: one row per (doc, distinct hashed dim)."""
+    :func:`cosine_pairs`. Not checkpointed: each reference re-runs the
+    tokenize+hash chain from ``docs``, which at sf0.1 costs no more than a
+    checkpoint (BENCH.md, "Settings and lineage cuts, each measured"); a
+    caller whose ``docs`` is deep cuts it, as fuzzy_component_map does."""
     from . import xhash as xh
     from .dedup import spread_for_compute
 
@@ -722,10 +721,8 @@ def _cosine_weights(docs: DataFrame) -> DataFrame:
     norms = tf.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("cnt") * F.col("cnt"))).alias("nrm")
     )
-    return reliable_checkpoint(
-        tf.join(norms, "doc_id").select(
-            "doc_id", "dim", (F.col("cnt") / F.col("nrm")).alias("w")
-        )
+    return tf.join(norms, "doc_id").select(
+        "doc_id", "dim", (F.col("cnt") / F.col("nrm")).alias("w")
     )
 
 
@@ -843,6 +840,17 @@ def reliable_checkpoint(frame: DataFrame) -> DataFrame:
     return frame.localCheckpoint(eager=True)
 
 
+def release(frame: DataFrame) -> None:
+    """Free ``frame``'s cache, or the checkpoint it reads through projections
+    (``DataFrame.unpersist`` leaves a localCheckpoint's blocks in place)."""
+    frame.unpersist()
+    plan = frame._jdf.queryExecution().logical()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def connected_components(
     ids: DataFrame, pairs: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -861,7 +869,8 @@ def connected_components(
     round the label frame is checkpointed
     (:func:`reliable_checkpoint`: durable when a checkpoint dir is set,
     localCheckpoint in local mode) so the plan depth stays bounded
-    regardless of round count. Convergence is detected EXACTLY: one
+    regardless of round count; the previous round's checkpoint is released
+    once the new one is materialized. Convergence is detected EXACTLY: one
     equi-join of the new vs old label frames (both materialized) counting
     changed labels — zero changes is the fixpoint (min-label is monotone).
     The loop runs on the driver but touches only that one scalar per round
@@ -869,9 +878,8 @@ def connected_components(
 
     If max_iter is exhausted before the fixpoint, the labels returned are
     an UPPER approximation (some components not yet merged) and a
-    RuntimeWarning is raised. The returned DataFrame is checkpointed
-    (materialized, lineage-free) and NOT persisted — callers need no
-    unpersist.
+    RuntimeWarning is raised. The returned DataFrame reads the last
+    round's checkpoint, not ``ids`` or ``pairs``; :func:`release` frees it.
     """
     import warnings
 
@@ -896,7 +904,7 @@ def connected_components(
         .repartition(F.col("dst"))
         .persist()
     )
-    labels = ids.select("doc_id", F.col("doc_id").alias("component")).persist()
+    labels = ids.select("doc_id", F.col("doc_id").alias("component"))
 
     converged = False
     for i in range(max_iter):
@@ -932,18 +940,17 @@ def connected_components(
         # each round (measured: 4.9s -> 11.4s -> 27.2s per-round planning
         # on a 54-node graph at sf0.01). An eager checkpoint costs ~0.2s
         # and keeps every round O(1) plan size.
-        new_labels = reliable_checkpoint(new_labels)
+        ckpt = reliable_checkpoint(new_labels)
         prop.unpersist()
         # exact convergence (ADVICE round 4 — replaces a probabilistic
         # checksum pair): zero changed labels = fixpoint (min-label is
         # monotone, so labels change iff the assignment changed). `prev`
         # was captured in the round's own aggregate, so this is a bare
         # filter-count over the just-materialized frame.
-        n_changed = new_labels.filter(
-            F.col("component") != F.col("prev")
-        ).count()
-        labels.unpersist()
-        labels = new_labels.drop("prev")
+        n_changed = ckpt.filter(F.col("component") != F.col("prev")).count()
+        if i:  # from round 1 on, labels reads the last round's checkpoint
+            release(labels)
+        labels = ckpt.select("doc_id", "component")
         if n_changed == 0:
             converged = True
             break
@@ -954,10 +961,8 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    out = reliable_checkpoint(labels.select("doc_id", "component"))
-    labels.unpersist()
     edges.unpersist()
-    return out
+    return labels
 
 
 def doc_neardup_components(

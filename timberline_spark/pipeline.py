@@ -18,18 +18,19 @@ report) as a resumable batch DAG over date partitions:
   ``_metrics`` file, rewritten whole (every date of the run) by each
   attempt.
 
-Dynamic partition overwrite makes every write idempotent: re-processing a
-partition replaces it byte-identically (all transforms are deterministic),
-so a crash between "write" and "lineage append" is safe. Every file the
-driver writes itself (``_lineage``, ``_metrics``, ``top_issues``,
-``report_summary``, the pinned run config and the report JSON) goes through
-one primitive, ``_publish``: a hidden temp file, then ``os.replace``, so a
-crash mid-write never leaves a truncated or missing file behind. The
-frames the aggregate tail persists are released on every exit, a failed
-attempt included. The sinks and the aggregate tables are rebuilt
-from all of the run's stage dates on every attempt, so a rerun after a
-crash at any later point converges to the outputs of an uninterrupted run
-(tests/test_pipeline.py injects one crash per commit point).
+Dynamic partition overwrite, an option on each date-partitioned writer,
+makes every write idempotent: re-processing a partition replaces it
+byte-identically (all transforms are deterministic), so a crash between
+"write" and "lineage append" is safe. Every file the driver writes itself
+(``_lineage``, ``_metrics``, ``top_issues``, ``report_summary``, the pinned
+run config and the report JSON) goes through one primitive, ``_publish``: a
+hidden temp file, then ``os.replace``, so a crash mid-write never leaves a
+truncated or missing file behind. The frames the aggregate tail persists or
+checkpoints are released on every exit, a failed attempt included. The
+sinks and the aggregate tables are rebuilt from all of the run's stage
+dates on every attempt, so a rerun after a crash at any later point
+converges to the outputs of an uninterrupted run (tests/test_pipeline.py
+injects one crash per commit point).
 
 Scale notes (the 100 TB story):
 
@@ -49,7 +50,7 @@ Scale notes (the 100 TB story):
   analysis window (engine.py:84-86).
 - Hot conversations skew the dedup/cluster groupBys; those group on
   message-derived keys (dedup_key / fingerprint), which are naturally
-  high-cardinality, and AQE skew handling is enabled in session.py.
+  high-cardinality, and AQE's skew-join splitting is on by default.
 - The stage table and the sinks are sized by bytes, not row counts
   (``_write_by_date``): an AQE rebalance on the date gives one file per
   small date and ~64 MB files (``advisoryPartitionSizeInBytes``) for a
@@ -73,6 +74,7 @@ from pyspark.sql import types as T
 
 from . import aggregate as agg
 from . import route
+from .extras.similarity import release
 from .transcripts import TRANSCRIPT_SCHEMA, load_transcripts
 
 STAGE_CLASSIFIED = "stage_classified"
@@ -120,7 +122,7 @@ def _write_by_date(df: DataFrame, path: str, col: str = "p_date") -> int:
     obs = Observation(f"rows:{path}")
     df.hint("rebalance", col).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
         "overwrite"
-    ).partitionBy(col).parquet(path)
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(col).parquet(path)
     return obs.get["rows"]
 
 
@@ -360,8 +362,8 @@ def _report(
     ``analysis_results``, ``analysis_summary``, ``report_buckets`` (and with
     ``fuzzy`` ``report_buckets_fuzzy``), ``top_issues`` and
     ``report_summary``; returns the top-issue rows, the summary row and the
-    dated and rollup hash-collision counts. Every frame it persists goes
-    into ``cached``, to be released once ``ex`` has drained."""
+    dated and rollup hash-collision counts. Every frame it persists or
+    checkpoints goes into ``cached``, released once ``ex`` has drained."""
     # the wide dedup shuffle runs ONCE, keyed per analysis date; the global
     # view is an associative rollup of the (tiny) dated frame. Scored
     # buckets are persisted in memory while being written, and top-issues +
@@ -384,6 +386,8 @@ def _report(
     # dated AND global aggregations (scale shape: the graph is O(cluster
     # count); each aggregation stays one hash-agg shuffle)
     comp = agg.fuzzy_component_map(deduped_d) if fuzzy else None
+    if comp is not None:
+        cached.append(comp)
     # S7 date-keyed upsert (analysis_results_store.py:75-131 keeps one result
     # row set per analysis_date): results partitioned by analysis_date +
     # dynamic partition overwrite = MERGE keyed by date. A second run touches
@@ -411,19 +415,19 @@ def _report(
             agg.run_summary(scored_d, group_keys=("analysis_date",))
             .withColumn("run_id", F.lit(run_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("analysis_date")
             .parquet,
             f"{out_dir}/analysis_summary",
         ),
     ]
-    # the global chain proceeds concurrently on this thread (FAIR scheduler
-    # interleaves the small jobs); inputs are the cached dated frame, so
-    # nothing recomputes the wide shuffle. The rollup re-hashes dedup_key, so
-    # it runs its OWN collision audit (a cross-date collision here is
-    # invisible to the per-date sentinel); the sentinel sum rides the
-    # report_buckets write via observe() — zero extra jobs. With no dated
-    # groups AQE drops the empty rollup below the bucket shuffle and the
-    # observation never arrives; there is nothing to audit then.
+    # the global chain proceeds concurrently on this thread on the cached
+    # dated frame, so nothing recomputes the wide shuffle. The rollup
+    # re-hashes dedup_key, so it runs its OWN collision audit (a cross-date
+    # collision here is invisible to the per-date sentinel); the sentinel
+    # sum rides the report_buckets write via observe() — zero extra jobs.
+    # With no dated groups AQE drops the empty rollup below the bucket
+    # shuffle and the observation never arrives: nothing to audit then.
     rollup_obs = Observation("rollup_audit")
     deduped = agg.dedup_rollup(deduped_d, audit=True).observe(
         rollup_obs,
@@ -538,9 +542,6 @@ def run_pipeline(
             "fuzzy_buckets": bool(fuzzy_buckets),
         },
     )
-    # resume correctness depends on dynamic partition overwrite: with the
-    # static default, re-writing one date partition would truncate the rest
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if input_table:
         tr = spark.read.parquet(input_table)
     else:
@@ -552,11 +553,11 @@ def run_pipeline(
     # The stage commit, the three sink writes, the two dated writes and the
     # two report collects are independent jobs; each gets its own thread of
     # ONE pool, sized so none queues behind another (Spark's scheduler is
-    # thread-safe; session.py enables FAIR mode), and the small jobs fill
-    # executor slots the wide dedup shuffle leaves idle. This thread runs the
-    # report chain the dated writes and the collects depend on, so the
-    # serial driver tail is one barrier instead of a queue of small jobs.
-    # The frames the chain persists are released in the finally on every
+    # thread-safe), and the small jobs fill executor slots the wide dedup
+    # shuffle leaves idle. This thread runs the report chain the dated
+    # writes and the collects depend on, so the serial driver tail is one
+    # barrier instead of a queue of small jobs. The frames the chain
+    # persists or checkpoints are released in the finally on every
     # exit, a failed attempt included; the finally runs after the pool has
     # drained (the with block waits), so no write still reading a cached
     # frame loses it mid-job.
@@ -573,7 +574,7 @@ def run_pipeline(
             sink_runs = [f.result() for f in sinks]
     finally:
         for df in cached:
-            df.unpersist()
+            release(df)
     counts = {sink: rows for sink, (_, rows) in zip(SINKS, sink_runs)}
     counts |= {
         "report_buckets": int(summary_row["clusters_found"]),

@@ -1,9 +1,12 @@
 """SparkSession factory tuned for the pipeline.
 
-Local-mode testing stands in for a multi-executor cluster; the configs below
-are the ones that matter at 100 TB too (AQE, skew-join splitting, Arrow
-batching). ``spark.sql.shuffle.partitions`` is sized to cores locally; on a
-real cluster AQE coalescing makes the initial number forgiving.
+Local-mode testing stands in for a multi-executor cluster. AQE, its
+partition coalescing and skew-join splitting are Spark's defaults and stay
+unset; each setting below departs from a default, and the measurement
+behind each one kept for speed is in BENCH.md ("Settings and lineage cuts,
+each measured"). ``spark.sql.shuffle.partitions`` is sized to cores
+locally; on a real cluster AQE coalescing makes the initial number
+forgiving.
 """
 
 from __future__ import annotations
@@ -15,14 +18,11 @@ from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Local filesystem that sets file modes with java.nio, not a forked chmod
-# (jvm/src, built by scripts/build_jar.sh). Without libhadoop, Hadoop's
+# (jvm/src, built by scripts/build_jar.sh): without libhadoop, Hadoop's
 # RawLocalFileSystem forks /bin/chmod for every file, .crc file and
-# directory it creates: 608 processes in every warm run_pipeline on the
-# perfbench daily input, none with this class (JFR jdk.ProcessStart; 4
-# vCPUs, local[4]). Modes, .crc files and output rows stay the same. Traced
-# daily seed 901, three runs each: sink-write task time 4.4-5.2 -> 1.9-2.1 s,
-# trace.e2e_s 5.3-6.7 -> 3.9-4.5 s. Cost: one more 2 kB jar on the driver
-# and executor classpaths.
+# directory it creates (608 forks in a warm daily run_pipeline). Modes,
+# .crc files and output rows stay the same. Cost: a 2 kB jar on the
+# driver and executor classpaths.
 NIO_FS_JAR = os.path.join(REPO_ROOT, "jvm", "timberline-fs.jar")
 NIO_FS_CLASS = "timberline.fs.NioLocalFileSystem"
 
@@ -59,53 +59,31 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing floor. The default floor (1 MB) folds the tiny
-        # post-window shuffle of the synthesized bench input into ~2
-        # partitions, and the ENTIRE regex/JSON parse chain then runs on 2
-        # of 32 cores (measured: parse 1.66s -> 0.84s, kept_rows 2.5s ->
-        # 1.6s at sf0.1 with a 64k floor). Compute-bound stages over small
-        # shuffled data need parallelism that byte-based coalescing can't
-        # see. At 100 TB this floor is irrelevant: partition sizing is
-        # governed by advisoryPartitionSizeInBytes (64 MB) and
-        # parallelismFirst, both untouched.
+        # AQE coalescing floor. The default (1 MB) folds the tiny
+        # post-window shuffle of the synthesized input into ~2 partitions,
+        # and the whole regex/JSON parse chain then runs on 2 cores. At
+        # scale, advisoryPartitionSizeInBytes (64 MB, untouched) sizes
+        # partitions and this floor does not bind.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Keep the local-mode heap moderate: heaps >16g on this box trigger
         # kernel page-fault storms during heap expansion (90%+ system CPU,
         # 10-50x stalls) — measured in BENCH.md. 8g is ample: the pipeline
         # streams through Tungsten memory; nothing driver-side is O(data).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # the pipeline submits independent sink/report writes from multiple
-        # driver threads; FAIR scheduling lets small jobs fill idle slots
-        # instead of queueing behind a wide stage's stragglers
-        .config("spark.scheduler.mode", "FAIR")
-        # Generated-class cache (measured on 4 vCPUs, local[4]). One pass of
-        # the 50 registered queries plus one run_pipeline at sf0.001 compiles
-        # 913 distinct whole-stage classes, run_pipeline alone 120-155. The
-        # default of 100 entries made every warm run_pipeline recompile
-        # ~150 of them (Janino, ~12 ms mean each, on the driver and on task
-        # threads). With 2048 a warm run_pipeline compiles none, and a second
-        # pass of the queries 16-18 classes in 3 of them (which 3 varies from
-        # pass to pass; enrich.py pins the fence seed that made every
-        # build's plan new). Guava evicts per segment, so a cap near the
-        # working set still misses. Cost: cached classes stay loaded; +9 MB
-        # metaspace after that pass (194 vs 185 MB).
+        # Generated-class cache. run_pipeline builds 120-155 distinct
+        # whole-stage classes and the 50 registered queries with it 913;
+        # with the default 100 entries every warm run recompiled ~150 of
+        # them. Guava evicts per segment, so the cap sits well above the
+        # working set. Cost: cached classes stay loaded (+9 MB metaspace).
         .config("spark.sql.codegen.cache.maxEntries", "2048")
-        # PySpark's DataFrame-debugging call-site capture: ~10 py4j round
-        # trips around every F.* / Column call (active session, a conf and
-        # the origin class); turning it off cut the build time of six
-        # registered queries at sf0.1 by 14-31% and their round trips by
-        # 2.5-3.2x. PySpark reads the flag once per process, so it only
-        # works here, before the first Column. Cost: an error's DataFrame
-        # context names a JVM frame instead of the Python file:line that
-        # built the failing expression.
+        # PySpark's DataFrame-debugging call-site capture costs ~10 py4j
+        # round trips per F.* / Column call. PySpark reads the flag once per
+        # process, so it only works here, before the first Column. Cost: an
+        # error's DataFrame context names a JVM frame, not the Python line
+        # that built the failing expression.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("local-cluster["):

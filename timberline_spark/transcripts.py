@@ -71,6 +71,13 @@ TRANSCRIPT_SCHEMA = (
     " ts timestamp"
 )
 
+# ``events.parquet`` as testdata and perfbench's gen.py write it (ts is
+# timestamp[us], not UTC-adjusted); reading with it skips schema inference.
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp_ntz, user_id long, event_type string,"
+    " value double, props string"
+)
+
 # bench-replica conv_id offset: must exceed any source user_id so replica
 # conv_id spaces stay disjoint (the scaling bench and dedup determinism rely
 # on that). 10^10 >> any seeded user_id; the sampling hash keys on the
@@ -224,7 +231,7 @@ def load_transcripts(spark: SparkSession, sf_dir: str, replicate: int = 1) -> Da
     # a view name of its own, dropped once spark.sql has analyzed the query:
     # a caller's session view named `events` is neither replaced nor read
     view = f"tl_events_{uuid.uuid4().hex}"
-    spark.read.parquet(f"{sf_dir}/events.parquet").createTempView(view)
+    spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet").createTempView(view)
     try:
         df = spark.sql(transcripts_sql(SPARK, events_rel=view))
     finally:
