@@ -34,7 +34,6 @@ PKG = ROOT / "timberline_spark"
 
 STREAMING = "streaming product surface: the continuous-ingest mode (COVERAGE.md S1)"
 TEST_REF = "test reference: tests compare the shipped code against it"
-EMBEDDING = "embedding-service surrogate (COVERAGE.md): no pipeline stage embeds text yet"
 
 # "<path relative to the repo>:<function or constant>" -> why it stays
 # without a caller
@@ -50,7 +49,6 @@ ALLOWED = {
     "timberline_spark/streaming.py:run_dedup_examples_available_now": STREAMING,
     "timberline_spark/streaming.py:_DEDUP_STATE_SCHEMA": STREAMING,
     "timberline_spark/streaming.py:_DEDUP_OUT_SCHEMA": STREAMING,
-    "timberline_spark/extras/similarity.py:embed_texts": EMBEDDING,
     "timberline_spark/streaming.py:batch_level_counts": TEST_REF,
     "timberline_spark/extras/xhash.py:py_mix32": TEST_REF,
     "timberline_spark/extras/xhash.py:py_shingle_hashes": TEST_REF,

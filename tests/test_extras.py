@@ -341,16 +341,6 @@ def test_centroid_rep_matches_numpy(spark):
     assert got == expected
 
 
-def test_embed_texts_deterministic_and_normalized(spark):
-    df = spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(10)
-    out1 = df.select("doc_id", sim.embed_texts("text").alias("e")).collect()
-    out2 = df.select("doc_id", sim.embed_texts("text").alias("e")).collect()
-    assert [r.e for r in out1] == [r.e for r in out2]
-    for r in out1:
-        n = sum(x * x for x in r.e) ** 0.5
-        assert abs(n - 1.0) < 1e-3
-
-
 def test_doc_cosine_neardup_finds_exact_dups(spark):
     """Exact duplicate texts must appear as cosine-1.0 near-dup pairs."""
     dups = (
@@ -637,6 +627,47 @@ def _chain_corpus(spark, tmp_path, n_docs=50, window=100):
     rows = [(k, " ".join(toks[k : k + window])) for k in range(n_docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     df.coalesce(2).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+
+def _fuzzy_templates(spark):
+    """The distinct template fingerprints fuzzy_component_map pairs up:
+    string ids whose text is the fingerprint itself."""
+    from timberline_spark import aggregate as agg
+    from timberline_spark.queries import _deduped
+
+    fp = agg.cluster_fingerprint(F.col("message"), F.col("level"))
+    return (
+        _deduped(spark, SF_TINY)
+        .select(fp.alias("doc_id"))
+        .distinct()
+        .withColumn("text", F.col("doc_id"))
+    )
+
+
+@pytest.mark.parametrize(
+    "corpus,threshold,block",
+    [("tiny", 0.9, 64), ("chain", 0.99, 16), ("templates", 0.9, 4)],
+)
+def test_cosine_pairs_cross_block_equals_one_block(
+    spark, tmp_path, monkeypatch, corpus, threshold, block
+):
+    """The tier-1 corpora fit in one block, so the cross-block products
+    (lo != hi) only run with a small block size: they must return exactly
+    the one-block rows, long ids (the tiny corpus; the 50-doc chain, whose
+    adjacent docs score exactly 0.99) and string ids (fuzzy templates)."""
+    if corpus == "templates":
+        docs = _fuzzy_templates(spark)
+    else:
+        src = SF_TINY
+        if corpus == "chain":
+            _chain_corpus(spark, tmp_path)
+            src = str(tmp_path)
+        docs = spark.read.parquet(f"{src}/documents.parquet").select("doc_id", "text")
+    assert docs.count() > 2 * block  # at least three blocks
+    one_block = sorted(sim.cosine_pairs(docs, threshold).collect())
+    monkeypatch.setattr(sim, "_COSINE_BLOCK", block)
+    assert sorted(sim.cosine_pairs(docs, threshold).collect()) == one_block
+    assert one_block
 
 
 def test_neardup_components_chain_converges_with_bounded_depth(spark, tmp_path):

@@ -148,19 +148,25 @@ def test_classify_chain_is_one_projection_per_level(spark):
     assert len(projects) <= 20, len(projects)
 
 
-def test_cosine_pairs_candidate_join_is_equi(spark):
-    """The near-dup candidate generator must plan an EQUI join on the
-    capped dim index — never a cartesian/nested-loop product (the
-    quadratic-in-N shape the df cap exists to prevent)."""
+def test_cosine_pairs_is_one_grouped_map(spark):
+    """cosine_pairs scores every pair in dense block products: ONE
+    grouped-map pandas UDF over the block pairs, and no join of any kind
+    (the replaced prefix filter planned a df window, a candidate equi-join
+    and two map-lookup joins)."""
     from timberline_spark.extras.similarity import cosine_pairs
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma doc {i}") for i in range(20)],
         "doc_id long, text string",
     )
-    plan = _plan(cosine_pairs(docs, 0.9), "simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    df = cosine_pairs(docs, 0.9)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert len(_nodes(optimized, "FlatMapGroupsInPandas")) == 1
+    assert not _nodes(optimized, "Join")
+    assert not _nodes(optimized, "Window")
+    physical = _plan(df, "simple")
+    assert "CartesianProduct" not in physical
+    assert "BroadcastNestedLoopJoin" not in physical
 
 
 def test_jaccard_pairs_is_one_prefix_join(spark):

@@ -339,11 +339,13 @@ def report_buckets_fuzzy(
     one word apart land in one cluster.
 
     Scale shape: the similarity graph is built over DISTINCT fingerprints
-    (the cluster count, orders of magnitude below the row count), with the
-    same prefix-filtered candidate generation as doc_cosine_neardup
-    (:func:`extras.similarity.cosine_pairs`) — never all-pairs. The resulting (fingerprint -> component) map is tiny and
-    broadcast back onto the deduped frame; the bucket aggregation is then
-    ONE hash-agg shuffle keyed by component, same as the exact path.
+    (the cluster count, orders of magnitude below the row count) by the
+    same all-pairs block products as doc_cosine_neardup
+    (:func:`extras.similarity.cosine_pairs`): quadratic in the template
+    count, in blocks of bounded memory. The resulting (fingerprint ->
+    component) map is tiny and broadcast back onto the deduped frame; the
+    bucket aggregation is then ONE hash-agg shuffle keyed by component,
+    same as the exact path.
 
     Output schema = report_buckets plus n_templates (how many exact
     templates merged into the cluster); fingerprint carries the component

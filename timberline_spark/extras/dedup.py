@@ -38,11 +38,12 @@ JACCARD_THRESHOLD = 0.8
 # prefix-filtered and needs neither.
 MAX_SHINGLE_DF = 100
 RARE_SHINGLES_PER_DOC = 2
-# Safety margin subtracted from the threshold when sizing prefixes (here and
-# in similarity.cosine_pairs): the verify keeps round(score, 4) >= t, i.e.
-# true score >= t - 0.00005, and the float prefix arithmetic carries ~1e-15
-# noise; 1e-3 covers both with orders of magnitude to spare at negligible
-# extra prefix mass.
+# Safety margin subtracted from the threshold where a float score or bound
+# pre-filters what the verify keeps (here when sizing prefixes; in
+# similarity.cosine_pairs it is the slack of the in-block filter ahead of
+# Spark's rounding): the verify keeps round(score, 4) >= t, i.e. true score
+# >= t - 0.00005, and the float arithmetic carries ~1e-15 noise; 1e-3
+# covers both with orders of magnitude to spare.
 _PREFIX_MARGIN = 1e-3
 
 
@@ -193,7 +194,8 @@ def doc_jaccard_pairs(
 
 # The DuckDB oracles' candidate generator (oracle_jaccard_pairs and
 # similarity.sql_cosine_pairs_ctes): df-capped index + minhash-any-band
-# rescue. The Spark operators find the same pairs by prefix filtering; the
+# rescue. The Spark operators find the same pairs (Jaccard by prefix
+# filtering, cosine by scoring every pair in block products); the
 # Spark functions the docstrings below name no longer exist.
 def sql_rescue_doc_ids(max_df: int, rare_k: int) -> str:
     """DuckDB mirror of rescue_doc_ids as a CTE body; requires the

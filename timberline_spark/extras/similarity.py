@@ -1,4 +1,4 @@
-"""Similarity search over the ``embeddings`` table + embedding surrogate.
+"""Similarity search over the ``embeddings`` table and text near-dup cosine.
 
 The reference's ANN path (HNSW cosine top-100 per insert,
 ``/root/reference/log-ingestor/internal/storage/milvus.go:205-271``) maps to:
@@ -11,10 +11,10 @@ The reference's ANN path (HNSW cosine top-100 per insert,
   path: bucket join instead of all-pairs.
 - ``emb_knn_ivf``: deterministic k-means cells -> probe the nearest cells
   -> exact rescore.
-- ``embed_texts``: deterministic hash-projection text -> vector surrogate for
-  the reference's embedding service
-  (``log-ingestor/internal/embedding/service.go:72-159``) — a vectorized
-  pandas UDF (Arrow batches), no external service.
+- ``cosine_pairs``: hashed-token text -> vector projection (the surrogate for
+  the reference's embedding service,
+  ``log-ingestor/internal/embedding/service.go:72-159``) scored pair by pair
+  in dense block products, one grouped-map pandas UDF per block pair.
 
 Constant matrices (hyperplanes, centroids, seeds) enter the plan through
 :func:`_lit_doubles`, one JVM call each; building them with one ``F.lit``
@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import math
-import zlib
 
 import numpy as np
 import pandas as pd
@@ -670,146 +669,104 @@ SELECT 'centroid_rep' AS kind, CAST(label AS VARCHAR) AS label,
 FROM ({oracle_centroid_rep()}) rep_q"""
 
 
-# ---- embedding surrogate (pandas UDF) ---------------------------------------
-
-
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def embed_texts(texts: pd.Series) -> pd.Series:
-    """Hash-projection embedding: token crc32 -> bucket count, L2-normalized."""
-    out = []
-    for t in texts:
-        vec = np.zeros(EMBED_DIM, dtype=np.float64)
-        if t:
-            for tok in t.lower().split():
-                vec[zlib.crc32(tok.encode()) % EMBED_DIM] += 1.0
-        n = math.sqrt(float((vec * vec).sum()))
-        if n > 0:
-            vec /= n
-        out.append(vec.astype(np.float32).tolist())
-    return pd.Series(out)
-
-
-DOC_COSINE_DIM = 1024  # hashed token dimensions for the sparse cosine join
+DOC_COSINE_DIM = 1024  # hashed token dimensions of the cosine vectors
 # Candidate-index cap of the DuckDB oracle mirror (sql_cosine_pairs_ctes):
 # dims hotter than MAX_COSINE_DIM_DF are dropped from the oracle's candidate
 # join, each doc keeps its RARE_DIMS_PER_DOC least-frequent shared (df>=2)
 # dims, and a minhash-any-band rescue pairs near-identical all-hot docs
 # (extras.dedup.sql_capped_index / sql_rescue_doc_ids). The Spark side,
-# cosine_pairs, uses uncapped prefix filtering; the two agree on every
-# oracle-checked corpus (tests/test_extras.py).
+# cosine_pairs, scores every pair in block products; the two agree on
+# every oracle-checked corpus (tests/test_extras.py).
 MAX_COSINE_DIM_DF = 100
 RARE_DIMS_PER_DOC = 2
-
-
-def _cosine_weights(docs: DataFrame) -> DataFrame:
-    """L2-normalized sparse weight table (doc_id, dim, w) over
-    DOC_COSINE_DIM hashed token dimensions — the front half of
-    :func:`cosine_pairs`. Not checkpointed: each reference re-runs the
-    tokenize+hash chain from ``docs``, which at sf0.1 costs no more than a
-    checkpoint (BENCH.md, "Settings and lineage cuts, each measured"); a
-    caller whose ``docs`` is deep cuts it, as fuzzy_component_map does."""
-    from . import xhash as xh
-    from .dedup import spread_for_compute
-
-    exploded = spread_for_compute(docs).select(
-        "doc_id",
-        F.explode(xh.token_hashes(F.col("text"))).alias("th"),
-    )
-    tf = exploded.groupBy(
-        "doc_id", (F.col("th") % DOC_COSINE_DIM).alias("dim")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    norms = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("cnt") * F.col("cnt"))).alias("nrm")
-    )
-    return tf.join(norms, "doc_id").select(
-        "doc_id", "dim", (F.col("cnt") / F.col("nrm")).alias("w")
-    )
+# Docs per side of one block product: a 2048 x DOC_COSINE_DIM float64 side
+# is 16 MB.
+_COSINE_BLOCK = 2048
 
 
 def cosine_pairs(docs: DataFrame, threshold: float) -> DataFrame:
-    """Sparse token-cosine near-dup pairs over ANY (doc_id, text) frame —
-    (doc_a, doc_b, cosine), doc_a < doc_b. doc_id may be any orderable type
-    (long doc ids, fingerprint strings, ...).
+    """Token-cosine near-dup pairs over ANY (doc_id, text) frame —
+    (doc_a, doc_b, cosine), doc_a < doc_b, cosine rounded to 4 decimals and
+    >= threshold. doc_id may be any orderable type (long doc ids,
+    fingerprint strings, ...) and is expected to be unique.
 
-    Each row becomes a sparse token-count vector over DOC_COSINE_DIM hashed
-    dimensions (the same bag-of-hashed-tokens construction as the dense
-    pandas-UDF surrogate, but kept sparse). Candidate generation is PREFIX
-    FILTERING (Bayardo/Ma/Srikant, "Scaling Up All Pairs Similarity
-    Search", WWW'07): order dimensions canonically (document frequency
-    descending, so a doc's RAREST dims come last), and per doc take the
-    largest common-dims-first set S with ||S|| < t; the remaining dims are
-    the doc's prefix P. For any pair with cos(a,b) >= t, a.b restricted to
-    S(a) is at most ||S(a)||*||b|| < t (Cauchy-Schwarz), so the pair MUST
-    share a dim in P(a) — the candidate equi-join is prefix(a) x all-dims(b)
-    with doc_a < doc_b, and it provably misses no qualifying pair (the
-    prefix is sized with threshold - _PREFIX_MARGIN to also cover the
-    rescore's 4-decimal rounding). At the 0.9-0.99 thresholds the operators
-    use, a prefix is the doc's ~1-6 rarest dims, so candidate volume is
-    bounded by sum over prefix entries of df(dim) — when the corpus
-    saturates the fixed dim space (sf0.1: 5000 docs, min df 250 > the old
-    100 cap) that is still millions of pairs, but in ONE pass with no
-    20M-row minhash-rescue union+distinct on top (round 6 produced 10.3M
-    capped-index + 12.5M rescue candidates), and it shrinks toward the
-    rare-dim products as DIM grows with the corpus. Completeness holds at
-    any density, where the capped generator's recall was best-effort.
+    Each doc is a token-count vector over DOC_COSINE_DIM hashed dimensions
+    (``xhash.token_hashes`` mod the dim), L2-normalized; docs with no
+    tokens have no vector and pair with nothing. Every pair is scored: the
+    docs are split into ``ceil(n / _COSINE_BLOCK)`` blocks by
+    ``pmod(xxhash64(doc_id), nb)``, each doc is routed to every block pair
+    ``(least(b, j), greatest(b, j))`` its block ``b`` is part of, and one
+    grouped-map task per block pair takes the dense product ``A @ B.T`` and
+    emits the pairs within ``_PREFIX_MARGIN`` of the threshold. That is
+    O(n^2 * d) work in blocks of bounded memory: at ~23 nonzero dims per
+    doc a corpus saturates the 1,024 dims, and a join on shared dims
+    emitted most of the n^2 pairs as candidates anyway (10.3M of 12.5M at
+    sf0.1), so the dense product does the same pairs with less machinery.
 
-    The cosine itself is then computed EXACTLY over the full weight vectors
-    of each surviving pair (one map lookup join per side, no re-explosion),
-    so candidate generation affects neither scores nor — being provably
-    complete — recall.
+    The weights are ``cnt / sqrt(sum(cnt^2))`` in float64, the oracle's
+    arithmetic. The final ``round(dot, 4) >= threshold`` runs in Spark, not
+    numpy: numpy rounds the binary value half-even, Spark rounds the
+    decimal form HALF_UP, and only Spark's matches the oracle.
     """
-    from pyspark.sql import Window
+    from . import xhash as xh
+    from .dedup import spread_for_compute
 
-    w = _cosine_weights(docs)
-    dfreq = w.groupBy("dim").agg(F.count(F.lit(1)).alias("df"))
-    win = (
-        Window.partitionBy("doc_id")
-        .orderBy(F.col("df").desc(), F.col("dim").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    t_eff = max(threshold - _PREFIX_MARGIN, 0.0)
-    prefix = (
-        w.join(dfreq, "dim")
-        .withColumn("cum_w2", F.sum(F.col("w") * F.col("w")).over(win))
-        .filter(F.col("cum_w2") >= F.lit(t_eff * t_eff))
-        .select("doc_id", "dim")
-    )
-    cand = (
-        prefix.alias("a")
-        .join(
-            w.select("doc_id", "dim").alias("b"),
-            (F.col("a.dim") == F.col("b.dim"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    nb = max(math.ceil(docs.count() / _COSINE_BLOCK), 1)
+    t_eff = threshold - _PREFIX_MARGIN
+
+    def side(part: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, L2-normalized count rows) of one block's docs."""
+        th = part["th"].to_numpy()
+        row = np.repeat(np.arange(len(th)), [len(a) for a in th])
+        # np.concatenate needs at least one array; an empty side has none
+        dim = np.concatenate(th) % DOC_COSINE_DIM if len(th) else row
+        cnt = np.bincount(
+            row * DOC_COSINE_DIM + dim, minlength=len(th) * DOC_COSINE_DIM
+        ).reshape(len(th), DOC_COSINE_DIM)
+        nrm = np.sqrt((cnt * cnt).sum(axis=1))
+        return part["doc_id"].to_numpy(), cnt / nrm[:, None]
+
+    def block_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        lo, hi = key
+        pdf = pdf[pdf["th"].map(lambda th: th is not None and len(th) > 0)]
+        ids_a, a = side(pdf[pdf["blk"] == lo])
+        ids_b, b = side(pdf[pdf["blk"] == hi])
+        dot = a @ b.T
+        i, j = np.nonzero(dot >= t_eff)
+        if lo == hi:  # a block against itself: each pair once
+            keep = i < j
+            i, j = i[keep], j[keep]
+        x, y = ids_a[i], ids_b[j]
+        first = x < y
+        return pd.DataFrame({
+            "doc_a": np.where(first, x, y),
+            "doc_b": np.where(first, y, x),
+            "dot": dot[i, j],
+        })[x != y]
+
+    blk = F.pmod(F.xxhash64("doc_id"), F.lit(nb))
+    routed = (
+        spread_for_compute(docs)
+        .select(
+            "doc_id", blk.alias("blk"), xh.token_hashes(F.col("text")).alias("th")
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+        .withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
+        .select(
+            F.least("blk", "j").alias("lo"),
+            F.greatest("blk", "j").alias("hi"),
+            "blk", "doc_id", "th",
+        )
     )
-    return _cosine_rescore(cand, w, threshold)
-
-
-def _cosine_rescore(cand: DataFrame, w: DataFrame, threshold: float) -> DataFrame:
-    """Exact cosine of candidate pairs from the weight table: each doc's
-    sparse vector is collected once as a map<dim, w>, the candidate list
-    joins both maps (tiny relative to the pair list — AQE broadcasts), and
-    the dot product is a per-row JVM fold over the shorter side's entries.
-    Replaces the round-6 explode-join-regroup rescore, whose intermediate
-    was |cand| x dims-per-doc rows through a full shuffle."""
-    vecs = w.groupBy("doc_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("dim", "w"))).alias("vec")
-    )
-    va = vecs.select(F.col("doc_id").alias("doc_a"), F.col("vec").alias("vec_a"))
-    vb = vecs.select(F.col("doc_id").alias("doc_b"), F.col("vec").alias("vec_b"))
-    dot = F.aggregate(
-        F.map_entries(F.col("vec_a")),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + e["value"]
-        * F.coalesce(F.try_element_at(F.col("vec_b"), e["key"]), F.lit(0.0)),
-    )
+    id_type = docs.schema["doc_id"].dataType
+    schema = T.StructType([
+        T.StructField("doc_a", id_type),
+        T.StructField("doc_b", id_type),
+        T.StructField("dot", T.DoubleType()),
+    ])
     return (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .select("doc_a", "doc_b", F.round(dot, 4).alias("cosine"))
+        routed.groupBy("lo", "hi")
+        .applyInPandas(block_pair, schema)
+        .select("doc_a", "doc_b", F.round("dot", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
